@@ -139,65 +139,33 @@ def minhash_band_buckets(
     )
 
 
-# Per-session memo {(input semanticHash, builder key): (input, derived)},
-# stored as an attribute ON the session (tables.session_memo) — a
-# module-global WeakKeyDictionary can never evict because the memoized
-# DataFrames strongly reference the key session.
-# Expensive candidate-pair tables are shared by many consumers on the
-# same corpus (LSH pairs feed clusters/pagerank/triangles/k-core/recall
-# audits; the exact-Jaccard truth feeds both recall audits), and Spark
-# never reuses lineage across separately-built DataFrames — so the memo
-# hands every same-corpus consumer the SAME persist(DISK_ONLY) DataFrame.
-# persist is LAZY: a one-shot caller pays only the cache write alongside
-# its normal evaluation (laziness/pushdown semantics preserved); the
-# second consumer reads the cache instead of re-running the chain — and
-# because persist RETAINS lineage, a lost executor's cache blocks are
-# recomputed transparently (unlike a localCheckpoint).
-# Same immutable-input caveat as tables.load_table's memo: a table
-# mutated in place mid-session would serve pre-mutation pairs.
-
-
-_PAIRS_MEMO_CAP = 16
-
-
 def _memoized_by_plan(docs: DataFrame, key: tuple, build) -> DataFrame:
-    """Session memo for a derived table, keyed on the input plan
-    (semanticHash, confirmed by sameSemantics on hit) plus builder params.
+    """Session-memoized (``tables.memo``, memo ``pairs``) derived table,
+    keyed on the input plan (semanticHash, confirmed by sameSemantics on
+    hit) plus builder params.
 
-    Bounded: past ``_PAIRS_MEMO_CAP`` entries the OLDEST insertion is
-    evicted and unpersisted — a long-lived session sweeping many corpora
-    must not accumulate DISK_ONLY blocks forever. Eviction is safe for any
-    consumer still holding the evicted DataFrame: persist retains lineage,
-    so it transparently recomputes instead of reading dropped blocks."""
+    Expensive candidate-pair tables are shared by many consumers on the
+    same corpus (LSH pairs feed clusters/pagerank/triangles/k-core/recall
+    audits; the exact-Jaccard truth feeds both recall audits), so every
+    same-corpus consumer gets the SAME persist(DISK_ONLY) DataFrame.
+    persist is LAZY: a one-shot caller pays only the cache write alongside
+    its normal evaluation; the second consumer reads the cache instead of
+    re-running the chain. An evicted entry is unpersisted, which is safe
+    for any consumer still holding it: persist retains lineage, so it
+    recomputes instead of reading dropped blocks (and so does a lost
+    executor's cache block, unlike a localCheckpoint)."""
     from pyspark.storagelevel import StorageLevel
 
-    from btrblocks_spark.tables import session_memo
+    from btrblocks_spark.tables import memo
 
-    per_session = session_memo(docs.sparkSession, "_btrblocks_pairs_memo")
-    full_key = (docs.semanticHash(),) + key
-    hit = per_session.get(full_key)
-    if hit is not None:
-        if hit[0].sameSemantics(docs):
-            # refresh dict position (FIFO → LRU-ish): hot pair tables stay
-            # resident ahead of stale one-shot entries
-            del per_session[full_key]
-            per_session[full_key] = hit
-            return hit[1]
-        try:  # hash-collision replacement: drop the stale entry's blocks
-            hit[1].unpersist()
-        except Exception:
-            pass
-        del per_session[full_key]  # re-insert below moves it to the back
-    out = build().persist(StorageLevel.DISK_ONLY)
-    per_session[full_key] = (docs, out)
-    while len(per_session) > _PAIRS_MEMO_CAP:
-        _oldest, (_docs, stale) = next(iter(per_session.items()))
-        del per_session[_oldest]
-        try:
-            stale.unpersist()
-        except Exception:  # session teardown mid-call: eviction is best-effort
-            pass
-    return out
+    def build_entry():
+        return docs, build().persist(StorageLevel.DISK_ONLY)
+
+    return memo(
+        docs.sparkSession, "pairs", (docs.semanticHash(),) + key, build_entry,
+        valid=lambda e: e[0].sameSemantics(docs),
+        on_evict=lambda e: e[1].unpersist(),
+    )[1]
 
 
 def minhash_lsh_pairs(
@@ -441,30 +409,6 @@ def ngram_jaccard_pairs(
     )
 
 
-# session -> {(docs semanticHash, id_col, max_iter): (docs, labels)}.
-# The converged CC label table is the expensive, shared half of every
-# cluster consumer (clusters, keep-best, audits); labels are
-# localCheckpointed so a memo hit replays nothing. Stored on the session
-# object (tables.session_memo, attr _btrblocks_cc_memo) so entries die
-# with it. Cluster caveat: localCheckpoint blocks are non-replicated and
-# lineage-truncated, so an executor lost AFTER the first call makes later
-# memo hits fail with a missing-block error instead of recomputing —
-# callers on dynamic-allocation/spot clusters should either set a reliable
-# checkpoint dir (sc.setCheckpointDir — the loop then survives executor
-# loss end-to-end) or treat that error as "re-run dedup_clusters". The
-# local[...] test/bench environment has no executor loss.
-#
-# Bounded like _PAIRS_MEMO_CAP: past _CC_MEMO_CAP entries the OLDEST
-# insertion is dropped. Unlike the persist-based pairs memo, eviction here
-# cannot unpersist-and-recompute (localCheckpoint truncates lineage), so
-# evict = delete the dict entry and let the NEXT dedup_clusters call on
-# that corpus rebuild from scratch; the checkpoint blocks themselves are
-# released by the ContextCleaner once the evicted DataFrame is GC'd. A
-# caller still holding the evicted labels DataFrame keeps working — its
-# blocks live until that reference dies.
-_CC_MEMO_CAP = 16
-
-
 def dedup_clusters(
     docs: DataFrame,
     pairs: DataFrame | None = None,
@@ -494,34 +438,39 @@ def dedup_clusters(
     plan (semanticHash + sameSemantics confirm): downstream consumers —
     ``cluster_keep_best``, cluster audits — re-run the LSH → pairs → CC
     chain on the SAME corpus, and the labels are already localCheckpointed
-    so reuse is a lookup, not a lineage replay. Same immutable-input caveat
-    as the testdata table memo (a table mutated in place mid-session would
-    serve the pre-mutation clusters); only default-parameter calls
-    (``pairs=None``) hit the memo.
-    """
-    from btrblocks_spark.tables import session_memo
+    so reuse is a lookup, not a lineage replay (``tables.memo``, memo
+    ``cc``); only default-parameter calls (``pairs=None``) hit the memo.
+    An evicted entry is simply dropped: localCheckpoint truncates lineage,
+    so there is nothing to unpersist-and-recompute — the next call on that
+    corpus rebuilds, and the ContextCleaner releases the blocks once the
+    last holder of the evicted labels is gone.
 
-    labels = None
-    memo_key = None
-    per_session = None
+    Cluster caveat: localCheckpoint blocks are non-replicated, so an
+    executor lost AFTER the first call makes later memo hits fail with a
+    missing-block error instead of recomputing — callers on
+    dynamic-allocation/spot clusters should either set a reliable
+    checkpoint dir (sc.setCheckpointDir — the loop then survives executor
+    loss end-to-end) or treat that error as "re-run dedup_clusters".
+    """
     if pairs is None:
-        per_session = session_memo(docs.sparkSession, "_btrblocks_cc_memo")
-        memo_key = (docs.semanticHash(), id_col, max_iter)
-        hit = per_session.get(memo_key)
-        if hit is not None and hit[0].sameSemantics(docs):
-            labels = hit[1]
-            # refresh dict position (FIFO → LRU-ish): a hot, repeatedly
-            # reused corpus must not be evicted ahead of stale one-shots
-            del per_session[memo_key]
-            per_session[memo_key] = hit
-    if labels is not None:
-        return (
-            docs.select(F.col(id_col).alias("doc_id"))
-            .join(labels, F.col("doc_id") == F.col("node"), "left")
-            .select("doc_id", F.coalesce("label", "doc_id").alias("cluster_id"))
-        )
-    if pairs is None:
-        pairs = minhash_lsh_pairs(docs)
+        from btrblocks_spark.tables import memo
+
+        labels = memo(
+            docs.sparkSession, "cc", (docs.semanticHash(), id_col, max_iter),
+            lambda: (docs, _cc_labels(minhash_lsh_pairs(docs), max_iter)),
+            valid=lambda e: e[0].sameSemantics(docs),
+        )[1]
+    else:
+        labels = _cc_labels(pairs, max_iter)
+    return (
+        docs.select(F.col(id_col).alias("doc_id"))
+        .join(labels, F.col("doc_id") == F.col("node"), "left")
+        .select("doc_id", F.coalesce("label", "doc_id").alias("cluster_id"))
+    )
+
+
+def _cc_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
+    """Converged (node, label) table of ``pairs``' connected components."""
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
@@ -584,18 +533,7 @@ def dedup_clusters(
             f"{max_iter} rounds (graph diameter exceeds max_iter); raise "
             "max_iter"
         )
-    if memo_key is not None:
-        # delete-then-insert so a re-memoized key moves to the back of the
-        # eviction order instead of keeping its original FIFO slot
-        per_session.pop(memo_key, None)
-        per_session[memo_key] = (docs, labels)
-        while len(per_session) > _CC_MEMO_CAP:
-            del per_session[next(iter(per_session))]
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(labels, F.col("doc_id") == F.col("node"), "left")
-        .select("doc_id", F.coalesce("label", "doc_id").alias("cluster_id"))
-    )
+    return labels
 
 
 def cluster_keep_best(docs: DataFrame, quality: DataFrame) -> DataFrame:
@@ -1110,7 +1048,6 @@ def tfidf_cosine_pairs(
     docs: DataFrame,
     threshold: float = 0.3,
     max_doc_freq: int | None = None,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """TF-IDF-weighted cosine similarity pairs over the token vocabulary —
     the bag-of-words complement to shingle Jaccard: word REUSE similarity
@@ -1138,25 +1075,22 @@ def tfidf_cosine_pairs(
     no cosine mass at corpus scale.
 
     The threshold-FREE pair table (all scored candidate pairs) is
-    session-memoized per (corpus plan, max_doc_freq, n_docs): the
+    session-memoized per (corpus plan, max_doc_freq): the
     standalone cosine query (threshold 0.3) and the hard-negative miner
     (threshold 0.2) consume the same chain and differ only in this final
     filter (see ``_memoized_by_plan``)."""
     base = _memoized_by_plan(
         docs,
-        ("tfidf_cosine_all", max_doc_freq, n_docs),
-        lambda: _tfidf_cosine_pairs_build(docs, max_doc_freq, n_docs),
+        ("tfidf_cosine_all", max_doc_freq),
+        lambda: _tfidf_cosine_pairs_build(docs, max_doc_freq),
     )
     return base.filter(F.col("cosine") >= threshold).select(
         "doc_a", "doc_b", "cosine"
     )
 
 
-def _tfidf_cosine_pairs_build(
-    docs: DataFrame, max_doc_freq: int | None, n_docs: int | None
-) -> DataFrame:
-    if n_docs is None:
-        n_docs = docs.count()
+def _tfidf_cosine_pairs_build(docs: DataFrame, max_doc_freq: int | None) -> DataFrame:
+    n_docs = docs.count()
     tf = (
         tokens(docs)
         .select("doc_id", F.lower("w").alias("t"))

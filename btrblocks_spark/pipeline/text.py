@@ -1087,7 +1087,7 @@ def source_overlap(docs: DataFrame, n: int = 3) -> DataFrame:
     # before this). Eager, not lazy: the sizes are broadcast, and
     # broadcast subtrees execute as separate jobs that race ahead of a
     # lazy checkpoint's materialization (round-8; the registered caller is
-    # in EAGER_BUILD accordingly).
+    # marked eager=True accordingly).
     sh = (
         shingles(docs.select(F.col("source"), F.col("text")), n=n, id_col="source")
         .withColumnRenamed("doc_id", "source")

@@ -13,15 +13,27 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+EAGER: set[str] = set()
 
 
-def register(name: str, oracle: str | None = None):
-    """Decorator: add a query (and optionally its oracle SQL) to the registry."""
+def register(name: str, oracle: str | None = None, eager: bool = False):
+    """Decorator: add a query (and optionally its oracle SQL) to the registry.
+
+    ``eager=True`` marks a query whose BUILDER executes cluster work
+    (iterative training loops with per-round collects, temp-dir writes +
+    localCheckpoint round-trips, count()-driven plan decisions): wrapping
+    it in a view would run that work at registration time, so
+    ``register_query_views`` skips it by default. The flag is enforced by
+    ``pytest -m slow``: test_queries_oracle.py::
+    test_register_query_views_default_is_metadata_only registers every
+    non-eager query under a job group and fails if ANY Spark job ran."""
 
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle
+        if eager:
+            EAGER.add(name)
         return fn
 
     return deco
@@ -52,75 +64,10 @@ def all_oracles() -> dict[str, str]:
     return dict(ORACLE)
 
 
-# Queries whose BUILDER executes cluster work (iterative training loops
-# with per-round collects, temp-dir writes + localCheckpoint round-trips,
-# count()-driven plan decisions). Wrapping these in a temp view is still
-# possible, but registration itself would run minutes of jobs — the
-# opposite of the "views are lazy" contract — so the default registration
-# skips them; pass include_eager=True (or name them explicitly) to opt in.
-# This list is hand-maintained but MACHINE-ENFORCED: test_queries_oracle.py::
-# test_register_query_views_default_is_metadata_only registers every
-# non-listed query under a job group and fails if ANY Spark job ran — a new
-# eager builder that forgets to add itself breaks CI, not production.
-EAGER_BUILD = frozenset(
-    {
-        "agg_percentiles_disc",
-        "ann_binary_topk",
-        "ann_kmeans_refine",
-        "ann_ndcg_audit",
-        "ann_operating_curve",
-        "ann_recall_audit",
-        "basket_association_rules",
-        "customer_ltv_cohorts",
-        "customer_rfm_segments",
-        "dedup_cluster_keep_best",
-        "dedup_clusters",
-        "dedup_graph_triangles",
-        "dedup_jaccard_prefix",
-        "dedup_kcore",
-        "dedup_local_clustering",
-        "dedup_lsh_recall",
-        "dedup_lsh_tuned_recall",
-        "dedup_pagerank",
-        "dedup_tfidf_cosine",
-        "dict_codespace_filter",
-        "embedding_pca_topk",
-        "embedding_second_moment",
-        "events_attribution",
-        "events_kaplan_meier",
-        "events_kaplan_meier_by_type",
-        "events_mad_anomaly",
-        "format_chunk_stats",
-        "format_column_group_roundtrip",
-        "format_datasource_roundtrip",
-        "format_delete_vectors",
-        "format_dpp_join",
-        "format_scheme_plan",
-        "format_metadata_only_agg",
-        "format_partition_pruned_scan",
-        "frequency_domain_roundtrip",
-        "retrieval_hard_negatives",
-        "retrieval_mmr_rerank",
-        "retrieval_mmr_rerank_k",
-        "scan_csv_roundtrip",
-        "scan_jsonl_roundtrip",
-        "scan_predicate_bitmap",
-        "sql_recursive_month_spine",
-        "stats_column_entropy",
-        "stats_heavy_hitters",
-        "stats_jackknife_group",
-        "stats_jackknife_hash",
-        "stats_ks_drift",
-        "stats_mutual_information",
-        "stats_quantile_sketch",
-        "stats_string_profile",
-        "stats_theil_sen",
-        "text_bpe_merges",
-        "text_source_overlap",
-        "text_vocab_coverage",
-        "training_logreg_quality",
-    }
-)
+def eager_queries() -> frozenset[str]:
+    """Names of the queries registered with ``eager=True``."""
+    _load_all()
+    return frozenset(EAGER)
 
 
 def register_query_views(
@@ -139,7 +86,7 @@ def register_query_views(
     and Catalyst fuses any outer SQL (filters, projections, joins over the
     view) into the operator's own plan, so view-wrapped operators compose
     without materialization. For that contract to be TRUE, queries whose
-    builder itself executes work (``EAGER_BUILD``: iterative trainers,
+    builder itself executes work (``eager=True``: iterative trainers,
     round-trip queries that write temp tables, count()-driven plans) are
     skipped by default — name them explicitly or pass ``include_eager=True``
     to register them too, accepting the build-time execution. Base tables
@@ -152,7 +99,7 @@ def register_query_views(
     if names is not None:
         todo = names
     else:
-        todo = sorted(q for q in queries if include_eager or q not in EAGER_BUILD)
+        todo = sorted(q for q in queries if include_eager or q not in EAGER)
     out = []
     for name in todo:
         queries[name](spark, sf_dir).createOrReplaceTempView(name)

@@ -110,6 +110,7 @@ SELECT CAST(p AS DOUBLE) AS p, o_totalprice AS value
 FROM ps, n
 JOIN ordered ON rn = CAST(FLOOR(p * (cnt - 1)) AS BIGINT) + 1
 """,
+    eager=True,
 )
 def agg_percentiles_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discrete percentiles via explicit rank selection — the
@@ -1298,6 +1299,7 @@ FROM rules
 ORDER BY support DESC, confidence DESC, antecedent, consequent
 LIMIT 20
 """,
+    eager=True,
 )
 def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules A→B over order baskets: support, confidence
@@ -1402,6 +1404,7 @@ FROM hourly h JOIN med m USING (event_type) JOIN mad x USING (event_type)
 GROUP BY h.event_type, m.med, x.mad
 ORDER BY h.event_type
 """,
+    eager=True,
 )
 def events_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust anomaly detection on hourly event volumes: per type, the
@@ -2771,6 +2774,7 @@ SELECT channel, count(*)::BIGINT AS n_purchases,
 FROM p CROSS JOIN tot
 GROUP BY channel, n_total
 """,
+    eager=True,
 )
 def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch marketing attribution: every purchase is credited to the
@@ -2893,6 +2897,7 @@ SELECT a.t::BIGINT AS t, a.n_t::BIGINT AS n_at_risk, a.d_t::BIGINT AS n_deaths,
 FROM terms a JOIN terms b ON b.t <= a.t
 GROUP BY a.t, a.n_t, a.d_t
 """,
+    eager=True,
 )
 def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival estimate (Kaplan & Meier 1958) of
@@ -2924,7 +2929,7 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales with row count. The death and censor branches are ONE
     projection over the lead() pass (a per-row CASE on nxt, not a
     filter+union that derives the window twice), and ``hist`` is PINNED
-    (localCheckpoint, eager → EAGER_BUILD registration) so dt/lt/terms/
+    (localCheckpoint, eager → eager=True registration) so dt/lt/terms/
     a/pref don't each re-derive the events scan — the round-7 plan paid
     12 FileScans of events; this shape pays 2 (the gap pass + the
     window-end max; round-8 VERDICT #2)."""
@@ -3128,6 +3133,7 @@ SELECT a.event_type, a.t::BIGINT AS t, a.n_t::BIGINT AS n_at_risk,
 FROM terms a JOIN terms b ON b.event_type = a.event_type AND b.t <= a.t
 GROUP BY a.event_type, a.t, a.n_t, a.d_t
 """,
+    eager=True,
 )
 def events_kaplan_meier_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival PER EVENT TYPE (round-8 VERDICT #6): the
@@ -3144,7 +3150,7 @@ def events_kaplan_meier_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     window), the d=n tail degrading log_survival to NULL on both engines.
     The death/censor branches are ONE projection over the lead() pass and
     ``hist`` (O(types × distinct durations), calendar-bounded) is PINNED
-    (localCheckpoint + EAGER_BUILD) — 2 FileScans of events total, the
+    (localCheckpoint + eager=True) — 2 FileScans of events total, the
     round-8 single-scan discipline.
 
     Scale: the gap pass is one user_id-keyed window; everything after the

@@ -468,6 +468,7 @@ SELECT months.m AS month_start,
        coalesce(n_customers, 0) AS n_customers
 FROM months LEFT JOIN per_month ON per_month.m = months.m
 """,
+    eager=True,
 )
 def sql_recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4 WITH RECURSIVE): generate the month spine
@@ -633,6 +634,7 @@ SELECT CAST(r_score AS BIGINT) AS r_score, CAST(f_score AS BIGINT) AS f_score,
        CAST(m_score AS BIGINT) AS m_score, count(*)::BIGINT AS n_customers
 FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 """,
+    eager=True,
 )
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM (recency / frequency / monetary) customer segmentation: each
@@ -1087,6 +1089,7 @@ FROM cum JOIN sizes USING (cohort)
 WHERE age <= 6
 ORDER BY cohort_month, age_months
 """,
+    eager=True,
 )
 def customer_ltv_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort LTV curve: cumulative revenue per acquisition-month cohort by

@@ -16,7 +16,7 @@ from btrblocks_spark.queries import register
 from btrblocks_spark.tables import load_table
 
 
-@register("format_scheme_plan")
+@register("format_scheme_plan", eager=True)
 def format_scheme_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per chunk×column compression plan of lineitem (2048-row chunks at test
     scale). One row per column-chunk: chosen scheme, est ratio, stats."""
@@ -136,6 +136,7 @@ SELECT count(*) AS n_building,
        (SELECT count(*) FROM dict) AS dict_size
 FROM encoded WHERE code = (SELECT code FROM target)
 """,
+    eager=True,
 )
 def dict_codespace_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dictionary compressed-domain filtering (SURVEY §4.1's custom-rule
@@ -182,6 +183,7 @@ def dict_codespace_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                              THEN _idx END), -1) AS BIGINT) AS sel_idx_sum
     FROM chunked GROUP BY chunk ORDER BY chunk
     """,
+    eager=True,
 )
 def scan_predicate_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's unimplemented ``IntegerScheme::scan(Predicate,
@@ -245,6 +247,7 @@ def point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(DISTINCT l_returnflag) AS uniq_flag
     FROM chunked GROUP BY chunk ORDER BY chunk
     """,
+    eager=True,
 )
 def format_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-granularity stats (T1 analog) verified against the oracle: the
@@ -381,6 +384,7 @@ SELECT v AS value,
        CASE WHEN v = (SELECT top_v FROM top) THEN 1 ELSE 0 END AS is_top
 FROM decoded GROUP BY v
 """,
+    eager=True,
 )
 def frequency_domain_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FREQUENCY scheme (I7/D5, scheme/templated/Frequency.hpp:23-136) as a
@@ -487,6 +491,7 @@ SELECT o_orderstatus AS status,
        MAX(o_orderkey) AS max_key
 FROM orders GROUP BY o_orderstatus
 """,
+    eager=True,
 )
 def format_datasource_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full engine loop through the registered data source: write orders
@@ -544,6 +549,7 @@ FROM events
 WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-16'
 GROUP BY p_date
 """,
+    eager=True,
 )
 def format_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static partition pruning: events written `p_date=YYYY-MM-DD/` (one
@@ -584,6 +590,7 @@ SELECT p_date,
 FROM f JOIN mondays USING (p_date)
 GROUP BY p_date
 """,
+    eager=True,
 )
 def format_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning: the pruning predicate is NOT on the
@@ -674,6 +681,7 @@ FROM orders
 WHERE NOT (o_orderpriority = '1-URGENT' AND o_totalprice < 50000)
 GROUP BY o_orderstatus
 """,
+    eager=True,
 )
 def format_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read DELETE through deletion vectors: write orders chunked,
@@ -728,6 +736,7 @@ SELECT 'o_totalprice', count(*)::BIGINT, (count(*) - count(o_totalprice))::BIGIN
 FROM orders
 ORDER BY column_name
 """,
+    eager=True,
 )
 def format_metadata_only_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate pushdown to metadata: COUNT / null-count / MIN / MAX
@@ -1071,6 +1080,7 @@ SELECT substr(o_orderpriority, 1, 1) AS prio_class,
          AS total_cents
 FROM orders GROUP BY 1
 """,
+    eager=True,
 )
 def format_column_group_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-group encoding BANKED end-to-end (the round-7 plan query's

@@ -307,6 +307,7 @@ labels AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node)
 SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id
 FROM documents d LEFT JOIN labels l ON l.node = d.doc_id
 """,
+    eager=True,
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over minhash-LSH near-dup pairs (iterative
@@ -1209,6 +1210,7 @@ SELECT vec_id, old_cell, c_id AS new_cell,
        CASE WHEN old_cell != c_id THEN 1 ELSE 0 END AS moved
 FROM re WHERE rn = 1
 """,
+    eager=True,
 )
 def q_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd iteration over the IVF cells (see similarity.kmeans_refine):
@@ -2174,6 +2176,7 @@ SELECT doc_a, doc_b,
 FROM pairs
 WHERE round(dot / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6) >= 0.3
 """,
+    eager=True,
 )
 def q_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag-of-words near-dup: TF-IDF cosine >= 0.3, hot terms (df > 50)
@@ -2354,6 +2357,7 @@ JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
 WHERE round(inter / (sa.sz + sb.sz - inter), 6) >= 0.5
 """,
+    eager=True,
 )
 def q_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered Jaccard join — lossless AllPairs pruning (see
@@ -2435,6 +2439,7 @@ SELECT sum(in_t)::BIGINT AS n_truth,
          AS recall_at_t
 FROM j
 """,
+    eager=True,
 )
 def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline QA: how good are the MinHash-LSH candidates vs exact
@@ -2660,6 +2665,7 @@ SELECT sum(in_t)::BIGINT AS n_truth,
          AS recall_at_t
 FROM j
 """,
+    eager=True,
 )
 def q_lsh_tuned_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_lsh_recall's tuning answer: the same audit run at the
@@ -2752,7 +2758,7 @@ FROM hits CROSS JOIN tot ORDER BY method
 """
 
 
-@register("ann_recall_audit", oracle=_ANN_RECALL_ORACLE)
+@register("ann_recall_audit", oracle=_ANN_RECALL_ORACLE, eager=True)
 def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality audit: recall@5 of each approximate method (IVF, PQ,
     LSH) against brute-force cosine truth over the same 8 query vectors —
@@ -2761,7 +2767,7 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     params), so the oracle is their oracles composed.
 
     Scale: the corpus projection is PINNED (localCheckpoint, eager →
-    EAGER_BUILD) and every chain derives from it — ONE FileScan of
+    eager=True) and every chain derives from it — ONE FileScan of
     embeddings instead of the 13 the verbatim chain composition paid
     (round-8 VERDICT #2's shared-candidate-projection fix); each chain
     keeps its registered parameters exactly, so the composed oracle is
@@ -2783,7 +2789,7 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # brute-force chain evaluates once, not twice. Eager, not lazy: the
     # denominator is broadcast, and broadcast subtrees execute as separate
     # jobs that race ahead of a lazy checkpoint's materialization
-    # (round-8; builder already EAGER_BUILD for the emb pin).
+    # (round-8; builder already eager=True for the emb pin).
     truth = (
         cosine_topk(emb, _ANN_QUERY_IDS, k=5)
         .select("q_id", "neighbor_id")
@@ -2957,7 +2963,7 @@ WHERE d.method <> 'exact'
 """
 
 
-@register("ann_ndcg_audit", oracle=_ANN_NDCG_ORACLE)
+@register("ann_ndcg_audit", oracle=_ANN_NDCG_ORACLE, eager=True)
 def q_ann_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-quality audit: NDCG@5 of each approximate ANN method (IVF, PQ,
     LSH) against brute-force cosine truth — the GRADED refinement of
@@ -2975,7 +2981,7 @@ def q_ann_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines.
 
     Scale: the corpus projection is PINNED (localCheckpoint, eager →
-    EAGER_BUILD) and every chain derives from it — ONE FileScan of
+    eager=True) and every chain derives from it — ONE FileScan of
     embeddings instead of the 15 the verbatim chain composition paid
     (round-8 VERDICT #2's shared-candidate-projection fix); each chain
     keeps its registered parameters exactly, so the composed oracle is
@@ -3037,7 +3043,7 @@ def q_ann_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # initial plan held 42 Exchanges before this). Eager, not lazy: the
     # ideal side is broadcast, and broadcast subtrees execute as separate
     # jobs that race ahead of a lazy checkpoint's materialization
-    # (round-8; builder already EAGER_BUILD for the emb pin).
+    # (round-8; builder already eager=True for the emb pin).
     dcg = rel.groupBy("method", "q_id").agg(
         F.sum(term).cast("double").alias("dcg")
     ).localCheckpoint(eager=True)
@@ -3302,7 +3308,7 @@ SELECT node AS doc_id, r AS rank FROM r3
 )
 
 
-@register("dedup_pagerank", oracle=_PAGERANK_ORACLE)
+@register("dedup_pagerank", oracle=_PAGERANK_ORACLE, eager=True)
 def q_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the MinHash-LSH near-dup graph (3 fixed
     iterations, d=0.85): rank-based canonical selection for duplicate
@@ -3437,6 +3443,7 @@ SELECT (SELECT count(*) FROM prs)::BIGINT AS n_edges,
                        / (SELECT n_wedges FROM wedges) END, 6)
          AS global_clustering
 """,
+    eager=True,
 )
 def q_dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count + global clustering coefficient of the near-dup LSH
@@ -3533,7 +3540,7 @@ SELECT (SELECT count(DISTINCT node) FROM (
     )
 
 
-@register("dedup_kcore", oracle=_kcore_oracle())
+@register("dedup_kcore", oracle=_kcore_oracle(), eager=True)
 def q_dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-core of the near-dup LSH candidate graph by iterative degree
     peeling (3 fixed rounds, the pagerank fixed-iteration convention):
@@ -3816,6 +3823,7 @@ ranked AS (
 SELECT q_id, rnk::BIGINT AS rnk, neighbor_id, hamming::BIGINT AS hamming
 FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk
 """,
+    eager=True,
 )
 def q_ann_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k by Hamming distance over 1-bit binary-quantized embeddings
@@ -3828,7 +3836,7 @@ def q_ann_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return binary_topk(load_table(spark, sf_dir, "embeddings"), _ANN_QUERY_IDS, k=5)
 
 
-@register("text_bpe_merges")  # rows-only: iterative merge learning is not SQL-expressible
+@register("text_bpe_merges", eager=True)  # rows-only: iterative merge learning is not SQL-expressible
 def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First 8 learned BPE merges over the documents corpus
     (pipeline/text.learn_bpe — iterative, per-round argmax + Arrow merge
@@ -4563,6 +4571,7 @@ SELECT CAST(wf.n AS BIGINT) AS n,
        round(CAST(acc.correct AS DOUBLE) / wf.n, 6) AS accuracy
 FROM wf, acc
 """,
+    eager=True,
 )
 def q_training_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed quality-classifier TRAINING: two deterministic batch-GD
@@ -4665,6 +4674,7 @@ SELECT a.i AS i, b.i AS j,
 FROM ex a JOIN ex b ON a.vec_id = b.vec_id AND a.i <= b.i
 GROUP BY 1, 2
 """,
+    eager=True,
 )
 def q_embedding_second_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distributed second-moment (Gram) matrix of the embedding
@@ -4679,7 +4689,7 @@ def q_embedding_second_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return second_moment_matrix(vecs)
 
 
-@register("embedding_pca_topk")  # rows-only: eigensolve is not SQL-expressible
+@register("embedding_pca_topk", eager=True)  # rows-only: eigensolve is not SQL-expressible
 def q_embedding_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus PCA: dominant eigenvector via power iteration over the exact
     second-moment matrix (O(d^2) driver scalars; 8 fixed iterations,
@@ -4808,6 +4818,7 @@ FROM common
 JOIN sizes sa ON sa.source = common.src_a
 JOIN sizes sb ON sb.source = common.src_b
 """,
+    eager=True,
 )
 def q_text_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btrblocks_spark.pipeline.text import source_overlap
@@ -5037,6 +5048,7 @@ SELECT cluster_id::BIGINT AS cluster_id, doc_id::BIGINT AS keep_doc_id,
        quality AS best_quality, sz::BIGINT AS cluster_size
 FROM r WHERE rn = 1
 """,
+    eager=True,
 )
 def q_dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep the highest-quality member of every near-dup cluster instead of
@@ -5227,6 +5239,7 @@ SELECT anchor_id, negative_id, cosine,
 FROM sym
 QUALIFY rank <= 2
 """,
+    eager=True,
 )
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive retrieval training: per anchor
@@ -5313,6 +5326,7 @@ SELECT deg.node, d::BIGINT AS degree,
 FROM deg LEFT JOIN tv USING (node)
 WHERE d >= 2
 """,
+    eager=True,
 )
 def q_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node local clustering coefficient of the near-dup candidate
@@ -5427,6 +5441,7 @@ SELECT q_id, CAST(sel_rank AS BIGINT) AS sel_rank, vec_id,
        CAST(mmr_num AS DOUBLE) / 10000000.0 AS mmr_score
 FROM sel
 """,
+    eager=True,
 )
 def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diversity re-rank (λ=0.7) of each probe's top-8 cosine
@@ -5437,7 +5452,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mmr_rerank(load_table(spark, sf_dir, "embeddings"), _ANN_QUERY_IDS)
 
 
-@register("retrieval_mmr_rerank_k")
+@register("retrieval_mmr_rerank_k", eager=True)
 def q_mmr_rerank_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION MMR form for arbitrary result-set sizes (a RAG
     context window wants k=10+, not 3): the iterative round-fenced greedy
@@ -5522,6 +5537,7 @@ JOIN top1000 ON rn <= k
 CROSS JOIN tot
 GROUP BY k
 """,
+    eager=True,
 )
 def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage curve: the share of all token occurrences
@@ -5667,7 +5683,7 @@ ORDER BY cfg.method, cfg.param
     )
 
 
-@register("ann_operating_curve", oracle=_ann_curve_oracle())
+@register("ann_operating_curve", oracle=_ann_curve_oracle(), eager=True)
 def q_ann_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN OPERATING CURVE (round-8 VERDICT #4): recall@5 and mean NDCG@5
     of IVF at nprobe ∈ {1,2,4} and sign-LSH at {2,4,6} hyperplanes, all
@@ -5683,7 +5699,7 @@ def q_ann_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     those rounded values in DECIMAL before ONE final division.
 
     Scale: the corpus projection is PINNED (localCheckpoint, eager →
-    EAGER_BUILD) and every sweep arm derives from it — one FileScan of
+    eager=True) and every sweep arm derives from it — one FileScan of
     embeddings for a 6-config sweep (the shared-candidate-projection shape
     the round-7 VERDICT asked of the audit family); each arm is the
     registered chain's own bucketed/probed plan, and everything downstream

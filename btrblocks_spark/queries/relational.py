@@ -143,7 +143,7 @@ FROM documents GROUP BY lang
 """
 
 
-@register("scan_jsonl_roundtrip", _SCAN_JSONL_ORACLE)
+@register("scan_jsonl_roundtrip", _SCAN_JSONL_ORACLE, eager=True)
 def scan_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL source/sink loop (training-corpus ingest format): export the
     documents table as JSON-lines with explicit nulls, re-ingest it with a
@@ -1252,7 +1252,7 @@ FROM orders GROUP BY o_orderstatus
 """
 
 
-@register("scan_csv_roundtrip", _SCAN_CSV_ORACLE)
+@register("scan_csv_roundtrip", _SCAN_CSV_ORACLE, eager=True)
 def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source/sink loop (S1+S6, the reference's btrtocsv/convertCSV
     pair, tools/conversion/csvtobtr.cpp + btrtocsv.cpp): export orders as

@@ -100,7 +100,7 @@ FROM orders
 """
 
 
-@register("stats_string_profile", _STRING_PROFILE_ORACLE)
+@register("stats_string_profile", _STRING_PROFILE_ORACLE, eager=True)
 def stats_string_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     uniq_len = (
@@ -668,6 +668,7 @@ FROM terms JOIN tot USING (col_name)
 GROUP BY col_name, n, n_distinct
 ORDER BY col_name
 """,
+    eager=True,
 )
 def stats_column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column Shannon entropy in bits — the information-theoretic lower
@@ -756,6 +757,7 @@ SELECT (SELECT t_r FROM tot)::BIGINT AS n_r,
        (SELECT min(bucket) FROM gaps WHERE gap = (SELECT ks FROM best))::BIGINT
          AS argmax_bucket
 """,
+    eager=True,
 )
 def stats_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov statistic between the R-flag and
@@ -873,6 +875,7 @@ SELECT (SELECT count(*) FROM joint)::BIGINT AS n_cells,
        round(CAST(SUM(term) AS DOUBLE) / ln(2.0), 6) AS mi_bits
 FROM terms
 """,
+    eager=True,
 )
 def stats_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual information I(X;Y) in bits between returnflag and linestatus
@@ -1147,7 +1150,7 @@ def _mg_partition_fn(k: int):
     return mg
 
 
-@register("stats_heavy_hitters", _HH_ORACLE)
+@register("stats_heavy_hitters", _HH_ORACLE, eager=True)
 def stats_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact heavy hitters (freq > n/k) via the two-pass Misra-Gries
     pattern: per-partition MG summaries (k counters, O(k) memory however
@@ -1706,6 +1709,7 @@ SELECT sk.p AS p, sk.k AS k,
        CAST(abs(sk.sketch_cents - exact.exact_cents) AS BIGINT) AS abs_err_cents
 FROM sk JOIN exact ON sk.p = exact.p
 """,
+    eager=True,
 )
 def stats_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable quantile sketch with an in-query accuracy audit: a KMV-style
@@ -1774,7 +1778,7 @@ def stats_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the right 100 TB trade vs pinning the full keyed stream). Eager,
     # not lazy: two branches are broadcast, and broadcast subtrees execute
     # as separate jobs that race ahead of a lazy checkpoint's
-    # materialization (round-8; builder added to EAGER_BUILD).
+    # materialization (round-8; builder registered eager=True).
     freq = keyed.groupBy("v").agg(F.count("*").alias("n")).localCheckpoint(eager=True)
     b = freq.withColumn("_b", F.expr("v DIV 65536"))
     w_local = (
@@ -2248,6 +2252,7 @@ SELECT (SELECT count(*) FROM daily)::BIGINT AS n_days,
        n_pairs::BIGINT AS n_pairs, sen_slope, intercept
 FROM sl CROSS JOIN ic
 """,
+    eager=True,
 )
 def stats_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend estimator over the daily order-count series:
@@ -2269,7 +2274,7 @@ def stats_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never a shuffled cartesian), so pairs ≈ days²/2 ≈ 3 M tiny rows
     regardless of corpus size; both medians are single exact aggregates
     over those bounded sets. ``daily`` is PINNED (localCheckpoint, eager →
-    EAGER_BUILD registration): a/b/ic/nd reference it through four
+    eager=True registration): a/b/ic/nd reference it through four
     branches, and unpinned each branch re-derived the full orders scan
     (4 FileScans in the round-7 plan; round-8 VERDICT #2)."""
     daily = (
@@ -2370,6 +2375,7 @@ SELECT n::BIGINT AS n_rows, n_groups::BIGINT AS n_groups,
                          AS DOUBLE)), 6) AS jackknife_se
 FROM tot
 """,
+    eager=True,
 )
 def stats_jackknife_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delete-a-group jackknife (Kott 2001, the survey-statistics standard
@@ -2389,7 +2395,7 @@ def stats_jackknife_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combinable groupBy to O(G) rows; everything after
     runs on the G-row table — which is PINNED (localCheckpoint, eager →
-    EAGER_BUILD registration) because tot/loo/jb/dev reference it through
+    eager=True registration) because tot/loo/jb/dev reference it through
     four branches: unpinned, each branch re-derived the full orders scan
     (5 FileScans in the round-7 plan; round-8 VERDICT #2)."""
     g = (
@@ -2493,6 +2499,7 @@ SELECT n::BIGINT AS n_rows, n_groups::BIGINT AS n_groups,
                          AS DOUBLE)), 6) AS jackknife_se
 FROM tot
 """,
+    eager=True,
 )
 def stats_jackknife_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delete-a-group jackknife over G = 32 DETERMINISTIC HASH buckets
@@ -2509,7 +2516,7 @@ def stats_jackknife_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism/scale: exactly the stats_jackknife_group machinery — one
     map-side-combinable groupBy to O(G) integer-cent rows (PINNED:
-    localCheckpoint + EAGER_BUILD, tot/loo/jb/dev reference it through
+    localCheckpoint + eager=True, tot/loo/jb/dev reference it through
     four branches), every θ_i one 6-dp IEEE expression, DECIMAL sums."""
     from btrblocks_spark.pipeline.text import hash32
 

@@ -855,12 +855,6 @@ class BtrBlocksDataSource(DataSource):
         return BtrBlocksStreamWriter(self.options, schema, overwrite)
 
 
-# session-memo cap convention (_PAIRS_MEMO_CAP / _CC_MEMO_CAP are also 16):
-# entries here are unpersisted DataFrames (cheap), but each key pins the full
-# file listing — a session sweeping thousands of tables must stay bounded
-_BTR_READ_MEMO_CAP = 16
-
-
 def load_btr_table(spark, table_dir: str):
     """Identity-stable load of a btrblocks table — the entry point memo-aware
     consumers should use instead of a raw ``spark.read.format("btrblocks")``.
@@ -868,25 +862,27 @@ def load_btr_table(spark, table_dir: str):
     Two raw ``.load()`` calls on the SAME table do NOT unify under Spark's
     plan canonicalization: each load pickles a fresh Python DataSource
     instance, so ``sameSemantics`` is False and ``semanticHash`` differs —
-    which means every plan-keyed session memo (``dedup._memoized_by_plan``
-    pair tables, the CC label memo) sees the second read of an unchanged
+    which means every plan-keyed session memo (the ``pairs`` and ``cc``
+    memos of ``pipeline.dedup``) sees the second read of an unchanged
     table as a brand-new corpus and rebuilds from scratch. This helper
     restores the memo contract by keying on the SIDECAR's table identity
-    instead of the plan: (realpath, md5 of the ``_btr_metadata.json``
-    content, sorted data-file listing — appends/compacts/commits all move
-    at least one of those) and returning the SAME DataFrame object for an
-    unchanged table, which then unifies everywhere downstream for free.
-    Object-store URIs (no local listing) skip the memo and always load
-    fresh — correct, just unmemoized. The listing fingerprints each data
-    file as (name, size, mtime_ns), so even a same-name in-place rewrite
-    that leaves the sidecar byte-identical rotates the key; the memo is
-    FIFO-capped at ``_BTR_READ_MEMO_CAP`` entries (eviction is always
-    safe — it only forfeits plan unification for that table)."""
+    instead of the plan: the session memo ``btr_read`` (``tables.memo``)
+    is keyed on the table's realpath and holds its fingerprint (md5 of the
+    ``_btr_metadata.json`` content, sorted data-file listing —
+    appends/compacts/commits all move at least one of those), returning
+    the SAME DataFrame object for an unchanged table, which then unifies
+    everywhere downstream for free. A changed fingerprint replaces the
+    path's one entry. Object-store URIs (no local listing) skip the memo
+    and always load fresh — correct, just unmemoized. The listing
+    fingerprints each data file as (name, size, mtime_ns), so even a
+    same-name in-place rewrite that leaves the sidecar byte-identical
+    rotates the fingerprint; eviction past the memo cap is always safe —
+    it only forfeits plan unification for that table."""
     import hashlib
     import json as _json
 
     from btrblocks_spark.format.reader import _local_path
-    from btrblocks_spark.tables import session_memo
+    from btrblocks_spark.tables import memo
 
     def _load():
         return spark.read.format("btrblocks").option("path", table_dir).load()
@@ -911,21 +907,9 @@ def load_btr_table(spark, table_dir: str):
         listing = tuple(entries)
     else:
         listing = ()
-    key = (os.path.realpath(local), sidecar, listing)
-    memo = session_memo(spark, "_btrblocks_btr_read_memo")
-    hit = memo.get(key)
-    if hit is not None:
-        # refresh dict position so FIFO eviction behaves LRU-ish: a hot,
-        # repeatedly-opened table must outlive stale one-shot entries
-        del memo[key]
-        memo[key] = hit
-        return hit
-    # one live entry per table path: a changed table must not pin its
-    # predecessor's DataFrame (or grow one entry per historical version)
-    for k in [k for k in memo if k[0] == key[0]]:
-        del memo[k]
-    while len(memo) >= _BTR_READ_MEMO_CAP:
-        del memo[next(iter(memo))]
-    df = _load()
-    memo[key] = df
-    return df
+    fingerprint = (sidecar, listing)
+    return memo(
+        spark, "btr_read", os.path.realpath(local),
+        lambda: (fingerprint, _load()),
+        valid=lambda e: e[0] == fingerprint,
+    )[1]

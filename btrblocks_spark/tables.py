@@ -28,43 +28,85 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# session -> {(sf_dir, name): DataFrame}. Testdata tables are immutable
-# parquet; the DataFrame is an immutable logical plan, so reuse is safe and
-# saves the one-task footer-schema job spark.read.parquet runs per call —
-# without the memo, registering all ~250 lazy operator views (or running
-# the bench fleet) pays that job once per query.
-#
-# Stored as an ATTRIBUTE on the SparkSession object: sessions from
-# spark.newSession() share an applicationId but have SEPARATE temp-view
-# catalogs, so the memo must be per-session — and an id(spark) key is
-# unsound across session lifetimes (CPython reuses a dead session's id, so
-# a NEW session could be served a DataFrame bound to the dead session's
-# catalog). A module-global WeakKeyDictionary is NOT the fix: its values
-# are DataFrames that strongly reference the key session
-# (DataFrame._session), so the weakref callback never fires and every
-# session leaks for the application lifetime. An attribute has no global
-# path — the memo and its plans are garbage exactly when the session is.
+MEMO_CAP = 16
+_STATS_ATTR = "_btrblocks_memo_stats"
 
 
-def session_memo(spark: SparkSession, attr: str) -> dict:
-    """Per-session memo dict stored on the session object itself, so it
-    lives exactly as long as the session (no module-global strong path)."""
-    memo = getattr(spark, attr, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, attr, memo)
-    return memo
+def _session_dict(spark, attr: str) -> dict:
+    d = getattr(spark, attr, None)
+    if d is None:
+        d = {}
+        setattr(spark, attr, d)
+    return d
+
+
+def memo_entries(spark, name: str) -> dict:
+    """The live ``{key: value}`` dict of session memo ``name``, least
+    recently used first."""
+    return _session_dict(spark, f"_btrblocks_{name}_memo")
+
+
+def memo_stats(spark, name: str) -> tuple[int, int]:
+    """``(hits, misses)`` of session memo ``name`` so far."""
+    return tuple(getattr(spark, _STATS_ATTR, {}).get(name, (0, 0)))
+
+
+def memo(spark, name: str, key, build, *, valid=None, on_evict=None):
+    """Session memo: return the value stored under ``key`` in memo ``name``,
+    or ``build()`` it, store it and return it.
+
+    Spark never reuses lineage across separately built DataFrames, so an
+    expensive derived table (a footer-schema read, a candidate-pair chain,
+    converged cluster labels) is rebuilt by every consumer unless the
+    engine hands them the same object. Memo state (entries AND counters)
+    is an ATTRIBUTE on the session object, prefixed ``_btrblocks_``:
+    sessions from ``spark.newSession()`` share an applicationId but have
+    separate temp-view catalogs, so the memo must be per-session; an
+    ``id(spark)`` key is unsound (CPython reuses a dead session's id); and
+    a module-global WeakKeyDictionary never evicts, because the memoized
+    DataFrames strongly reference their session. An attribute has no
+    global path — the memo dies exactly when the session does. Memoized
+    inputs are assumed immutable for the session's lifetime.
+
+    A hit refreshes the entry's eviction slot (LRU). A stored value for
+    which ``valid(value)`` is false (a hash collision, a changed table) is
+    evicted and rebuilt. Past ``MEMO_CAP`` entries the least recently used
+    is evicted. ``on_evict(value)`` runs on every eviction, best-effort."""
+    entries = memo_entries(spark, name)
+    counts = _session_dict(spark, _STATS_ATTR).setdefault(name, [0, 0])
+    if key in entries:
+        value = entries.pop(key)
+        if valid is None or valid(value):
+            entries[key] = value
+            counts[0] += 1
+            return value
+        _evict(value, on_evict)
+    counts[1] += 1
+    value = build()
+    entries.pop(key, None)
+    entries[key] = value
+    while len(entries) > MEMO_CAP:
+        _evict(entries.pop(next(iter(entries))), on_evict)
+    return value
+
+
+def _evict(value, on_evict) -> None:
+    if on_evict is not None:
+        try:
+            on_evict(value)
+        except Exception:  # session teardown mid-call: eviction is best-effort
+            pass
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    per_session = session_memo(spark, "_btrblocks_table_memo")
-    key = (sf_dir, name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    df = _load_table_uncached(spark, sf_dir, name)
-    per_session[key] = df
-    return df
+    # testdata tables are immutable parquet: reuse saves the one-task
+    # footer-schema job spark.read.parquet runs per call, which registering
+    # every lazy operator view (or running the bench fleet) would otherwise
+    # pay once per query
+    return memo(
+        spark, "table", (sf_dir, name),
+        lambda: _load_table_uncached(spark, sf_dir, name),
+    )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -23,7 +23,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from btrblocks_spark.session import get_spark
-from btrblocks_spark.tables import load_table
+from btrblocks_spark.tables import load_table, memo_entries, memo_stats
 
 
 def materialize(df) -> None:
@@ -82,18 +82,16 @@ def main() -> int:
         )
 
     def minhash_fresh(d):
-        # the pair-table session memo (dedup._memoized_by_plan) would make
-        # every rep after the warmup a cache READ — this experiment measures
-        # the chain, so evict the memo and its cache pin before each run
-        memo = getattr(spark, "_btrblocks_pairs_memo", None)
-        if memo:
-            for _src, cached in list(memo.values()):
-                try:
-                    cached.unpersist()
-                except Exception:  # noqa: BLE001
-                    pass
-            memo.clear()
+        # the pairs session memo would make every rep after the warmup a
+        # cache READ — this experiment measures the chain, so evict the
+        # memo and its cache pins before each run
+        pairs = memo_entries(spark, "pairs")
+        for _src, cached in pairs.values():
+            cached.unpersist()
+        pairs.clear()
+        misses = memo_stats(spark, "pairs")[1]
         materialize(minhash_lsh_pairs(d))
+        assert memo_stats(spark, "pairs")[1] == misses + 1, "chain not rebuilt"
 
     chains = {
         "minhash_lsh": minhash_fresh,

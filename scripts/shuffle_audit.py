@@ -129,8 +129,8 @@ def main() -> int:
                 "recall audit) legitimately exchange exploded posting lists — "
                 "that amplification is exactly why the registry also carries "
                 "the prefix-filtered variant (`dedup_jaccard_prefix`) and the "
-                "LSH-banded candidate path for corpus-scale runs. Queries in "
-                "`queries.EAGER_BUILD` execute their heavy chains at "
+                "LSH-banded candidate path for corpus-scale runs. Queries "
+                "registered `eager=True` execute their heavy chains at "
                 "CONSTRUCTION time (eager checkpoint pins / memo warm-up), so "
                 "their rows here measure only the final assembly over pinned "
                 "intermediates — their build-time shuffle is attributed to "

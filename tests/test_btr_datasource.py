@@ -636,7 +636,7 @@ def test_load_btr_table_unifies_repeat_reads(spark, sf_dir, tmp_path):
     the SAME DataFrame object; a table change → a fresh one."""
     from btrblocks_spark.pipeline.dedup import _memoized_by_plan
     from btrblocks_spark.sources.btr_datasource import load_btr_table
-    from btrblocks_spark.tables import session_memo
+    from btrblocks_spark.tables import memo_entries
 
     out = str(tmp_path / "docs")
     docs = load_table(spark, sf_dir, "documents").limit(40)
@@ -653,7 +653,7 @@ def test_load_btr_table_unifies_repeat_reads(spark, sf_dir, tmp_path):
     assert a.count() == 40
 
     # a _memoized_by_plan consumer now hits on the second read
-    memo = session_memo(spark, "_btrblocks_pairs_memo")
+    memo = memo_entries(spark, "pairs")
     before = dict(memo)
     try:
         p1 = _memoized_by_plan(a, ("btr-read-test",), lambda: a.select("doc_id"))
@@ -670,11 +670,12 @@ def test_load_btr_table_unifies_repeat_reads(spark, sf_dir, tmp_path):
     c = load_btr_table(spark, out)
     assert c is not a
     assert c.count() == 43
-    # and the read memo holds ONE entry for this path, not one per version
-    read_memo = session_memo(spark, "_btrblocks_btr_read_memo")
+    # and the read memo holds ONE entry for this path, not one per version:
+    # the entry is keyed on the path and now holds the new version
+    read_memo = memo_entries(spark, "btr_read")
     import os as _os
 
-    assert sum(1 for k in read_memo if k[0] == _os.path.realpath(out)) == 1
+    assert read_memo[_os.path.realpath(out)][1] is c
 
 
 @pytest.mark.slow  # excluded from the default (driver-window) run; see pytest.ini
@@ -683,7 +684,7 @@ def test_load_btr_table_maintenance_cap_and_rewrite(spark, sf_dir, tmp_path):
 
     1. maintenance commits between two load_btr_table calls (append,
        compact) serve the NEW data and evict the stale per-path entry;
-    2. the memo is FIFO-capped at _BTR_READ_MEMO_CAP — sweeping more
+    2. the memo is capped at MEMO_CAP — sweeping more
        tables than the cap stays bounded, and a HOT entry survives the
        sweep because a hit refreshes its eviction position (LRU-ish);
     3. a same-name in-place data-file rewrite that leaves the sidecar
@@ -692,14 +693,11 @@ def test_load_btr_table_maintenance_cap_and_rewrite(spark, sf_dir, tmp_path):
     import os
 
     from btrblocks_spark.format.maintenance import compact
-    from btrblocks_spark.sources.btr_datasource import (
-        _BTR_READ_MEMO_CAP,
-        load_btr_table,
-    )
-    from btrblocks_spark.tables import session_memo
+    from btrblocks_spark.sources.btr_datasource import load_btr_table
+    from btrblocks_spark.tables import MEMO_CAP, memo_entries
 
     spark.dataSource.register(BtrBlocksDataSource)
-    read_memo = session_memo(spark, "_btrblocks_btr_read_memo")
+    read_memo = memo_entries(spark, "btr_read")
     read_memo.clear()  # isolate from earlier tests in this session
 
     out = str(tmp_path / "docs")
@@ -720,7 +718,7 @@ def test_load_btr_table_maintenance_cap_and_rewrite(spark, sf_dir, tmp_path):
     assert c is not b, "compact must rotate the memo key"
     assert c.count() == 35
     real = os.path.realpath(out)
-    assert sum(1 for k in read_memo if k[0] == real) == 1, (
+    assert read_memo[real][1] is c, (
         "one live entry per path — older versions must be evicted"
     )
 
@@ -736,13 +734,13 @@ def test_load_btr_table_maintenance_cap_and_rewrite(spark, sf_dir, tmp_path):
     read_memo.clear()
     hot = load_btr_table(spark, out)
     small = docs.limit(3)
-    for i in range(_BTR_READ_MEMO_CAP + 4):
+    for i in range(MEMO_CAP + 4):
         p = str(tmp_path / f"t{i}")
         write_table(small, p, ["doc_id"], table_name="documents")
         load_btr_table(spark, p)
         # touch the hot table every round: the hit must refresh its slot
         assert load_btr_table(spark, out) is hot
-    assert len(read_memo) <= _BTR_READ_MEMO_CAP
-    assert any(k[0] == real for k in read_memo), (
+    assert len(read_memo) <= MEMO_CAP
+    assert real in read_memo, (
         "hot entry evicted despite per-hit refresh"
     )

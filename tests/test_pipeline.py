@@ -1460,20 +1460,20 @@ def test_pair_builders_memoized_per_plan(spark, sf_dir):
 
 def test_pair_memo_evicts_past_cap(spark):
     """A long-lived session sweeping many corpora must not accumulate
-    DISK_ONLY blocks forever: past _PAIRS_MEMO_CAP insertions the oldest
+    DISK_ONLY blocks forever: past MEMO_CAP insertions the oldest
     entry is evicted and unpersisted; an evicted DataFrame still computes
     (persist retains lineage, so it recomputes instead of reading dropped
     blocks)."""
-    from btrblocks_spark.pipeline.dedup import _PAIRS_MEMO_CAP, _memoized_by_plan
-    from btrblocks_spark.tables import session_memo
+    from btrblocks_spark.pipeline.dedup import _memoized_by_plan
+    from btrblocks_spark.tables import MEMO_CAP, memo_entries
 
-    memo = session_memo(spark, "_btrblocks_pairs_memo")
+    memo = memo_entries(spark, "pairs")
     memo.clear()
     outs = []
-    for i in range(_PAIRS_MEMO_CAP + 3):
+    for i in range(MEMO_CAP + 3):
         src = spark.range(i + 1).withColumnRenamed("id", "k")
         outs.append(_memoized_by_plan(src, ("evict-test", i), lambda s=src: s))
-    assert len(memo) == _PAIRS_MEMO_CAP
+    assert len(memo) == MEMO_CAP
     assert not outs[0].storageLevel.useDisk  # evicted: unpersisted
     assert outs[-1].storageLevel.useDisk  # newest: still cached
     assert outs[0].count() == 1  # evicted DataFrame still computes
@@ -1488,22 +1488,22 @@ def test_pair_memo_evicts_past_cap(spark):
 
 def test_cc_label_memo_bounded(spark):
     """The converged-cluster label memo must not grow one localCheckpointed
-    table per corpus forever: past _CC_MEMO_CAP entries the oldest is
+    table per corpus forever: past MEMO_CAP entries the oldest is
     dropped (next call on that corpus rebuilds — localCheckpoint cannot
     transparently recompute, so evict = delete)."""
-    from btrblocks_spark.pipeline.dedup import _CC_MEMO_CAP, dedup_clusters
-    from btrblocks_spark.tables import session_memo
+    from btrblocks_spark.pipeline.dedup import dedup_clusters
+    from btrblocks_spark.tables import MEMO_CAP, memo_entries
 
-    memo = session_memo(spark, "_btrblocks_cc_memo")
+    memo = memo_entries(spark, "cc")
     memo.clear()
-    for i in range(_CC_MEMO_CAP + 2):
+    for i in range(MEMO_CAP + 2):
         docs = spark.createDataFrame(
             [(1, f"alpha beta gamma delta {i}"), (2, f"alpha beta gamma delta {i}")],
             "doc_id long, text string",
         )
         out = dedup_clusters(docs)
         assert out.count() == 2
-    assert len(memo) == _CC_MEMO_CAP
+    assert len(memo) == MEMO_CAP
     # evicted corpus: a re-call rebuilds (fresh entry) rather than erroring
     docs0 = spark.createDataFrame(
         [(1, "alpha beta gamma delta 0"), (2, "alpha beta gamma delta 0")],
@@ -1513,7 +1513,7 @@ def test_cc_label_memo_bounded(spark):
     memo.clear()
     # the LSH chain under dedup_clusters also fed the pairs memo; drain it
     # the same leak-free way
-    pairs_memo = session_memo(spark, "_btrblocks_pairs_memo")
+    pairs_memo = memo_entries(spark, "pairs")
     for _docs, cached in pairs_memo.values():
         cached.unpersist()
     pairs_memo.clear()

@@ -742,7 +742,7 @@ def test_no_redundant_base_scans_in_any_registered_query(spark, sf_dir):
     initial physical plan may scan the same base table more than twice —
     at 100 TB every redundant FileScan is a full extra pass over the
     table. Multi-referenced small aggregates must pin the reduced
-    intermediate (localCheckpoint + EAGER_BUILD) or thread scalars through
+    intermediate (localCheckpoint + eager=True) or thread scalars through
     the next aggregate (the stats_theil_sen convention). Pre-existing
     bounded multi-branch shapes are frozen in _MULTI_SCAN_OK."""
     bad = []

@@ -55,10 +55,11 @@ def test_register_query_views_sql_surface(spark, sf_dir):
 @pytest.mark.slow  # excluded from the default (driver-window) run; see pytest.ini
 def test_register_query_views_default_is_metadata_only(spark, sf_dir):
     """Default registration (no names) must be pure metadata: no Spark job
-    may run while building/registering the non-EAGER_BUILD views — the
-    'views are lazy' contract. Eager-builder queries are excluded by
-    default and available by explicit name."""
-    from btrblocks_spark.queries import EAGER_BUILD, all_queries, register_query_views
+    may run while building/registering the non-eager views — the
+    'views are lazy' contract. This is the check behind the registry's
+    ``eager=True`` flag. Eager-builder queries are excluded by default and
+    available by explicit name."""
+    from btrblocks_spark.queries import all_queries, eager_queries, register_query_views
     from btrblocks_spark.tables import register_temp_views
 
     # warm the table memo first: the initial load_table per table runs one
@@ -73,8 +74,9 @@ def test_register_query_views_default_is_metadata_only(spark, sf_dir):
         names = register_query_views(spark, sf_dir)
     finally:
         sc.setJobGroup(None, None)
-    assert set(names).isdisjoint(EAGER_BUILD)
-    assert len(names) == len(all_queries()) - len(EAGER_BUILD)
+    eager = eager_queries()
+    assert set(names).isdisjoint(eager)
+    assert len(names) == len(all_queries()) - len(eager)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert list(jobs) == [], f"view registration ran jobs: {jobs}"
     # eager ones still register on request
