@@ -16,9 +16,11 @@ with per-partition parallelism and DETERMINISTIC range boundaries:
      columns, so every job recomputes identical tags;
   3. count rows per range (key-columns-only scan, map-side agg) and build
      cumulative offsets on the driver (one tiny array);
-  4. hash-exchange on ``_pid`` + sort by (``_pid``, keys) within partitions,
-     then a narrow ``mapInArrow`` pass assigns index = offset[pid] +
-     local ordinal.
+  4. hash-exchange on ``_pid`` and assign
+     ``index = offsets[_pid] + row_number() OVER (PARTITION BY _pid ORDER
+     BY keys) - 1`` — the window's distribution and ordering are exactly
+     the exchange's partitioning plus one in-partition sort, so the plan is
+     one Exchange, one Sort, one Window, all in the JVM.
 
 Every step is parallel, driver state is O(num_partitions), and the full
 rows move exactly once (the single ``_pid`` exchange). Because steps 1-4
@@ -27,16 +29,21 @@ jobs that re-execute the lineage reproduce bit-identical indexes. The
 three driver jobs before the exchange read only the (parquet-pruned)
 key columns.
 
+Trade-off: ``WindowExec`` holds one whole ``_pid`` range (about
+rows / num_partitions) in Spark's spillable row buffer before it emits it,
+where the former Python ``mapInArrow`` index pass streamed its rows. In
+return no row crosses the JVM↔Python boundary: that pass serialized every
+full row through Arrow twice (out and back) and paid the Python worker's
+fixed per-task start-up cost on every partition.
+
 Order keys must be non-null and should be unique (ties get an arbitrary
 but schema-stable order, same as any ORDER BY on a non-unique key).
 """
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 _SAMPLES_PER_PART = 128
 
@@ -103,37 +110,6 @@ def _sample_boundaries(
     return bounds
 
 
-def _local_index_fn(offsets: dict[int, int], pid_idx: int, index_col: str):
-    """mapInArrow kernel: rows arrive sorted by (_pid, keys) with each pid's
-    rows contiguous; assign index = offset[pid] + running per-pid ordinal.
-    Vectorized over runs of equal pid."""
-
-    def add_index(batches):
-        import pyarrow as pa
-
-        seen: dict[int, int] = {}
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            pids = batch.column(pid_idx).to_numpy(zero_copy_only=False)
-            idx = np.empty(n, dtype=np.int64)
-            change = np.flatnonzero(np.diff(pids)) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [n]))
-            for s, e in zip(starts, ends):
-                p = int(pids[s])
-                base = offsets[p] + seen.get(p, 0)
-                idx[s:e] = np.arange(base, base + (e - s))
-                seen[p] = seen.get(p, 0) + int(e - s)
-            arrays = [batch.column(i) for i in range(batch.num_columns)]
-            arrays.append(pa.array(idx, type=pa.int64()))
-            names = list(batch.schema.names) + [index_col]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return add_index
-
-
 def with_global_index(
     df: DataFrame,
     order_keys: list[str],
@@ -167,12 +143,11 @@ def with_global_index(
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 8)
     if "_pid" in df.columns:
-        # the tagging below appends its own _pid and indexes it positionally
-        # (last column); a pre-existing _pid would be silently overwritten
-        # and mis-indexed
+        # the tagging below adds its own _pid and drops it from the output;
+        # a pre-existing _pid would be silently overwritten and lost
         raise ValueError("input already has a '_pid' column; rename it first")
     if index_col in df.columns:
-        # the kernel appends index_col to the schema; a pre-existing one
+        # the window appends index_col to the schema; a pre-existing one
         # would yield DUPLICATE column names and ambiguous-reference
         # errors far downstream (e.g. re-indexing a read-back table that
         # still carries _idx — drop it first)
@@ -193,28 +168,26 @@ def with_global_index(
         r["_pid"]: r["cnt"]
         for r in tagged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
     }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    # dense cumulative offsets over every possible pid 0..len(bounds)
+    offsets, acc = [], 0
+    for pid in range(len(bounds) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
 
-    part = tagged.repartition(num_partitions, "_pid").sortWithinPartitions(
-        "_pid", *order_keys
+    # the array lookup is nullable in Catalyst's typing (an out-of-range
+    # index) although every _pid indexes inside it; coalesce restores the
+    # non-nullable type the index column has always had
+    offset = F.coalesce(
+        F.lit(offsets).cast("array<bigint>")[F.col("_pid")], F.lit(0).cast("long")
     )
-    pid_idx = len(part.schema.fields) - 1  # _pid is the last column
-    out_schema = StructType(part.schema.fields + [StructField(index_col, LongType(), False)])
-    out = part.mapInArrow(
-        _local_index_fn(offsets, pid_idx, index_col), out_schema
-    ).drop("_pid")
+    ordinal = F.row_number().over(Window.partitionBy("_pid").orderBy(*order_keys))
+    out = (
+        tagged.repartition(num_partitions, "_pid")
+        .withColumn(index_col, (offset + ordinal - 1).cast("long"))
+        .drop("_pid")
+    )
     out._btr_total_rows = acc
     return out
-
-
-def unpersist_index(df: DataFrame) -> None:
-    """Back-compat no-op: the deterministic index path persists nothing."""
-    persisted = getattr(df, "_btr_persisted", None)
-    if persisted is not None:
-        persisted.unpersist()
 
 
 def with_chunk_id(

@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from btrblocks_spark.format import fs as _fs
 
@@ -188,11 +189,28 @@ def reconstruct_column_groups(
     return df.select(*[c for c in order if c in df.columns], *tail)
 
 
+def _read_data(spark: SparkSession, path: str) -> DataFrame:
+    """Scan the table's ``data/`` files with ``_idx`` always in the schema.
+
+    Files appended through the ``btrblocks`` source carry no ``_idx`` until
+    the next ``compact()``, and ``spark.read.parquet`` takes its schema from
+    one file's footer — when an appended file lists first, ``_idx`` is
+    missing from the whole scan. Only then is a nullable ``_idx`` added to
+    the inferred schema, so rows of appended files read it as NULL. No
+    footer sweep; every other column (schema-evolved tables included) is
+    exactly what the plain read infers."""
+    data = _fs.join(path, "data")
+    df = spark.read.parquet(data)
+    if "_idx" in df.columns:
+        return df
+    schema = StructType(df.schema.fields + [StructField("_idx", LongType(), True)])
+    return spark.read.schema(schema).parquet(data)
+
+
 def read_table(spark: SparkSession, path: str, with_index: bool = False):
     """Scan the chunked table. Returns (DataFrame, metadata)."""
     meta = read_metadata(path, spark)
-    df = spark.read.parquet(_fs.join(path, "data"))
-    df = reconstruct_column_groups(spark, path, df, meta)
+    df = reconstruct_column_groups(spark, path, _read_data(spark, path), meta)
     if not with_index:
         df = df.drop("_idx")
     return df, meta
@@ -207,7 +225,7 @@ def read_column_chunk(spark: SparkSession, path: str, column: str, chunk: int) -
     meta = read_metadata(path, spark)
     bs = meta["block_size"]
     lo, hi = chunk * bs, (chunk + 1) * bs
-    df = spark.read.parquet(_fs.join(path, "data"))
+    df = _read_data(spark, path)
     df = df.filter((F.col("_idx") >= lo) & (F.col("_idx") < hi))
     if column not in df.columns:
         df = reconstruct_column_groups(spark, path, df, meta)
@@ -306,23 +324,20 @@ def read_table_skipping(
     # a dependent works unchanged; the residual value filter then applies
     # to the reconstructed column (it cannot reach the parquet scan — the
     # dependent has no stored stream — but the _idx interval filters do)
-    df = reconstruct_column_groups(
-        spark, path, spark.read.parquet(_fs.join(path, "data")), meta
-    )
-    if not chunks:
-        cond = F.lit(False)
-    else:
-        # coalesce adjacent chunk ids into maximal _idx intervals
-        intervals: list[list[int]] = []
-        for c in sorted(chunks):
-            if intervals and intervals[-1][1] == c:
-                intervals[-1][1] = c + 1
-            else:
-                intervals.append([c, c + 1])
-        cond = None
-        for a, b in intervals:
-            clause = (F.col("_idx") >= a * bs) & (F.col("_idx") < b * bs)
-            cond = clause if cond is None else cond | clause
+    df = reconstruct_column_groups(spark, path, _read_data(spark, path), meta)
+    # rows appended since the last compact() have a NULL _idx and no chunk
+    # stats, so pruning cannot exclude them: they pass the interval filter
+    # and meet only the residual value predicate below
+    cond = F.col("_idx").isNull()
+    # coalesce adjacent chunk ids into maximal _idx intervals
+    intervals: list[list[int]] = []
+    for c in sorted(chunks):
+        if intervals and intervals[-1][1] == c:
+            intervals[-1][1] = c + 1
+        else:
+            intervals.append([c, c + 1])
+    for a, b in intervals:
+        cond = cond | ((F.col("_idx") >= a * bs) & (F.col("_idx") < b * bs))
     out = df.filter(cond)
     if lo is not None:
         out = out.filter(F.col(column) >= lo)
@@ -470,9 +485,7 @@ def sample_chunks(
         )
         < threshold
     ]
-    df = reconstruct_column_groups(
-        spark, path, spark.read.parquet(_fs.join(path, "data")), meta
-    )
+    df = reconstruct_column_groups(spark, path, _read_data(spark, path), meta)
     if not keep:
         return df.filter(F.lit(False)).drop("_idx"), []
     intervals: list[list[int]] = []

@@ -26,8 +26,9 @@ O(num_chunks · num_columns) small rows):
      file, compression/Datablock.hpp:23-35): schema, chunking, per
      column-chunk scheme + stats + size estimate.
 
-Full-data movements per write: one shuffle + one write + one compressed
-read-back — regardless of table size.
+Full-data movements per write: two full-row exchanges (the chunker's
+``_pid`` range exchange, then the ``_chunk`` staging exchange) + one write +
+one compressed read-back — regardless of table size.
 
 Codec choice: zstd by default (the ratio anchor — est ratio ~3.7 on the
 bench table). Measured on lineitem sf0.1, lz4 scans ~1.4x faster at ~21%
@@ -51,7 +52,7 @@ from pyspark.sql.observation import Observation
 
 from btrblocks_spark.config import DEFAULT_CONFIG, BtrBlocksConfig
 from btrblocks_spark.format import fs as _fs
-from btrblocks_spark.format.chunker import unpersist_index, with_chunk_id
+from btrblocks_spark.format.chunker import with_chunk_id
 from btrblocks_spark.format.planner import choose_scheme, kind_of
 
 _PLAN_SCHEMA = (
@@ -581,56 +582,53 @@ def write_table(
             df, order_keys, config.block_size, total_rows=total_rows,
             bounds=bounds,
         )
-        try:
-            num_rows = chunked._btr_total_rows  # free byproduct of the offset job
-            num_chunks = max((num_rows + config.block_size - 1) // config.block_size, 1)
+        num_rows = chunked._btr_total_rows  # free byproduct of the offset job
+        num_chunks = max((num_rows + config.block_size - 1) // config.block_size, 1)
 
-            staged = _stage_by_chunk(chunked, int(num_chunks))
-            data_path = _fs.join(path, "data")
-            # chunk-aligned layout: rows are _idx-sorted within partitions
-            # and every non-final chunk has exactly block_size rows, so
-            # maxRecordsPerFile splits files on exact chunk boundaries → one
-            # output file = one chunk (the ColumnPart sizing analog)
-            # group dependents are NOT written as streams — their values live
-            # in the nd(det)-entry mapping tables; this drop is where the
-            # compression win is banked (the dependent's bytes leave the files)
-            writer = (
-                staged.drop("_chunk").drop(*group_deps.keys())
-                .write.mode("overwrite")
-                .option("compression", config.compression_codec)
-                .option("parquet.compression.codec.zstd.level", str(config.zstd_level))
-                .option("maxRecordsPerFile", config.block_size)
+        staged = _stage_by_chunk(chunked, int(num_chunks))
+        data_path = _fs.join(path, "data")
+        # chunk-aligned layout: rows are _idx-sorted within partitions
+        # and every non-final chunk has exactly block_size rows, so
+        # maxRecordsPerFile splits files on exact chunk boundaries → one
+        # output file = one chunk (the ColumnPart sizing analog)
+        # group dependents are NOT written as streams — their values live
+        # in the nd(det)-entry mapping tables; this drop is where the
+        # compression win is banked (the dependent's bytes leave the files)
+        writer = (
+            staged.drop("_chunk").drop(*group_deps.keys())
+            .write.mode("overwrite")
+            .option("compression", config.compression_codec)
+            .option("parquet.compression.codec.zstd.level", str(config.zstd_level))
+            .option("maxRecordsPerFile", config.block_size)
+        )
+        for col, enabled in dict_enabled.items():
+            if col in group_deps:
+                continue
+            writer = writer.option(
+                f"parquet.enable.dictionary#{col}", str(enabled).lower()
             )
-            for col, enabled in dict_enabled.items():
+        # stats-driven bloom filters on the lookup keys: the reader's point
+        # lookup (the reference's `lookup` stub, scheme/CompressionScheme.hpp:45)
+        # then skips row groups whose bloom rejects the key — the chunk-stats
+        # min/max pruning analog for equality on non-sorted keys. Expected NDV
+        # per row group is the table NDV capped at the chunk size, so bloom
+        # bytes track actual cardinality instead of parquet's 1M default.
+        # Dictionary-encoded keys are excluded on purpose: the dict page
+        # already answers membership exactly (and parquet-mr omits blooms
+        # for fully-dict chunks anyway).
+        bloom_cols = {}
+        if config.bloom_filter_keys:
+            for col in order_keys:
                 if col in group_deps:
                     continue
+                if dict_enabled.get(col, True) or ndv.get(col, 0) < 1:
+                    continue
+                bloom_cols[col] = min(ndv[col], config.block_size)
+                writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
                 writer = writer.option(
-                    f"parquet.enable.dictionary#{col}", str(enabled).lower()
+                    f"parquet.bloom.filter.expected.ndv#{col}", str(bloom_cols[col])
                 )
-            # stats-driven bloom filters on the lookup keys: the reader's point
-            # lookup (the reference's `lookup` stub, scheme/CompressionScheme.hpp:45)
-            # then skips row groups whose bloom rejects the key — the chunk-stats
-            # min/max pruning analog for equality on non-sorted keys. Expected NDV
-            # per row group is the table NDV capped at the chunk size, so bloom
-            # bytes track actual cardinality instead of parquet's 1M default.
-            # Dictionary-encoded keys are excluded on purpose: the dict page
-            # already answers membership exactly (and parquet-mr omits blooms
-            # for fully-dict chunks anyway).
-            bloom_cols = {}
-            if config.bloom_filter_keys:
-                for col in order_keys:
-                    if col in group_deps:
-                        continue
-                    if dict_enabled.get(col, True) or ndv.get(col, 0) < 1:
-                        continue
-                    bloom_cols[col] = min(ndv[col], config.block_size)
-                    writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-                    writer = writer.option(
-                        f"parquet.bloom.filter.expected.ndv#{col}", str(bloom_cols[col])
-                    )
-            writer.parquet(data_path)
-        finally:
-            unpersist_index(chunked)
+        writer.parquet(data_path)
 
         # join the overlapped mapping writes before the plan pass reads them
         groups = _map_fut.result() if _map_fut is not None else []

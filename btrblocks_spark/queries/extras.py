@@ -809,9 +809,9 @@ ORDER BY priority
 def agg_pandas_udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom aggregate via a GROUPED_AGG pandas UDF — the one UDF flavor
     the rest of the engine didn't exercise (scalar pandas_udf: fsst
-    transforms; mapInArrow: chunker; applyInPandas: per-chunk FSST train;
-    mapInPandas: multimodal/inference; applyInPandasWithState: sessionize;
-    UDTF: sentence split). Computes the per-priority geometric mean of
+    transforms; applyInPandas: per-chunk FSST train; mapInPandas:
+    multimodal/inference; applyInPandasWithState: sessionize; UDTF:
+    sentence split). Computes the per-priority geometric mean of
     order value.
 
     Parity without FP order-dependence: the UDAF sums round(ln(x)·1e6) as
