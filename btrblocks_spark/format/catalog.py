@@ -16,16 +16,12 @@ single-table DML)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from btrblocks_spark.format.maintenance import (
-    CommitConflictError,
-    commit_lock,
-    read_version,
-)
+from btrblocks_spark.format.journal import commit_lock, load_json, replace_json
+from btrblocks_spark.format.maintenance import CommitConflictError, read_version
 
 
 def _catalog_path(catalog_dir: str) -> str:
@@ -34,11 +30,9 @@ def _catalog_path(catalog_dir: str) -> str:
 
 def read_catalog(catalog_dir: str) -> dict:
     """Current catalog snapshot: {"snapshot_id": int, "tables": {name: version}}."""
-    p = _catalog_path(catalog_dir)
-    if not os.path.exists(p):
-        return {"snapshot_id": -1, "tables": {}}
-    with open(p) as fh:
-        return json.load(fh)
+    return load_json(
+        _catalog_path(catalog_dir), lambda: {"snapshot_id": -1, "tables": {}}
+    )
 
 
 def commit_tables(
@@ -67,10 +61,7 @@ def commit_tables(
         tables = dict(cur["tables"])
         tables.update(updates)
         new = {"snapshot_id": cur["snapshot_id"] + 1, "tables": tables}
-        tmp = _catalog_path(catalog_dir) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(new, fh)
-        os.replace(tmp, _catalog_path(catalog_dir))
+        replace_json(_catalog_path(catalog_dir), new)
     return new
 
 

@@ -18,12 +18,13 @@ snapshot isolation.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from btrblocks_spark.format.journal import commit_lock, load_json, replace_json
 
 
 def _list_data_files(path: str) -> list[str]:
@@ -66,16 +67,10 @@ def incremental_agg(
     incremental scan size — 0 on a no-op refresh."""
     import shutil
 
-    from btrblocks_spark.format.maintenance import commit_lock
-
     os.makedirs(state_dir, exist_ok=True)
     state_file = os.path.join(state_dir, "_state.json")
     with commit_lock(state_dir):
-        if os.path.exists(state_file):
-            with open(state_file) as fh:
-                state = json.load(fh)
-        else:
-            state = {"processed": [], "version": -1}
+        state = load_json(state_file, lambda: {"processed": [], "version": -1})
 
         files = _list_data_files(path)
         seen = {os.path.abspath(p) for p in state["processed"]}
@@ -152,10 +147,7 @@ def incremental_agg(
         next_v = state["version"] + 1
         out_dir = os.path.join(state_dir, f"v={next_v}")
         merged.write.mode("overwrite").parquet(out_dir)
-        tmp = state_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"processed": files, "version": next_v}, fh)
-        os.replace(tmp, state_file)
+        replace_json(state_file, {"processed": files, "version": next_v})
         # bounded history: vacuum snapshots past the retention window.
         # Retention is ALSO floored by wall-time: under a per-microbatch
         # refresh cadence (materialized_view_stream) keep_versions can be

@@ -1,130 +1,44 @@
-"""Versioned-table maintenance: DELETE, VACUUM, time travel.
+"""Table maintenance for the lakehouse layer. The reference format is
+write-once with no row-level mutation (chunks are immutable,
+compression/Datablock.cpp:27-52); every op here is copy-on-write against
+immutable files, never an in-place edit:
 
-Complements the CDC path (streaming/ops.streaming_upsert writes immutable
-``v=N`` version directories behind an atomically-swapped ``_latest``
-pointer). The reference format is write-once with no row-level mutation
-(chunks are immutable, compression/Datablock.cpp:27-52); a lakehouse table
-needs the three ops layered on top — all copy-on-write against immutable
-versions, never in-place edits:
+  versioned tables  ``v=N`` dirs behind an atomically swapped ``_latest``
+                    pointer (streaming/ops.streaming_upsert writes the same
+                    layout): DELETE/UPDATE/INSERT commit a rewritten
+                    snapshot as a new version (Catalyst predicates, so the
+                    rewrite scans with pushdown; DELETE is a narrow
+                    anti-filter + write, no shuffle), CHECK constraints are
+                    enforced at commit, ``vacuum`` drops unreachable
+                    versions (never the pointer target), time travel reads
+                    or restores any kept one.
+  chunked tables    ``compact`` (bin-pack the appended fragment tail into
+                    aligned chunks, re-sync the sidecar), metadata-only
+                    schema evolution, merge-on-read deletion vectors and
+                    ``optimize_zorder``.
 
-  delete_where   anti-filter rewrite: new version = snapshot minus matching
-                 rows. The filter is a Catalyst predicate, so at 100 TB the
-                 rewrite scans with pushdown and only rewrites data — no
-                 shuffle at all (narrow filter + write).
-  vacuum         drop version directories no longer reachable (older than
-                 the retained tail). Pure metadata/IO, never touches the
-                 pointer target.
-  read_version   time travel: read any still-vacuumed-in version.
+The commit lock, atomic journal writes, staged-file adoption and stale-stage
+GC these share with the data source appends and ``copy_into`` live in
+format/journal.py.
 """
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
-
-
-@contextlib.contextmanager
-def commit_lock(dir_path: str, timeout_sec: float = 10.0):
-    """Exclusive commit lock via atomic ``os.mkdir`` — serializes the
-    check-then-swap window of pointer commits (the residual TOCTOU in a
-    bare read→compare→os.replace sequence: two writers holding the same
-    base can interleave between the check and the swap and one update is
-    silently lost). Driver-side and cheap: commits are O(pointer file),
-    never data-sized.
-
-    A waiter whose own ``timeout_sec`` expires RAISES; it never breaks the
-    lock (the holder may simply be slow — stealing a live lock reopens the
-    lost-update race this lock exists to close). Stale-break applies only
-    to locks whose mtime age exceeds ``stale_sec`` (a crashed committer);
-    the HOLDER heartbeats the token file's mtime from a daemon thread while
-    the lock is held, so a legitimately slow critical section (a large
-    journal apply on slow storage, >stale_sec) is never mistaken for a
-    crash and stolen. Release is owner-checked via the token file so a
-    broken-and-reacquired lock is never deleted by the previous holder's
-    ``finally``."""
-    import threading
-    import uuid
-
-    stale_sec = max(60.0, 6 * timeout_sec)
-    lock = os.path.join(dir_path, "_commit.lock")
-    token_path = os.path.join(lock, "owner")
-    token = uuid.uuid4().hex
-    os.makedirs(dir_path, exist_ok=True)
-    deadline = time.monotonic() + timeout_sec
-
-    def _age() -> float:
-        # staleness = age of the NEWEST liveness signal: the token file's
-        # mtime while the holder heartbeats, falling back to the lock dir
-        # (a holder that crashed between mkdir and token write)
-        newest = os.path.getmtime(lock)
-        try:
-            newest = max(newest, os.path.getmtime(token_path))
-        except OSError:
-            pass
-        return time.time() - newest
-
-    while True:
-        try:
-            os.mkdir(lock)
-            with open(token_path, "w") as fh:
-                fh.write(token)
-            break
-        except FileExistsError:
-            try:
-                if _age() > stale_sec:
-                    # crashed holder: break it via atomic rename-aside —
-                    # rmtree-in-place would let a SECOND breaker delete a
-                    # lock the first breaker's winner just re-acquired
-                    # (two holders). Only the breaker whose rename succeeds
-                    # removes anything; losers hit ENOENT and loop.
-                    aside = f"{lock}.stale-{uuid.uuid4().hex}"
-                    try:
-                        os.rename(lock, aside)
-                    except OSError:
-                        continue
-                    shutil.rmtree(aside, ignore_errors=True)
-                    continue
-            except OSError:
-                continue
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"commit_lock: {lock} held for >{timeout_sec}s by a live "
-                    "committer; raise timeout_sec or retry"
-                )
-            time.sleep(0.02)
-    # liveness heartbeat: touch the token while held so a long critical
-    # section's lock never looks stale to a rival's _age() check
-    stop_beat = threading.Event()
-
-    def _beat() -> None:
-        while not stop_beat.wait(stale_sec / 4):
-            try:
-                os.utime(token_path)
-            except OSError:  # lock stolen/gone: nothing left to keep alive
-                return
-
-    beater = threading.Thread(target=_beat, daemon=True)
-    beater.start()
-    try:
-        yield
-    finally:
-        stop_beat.set()
-        beater.join(timeout=1.0)
-        try:
-            with open(token_path) as fh:
-                still_ours = fh.read() == token
-        except OSError:
-            still_ours = False
-        if still_ours:
-            shutil.rmtree(lock, ignore_errors=True)
+from btrblocks_spark.format.journal import (
+    adopt,
+    collect_stale,
+    commit_lock,
+    load_json,
+    replace_json,
+)
 
 
 def _versions(table_dir: str) -> list[int]:
@@ -167,24 +81,14 @@ def add_check_constraint(table_dir: str, name: str, predicate: str) -> dict:
     rejected before the pointer swap, so readers never observe invalid
     rows (the write-side twin of the read-side constraint_audit)."""
     path = os.path.join(table_dir, "_constraints.json")
-    cons = {}
-    if os.path.exists(path):
-        with open(path) as fh:
-            cons = json.load(fh)
+    cons = load_json(path, dict)
     cons[name] = predicate
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(cons, fh)
-    os.replace(tmp, path)
+    replace_json(path, cons)
     return dict(cons)
 
 
 def _check_constraints(df: DataFrame, table_dir: str) -> None:
-    path = os.path.join(table_dir, "_constraints.json")
-    if not os.path.exists(path):
-        return
-    with open(path) as fh:
-        cons = json.load(fh)
+    cons = load_json(os.path.join(table_dir, "_constraints.json"), dict)
     if not cons:
         return
     # ONE aggregation pass over the candidate rows for ALL constraints —
@@ -424,8 +328,14 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         _PLAN_CONF_LOCK,
         _PLAN_SCHEMA,
         _stage_by_chunk,
+        chunk_write_options,
     )
     from btrblocks_spark.format.chunker import with_chunk_id
+    from btrblocks_spark.sources.btr_datasource import (
+        _log_path,
+        _vacuum_inflight_locked,
+        prune_committed_entries,
+    )
 
     import dataclasses
 
@@ -439,8 +349,6 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         _gc_abandoned_stages(path)
         # orphaned task-attempt .inflight files (crashed before any commit
         # message named them) — same idle-age contract as the stage GC
-        from btrblocks_spark.sources.btr_datasource import _vacuum_inflight_locked
-
         _vacuum_inflight_locked(path)
 
     # A live deletion vector records GLOBAL _idx positions; compaction
@@ -544,12 +452,13 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         ).withColumn("_chunk", F.floor(F.col("_idx") / F.lit(bs)).cast("long"))
         new_chunks = (n_frag + bs - 1) // bs
         staged = _stage_by_chunk(shifted, int(new_chunks))
+        # the table's bloom filters carry over to the rewritten tail: a
+        # lookup skips row groups by bloom, and a compacted file without
+        # one would be read by every point lookup
         (
             staged.drop("_chunk")
             .write.mode("overwrite")
-            .option("compression", cfg.compression_codec)
-            .option("parquet.compression.codec.zstd.level", str(cfg.zstd_level))
-            .option("maxRecordsPerFile", bs)
+            .options(**chunk_write_options(cfg, bloom=meta.get("bloom_filters")))
             .parquet(tmp_dir)
         )
 
@@ -654,8 +563,6 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
     # later run); a crash AFTER it is finished by _apply_compact_journal on
     # the next compact() call. The old order (remove fragments, then move)
     # had a window that silently LOST every fragment row.
-    import json
-
     jpath = os.path.join(path, "_compact_journal.json")
     with commit_lock(path):
         # lost-race check (the staging above ran outside the lock): a rival
@@ -698,30 +605,21 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
             "stats_tmp": stats_tmp,
             "tmp_dir": tmp_dir,
         }
-        with open(jpath + ".tmp", "w") as fh:
-            json.dump(journal, fh, default=str)
-        os.replace(jpath + ".tmp", jpath)  # commit point
+        replace_json(jpath, journal, default=str)  # commit point
         _apply_compact_journal(path)
         # metadata catch-up extends to the append WAL: committed batch
         # entries reference pre-compaction files (now rewritten) — stale
         # audit weight. Stream entries keep their per-scope replay fence
         # (a down stream may still replay its last batch); pending entries
         # keep their crash-recovery role.
-        from btrblocks_spark.sources.btr_datasource import (
-            _read_log,
-            _write_log,
-            prune_committed_entries,
-        )
-
-        applog = _read_log(path)
-        if applog:
-            pruned = [
-                e
-                for e in prune_committed_entries(applog)
-                if not (e.get("kind") == "batch" and e.get("state") == "committed")
-            ]
-            if pruned != applog:
-                _write_log(path, pruned)
+        applog = load_json(_log_path(path))
+        pruned = [
+            e
+            for e in prune_committed_entries(applog)
+            if not (e.get("kind") == "batch" and e.get("state") == "committed")
+        ]
+        if pruned != applog:
+            replace_json(_log_path(path), pruned)
     return {
         "compacted": True,
         "files_before": len(files),
@@ -731,26 +629,6 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         "new_chunks": int(new_chunks),
         "num_rows": meta["num_rows"],
     }
-
-
-def newest_mtime(root: str) -> float:
-    """Newest mtime anywhere in the tree — the liveness signal for stage-dir
-    GC. The top-level dir's mtime is NOT it: a long parquet write keeps the
-    stage root's mtime at job start while tasks write under _temporary/, so
-    a top-level-mtime GC can rmtree a LIVE writer's stage (judge finding
-    #5c, round 4)."""
-    newest = os.path.getmtime(root)
-    for r, _dirs, files in os.walk(root):
-        for name in files:
-            try:
-                newest = max(newest, os.path.getmtime(os.path.join(r, name)))
-            except OSError:
-                pass
-        try:
-            newest = max(newest, os.path.getmtime(r))
-        except OSError:
-            pass
-    return newest
 
 
 def _gc_abandoned_stages(path: str, max_age_sec: float = 3600.0) -> None:
@@ -765,31 +643,17 @@ def _gc_abandoned_stages(path: str, max_age_sec: float = 3600.0) -> None:
     Even when GC misfires (a compact idle past max_age between its last
     write and its commit), compact's under-lock empty-adds guard converts
     the outcome into a loud retryable failure, never silent loss."""
-    jpath = os.path.join(path, "_compact_journal.json")
-    referenced: set[str] = set()
-    if os.path.exists(jpath):
-        with open(jpath) as fh:
-            j = json.load(fh)
-        referenced = {j.get("tmp_dir", ""), j.get("stats_tmp", "")}
+    j = load_json(os.path.join(path, "_compact_journal.json"), dict)
     by_stage: dict[str, list[str]] = {}
     for d in os.listdir(path):
-        for prefix in ("_compact_tmp-", "_compact_stats_tmp-"):
-            if d.startswith(prefix):
-                by_stage.setdefault(d[len(prefix):], []).append(
-                    os.path.join(path, d)
-                )
-                break
-    now = time.time()
-    for dirs in by_stage.values():
-        dirs = [f for f in dirs if f not in referenced and os.path.isdir(f)]
-        if not dirs:
-            continue
-        try:
-            if all(now - newest_mtime(f) > max_age_sec for f in dirs):
-                for f in dirs:
-                    shutil.rmtree(f, ignore_errors=True)
-        except OSError:
-            pass
+        if d.startswith(("_compact_tmp-", "_compact_stats_tmp-")):
+            # both prefixes hold one dash, the stage id follows it
+            by_stage.setdefault(d.partition("-")[2], []).append(
+                os.path.join(path, d)
+            )
+    collect_stale(
+        by_stage.values(), {j.get("tmp_dir"), j.get("stats_tmp")}, max_age_sec
+    )
 
 
 def _apply_compact_journal(path: str) -> bool:
@@ -801,24 +665,14 @@ def _apply_compact_journal(path: str) -> bool:
     replaces (duplicate rows) during the adds — the window is
     duplicates-then-converge, never loss. Returns True if a journal was
     applied."""
-    import json
-
     jpath = os.path.join(path, "_compact_journal.json")
     if not os.path.exists(jpath):
         return False
-    with open(jpath) as fh:
-        journal = json.load(fh)
-    for src, dest in journal["adds"].items():
-        if os.path.exists(src):
-            os.replace(src, dest)
-        elif not os.path.exists(dest):
-            # staged compacted file lost with no adopted copy: applying the
-            # removes now would LOSE the fragment rows it replaced — leave
-            # the journal pending and surface the corruption
-            raise RuntimeError(
-                f"compact journal: staged file {src} lost before adoption "
-                f"as {dest}; journal left pending"
-            )
+    journal = load_json(jpath)
+    # adopt raises on a staged compacted file lost with no adopted copy:
+    # applying the removes then would LOSE the fragment rows it replaced,
+    # so the journal stays pending and the corruption surfaces
+    adopt(journal["adds"])
     for f in journal["remove"]:
         try:
             os.remove(f)
@@ -833,10 +687,10 @@ def _apply_compact_journal(path: str) -> bool:
         final_stats = os.path.join(path, "_btr_chunk_stats")
         shutil.rmtree(final_stats, ignore_errors=True)
         os.rename(stats_tmp, final_stats)
-    meta_tmp = os.path.join(path, "_btr_metadata.json.tmp")
-    with open(meta_tmp, "w") as fh:
-        json.dump(journal["meta"], fh, indent=1, default=str)
-    os.replace(meta_tmp, os.path.join(path, "_btr_metadata.json"))
+    replace_json(
+        os.path.join(path, "_btr_metadata.json"), journal["meta"],
+        indent=1, default=str,
+    )
     os.remove(jpath)
     # per-call stage dirs since round 5; the fixed _compact_tmp is the
     # legacy location a pre-upgrade journal may still point at
@@ -871,8 +725,6 @@ def add_column(path: str, name: str, sql_type: str, default=None) -> dict:
     rewrite is exactly what this avoids). Chunks written before the
     evolution simply lack the column on disk; ``read_table_evolved``
     projects the default into them at scan time."""
-    import json
-
     from btrblocks_spark.format.reader import read_metadata
 
     meta = read_metadata(path)
@@ -880,8 +732,7 @@ def add_column(path: str, name: str, sql_type: str, default=None) -> dict:
     if any(c["name"] == name for c in meta["schema"]):
         raise ValueError(f"column {name!r} already exists")
     meta["schema"].append({"name": name, "type": sql_type, "default": default})
-    with open(os.path.join(path, "_btr_metadata.json"), "w") as fh:
-        json.dump(meta, fh, indent=1, default=str)
+    replace_json(os.path.join(path, "_btr_metadata.json"), meta, indent=1, default=str)
     return {"column": name, "type": sql_type, "default": default}
 
 
@@ -891,8 +742,6 @@ def add_generated_column(path: str, name: str, sql_type: str, expr: str) -> dict
     virtual-column analog). Pure metadata; files never store it, so it is
     always consistent with its inputs and costs nothing at rest. The
     evolved reader projects the expression for every file vintage."""
-    import json as _json
-
     from btrblocks_spark.format.reader import read_metadata
 
     meta = read_metadata(path)
@@ -902,8 +751,7 @@ def add_generated_column(path: str, name: str, sql_type: str, expr: str) -> dict
     meta["schema"].append(
         {"name": name, "type": sql_type, "generated_as": expr}
     )
-    with open(os.path.join(path, "_btr_metadata.json"), "w") as fh:
-        _json.dump(meta, fh, indent=1, default=str)
+    replace_json(os.path.join(path, "_btr_metadata.json"), meta, indent=1, default=str)
     return {"column": name, "type": sql_type, "generated_as": expr}
 
 
@@ -911,8 +759,6 @@ def drop_column(path: str, name: str) -> dict:
     """Schema evolution: remove a column from the declared schema — pure
     metadata, no data rewrite (stored bytes become dead until the next
     compaction rewrites files; readers never see the column again)."""
-    import json
-
     from btrblocks_spark.format.reader import read_metadata
 
     meta = read_metadata(path)
@@ -920,8 +766,7 @@ def drop_column(path: str, name: str) -> dict:
     if not any(c["name"] == name for c in meta["schema"]):
         raise ValueError(f"column {name!r} not in schema")
     meta["schema"] = [c for c in meta["schema"] if c["name"] != name]
-    with open(os.path.join(path, "_btr_metadata.json"), "w") as fh:
-        json.dump(meta, fh, indent=1, default=str)
+    replace_json(os.path.join(path, "_btr_metadata.json"), meta, indent=1, default=str)
     return {"dropped": name}
 
 
@@ -930,8 +775,6 @@ def rename_column(path: str, old: str, new: str) -> dict:
     keeps ``stored_as`` pointing at the physical name so pre-rename files
     resolve by projection; repeated renames chase the original physical
     name (files are immutable, so the physical name never changes)."""
-    import json
-
     from btrblocks_spark.format.reader import read_metadata
 
     meta = read_metadata(path)
@@ -944,8 +787,7 @@ def rename_column(path: str, old: str, new: str) -> dict:
     entry = hit[0]
     entry["stored_as"] = entry.get("stored_as") or old
     entry["name"] = new
-    with open(os.path.join(path, "_btr_metadata.json"), "w") as fh:
-        json.dump(meta, fh, indent=1, default=str)
+    replace_json(os.path.join(path, "_btr_metadata.json"), meta, indent=1, default=str)
     return {"renamed": old, "to": new, "stored_as": entry["stored_as"]}
 
 

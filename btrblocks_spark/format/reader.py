@@ -46,10 +46,8 @@ def _repair_pending_journals(path: str) -> None:
     ) or os.path.exists(os.path.join(path, "_copy_journal.json"))
     if not has_journal:
         return
-    from btrblocks_spark.format.maintenance import (
-        _apply_compact_journal,
-        commit_lock,
-    )
+    from btrblocks_spark.format.journal import commit_lock
+    from btrblocks_spark.format.maintenance import _apply_compact_journal
     from btrblocks_spark.sources.copy_into import _apply_copy_journal
 
     try:
@@ -301,6 +299,22 @@ def prune_chunks(
     return keep
 
 
+def _idx_filter(chunks, block_size: int, cond=None):
+    """``cond`` OR-ed with one ``_idx`` range per run of adjacent chunk ids
+    (ids coalesced into maximal intervals, so a contiguous selection is one
+    range predicate the Parquet reader turns into row-group skipping)."""
+    intervals: list[list[int]] = []
+    for c in sorted(chunks):
+        if intervals and intervals[-1][1] == c:
+            intervals[-1][1] = c + 1
+        else:
+            intervals.append([c, c + 1])
+    for a, b in intervals:
+        clause = (F.col("_idx") >= a * block_size) & (F.col("_idx") < b * block_size)
+        cond = clause if cond is None else cond | clause
+    return cond
+
+
 def read_table_skipping(
     spark: SparkSession, path: str, column: str, lo=None, hi=None
 ) -> tuple[DataFrame, list[int]]:
@@ -328,17 +342,7 @@ def read_table_skipping(
     # rows appended since the last compact() have a NULL _idx and no chunk
     # stats, so pruning cannot exclude them: they pass the interval filter
     # and meet only the residual value predicate below
-    cond = F.col("_idx").isNull()
-    # coalesce adjacent chunk ids into maximal _idx intervals
-    intervals: list[list[int]] = []
-    for c in sorted(chunks):
-        if intervals and intervals[-1][1] == c:
-            intervals[-1][1] = c + 1
-        else:
-            intervals.append([c, c + 1])
-    for a, b in intervals:
-        cond = cond | ((F.col("_idx") >= a * bs) & (F.col("_idx") < b * bs))
-    out = df.filter(cond)
+    out = df.filter(_idx_filter(chunks, bs, F.col("_idx").isNull()))
     if lo is not None:
         out = out.filter(F.col(column) >= lo)
     if hi is not None:
@@ -488,14 +492,4 @@ def sample_chunks(
     df = reconstruct_column_groups(spark, path, _read_data(spark, path), meta)
     if not keep:
         return df.filter(F.lit(False)).drop("_idx"), []
-    intervals: list[list[int]] = []
-    for c in keep:
-        if intervals and intervals[-1][1] == c:
-            intervals[-1][1] = c + 1
-        else:
-            intervals.append([c, c + 1])
-    cond = None
-    for a, b in intervals:
-        clause = (F.col("_idx") >= a * bs) & (F.col("_idx") < b * bs)
-        cond = clause if cond is None else cond | clause
-    return df.filter(cond).drop("_idx"), keep
+    return df.filter(_idx_filter(keep, bs)).drop("_idx"), keep

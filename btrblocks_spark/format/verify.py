@@ -80,11 +80,11 @@ def add_chunk_checksums(spark: SparkSession, path: str) -> dict:
     driver-held dict in the JSON sidecar is the exact bottleneck the v2
     chunk-stats dataset removed); the sidecar JSON records only the
     pointer. Returns {"chunks": N}."""
-    import json
     import os
 
     from pyspark.sql import functions as F
 
+    from btrblocks_spark.format.journal import replace_json
     from btrblocks_spark.format.reader import read_metadata
 
     out_dir = os.path.join(path, _CHECKSUM_DIR)
@@ -93,10 +93,7 @@ def add_chunk_checksums(spark: SparkSession, path: str) -> dict:
     meta = read_metadata(path)
     meta.pop("chunk_checksums", None)  # drop a legacy inline dict if present
     meta["chunk_checksums"] = _CHECKSUM_DIR
-    tmp = os.path.join(path, "_btr_metadata.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, indent=1, default=str)
-    os.replace(tmp, os.path.join(path, "_btr_metadata.json"))
+    replace_json(os.path.join(path, "_btr_metadata.json"), meta, indent=1, default=str)
     return {"chunks": int(n)}
 
 

@@ -234,6 +234,32 @@ def _stage_by_chunk(chunked: DataFrame, num_chunks: int) -> DataFrame:
     return chunked.repartition(num_parts, "_chunk").sortWithinPartitions("_idx")
 
 
+def chunk_write_options(
+    config: BtrBlocksConfig,
+    dictionary: dict[str, bool] | None = None,
+    bloom: dict[str, int] | None = None,
+) -> dict[str, str]:
+    """Parquet writer options for chunk data files: codec and level, at most
+    one chunk per file, per-column dictionary switches and bloom filters
+    (column -> expected NDV, the sidecar's ``bloom_filters``). Both
+    ``write_table`` and ``maintenance.compact`` write chunk files with
+    these, so a compacted tail keeps the table's bloom filters. A bloom
+    column is written without a dictionary: parquet-mr omits the bloom of
+    a fully dictionary-encoded column chunk."""
+    opts = {
+        "compression": config.compression_codec,
+        "parquet.compression.codec.zstd.level": str(config.zstd_level),
+        "maxRecordsPerFile": str(config.block_size),
+    }
+    for col, enabled in (dictionary or {}).items():
+        opts[f"parquet.enable.dictionary#{col}"] = str(enabled).lower()
+    for col, ndv in (bloom or {}).items():
+        opts[f"parquet.enable.dictionary#{col}"] = "false"
+        opts[f"parquet.bloom.filter.enabled#{col}"] = "true"
+        opts[f"parquet.bloom.filter.expected.ndv#{col}"] = str(ndv)
+    return opts
+
+
 def plan_chunks(
     chunked: DataFrame,
     col_types: list[tuple[str, str]],
@@ -587,26 +613,6 @@ def write_table(
 
         staged = _stage_by_chunk(chunked, int(num_chunks))
         data_path = _fs.join(path, "data")
-        # chunk-aligned layout: rows are _idx-sorted within partitions
-        # and every non-final chunk has exactly block_size rows, so
-        # maxRecordsPerFile splits files on exact chunk boundaries → one
-        # output file = one chunk (the ColumnPart sizing analog)
-        # group dependents are NOT written as streams — their values live
-        # in the nd(det)-entry mapping tables; this drop is where the
-        # compression win is banked (the dependent's bytes leave the files)
-        writer = (
-            staged.drop("_chunk").drop(*group_deps.keys())
-            .write.mode("overwrite")
-            .option("compression", config.compression_codec)
-            .option("parquet.compression.codec.zstd.level", str(config.zstd_level))
-            .option("maxRecordsPerFile", config.block_size)
-        )
-        for col, enabled in dict_enabled.items():
-            if col in group_deps:
-                continue
-            writer = writer.option(
-                f"parquet.enable.dictionary#{col}", str(enabled).lower()
-            )
         # stats-driven bloom filters on the lookup keys: the reader's point
         # lookup (the reference's `lookup` stub, scheme/CompressionScheme.hpp:45)
         # then skips row groups whose bloom rejects the key — the chunk-stats
@@ -624,11 +630,25 @@ def write_table(
                 if dict_enabled.get(col, True) or ndv.get(col, 0) < 1:
                     continue
                 bloom_cols[col] = min(ndv[col], config.block_size)
-                writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-                writer = writer.option(
-                    f"parquet.bloom.filter.expected.ndv#{col}", str(bloom_cols[col])
-                )
-        writer.parquet(data_path)
+        # chunk-aligned layout: rows are _idx-sorted within partitions
+        # and every non-final chunk has exactly block_size rows, so
+        # maxRecordsPerFile splits files on exact chunk boundaries → one
+        # output file = one chunk (the ColumnPart sizing analog)
+        # group dependents are NOT written as streams — their values live
+        # in the nd(det)-entry mapping tables; this drop is where the
+        # compression win is banked (the dependent's bytes leave the files)
+        (
+            staged.drop("_chunk").drop(*group_deps.keys())
+            .write.mode("overwrite")
+            .options(**chunk_write_options(
+                config,
+                dictionary={
+                    c: on for c, on in dict_enabled.items() if c not in group_deps
+                },
+                bloom=bloom_cols,
+            ))
+            .parquet(data_path)
+        )
 
         # join the overlapped mapping writes before the plan pass reads them
         groups = _map_fut.result() if _map_fut is not None else []

@@ -109,19 +109,11 @@ def cached_result(
     # >1 h parquet write keeps the stage root's mtime at job start while
     # tasks write under _temporary/, so a top-level check could rmtree a
     # LIVE rival's stage mid-write (judge finding #5c, round 4).
-    import shutil
-    import time
+    from btrblocks_spark.format.journal import collect_stale
 
-    from btrblocks_spark.format.maintenance import newest_mtime
-
-    for d in os.listdir(slot):
-        if d.startswith(".stage-"):
-            full = os.path.join(slot, d)
-            try:
-                if time.time() - newest_mtime(full) > 3600:
-                    shutil.rmtree(full, ignore_errors=True)
-            except OSError:
-                pass
+    collect_stale(
+        [os.path.join(slot, d)] for d in os.listdir(slot) if d.startswith(".stage-")
+    )
     # publish atomically: two sessions sharing cache_root can miss the same
     # slot concurrently — a direct mode("overwrite") on data/ lets one
     # writer delete the other's just-written part files mid-flight, after
@@ -149,29 +141,23 @@ def cached_result(
 def _vacuum_stale_slots(
     cache_root: str, name: str, keep: str, max_age_sec: float = 3600.0
 ) -> None:
-    import shutil
-    import time
+    from btrblocks_spark.format.journal import collect_stale
 
-    from btrblocks_spark.format.maintenance import newest_mtime
-
-    prefix = f"{name}__"
-    now = time.time()
-    for d in os.listdir(cache_root):
+    def ours(d: str) -> bool:
         full = os.path.join(cache_root, d)
-        if not d.startswith(prefix) or full == keep or not os.path.isdir(full):
-            continue
+        if not d.startswith(f"{name}__") or not os.path.isdir(full):
+            return False
         # "__" may appear inside another query's NAME ("a__b" slots start
         # with "a__" too): trust only a marker whose recorded name matches;
         # a slot with a readable marker naming a different query is theirs.
-        mpath = os.path.join(full, "_SUCCESS_META")
         try:
-            with open(mpath) as fh:
-                if json.load(fh).get("name") != name:
-                    continue
+            with open(os.path.join(full, "_SUCCESS_META")) as fh:
+                return json.load(fh).get("name") == name
         except (OSError, ValueError):
-            pass  # no/torn marker: crashed partial slot, idle-age decides
-        try:
-            if now - newest_mtime(full) > max_age_sec:
-                shutil.rmtree(full, ignore_errors=True)
-        except OSError:
-            pass
+            return True  # no/torn marker: crashed partial slot, idle-age decides
+
+    collect_stale(
+        ([os.path.join(cache_root, d)] for d in os.listdir(cache_root) if ours(d)),
+        {keep},
+        max_age_sec,
+    )

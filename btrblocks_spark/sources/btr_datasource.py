@@ -50,6 +50,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from btrblocks_spark.format.journal import (
+    adopt,
+    collect_stale,
+    commit_lock,
+    load_json,
+    replace_json,
+)
 from btrblocks_spark.format.reader import read_metadata
 
 
@@ -369,7 +376,9 @@ def _write_chunk_files(
     return files, total
 
 
-# --- shared write-ahead append log (batch + streaming commits) ---------------
+# --- write-ahead append log (batch + streaming commits) ----------------------
+# One commit body for both writers (_commit_append); the lock, atomic log
+# writes, adoption and stage GC it runs on live in format/journal.py.
 
 def _final_name(src: str) -> str:
     """Final visible name of a staged file: strip the ``.inflight`` suffix
@@ -387,54 +396,6 @@ def _log_path(path: str) -> str:
     return os.path.join(path, "_appends.json")
 
 
-def read_json_log(file_path: str) -> list:
-    """Load a JSON WAL file (empty list when absent) — shared by this
-    module's append log and the foreachBatch sink's `_stream_batches.json`
-    so the two WALs' serialization behavior can never drift."""
-    import json
-
-    if os.path.exists(file_path):
-        with open(file_path) as fh:
-            return json.load(fh)
-    return []
-
-
-def write_json_log(file_path: str, log: list) -> None:
-    """Atomic-replace write of a JSON WAL file (shared, see read_json_log)."""
-    import json
-
-    tmp = file_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(log, fh)
-    os.replace(tmp, file_path)
-
-
-def _read_log(path: str) -> list:
-    return read_json_log(_log_path(path))
-
-
-def _write_log(path: str, log: list) -> None:
-    write_json_log(_log_path(path), log)
-
-
-def _finish_renames(entry: dict) -> None:
-    """Complete the entry's inflight→final renames idempotently: a source
-    already renamed (inflight gone, FINAL PRESENT) is skipped, so this is
-    safe to re-run from any crash point. A source that is gone with no
-    final file is data loss (stage cleaned up, or clobbered by a rival
-    restage) — raise so the entry stays pending and the loss surfaces,
-    instead of being silently flipped to committed with rows dropped."""
-    for src, dest in entry["renames"].items():
-        if os.path.exists(src):
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(src, dest)
-        elif not os.path.exists(dest):
-            raise RuntimeError(
-                f"append commit: staged file {src} is gone and {dest} was "
-                "never created — rows lost; entry left pending"
-            )
-
-
 def _finish_all_pending(log: list) -> bool:
     """Finish every *pending* entry's renames and flip it committed —
     recovery for a driver that crashed mid-commit. Caller holds the table's
@@ -444,7 +405,7 @@ def _finish_all_pending(log: list) -> bool:
     changed = False
     for e in log:
         if e.get("state") == "pending":
-            _finish_renames(e)
+            adopt(e["renames"])
             e["state"] = "committed"
             changed = True
     return changed
@@ -460,12 +421,10 @@ def _rollback_aborted(path: str, files: list) -> None:
     undo any renames already performed (dest names are attempt-unique, so
     deleting them can't touch other commits' data), drop the entry, and
     only then clear this attempt's staged files."""
-    from btrblocks_spark.format.maintenance import commit_lock
-
     fileset = set(files)
     if os.path.exists(_log_path(path)):
         with commit_lock(path):
-            log = _read_log(path)
+            log = load_json(_log_path(path))
             kept, changed = [], False
             for e in log:
                 if e.get("state") == "pending" and fileset & set(
@@ -481,7 +440,7 @@ def _rollback_aborted(path: str, files: list) -> None:
                     continue
                 kept.append(e)
             if changed:
-                _write_log(path, kept)
+                replace_json(_log_path(path), kept)
     for f in files:  # task-attempt orphans that never reached a commit
         try:
             os.remove(f)
@@ -535,13 +494,11 @@ def recover_pending_appends(path: str) -> int:
     Runs automatically at the start of every batch/stream commit; callable
     directly (e.g. before maintenance) to bound the invisibility window.
     Returns the number of entries recovered."""
-    from btrblocks_spark.format.maintenance import commit_lock
-
     with commit_lock(path):
-        log = _read_log(path)
+        log = load_json(_log_path(path))
         n = sum(1 for e in log if e.get("state") == "pending")
         if n and _finish_all_pending(log):
-            _write_log(path, log)
+            replace_json(_log_path(path), log)
     return n
 
 
@@ -586,42 +543,102 @@ def _vacuum_inflight_locked(path: str, max_age_sec: float = 3600.0) -> int:
     Caller must hold the table's commit lock (a pending entry observed
     under the lock pins its sources; everything else old enough is
     garbage — live tasks keep their file mtimes fresh while writing)."""
-    import time
-
     data_dir = os.path.join(path, "data")
     if not os.path.isdir(data_dir):
         return 0
-    log = _read_log(path)
     referenced = {
         src
-        for e in log
+        for e in load_json(_log_path(path))
         if e.get("state") == "pending"
         for src in e.get("renames", {})
     }
-    now = time.time()
-    removed = 0
-    for f in os.listdir(data_dir):
-        if not f.endswith(".inflight"):
-            continue
-        full = os.path.join(data_dir, f)
-        if full in referenced:
-            continue
-        try:
-            if now - os.path.getmtime(full) > max_age_sec:
-                os.remove(full)
-                removed += 1
-        except OSError:
-            pass
-    return removed
+    return collect_stale(
+        (
+            [os.path.join(data_dir, f)]
+            for f in os.listdir(data_dir)
+            if f.endswith(".inflight")
+        ),
+        referenced,
+        max_age_sec,
+    )
 
 
 def vacuum_inflight(path: str, max_age_sec: float = 3600.0) -> int:
     """Public orphan-stage GC hook (see ``_vacuum_inflight_locked``); also
     runs automatically at every ``maintenance.compact`` start."""
-    from btrblocks_spark.format.maintenance import commit_lock
-
     with commit_lock(path):
         return _vacuum_inflight_locked(path, max_age_sec)
+
+
+def _commit_append(path: str, messages, fence: tuple | None = None) -> None:
+    """Driver-side commit of one batch append (``fence=None``) or one
+    streaming microbatch (``fence=(scope, batchId)``) — a write-ahead
+    protocol against ``_appends.json``: (1) append a *pending* entry
+    recording every inflight→final rename, (2) perform the renames, (3)
+    flip the entry to committed. The intent write (an ``os.replace``) is
+    the single atomic decision point. The old order (rename first, journal
+    last) left a torn append on a driver crash mid-loop — some files
+    visible, some .inflight, no log entry — contradicting the
+    all-or-nothing contract. With the WAL, a crash before the intent write
+    leaves nothing visible (abort semantics); a crash after it is finished
+    by recovery at the next commit on this table (or an explicit
+    recover_pending_appends call), and a replayed microbatch finds its
+    entry by fence: a pending entry's renames are COMPLETED from the
+    original attempt's still-on-disk inflight files (deterministic names in
+    the log — no loss), a committed entry drops the rerun (no duplicates).
+
+    The whole sequence runs under the table's commit lock: the log update
+    is read-modify-write, and a concurrent committer (another query on this
+    table, or a batch append) would otherwise drop our entry — losing a
+    pending entry means the renames never finish and its rows stay
+    invisible forever."""
+    inflight = [f for m in messages if m for f in m.files]
+    scope, batch = fence or (None, None)
+    with commit_lock(path):
+        log = load_json(_log_path(path))
+        if fence is not None:
+            prior = next(
+                (
+                    e
+                    for e in log
+                    if e.get("batch") == batch and e.get("scope") == scope
+                ),
+                None,
+            )
+            if prior is not None:
+                if prior.get("state") == "pending":
+                    # first attempt crashed mid-rename: finish ITS renames,
+                    # then mark committed — the rerun's files are duplicates
+                    adopt(prior["renames"])
+                    prior["state"] = "committed"
+                    replace_json(_log_path(path), log)
+                for f in inflight:
+                    try:
+                        os.remove(f)
+                    except OSError:
+                        pass
+                return
+        # adopt any OTHER crashed committer's pending entries (a torn
+        # batch append, or another query's microbatch) while we hold the
+        # lock — bounds the invisibility window to the next commit
+        _finish_all_pending(log)
+        entry = (
+            {"kind": "batch"} if fence is None else {"batch": batch, "scope": scope}
+        )
+        entry.update(
+            renames={f: _final_name(f) for f in inflight},
+            files=[_final_name(f) for f in inflight],
+            rows=sum(m.rows for m in messages if m),
+            state="pending",
+        )
+        log.append(entry)
+        # intent durable BEFORE any file is visible
+        replace_json(_log_path(path), log)
+        adopt(entry["renames"])
+        entry["state"] = "committed"
+        # bound the log: committed entries beyond the scope's replay
+        # window can never be offered again (see prune_committed_entries)
+        replace_json(_log_path(path), prune_committed_entries(log))
 
 
 class BtrBlocksWriter(DataSourceArrowWriter):
@@ -660,38 +677,7 @@ class BtrBlocksWriter(DataSourceArrowWriter):
         return AppendCommit(tuple(files), total)
 
     def commit(self, messages) -> None:
-        # Write-ahead commit (same WAL as the streaming twin): (1) append a
-        # *pending* entry recording every inflight→final rename, (2) perform
-        # the renames, (3) flip the entry to committed. The old order
-        # (rename first, journal last) left a torn append on a driver crash
-        # mid-loop — some files visible, some .inflight, no log entry —
-        # contradicting the all-or-nothing docstring. With the WAL, a crash
-        # before the intent write leaves nothing visible (abort semantics);
-        # a crash after it is finished by recovery at the next commit on
-        # this table (or an explicit recover_pending_appends call).
-        # The whole sequence runs under the table's commit lock: the log
-        # update is read-modify-write, and a concurrent committer would
-        # otherwise drop our entry.
-        from btrblocks_spark.format.maintenance import commit_lock
-
-        inflight = [f for m in messages if m for f in m.files]
-        with commit_lock(self.path):
-            log = _read_log(self.path)
-            _finish_all_pending(log)  # adopt any crashed predecessor first
-            entry = {
-                "kind": "batch",
-                "renames": {
-                    f: _final_name(f) for f in inflight
-                },
-                "files": [_final_name(f) for f in inflight],
-                "rows": sum(m.rows for m in messages if m),
-                "state": "pending",
-            }
-            log.append(entry)
-            _write_log(self.path, log)  # intent durable BEFORE anything visible
-            _finish_renames(entry)
-            entry["state"] = "committed"
-            _write_log(self.path, prune_committed_entries(log))
+        _commit_append(self.path, messages)
 
     def abort(self, messages) -> None:
         # roll back a failed commit's pending intent whole (see
@@ -763,63 +749,7 @@ class BtrBlocksStreamWriter(DataSourceStreamArrowWriter):
         return AppendCommit(tuple(files), total)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
-        # Write-ahead commit: (1) append an intent entry mapping each
-        # inflight file to its final name, (2) perform the renames,
-        # (3) flip the entry to committed. A crash at any point recovers on
-        # replay: a pending entry's renames are COMPLETED from the original
-        # attempt's still-on-disk inflight files (deterministic names in the
-        # log — no loss), a committed entry drops the rerun (no duplicates).
-        # The intent write is the single atomic decision point (os.replace).
-        # The whole sequence runs under the table's commit lock: the log
-        # update is read-modify-write, and a concurrent committer (another
-        # query on this table, or a batch append) would otherwise drop our
-        # entry — losing a pending entry means the renames never finish and
-        # the microbatch's data stays invisible forever.
-        from btrblocks_spark.format.maintenance import commit_lock
-
-        inflight = [f for m in messages if m for f in m.files]
-        with commit_lock(self.path):
-            log = _read_log(self.path)
-            prior = next(
-                (
-                    e
-                    for e in log
-                    if e.get("batch") == batchId and e.get("scope") == self.scope
-                ),
-                None,
-            )
-            if prior is not None:
-                if prior.get("state") == "pending":
-                    # first attempt crashed mid-rename: finish ITS renames,
-                    # then mark committed — the rerun's files are duplicates
-                    _finish_renames(prior)
-                    prior["state"] = "committed"
-                    _write_log(self.path, log)
-                for f in inflight:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                return
-            # adopt any OTHER crashed committer's pending entries (a torn
-            # batch append, or another query's microbatch) while we hold
-            # the lock — bounds the invisibility window to the next commit
-            _finish_all_pending(log)
-            entry = {
-                "batch": batchId,
-                "scope": self.scope,
-                "renames": {f: _final_name(f) for f in inflight},
-                "files": [_final_name(f) for f in inflight],
-                "rows": sum(m.rows for m in messages if m),
-                "state": "pending",
-            }
-            log.append(entry)
-            _write_log(self.path, log)  # intent durable BEFORE any file is visible
-            _finish_renames(entry)
-            entry["state"] = "committed"
-            # bound the log: committed entries beyond the scope's replay
-            # window can never be offered again (see prune_committed_entries)
-            _write_log(self.path, prune_committed_entries(log))
+        _commit_append(self.path, messages, fence=(self.scope, batchId))
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
         # roll back a failed commit's pending intent whole — Spark will

@@ -12,15 +12,24 @@ is pure metadata, and only genuinely-new files are read.
 Appends land as block_size-row-capped zstd parquet in ``data/`` — the same
 shape the streaming chunk sink and the datasource append writer produce,
 and the fragmented tail ``maintenance.compact`` later bin-packs and
-re-plans, so COPY INTO inherits the append→compact lifecycle."""
+re-plans, so COPY INTO inherits the append→compact lifecycle. The commit
+(``_copy_journal.json``) has the same WAL shape as compact's journal and
+runs on the shared commit journal (format/journal.py)."""
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
+from btrblocks_spark.format.journal import (
+    adopt,
+    collect_stale,
+    commit_lock,
+    load_json,
+    replace_json,
+)
 from btrblocks_spark.format.reader import read_metadata
 
 
@@ -29,11 +38,7 @@ def _log_path(table_dir: str) -> str:
 
 
 def _load_log(table_dir: str) -> dict:
-    p = _log_path(table_dir)
-    if not os.path.exists(p):
-        return {"files": {}}
-    with open(p) as fh:
-        return json.load(fh)
+    return load_json(_log_path(table_dir), lambda: {"files": {}})
 
 
 def _file_key(path: str) -> str:
@@ -56,63 +61,17 @@ def _apply_copy_journal(table_dir: str) -> bool:
     jpath = os.path.join(table_dir, "_copy_journal.json")
     if not os.path.exists(jpath):
         return False
-    with open(jpath) as fh:
-        journal = json.load(fh)
-    os.makedirs(os.path.join(table_dir, "data"), exist_ok=True)
-    for src, dest in journal["adds"].items():
-        if os.path.exists(src):
-            os.replace(src, dest)
-        elif not os.path.exists(dest):
-            raise RuntimeError(
-                f"copy_into: staged file {src} lost before rename to {dest}; "
-                "journal left pending"
-            )
+    journal = load_json(jpath)
+    adopt(journal["adds"])
     log = _load_log(table_dir)
     log["files"].update(journal["log_files"])
-    tmp = _log_path(table_dir) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(log, fh, indent=1)
-    os.replace(tmp, _log_path(table_dir))
+    replace_json(_log_path(table_dir), log, indent=1)
     os.remove(jpath)
-    import shutil
-
     # per-call stage dirs since round 4; the fixed _copy_tmp is the legacy
     # location a pre-upgrade journal may still point at
     stage_dir = journal.get("stage_dir", os.path.join(table_dir, "_copy_tmp"))
     shutil.rmtree(stage_dir, ignore_errors=True)
     return True
-
-
-def _gc_abandoned_copy_stages(table_dir: str, max_age_sec: float = 3600.0) -> None:
-    """Reclaim per-call ``_copy_tmp-*`` stage dirs a hard-crashed copy_into
-    abandoned (the in-process failure path removes its own stage; a killed
-    process leaks a batch-sized dir per attempt, forever). Caller holds the
-    commit lock. The pending journal's stage dir is never touched (recovery
-    consumes it), and liveness is judged by the newest mtime in the tree —
-    the same contract as maintenance._gc_abandoned_stages."""
-    import shutil
-
-    from btrblocks_spark.format.maintenance import newest_mtime
-
-    jpath = os.path.join(table_dir, "_copy_journal.json")
-    referenced = ""
-    if os.path.exists(jpath):
-        with open(jpath) as fh:
-            referenced = json.load(fh).get("stage_dir", "")
-    import time
-
-    now = time.time()
-    for d in os.listdir(table_dir):
-        if not d.startswith("_copy_tmp"):
-            continue
-        full = os.path.join(table_dir, d)
-        if full == referenced or not os.path.isdir(full):
-            continue
-        try:
-            if now - newest_mtime(full) > max_age_sec:
-                shutil.rmtree(full, ignore_errors=True)
-        except OSError:
-            pass
 
 
 def copy_into(
@@ -144,14 +103,20 @@ def copy_into(
     commits as planned. Two concurrent calls can therefore never
     double-load a file, clobber each other's stage (per-call dirs), or mark
     a file loaded whose rows never reached ``data/``."""
-    import shutil
     import uuid
-
-    from btrblocks_spark.format.maintenance import commit_lock
 
     with commit_lock(table_dir):
         _apply_copy_journal(table_dir)  # finish a crashed predecessor first
-        _gc_abandoned_copy_stages(table_dir)
+        # reclaim per-call ``_copy_tmp-*`` stage dirs a hard-crashed call
+        # abandoned (the in-process failure path removes its own stage; a
+        # killed process leaks a batch-sized dir per attempt, forever). The
+        # pending journal's stage dir is never touched (recovery consumes
+        # it; the apply above just cleared any journal, so none is pending)
+        collect_stale(
+            [os.path.join(table_dir, d)]
+            for d in os.listdir(table_dir)
+            if d.startswith("_copy_tmp")
+        )
         log = _load_log(table_dir)
     meta = read_metadata(table_dir)
     if meta.get("column_groups"):
@@ -238,7 +203,7 @@ def copy_into(
         # leaking a batch-sized dir per failed attempt; after the commit
         # point the pending journal owns the stage and recovery consumes
         # it. Stages orphaned by a hard CRASH (no exception path runs) are
-        # reclaimed by _gc_abandoned_copy_stages at the next call.
+        # reclaimed by the stale-stage sweep at the next call.
         tmp_dir = os.path.join(table_dir, f"_copy_tmp-{uuid.uuid4().hex}")
         journal_committed = False
         try:
@@ -345,9 +310,7 @@ def copy_into(
                         # unresolved-provenance (__unknown__) rows are included
                         journal, appended = build_journal(keep, not overlap)
                         jpath = os.path.join(table_dir, "_copy_journal.json")
-                        with open(jpath + ".tmp", "w") as fh:
-                            json.dump(journal, fh)
-                        os.replace(jpath + ".tmp", jpath)  # commit point
+                        replace_json(jpath, journal)  # commit point
                         journal_committed = True
                         _apply_copy_journal(table_dir)
                     else:

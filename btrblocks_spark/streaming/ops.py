@@ -22,6 +22,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from btrblocks_spark.format.journal import (
+    adopt,
+    commit_lock,
+    load_json,
+    replace_json,
+)
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType(), True),
@@ -108,12 +115,14 @@ def exactly_once_chunked_append(
     entries written by pre-scope versions of this helper (no ``scope`` key)
     still fence by bare batch id, preserving their replay safety.
 
-    Same WAL shape as the btrblocks streaming sink and compact()'s journal;
-    the log update runs under the table's commit lock."""
+    Same WAL shape as the btrblocks streaming sink, on the shared commit
+    journal (format/journal.py: its ``adopt`` creates ``data/`` for a
+    first batch that crashed before it existed, and raises on a lost
+    stage); the log update runs under the table's commit lock."""
     import hashlib
     import uuid
 
-    from btrblocks_spark.format.maintenance import commit_lock
+    from btrblocks_spark.sources.btr_datasource import prune_committed_entries
 
     if not scope:
         raise ValueError(
@@ -121,18 +130,6 @@ def exactly_once_chunked_append(
             "(the stream's checkpoint location): batch ids are only unique "
             "per checkpoint lineage"
         )
-
-    # shared WAL plumbing (same helpers as the datasource append log, so
-    # the two WALs' atomicity/serialization behavior can never drift):
-    # read/write + idempotent rename recovery with per-dest makedirs
-    # (covers a first-batch crash before data/ ever existed) and a raise
-    # on a lost stage.
-    from btrblocks_spark.sources.btr_datasource import (
-        _finish_renames as finish,
-        prune_committed_entries,
-        read_json_log,
-        write_json_log,
-    )
 
     log_path = os.path.join(path, "_stream_batches.json")
 
@@ -178,7 +175,7 @@ def exactly_once_chunked_append(
         changed = False
         for e in log:
             if "scope" not in e and e.get("state") == "pending":
-                finish(e)
+                adopt(e["renames"])
                 e["state"] = "committed"
                 changed = True
         return changed
@@ -209,23 +206,32 @@ def exactly_once_chunked_append(
                 if d.startswith(f"batch={batch_id}-"):
                     shutil.rmtree(os.path.join(stage_root, d), ignore_errors=True)
 
-    with commit_lock(path):
-        log = read_json_log(log_path)
+    def settle(log: list) -> bool:
+        # runs under the lock on each snapshot of the log (before staging,
+        # and again before committing): recover crashed committers, then
+        # report whether this (scope, batch) is already journaled. A pending
+        # prior means its committer CRASHED after its commit point (every
+        # committer holds the lock from journal write to the committed
+        # flip): adopt its staged files to completion, don't restage —
+        # returning without finishing would let the checkpoint advance past
+        # a batch whose rows stay invisible forever (nothing else heals
+        # scoped pendings). Persists the log when recovery changed it.
         changed = finish_pending_legacy(log)
         prior = find_prior(log)
         if prior is not None:
-            if claim_legacy(log, prior):
-                changed = True
+            changed = claim_legacy(log, prior) or changed
             if prior.get("state") == "pending":
-                finish(prior)  # first attempt's files — complete, don't restage
+                adopt(prior["renames"])
                 prior["state"] = "committed"
                 changed = True
-            if changed:
-                write_json_log(log_path, log)
+        if changed:
+            replace_json(log_path, log)
+        return prior is not None
+
+    with commit_lock(path):
+        if settle(load_json(log_path)):
             clean_stages()
             return
-        if changed:
-            write_json_log(log_path, log)
     stage = os.path.join(stage_root, f"batch={batch_id}-{uuid.uuid4().hex}")
     (
         batch_df.write.mode("overwrite")
@@ -240,32 +246,15 @@ def exactly_once_chunked_append(
         if f.endswith(".parquet")
     )
     with commit_lock(path):
-        log = read_json_log(log_path)
-        changed = finish_pending_legacy(log)
-        prior = find_prior(log)
-        if prior is not None:  # lost a race
-            if claim_legacy(log, prior):
-                changed = True
-            if prior.get("state") == "pending":
-                # the rival CRASHED after its commit point (every committer
-                # holds the lock from journal write to the committed flip):
-                # adopt its staged files to completion, exactly like the
-                # first-lock branch — returning without finishing would let
-                # the checkpoint advance past a batch whose rows stay
-                # invisible forever (nothing else heals scoped pendings).
-                finish(prior)
-                prior["state"] = "committed"
-                changed = True
-            if changed:
-                write_json_log(log_path, log)
+        log = load_json(log_path)
+        if settle(log):  # lost a race
             shutil.rmtree(stage, ignore_errors=True)
             return
-        # (a `changed` recovery below is persisted by our own entry append)
         # uuid in the FINAL name: a same-path checkpoint reset (delete the
         # checkpoint dir, restart at the same location) restarts batch ids
         # at 0 under the SAME scope string, and once the first lineage's
         # batch-0 entry ages past the prune window no fence fires — a
-        # deterministic name would let _finish_renames os.replace the first
+        # deterministic name would let adopt() os.replace the first
         # lineage's COMMITTED batch-0 file (silent loss of committed rows).
         # Replay adoption never needs name determinism: recovery renames
         # come from the journaled entry, not from recomputing names.
@@ -284,14 +273,14 @@ def exactly_once_chunked_append(
             "state": "pending",
         }
         log.append(entry)
-        write_json_log(log_path, log)  # commit point
-        finish(entry)
+        replace_json(log_path, log)  # commit point
+        adopt(entry["renames"])
         entry["state"] = "committed"
         # bound the journal: a long-lived stream writes one entry per batch
         # and every commit rewrites the whole file — committed entries past
         # the scope's replay window are dead weight (Structured Streaming
         # only replays the single in-flight batch of a checkpoint lineage)
-        write_json_log(log_path, prune_committed_entries(log))
+        replace_json(log_path, prune_committed_entries(log))
     clean_stages()
 
 
@@ -547,7 +536,6 @@ def streaming_upsert(
     ``incremental_agg`` — a reader holding a lazily-evaluated snapshot
     from moments ago never loses it).
     """
-    from btrblocks_spark.format.maintenance import commit_lock
     from btrblocks_spark.pipeline.merge import merge_upsert
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -442,16 +442,16 @@ def test_finish_renames_surfaces_lost_stage(tmp_path):
     silently flip the entry to committed."""
     import pytest as _pytest
 
-    from btrblocks_spark.sources.btr_datasource import _finish_renames
+    from btrblocks_spark.format.journal import adopt
 
     src = str(tmp_path / "gone.inflight")
     dest = str(tmp_path / "gone.parquet")
     with _pytest.raises(RuntimeError, match="rows lost"):
-        _finish_renames({"renames": {src: dest}})
+        adopt({src: dest})
     # but already-renamed (dest exists) is the normal idempotent skip
     with open(dest, "w") as fh:
         fh.write("x")
-    _finish_renames({"renames": {src: dest}})
+    adopt({src: dest})
 
 
 def test_append_log_stays_bounded(spark, sf_dir, tmp_path):

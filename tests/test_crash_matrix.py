@@ -202,3 +202,67 @@ def test_copy_into_crash_matrix(spark, sf_dir, tmp_path):
         assert not os.path.exists(os.path.join(dst, "_copy_journal.json"))
         with open(os.path.join(dst, "_copy_log.json")) as fh:
             assert len(json.load(fh)["files"]) == 1, f"crash@{k}"
+
+
+def _visible_keys(path: str, key: str) -> list:
+    """Sorted key multiset of every row a reader sees (final *.parquet
+    files only) — equal to the pre-compact multiset means no row was lost
+    and none duplicated."""
+    import pyarrow.parquet as pq
+
+    from btrblocks_spark.format.fs import list_parquet_files
+
+    return sorted(
+        k
+        for f in list_parquet_files(os.path.join(path, "data"))
+        for k in pq.read_table(f, columns=[key]).column(0).to_pylist()
+    )
+
+
+@pytest.mark.slow  # excluded from the default (driver-window) run; see pytest.ini
+def test_compact_journal_crash_matrix(spark, sf_dir, tmp_path):
+    """compact(): crash at every os.replace of its commit and apply (journal
+    write, staged-file adoptions, sidecar install, append-log prune). The
+    journal repair in read_metadata — or, for a crash before the journal
+    landed, the next compact() — must leave exactly the pre-compact rows:
+    none lost, none duplicated, sidecar row count in sync."""
+    from btrblocks_spark.format.maintenance import compact
+    from btrblocks_spark.format.reader import read_metadata
+    from btrblocks_spark.sources.btr_datasource import BtrBlocksWriter
+
+    nation = load_table(spark, sf_dir, "nation")
+    extra = nation.limit(6).toPandas()
+    extra["n_nationkey"] += 100  # appended keys stay unique
+    cfg = DEFAULT_CONFIG.with_(block_size=4)
+
+    def fresh(tag: str) -> tuple[str, list]:
+        # 22 written rows (five full chunks + a 2-row tail) and a 6-row
+        # datasource append: three fragment files for compact to rewrite
+        dst = str(tmp_path / f"cj_{tag}")
+        write_table(nation.limit(22), dst, ["n_nationkey"], config=cfg)
+        w = BtrBlocksWriter({"path": dst}, nation.schema, overwrite=False)
+        w.commit([w.write(iter(pa.Table.from_pandas(extra).to_batches()))])
+        return dst, _visible_keys(dst, "n_nationkey")
+
+    probe, want = fresh("probe")
+    assert len(want) == 28
+    total = _count_replaces(lambda: compact(spark, probe, cfg))
+    assert total >= 4  # journal + >=1 adoption + sidecar + append-log prune
+    jname = "_compact_journal.json"
+
+    for k in range(total):
+        dst, want = fresh(f"k{k}")
+        real = os.replace
+        os.replace = _CrashAfter(k, real)
+        try:
+            with pytest.raises(OSError, match="injected"):
+                compact(spark, dst, cfg)
+        finally:
+            os.replace = real
+        read_metadata(dst)  # a reader's journal repair
+        assert not os.path.exists(os.path.join(dst, jname)), f"crash@{k}"
+        got = _visible_keys(dst, "n_nationkey")
+        assert got == want, f"crash@{k}: rows lost or duplicated after repair"
+        compact(spark, dst, cfg)  # the next compact finishes or redoes it
+        assert _visible_keys(dst, "n_nationkey") == want, f"crash@{k}"
+        assert read_metadata(dst)["num_rows"] == len(want), f"crash@{k}"

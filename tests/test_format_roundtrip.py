@@ -208,47 +208,6 @@ def test_frames_equal_detects_diff(spark, sf_dir):
     assert not frames_equal(df, df.limit(3))
 
 
-def test_compact_table(spark, sf_dir):
-    """Many small appended files → one chunk-aligned table, same rows."""
-    import os
-
-    from btrblocks_spark.format.compact import compact_table
-    from btrblocks_spark.format.verify import frames_equal
-
-    src = load_table(spark, sf_dir, "orders")
-    small_dir = tempfile.mkdtemp(prefix="btr_small_")
-    dest_dir = tempfile.mkdtemp(prefix="btr_compacted_")
-    try:
-        # simulate a streaming sink's accumulation: three appends, tiny files
-        for i in range(3):
-            (
-                src.filter(F.col("o_orderkey") % 3 == i)
-                .write.mode("append")
-                .option("maxRecordsPerFile", 200)
-                .parquet(small_dir)
-            )
-        n_small = sum(
-            f.endswith(".parquet") for _, _, fs in os.walk(small_dir) for f in fs
-        )
-
-        cfg = DEFAULT_CONFIG.with_(block_size=4096)
-        meta = compact_table(spark, small_dir, dest_dir, ["o_orderkey"], cfg, "orders")
-
-        assert meta["compaction"]["input_files"] == n_small
-        assert 0 < meta["compaction"]["output_files"] < n_small
-        assert meta["num_rows"] == src.count()
-        # non-final chunks exactly block_size rows (chunk-aligned layout held)
-        from btrblocks_spark.format.reader import column_chunks
-
-        sizes = [c["n_rows"] for c in column_chunks(dest_dir, "o_orderkey", meta=meta)]
-        assert all(s == 4096 for s in sizes[:-1]) and 0 < sizes[-1] <= 4096
-        got, _meta2 = read_table(spark, dest_dir)
-        assert frames_equal(got.select(*src.columns), src)
-    finally:
-        shutil.rmtree(small_dir, ignore_errors=True)
-        shutil.rmtree(dest_dir, ignore_errors=True)
-
-
 def test_zorder_write_prunes_both_dimensions(spark, sf_dir):
     """Writing under a Morton key gives chunk stats that prune on BOTH
     interleaved dimensions; a linear (l_partkey-led) order prunes only its
@@ -336,6 +295,65 @@ def test_bloom_filters_on_keys(spark, sf_dir):
         assert [r.small_key for r in got.collect()] == [12345 % 7]
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def _bloom_offsets(spark, file_path: str, column: str) -> list[int]:
+    """parquet-mr footer bloom-filter offset of ``column`` per row group
+    (-1 = no bloom filter), read through the JVM's ParquetFileReader."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    in_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jvm.org.apache.hadoop.fs.Path(file_path), conf
+    )
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(in_file)
+    try:
+        return [
+            int(col.getBloomFilterOffset())
+            for block in reader.getFooter().getBlocks()
+            for col in block.getColumns()
+            if col.getPath().toDotString() == column
+        ]
+    finally:
+        reader.close()
+
+
+def test_compact_keeps_bloom_filters(spark, tmp_path):
+    """compact() rewrites the fragment tail with the table's bloom filters:
+    after an append and a compact, every data file — the untouched full
+    chunks and the new compacted-* files — carries a bloom filter on the
+    bloomed key, as the sidecar's ``bloom_filters`` says."""
+    from btrblocks_spark.format.fs import list_parquet_files
+    from btrblocks_spark.format.maintenance import compact
+    from btrblocks_spark.format.reader import read_metadata
+    from btrblocks_spark.sources.btr_datasource import BtrBlocksDataSource
+
+    df = spark.range(50000).selectExpr(
+        "id AS uid",
+        "CAST(id % 7 AS INT) AS small_key",
+        "CAST(id * 37 % 100000 AS DOUBLE) AS val",
+    )
+    path = str(tmp_path / "bloomed")
+    write_table(df, path, ["uid", "small_key"], DEFAULT_CONFIG.with_(block_size=8192))
+    spark.dataSource.register(BtrBlocksDataSource)
+    (
+        spark.range(50000, 53000)
+        .selectExpr(
+            "id AS uid",
+            "CAST(id % 7 AS INT) AS small_key",
+            "CAST(id * 37 % 100000 AS DOUBLE) AS val",
+        )
+        .write.format("btrblocks").mode("append").option("path", path).save()
+    )
+    assert compact(spark, path)["compacted"]
+
+    assert set(read_metadata(path)["bloom_filters"]) == {"uid"}
+    files = list_parquet_files(f"{path}/data")
+    assert any("compacted-" in f for f in files)
+    for f in files:
+        offsets = _bloom_offsets(spark, f, "uid")
+        assert offsets and all(o > 0 for o in offsets), (f, offsets)
+    got = spark.read.parquet(f"{path}/data").filter(F.col("uid") == 52345)
+    assert [r.small_key for r in got.collect()] == [52345 % 7]
 
 
 def test_random_split_strategy(spark, sf_dir):
@@ -533,7 +551,7 @@ def test_reader_not_wedged_by_busy_commit_lock(spark, sf_dir, tmp_path):
     import json as _json
     import os
 
-    from btrblocks_spark.format.maintenance import commit_lock
+    from btrblocks_spark.format.journal import commit_lock
     from btrblocks_spark.format.reader import read_metadata
 
     cfg = dataclasses.replace(DEFAULT_CONFIG, block_size=2048)
@@ -1284,7 +1302,7 @@ def test_commit_lock_semantics(tmp_path):
 
     import pytest as _pytest
 
-    from btrblocks_spark.format.maintenance import commit_lock
+    from btrblocks_spark.format.journal import commit_lock
 
     d = str(tmp_path / "locked")
     lock = os.path.join(d, "_commit.lock")
@@ -1335,7 +1353,7 @@ def test_commit_lock_heartbeat_protects_slow_holder(tmp_path):
 
     import pytest as _pytest
 
-    from btrblocks_spark.format import maintenance as maint
+    from btrblocks_spark.format import journal as maint
 
     d = str(tmp_path / "slowlock")
     lock = os.path.join(d, "_commit.lock")
@@ -1536,7 +1554,7 @@ def test_result_cache_gc_uses_newest_mtime_in_tree(tmp_path):
     import os
     import time as _t
 
-    from btrblocks_spark.format.maintenance import newest_mtime
+    from btrblocks_spark.format.journal import newest_mtime
 
     live = tmp_path / "slot" / ".stage-live"
     (live / "_temporary").mkdir(parents=True)
