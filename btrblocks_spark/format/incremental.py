@@ -10,21 +10,28 @@ view maintenance contract.
 
 At 100 TB this is the difference between an O(new bytes) refresh and an
 O(table) recompute: refresh cost tracks the append rate, not table size.
-State (processed file list + result version) lives in a JSON sidecar next
-to versioned result snapshots, same layout as streaming_upsert's
-``v=N`` + ``_latest`` pointer, so refreshes are atomic and readers keep
-snapshot isolation.
+State (processed file list + result version) lives in ``_state.json``
+next to ``v=N`` result snapshots. That file is the snapshots' pointer (there
+is no ``_latest``); claiming a snapshot and vacuuming old ones follow the
+versioned-snapshot protocol of format/journal.py, so refreshes are atomic
+and readers keep snapshot isolation.
 """
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from btrblocks_spark.format.journal import commit_lock, load_json, replace_json
+from btrblocks_spark.format.journal import (
+    claim_version,
+    commit_lock,
+    load_json,
+    replace_json,
+    vacuum_versions,
+    version_dir,
+)
 
 
 def _list_data_files(path: str) -> list[str]:
@@ -81,7 +88,7 @@ def incremental_agg(
         else:
             new = [f for f in files if f not in seen]
             prev = (
-                spark.read.parquet(os.path.join(state_dir, f"v={state['version']}"))
+                spark.read.parquet(version_dir(state_dir, "v=", state["version"]))
                 if state["version"] >= 0
                 else None
             )
@@ -99,7 +106,7 @@ def incremental_agg(
             # vacuum seconds later (the same FileNotFound-at-consume
             # hazard the floor exists to prevent).
             try:
-                os.utime(os.path.join(state_dir, f"v={state['version']}"))
+                os.utime(version_dir(state_dir, "v=", state["version"]))
             except OSError:
                 pass
             return prev, stats
@@ -121,7 +128,7 @@ def incremental_agg(
             # with the prior schema so the state heals and later appends
             # fold normally.
             merged = spark.read.parquet(
-                os.path.join(state_dir, f"v={state['version']}")
+                version_dir(state_dir, "v=", state["version"])
             ).limit(0)
         else:
             part = (
@@ -144,10 +151,14 @@ def incremental_agg(
             else:
                 merged = part
 
-        next_v = state["version"] + 1
-        out_dir = os.path.join(state_dir, f"v={next_v}")
-        merged.write.mode("overwrite").parquet(out_dir)
-        replace_json(state_file, {"processed": files, "version": next_v})
+        next_v = claim_version(state_dir, "v=")
+        out_dir = version_dir(state_dir, "v=", next_v)
+        try:
+            merged.write.mode("overwrite").parquet(out_dir)
+            replace_json(state_file, {"processed": files, "version": next_v})
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
         # bounded history: vacuum snapshots past the retention window.
         # Retention is ALSO floored by wall-time: under a per-microbatch
         # refresh cadence (materialized_view_stream) keep_versions can be
@@ -155,18 +166,6 @@ def incremental_agg(
         # refresh moments ago would hit FileNotFound at consume time (judge
         # finding #5b, round 4). A snapshot is only removable once it is
         # both keep_versions stale AND older than min_retain_sec on disk.
-        now = time.time()
-        for d in os.listdir(state_dir):
-            if not (d.startswith("v=") and d[2:].isdigit()):
-                continue
-            if int(d[2:]) > next_v - keep_versions:
-                continue
-            full = os.path.join(state_dir, d)
-            try:
-                age = now - os.path.getmtime(full)
-            except OSError:
-                continue
-            if age > min_retain_sec:
-                shutil.rmtree(full, ignore_errors=True)
+        vacuum_versions(state_dir, "v=", keep_versions, next_v, min_retain_sec)
     stats["version"] = next_v
     return spark.read.parquet(out_dir), stats

@@ -11,6 +11,19 @@ Each one stages files under a name readers skip, writes its journal with
 staged files, and leaves crash leftovers to ``collect_stale``. All of it
 runs under the table's ``commit_lock``.
 
+The versioned-snapshot protocol is the second shape. A table of
+immutable snapshots keeps each one in a ``<prefix>N`` directory and names
+the committed one in a pointer file: ``v=N`` + ``_latest`` for the DML
+verbs of ``maintenance`` and ``streaming_upsert`` (the same tables),
+``dv=N`` + ``_deletes/_latest`` for deletion vectors, and ``v=N`` behind
+``_state.json`` for ``incremental_agg``. A writer ``claim_version``s the
+next number (an atomic ``os.mkdir``, so two writers never share a
+directory), writes the snapshot into it, and commits with ``swap_pointer``
+(``incremental_agg`` with ``replace_json`` of its state). A claim that
+never committed is removed by its writer when the commit fails, or by a
+later ``vacuum_versions`` (a crash, or an uncommitted deletion vector).
+Readers resolve ``read_pointer``.
+
 Protocol code calls ``os.replace`` through the ``os`` module attribute:
 the crash-injection matrix (tests/test_crash_matrix.py) patches it there.
 Local paths only; this module imports nothing else from the package, so
@@ -217,3 +230,95 @@ def collect_stale(
                     continue
             removed += 1
     return removed
+
+
+def version_dir(root: str, prefix: str, v: int) -> str:
+    """Directory of snapshot ``v`` (``<root>/<prefix><v>``)."""
+    return os.path.join(root, f"{prefix}{v}")
+
+
+def list_versions(root: str, prefix: str) -> list[int]:
+    """Sorted numbers of the ``<prefix>N`` snapshot directories under
+    ``root``; [] when ``root`` does not exist."""
+    try:
+        names = os.listdir(root)
+    except FileNotFoundError:
+        return []
+    n = len(prefix)
+    return sorted(
+        int(d[n:])
+        for d in names
+        if d.startswith(prefix)
+        and d[n:].isdecimal()
+        and os.path.isdir(os.path.join(root, d))
+    )
+
+
+def claim_version(root: str, prefix: str) -> int:
+    """Claim the next snapshot number by creating its directory. ``os.mkdir``
+    is atomic, so of two writers that pick the same number one gets
+    FileExistsError and moves on to the next. The caller writes into
+    ``version_dir(root, prefix, v)`` and removes it if its commit fails
+    before ``swap_pointer``."""
+    os.makedirs(root, exist_ok=True)
+    v = (list_versions(root, prefix) or [-1])[-1] + 1
+    while True:
+        try:
+            os.mkdir(version_dir(root, prefix, v))
+            return v
+        except FileExistsError:
+            v += 1
+
+
+def read_pointer(root: str) -> int | None:
+    """The committed snapshot number ``root/_latest`` names, or None before
+    the first commit."""
+    try:
+        with open(os.path.join(root, "_latest")) as fh:
+            return int(fh.read().strip())
+    except FileNotFoundError:
+        return None
+
+
+def swap_pointer(root: str, v: int) -> None:
+    """Commit snapshot ``v``: write ``_latest.tmp``, then ``os.replace`` it
+    over ``_latest``. A reader resolves the old snapshot or the new one,
+    never a torn pointer."""
+    tmp = os.path.join(root, "_latest.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(str(v))
+    os.replace(tmp, os.path.join(root, "_latest"))
+
+
+def vacuum_versions(
+    root: str,
+    prefix: str,
+    keep: int,
+    pinned: int | None,
+    min_age_sec: float = 0.0,
+) -> tuple[list[int], list[int]]:
+    """Remove superseded snapshots. The newest ``keep`` listed versions and
+    ``pinned`` (the pointer target) always stay; any other version goes once
+    its directory is older than ``min_age_sec``, so a reader that resolved
+    it moments ago can still scan it. Removal is best effort: a version
+    counts as removed only if its directory is gone afterwards. Returns
+    (removed, retained) version numbers."""
+    versions = list_versions(root, prefix)
+    retain = set(versions[-keep:] if keep > 0 else ())
+    if pinned is not None:
+        retain.add(pinned)
+    now = time.time()
+    removed = []
+    for v in versions:
+        if v in retain:
+            continue
+        path = version_dir(root, prefix, v)
+        try:
+            if min_age_sec > 0 and now - os.path.getmtime(path) <= min_age_sec:
+                continue
+        except OSError:
+            continue
+        shutil.rmtree(path, ignore_errors=True)
+        if not os.path.exists(path):
+            removed.append(v)
+    return removed, sorted(set(versions).difference(removed) | retain)

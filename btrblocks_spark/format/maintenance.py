@@ -5,7 +5,8 @@ immutable files, never an in-place edit:
 
   versioned tables  ``v=N`` dirs behind an atomically swapped ``_latest``
                     pointer (streaming/ops.streaming_upsert writes the same
-                    layout): DELETE/UPDATE/INSERT commit a rewritten
+                    tables; both follow the versioned-snapshot protocol of
+                    format/journal.py): DELETE/UPDATE/INSERT commit a rewritten
                     snapshot as a new version (Catalyst predicates, so the
                     rewrite scans with pushdown; DELETE is a narrow
                     anti-filter + write, no shuffle), CHECK constraints are
@@ -18,8 +19,9 @@ immutable files, never an in-place edit:
                     ``optimize_zorder``.
 
 The commit lock, atomic journal writes, staged-file adoption and stale-stage
-GC these share with the data source appends and ``copy_into`` live in
-format/journal.py.
+GC these share with the data source appends and ``copy_into``, and the
+version claim, pointer swap and vacuum of the ``v=N`` and ``dv=N``
+snapshots, live in format/journal.py.
 """
 
 from __future__ import annotations
@@ -34,34 +36,22 @@ from pyspark.sql.observation import Observation
 
 from btrblocks_spark.format.journal import (
     adopt,
+    claim_version,
     collect_stale,
     commit_lock,
+    list_versions,
     load_json,
+    read_pointer,
     replace_json,
+    swap_pointer,
+    vacuum_versions,
+    version_dir,
 )
-
-
-def _versions(table_dir: str) -> list[int]:
-    if not os.path.isdir(table_dir):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and os.path.isdir(os.path.join(table_dir, d))
-    )
-
-
-def _latest_version(table_dir: str) -> int | None:
-    ptr = os.path.join(table_dir, "_latest")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        return int(fh.read().strip())
 
 
 def read_version(spark: SparkSession, table_dir: str, version: int) -> DataFrame:
     """Time travel: read an explicit committed version."""
-    path = os.path.join(table_dir, f"v={version}")
+    path = version_dir(table_dir, "v=", version)
     if not os.path.isdir(path):
         raise ValueError(f"version {version} not present (vacuumed or never written)")
     return spark.read.parquet(path)
@@ -125,15 +115,8 @@ def _claim_and_commit(
     claimed directory is torn down and CommitConflictError raised — the
     caller re-reads the snapshot and retries (classic lakehouse OCC; the
     serialization point is the tiny pointer file, never the data)."""
-    next_v = (_versions(table_dir) or [-1])[-1] + 1
-    vdir = os.path.join(table_dir, f"v={next_v}")
-    while True:
-        try:
-            os.mkdir(vdir)
-            break
-        except FileExistsError:
-            next_v += 1
-            vdir = os.path.join(table_dir, f"v={next_v}")
+    next_v = claim_version(table_dir, "v=")
+    vdir = version_dir(table_dir, "v=", next_v)
     try:
         write_fn(vdir)
         if op_info is not None:
@@ -144,15 +127,13 @@ def _claim_and_commit(
         # check+swap under the exclusive lock: without it two writers on
         # the same base can both pass the check before either swaps
         with commit_lock(table_dir):
-            if _latest_version(table_dir) != base_v:
+            latest = read_pointer(table_dir)
+            if latest != base_v:
                 raise CommitConflictError(
-                    f"base version {base_v} superseded by "
-                    f"{_latest_version(table_dir)}; retry on the new snapshot"
+                    f"base version {base_v} superseded by {latest}; "
+                    "retry on the new snapshot"
                 )
-            tmp = os.path.join(table_dir, "_latest.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(str(next_v))
-            os.replace(tmp, os.path.join(table_dir, "_latest"))
+            swap_pointer(table_dir, next_v)
         return next_v
     except BaseException:
         # ANY failure before the pointer swap must tear the claimed dir
@@ -171,7 +152,7 @@ def restore_version(spark: SparkSession, table_dir: str, version: int) -> dict:
     versions remain time-travel readable until vacuumed; Delta RESTORE
     semantics)."""
     src = read_version(spark, table_dir, version)
-    base_v = _latest_version(table_dir)
+    base_v = read_pointer(table_dir)
     next_v = _claim_and_commit(
         table_dir, base_v,
         lambda vdir: src.write.mode("overwrite").parquet(vdir),
@@ -187,8 +168,8 @@ def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
     one (bootstrap writes) show op 'UNKNOWN'. Vacuumed versions disappear
     with their directories, so history honesty matches retention."""
     rows = []
-    for v in _versions(table_dir):
-        cpath = os.path.join(table_dir, f"v={v}", "_commit.json")
+    for v in list_versions(table_dir, "v="):
+        cpath = os.path.join(version_dir(table_dir, "v=", v), "_commit.json")
         if os.path.exists(cpath):
             with open(cpath) as fh:
                 info = json.load(fh)
@@ -228,7 +209,7 @@ def delete_where(spark: SparkSession, table_dir: str, predicate: str) -> dict:
     passes against the rival's version, and the rival's rows are silently
     clobbered by a rewrite computed from the stale snapshot (lost
     update)."""
-    base_v = _latest_version(table_dir)
+    base_v = read_pointer(table_dir)
     if base_v is None:
         raise ValueError(f"no committed table at {table_dir}")
     current = read_version(spark, table_dir, base_v)
@@ -257,7 +238,7 @@ def update_where(
     100 TB the rewrite is scan + write with full pushdown, exactly like
     delete_where. Snapshot isolation via the atomic ``_latest`` swap.
     Base-version-first OCC ordering (see ``delete_where``)."""
-    base_v = _latest_version(table_dir)
+    base_v = read_pointer(table_dir)
     if base_v is None:
         raise ValueError(f"no committed table at {table_dir}")
     current = read_version(spark, table_dir, base_v)
@@ -287,18 +268,12 @@ def update_where(
 
 def vacuum(table_dir: str, keep_versions: int = 2) -> dict:
     """Remove version directories older than the newest ``keep_versions``.
-    The pointer target is always retained regardless of age."""
-    latest = _latest_version(table_dir)
-    versions = _versions(table_dir)
-    retain = set(versions[-max(keep_versions, 1):])
-    if latest is not None:
-        retain.add(latest)
-    removed = []
-    for v in versions:
-        if v not in retain:
-            shutil.rmtree(os.path.join(table_dir, f"v={v}"))
-            removed.append(v)
-    return {"removed_versions": removed, "retained_versions": sorted(retain)}
+    The pointer target is always retained regardless of age. Removal is
+    best effort: a directory that survives is reported as retained."""
+    removed, retained = vacuum_versions(
+        table_dir, "v=", max(keep_versions, 1), read_pointer(table_dir)
+    )
+    return {"removed_versions": removed, "retained_versions": retained}
 
 
 def compact(spark: SparkSession, path: str, config=None) -> dict:
@@ -357,7 +332,7 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
     # resurrect deleted rows and drop live ones. Refuse rather than
     # silently corrupt; materialize_deletes folds the vector into a fresh
     # copy-on-write table first.
-    if _dv_latest(path) is not None:
+    if read_pointer(_dv_dir(path)) is not None:
         raise ValueError(
             "compact: table has a live deletion vector (_deletes); "
             "re-indexing would invalidate its _idx positions — run "
@@ -863,32 +838,13 @@ def _dv_dir(path: str) -> str:
     return os.path.join(path, "_deletes")
 
 
-def _dv_versions(path: str) -> list[int]:
-    d = _dv_dir(path)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(f.split("=", 1)[1])
-        for f in os.listdir(d)
-        if f.startswith("dv=") and os.path.isdir(os.path.join(d, f))
-    )
-
-
-def _dv_latest(path: str) -> int | None:
-    ptr = os.path.join(_dv_dir(path), "_latest")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        return int(fh.read().strip())
-
-
 def read_deletion_vector(spark: SparkSession, path: str) -> DataFrame | None:
     """Current deletion vector: one `_idx` row per deleted position, or
     None if the table has no deletes."""
-    v = _dv_latest(path)
+    v = read_pointer(_dv_dir(path))
     if v is None:
         return None
-    return spark.read.parquet(os.path.join(_dv_dir(path), f"dv={v}"))
+    return spark.read.parquet(version_dir(_dv_dir(path), "dv=", v))
 
 
 def delete_where_dv(spark: SparkSession, path: str, predicate: str) -> dict:
@@ -907,39 +863,45 @@ def delete_where_dv(spark: SparkSession, path: str, predicate: str) -> dict:
     new matches (idempotent; re-deleting is a no-op), then atomically swaps
     the ``_latest`` pointer — readers keep snapshot isolation. The whole
     read-union-write-swap runs under the table's ``commit_lock``: two
-    unserialized DELETEs would both read the same prior, both claim dv=N,
-    and the overwrite+swap would silently drop one caller's matches (the
-    vector write is O(matches) longs, so holding the lock is cheap; the
-    predicate scan happens inside it only because the union must see the
-    prior the swap supersedes)."""
-    with commit_lock(path):
-        from btrblocks_spark.format.reader import (
-            read_metadata,
-            reconstruct_column_groups,
-        )
+    unserialized DELETEs would both read the same prior, and the later swap
+    would silently drop the earlier caller's matches (the vector write is
+    O(matches) longs, so holding the lock is cheap; the predicate scan
+    happens inside it only because the union must see the prior the swap
+    supersedes). A crash before the swap leaves an unreferenced ``dv=N``
+    that ``vacuum_deletion_vectors`` removes.
 
-        # reconstruct column-group dependents so the predicate may
+    Rows appended through the ``btrblocks`` source since the last
+    ``compact()`` have no ``_idx`` position yet, so a predicate that matches
+    one is refused (ValueError, nothing committed) until ``compact()`` has
+    indexed them."""
+    from btrblocks_spark.format.reader import read_table
+
+    dv_dir = _dv_dir(path)
+    with commit_lock(path):
+        # column-group dependents are reconstructed so the predicate may
         # reference them (a dependent has no stored stream; its filter
         # evaluates after the broadcast mapping join, on _idx-pruned rows)
-        data = reconstruct_column_groups(
-            spark, path, spark.read.parquet(os.path.join(path, "data")),
-            read_metadata(path),
-        )
+        data, _meta = read_table(spark, path, with_index=True)
         matches = data.filter(
             F.coalesce(F.expr(predicate), F.lit(False))
         ).select("_idx")
         prior = read_deletion_vector(spark, path)
         if prior is not None:
             matches = matches.union(prior)
-        new = matches.distinct()
-        next_v = (_dv_versions(path) or [-1])[-1] + 1
-        dest = os.path.join(_dv_dir(path), f"dv={next_v}")
-        new.repartition(1).write.mode("overwrite").parquet(dest)
-        n_deleted = spark.read.parquet(dest).count()
-        tmp = os.path.join(_dv_dir(path), "_latest.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(next_v))
-        os.replace(tmp, os.path.join(_dv_dir(path), "_latest"))
+        next_v = claim_version(dv_dir, "dv=")
+        dest = version_dir(dv_dir, "dv=", next_v)
+        matches.distinct().repartition(1).write.mode("overwrite").parquet(dest)
+        n_deleted, n_indexed = (
+            spark.read.parquet(dest).agg(F.count(F.lit(1)), F.count("_idx")).first()
+        )
+        if n_indexed < n_deleted:
+            shutil.rmtree(dest, ignore_errors=True)
+            raise ValueError(
+                f"delete_where_dv: {predicate!r} matches rows appended since "
+                "the last compact(), which have no _idx position yet — run "
+                "compact() first"
+            )
+        swap_pointer(dv_dir, next_v)
     return {"dv_version": next_v, "deleted_rows": int(n_deleted)}
 
 
@@ -950,16 +912,11 @@ def read_table_mor(spark: SparkSession, path: str, with_index: bool = False) -> 
     ``materialize_deletes`` folds them in), so the subtraction is a
     BROADCAST left-anti join on `_idx` — a narrow map over the scan, no
     shuffle of table data. Filters/pruning still push into the parquet scan
-    underneath."""
-    from btrblocks_spark.format.reader import (
-        read_metadata,
-        reconstruct_column_groups,
-    )
+    underneath. Rows appended since the last ``compact()`` read with a NULL
+    `_idx`, which no vector entry matches, so they are always live."""
+    from btrblocks_spark.format.reader import read_table
 
-    df = reconstruct_column_groups(
-        spark, path, spark.read.parquet(os.path.join(path, "data")),
-        read_metadata(path),
-    )
+    df, _meta = read_table(spark, path, with_index=True)
     dv = read_deletion_vector(spark, path)
     if dv is not None:
         df = df.join(F.broadcast(dv), "_idx", "left_anti")
@@ -989,7 +946,7 @@ def materialize_deletes(spark: SparkSession, path: str, dest: str, config=None) 
     return {
         "num_rows": out["num_rows"],
         "num_chunks": out["num_chunks"],
-        "dv_folded": _dv_latest(path),
+        "dv_folded": read_pointer(_dv_dir(path)),
     }
 
 
@@ -997,17 +954,11 @@ def vacuum_deletion_vectors(path: str, keep_versions: int = 2) -> dict:
     """Drop unreachable dv snapshots (older than the retained tail; the
     pointer target always survives) — the DV-side retention twin of
     ``vacuum``."""
-    latest = _dv_latest(path)
-    versions = _dv_versions(path)
-    retain = set(versions[-max(keep_versions, 1):])
-    if latest is not None:
-        retain.add(latest)
-    removed = []
-    for v in versions:
-        if v not in retain:
-            shutil.rmtree(os.path.join(_dv_dir(path), f"dv={v}"))
-            removed.append(v)
-    return {"removed_dv_versions": removed, "retained_dv_versions": sorted(retain)}
+    dv_dir = _dv_dir(path)
+    removed, retained = vacuum_versions(
+        dv_dir, "dv=", max(keep_versions, 1), read_pointer(dv_dir)
+    )
+    return {"removed_dv_versions": removed, "retained_dv_versions": retained}
 
 
 def table_changes(
@@ -1044,7 +995,7 @@ def insert_rows(spark: SparkSession, table_dir: str, rows: DataFrame) -> dict:
     compact() (O(new bytes)); this verb exists for transactional batch
     inserts that must be atomic with the version history (TPC-H RF1
     shape). Base-version-first OCC ordering (see ``delete_where``)."""
-    base_v = _latest_version(table_dir)
+    base_v = read_pointer(table_dir)
     if base_v is None:
         raise ValueError(f"no committed table at {table_dir}")
     current = read_version(spark, table_dir, base_v)

@@ -1,5 +1,10 @@
 """Streaming operators: source, watermarked windows, chunk-aligned append
-sink, and a custom stateful sessionizer."""
+sink, and a custom stateful sessionizer.
+
+The sinks' commit steps live in format/journal.py: the chunked appends use
+its write-ahead journal, and ``streaming_upsert`` its versioned-snapshot
+protocol (version claim, ``_latest`` swap, vacuum), shared with the DML
+verbs of format/maintenance.py that write the same tables."""
 
 from __future__ import annotations
 
@@ -24,10 +29,16 @@ from pyspark.sql.types import (
 
 from btrblocks_spark.format.journal import (
     adopt,
+    claim_version,
     commit_lock,
     load_json,
+    read_pointer,
     replace_json,
+    swap_pointer,
+    vacuum_versions,
+    version_dir,
 )
+from btrblocks_spark.format.maintenance import read_version
 
 EVENTS_SCHEMA = StructType(
     [
@@ -498,12 +509,8 @@ def read_snapshot(spark: SparkSession, table_dir: str) -> DataFrame | None:
     """Latest committed snapshot of a versioned table (None before the
     first commit). Readers only ever see a fully-written version directory:
     the ``_latest`` pointer is swapped atomically after the write lands."""
-    ptr = os.path.join(table_dir, "_latest")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        v = fh.read().strip()
-    return spark.read.parquet(os.path.join(table_dir, f"v={v}"))
+    v = read_pointer(table_dir)
+    return None if v is None else read_version(spark, table_dir, v)
 
 
 def streaming_upsert(
@@ -543,11 +550,11 @@ def streaming_upsert(
             return
         spark = batch_df.sparkSession
         # the whole read-merge-write-repoint sequence is one critical
-        # section: two concurrent writers (a second query, a batch CDC
-        # job) would otherwise both compute the same next_v, overwrite
-        # each other's in-flight snapshot files in ONE v=N dir, and the
-        # losing pointer swap would silently drop the other's merged rows
-        # — the same window catalog.commit_tables locks.
+        # section: a second upsert query would otherwise merge from the
+        # same snapshot and the losing pointer swap would silently drop
+        # the other's merged rows — the same window catalog.commit_tables
+        # locks. The DML verbs commit to this table without the lock;
+        # claim_version's mkdir keeps their v=N apart from ours.
         with commit_lock(table_dir):
             current = read_snapshot(spark, table_dir)
             order = [F.desc(c) for c in (order_by or [])]
@@ -557,30 +564,18 @@ def streaming_upsert(
                 merged = merge_upsert(empty, batch_df, keys, order)
             else:
                 merged = merge_upsert(current, batch_df, keys, order)
-            versions = [
-                int(d.split("=", 1)[1])
-                for d in os.listdir(table_dir)
-                if d.startswith("v=") and os.path.isdir(os.path.join(table_dir, d))
-            ] if os.path.isdir(table_dir) else []
-            next_v = (max(versions) + 1) if versions else 0
-            out = os.path.join(table_dir, f"v={next_v}")
-            merged.drop("op").write.mode("overwrite").parquet(out)
-            tmp = os.path.join(table_dir, "_latest.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(str(next_v))
-            os.replace(tmp, os.path.join(table_dir, "_latest"))
+            next_v = claim_version(table_dir, "v=")
+            out = version_dir(table_dir, "v=", next_v)
+            try:
+                merged.drop("op").write.mode("overwrite").parquet(out)
+                swap_pointer(table_dir, next_v)
+            except BaseException:
+                # an uncommitted v=N would be served by time travel
+                shutil.rmtree(out, ignore_errors=True)
+                raise
             # bounded history (still under the lock): staleness AND
             # wall-time age required, so a just-served snapshot survives
-            now = time.time()
-            for v in versions:
-                if v > next_v - keep_versions:
-                    continue
-                vdir = os.path.join(table_dir, f"v={v}")
-                try:
-                    if now - os.path.getmtime(vdir) > min_retain_sec:
-                        shutil.rmtree(vdir, ignore_errors=True)
-                except OSError:
-                    pass
+            vacuum_versions(table_dir, "v=", keep_versions, next_v, min_retain_sec)
 
     writer = stream.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint

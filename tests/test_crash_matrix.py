@@ -266,3 +266,130 @@ def test_compact_journal_crash_matrix(spark, sf_dir, tmp_path):
         compact(spark, dst, cfg)  # the next compact finishes or redoes it
         assert _visible_keys(dst, "n_nationkey") == want, f"crash@{k}"
         assert read_metadata(dst)["num_rows"] == len(want), f"crash@{k}"
+
+
+def _failing_pointer_swap(real):
+    """os.replace stand-in that fails only the ``_latest`` pointer swap."""
+
+    def replace(src, dst):
+        if os.path.basename(dst) == "_latest":
+            raise OSError("injected crash at the pointer swap")
+        return real(src, dst)
+
+    return replace
+
+
+def test_delete_where_pointer_swap_crash(spark, sf_dir, tmp_path, monkeypatch):
+    """delete_where: a crash at the ``_latest`` swap leaves the pointer and
+    the snapshot as they were and no claimed v=N behind; a retry commits
+    the next version."""
+    from btrblocks_spark.format.journal import list_versions, read_pointer
+    from btrblocks_spark.format.maintenance import delete_where
+    from btrblocks_spark.streaming.ops import read_snapshot
+
+    nation = load_table(spark, sf_dir, "nation")
+    n = nation.count()
+    table = str(tmp_path / "dml")
+    nation.write.parquet(os.path.join(table, "v=0"))
+    with open(os.path.join(table, "_latest"), "w") as fh:
+        fh.write("0")
+
+    real = os.replace
+    monkeypatch.setattr(os, "replace", _failing_pointer_swap(real))
+    with pytest.raises(OSError, match="injected"):
+        delete_where(spark, table, "n_nationkey < 5")
+    monkeypatch.setattr(os, "replace", real)
+    assert read_pointer(table) == 0
+    assert read_snapshot(spark, table).count() == n
+    assert list_versions(table, "v=") == [0]
+
+    assert delete_where(spark, table, "n_nationkey < 5") == {
+        "version": 1,
+        "deleted_rows": 5,
+    }
+    assert read_pointer(table) == 1
+    assert read_snapshot(spark, table).count() == n - 5
+
+
+def test_delete_where_dv_pointer_swap_crash(spark, sf_dir, tmp_path, monkeypatch):
+    """delete_where_dv: a crash at the deletion-vector pointer swap leaves
+    the pointer and the merge-on-read view as they were; a retry commits
+    the next dv=N, and vacuum_deletion_vectors removes the orphaned one."""
+    from btrblocks_spark.format.journal import list_versions, read_pointer
+    from btrblocks_spark.format.maintenance import (
+        delete_where_dv,
+        read_table_mor,
+        vacuum_deletion_vectors,
+    )
+
+    nation = load_table(spark, sf_dir, "nation")
+    path = str(tmp_path / "dv")
+    write_table(nation, path, ["n_nationkey"], config=DEFAULT_CONFIG.with_(block_size=8))
+    dv_dir = os.path.join(path, "_deletes")
+    assert delete_where_dv(spark, path, "n_nationkey < 3")["dv_version"] == 0
+    before = sorted(read_table_mor(spark, path).collect())
+
+    real = os.replace
+    monkeypatch.setattr(os, "replace", _failing_pointer_swap(real))
+    with pytest.raises(OSError, match="injected"):
+        delete_where_dv(spark, path, "n_nationkey = 10")
+    monkeypatch.setattr(os, "replace", real)
+    assert read_pointer(dv_dir) == 0
+    assert sorted(read_table_mor(spark, path).collect()) == before
+
+    res = delete_where_dv(spark, path, "n_nationkey = 10")
+    assert res == {"dv_version": 2, "deleted_rows": 4}
+    assert read_pointer(dv_dir) == 2
+    assert sorted(read_table_mor(spark, path).collect()) == [
+        r for r in before if r.n_nationkey != 10
+    ]
+    gc = vacuum_deletion_vectors(path, keep_versions=1)
+    assert gc == {"removed_dv_versions": [0, 1], "retained_dv_versions": [2]}
+    assert list_versions(dv_dir, "dv=") == [2]
+
+
+@pytest.mark.slow  # excluded from the default run; see pytest.ini
+def test_streaming_upsert_pointer_swap_crash(spark, tmp_path, monkeypatch):
+    """streaming_upsert: a microbatch that crashes at the ``_latest`` swap
+    fails the query with the pointer, the snapshot and the version set
+    unchanged; restarting from the checkpoint replays the batch into the
+    next version."""
+    from btrblocks_spark.format.journal import list_versions, read_pointer
+    from btrblocks_spark.streaming.ops import read_snapshot, streaming_upsert
+
+    schema = "k long, val string, seq long"
+    src = str(tmp_path / "updates")
+    table = str(tmp_path / "table")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src + "/f*")
+        )
+        streaming_upsert(stream, table, ckpt, keys=["k"]).awaitTermination(120)
+
+    def snapshot():
+        return sorted(tuple(r) for r in read_snapshot(spark, table).collect())
+
+    # one file per microbatch (maxFilesPerTrigger=1)
+    spark.createDataFrame([(1, "a0", 0)], schema).coalesce(1).write.parquet(src + "/f0")
+    run()
+    assert read_pointer(table) == 0
+    spark.createDataFrame([(1, "a1", 1), (2, "b1", 1)], schema).coalesce(
+        1
+    ).write.parquet(src + "/f1")
+
+    real = os.replace
+    monkeypatch.setattr(os, "replace", _failing_pointer_swap(real))
+    with pytest.raises(Exception, match="injected"):
+        run()
+    monkeypatch.setattr(os, "replace", real)
+    assert read_pointer(table) == 0
+    assert snapshot() == [(1, "a0", 0)]
+    assert list_versions(table, "v=") == [0]
+
+    run()  # restart: the failed batch replays
+    assert read_pointer(table) == 1
+    assert snapshot() == [(1, "a1", 1), (2, "b1", 1)]

@@ -1575,32 +1575,6 @@ def test_result_cache_gc_uses_newest_mtime_in_tree(tmp_path):
     assert _t.time() - newest_mtime(str(dead)) > 3600  # GC-eligible
 
 
-def test_result_cache_missing_inputs_do_not_collide(spark, sf_dir, tmp_path):
-    """Two cache lookups whose input lists differ only in a NOT-YET-EXISTING
-    path must get different cache keys (review finding: skipped missing
-    paths collided and served the wrong day's result)."""
-    import os
-
-    from btrblocks_spark.queries.result_cache import cached_result
-    from btrblocks_spark.tables import load_table as _lt
-
-    root = str(tmp_path / "cache2")
-    common = os.path.join(sf_dir, "nation.parquet")
-    calls = {"n": 0}
-
-    def compute():
-        calls["n"] += 1
-        return _lt(spark, sf_dir, "nation").groupBy("n_regionkey").count()
-
-    _r1, hit1 = cached_result(
-        spark, "day", [common, str(tmp_path / "day=2026-08-14")], compute, root
-    )
-    _r2, hit2 = cached_result(
-        spark, "day", [common, str(tmp_path / "day=2026-08-15")], compute, root
-    )
-    assert not hit1 and not hit2 and calls["n"] == 2  # distinct slots
-
-
 def test_zorder_quantize_wide_and_fractional_ranges(spark):
     """Quantization must neither overflow wide integer ranges (ANSI mode
     raises on int/long overflow; the old native-type multiply did) nor
@@ -1976,52 +1950,6 @@ def test_incremental_agg_heals_after_truncate(spark, sf_dir, tmp_path):
     )
     assert st3["files_scanned"] == 1
     assert res3.agg(F.sum("n_rows")).collect()[0][0] == 5
-
-
-def test_result_cache_vacuums_superseded_slots(spark, sf_dir, tmp_path):
-    """Each input change mints a new name__digest slot; superseded slots of
-    the same query must be vacuumed once idle (review finding: one full
-    materialized result leaked per input state, forever). Other queries'
-    slots — including names where '__' makes the prefix ambiguous — are
-    never touched."""
-    import os
-    import time as _t
-
-    from btrblocks_spark.queries.result_cache import cached_result
-
-    croot = str(tmp_path / "cache")
-    os.makedirs(croot)
-    inp = str(tmp_path / "inp")
-    nation = load_table(spark, sf_dir, "nation")
-    nation.limit(3).write.mode("overwrite").parquet(inp)
-
-    _df, hit = cached_result(
-        spark, "q", [inp], lambda: spark.read.parquet(inp), croot
-    )
-    assert not hit
-    old_slots = [d for d in os.listdir(croot) if d.startswith("q__")]
-    assert len(old_slots) == 1
-    # a DIFFERENT query whose name shares the prefix via '__'
-    _df2, _ = cached_result(
-        spark, "q__other", [inp], lambda: spark.read.parquet(inp), croot
-    )
-
-    # input changes; old slot goes idle past the floor
-    nation.limit(5).write.mode("overwrite").parquet(inp)
-    old_full = os.path.join(croot, old_slots[0])
-    old_t = _t.time() - 7200
-    for r, _d, fs in os.walk(old_full):
-        os.utime(r, (old_t, old_t))
-        for f in fs:
-            os.utime(os.path.join(r, f), (old_t, old_t))
-    _df3, hit3 = cached_result(
-        spark, "q", [inp], lambda: spark.read.parquet(inp), croot
-    )
-    assert not hit3
-    slots = sorted(d for d in os.listdir(croot))
-    assert old_slots[0] not in slots  # superseded slot vacuumed
-    assert any(d.startswith("q__other__") for d in slots)  # rival intact
-    assert sum(1 for d in slots if d.startswith("q__") and not d.startswith("q__other__")) == 1
 
 
 def test_zorder_quantization_survives_nan_dimension(spark, tmp_path):

@@ -549,74 +549,6 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
         spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
 
 
-def test_result_cache_hits_and_invalidates(spark, sf_dir, tmp_path):
-    """Result cache: second identical call is a hit (compute not invoked);
-    touching an input file invalidates; results equal the live query."""
-    import os
-    import time as _time
-
-    from btrblocks_spark.queries.result_cache import cached_result
-
-    calls = {"n": 0}
-    inp = os.path.join(sf_dir, "nation.parquet")
-
-    def compute():
-        calls["n"] += 1
-        return (
-            load_table(spark, sf_dir, "nation")
-            .groupBy("n_regionkey")
-            .count()
-        )
-
-    root = str(tmp_path / "rc")
-    r1, hit1 = cached_result(spark, "nation_by_region", [inp], compute, root)
-    rows1 = sorted(tuple(r) for r in r1.collect())
-    r2, hit2 = cached_result(spark, "nation_by_region", [inp], compute, root)
-    assert (hit1, hit2) == (False, True)
-    assert calls["n"] == 1
-    assert sorted(tuple(r) for r in r2.collect()) == rows1
-
-    # input mtime change invalidates
-    _time.sleep(0.01)
-    os.utime(inp)
-    _r3, hit3 = cached_result(spark, "nation_by_region", [inp], compute, root)
-    assert hit3 is False and calls["n"] == 2
-
-
-def test_result_cache_repairs_missing_marker(spark, sf_dir, tmp_path):
-    """A publisher that crashed after the atomic stage→data rename but
-    before the marker write must not poison the slot: the next lookup
-    repairs the marker and serves the (complete) materialized result as a
-    hit instead of recomputing-and-discarding forever."""
-    import os
-
-    from btrblocks_spark.queries.result_cache import cached_result
-    from btrblocks_spark.tables import load_table
-
-    root = str(tmp_path / "cache_root")
-    inp = os.path.join(sf_dir, "nation.parquet")
-    calls = {"n": 0}
-
-    def compute():
-        calls["n"] += 1
-        return load_table(spark, sf_dir, "nation").groupBy("n_regionkey").count()
-
-    r1, hit1 = cached_result(spark, "repair_probe", [inp], compute, root)
-    n1 = r1.count()
-    assert not hit1 and calls["n"] == 1
-    # simulate the crash: marker vanishes, data/ stays
-    slot = next(d for d in os.listdir(root) if d.startswith("repair_probe__"))
-    os.remove(os.path.join(root, slot, "_SUCCESS_META"))
-
-    r2, hit2 = cached_result(spark, "repair_probe", [inp], compute, root)
-    assert hit2 and calls["n"] == 1  # served, NOT recomputed
-    assert r2.count() == n1
-    assert os.path.exists(os.path.join(root, slot, "_SUCCESS_META"))  # repaired
-
-    r3, hit3 = cached_result(spark, "repair_probe", [inp], compute, root)
-    assert hit3 and calls["n"] == 1
-
-
 def test_sort_advisor_approx_expand_free_same_choice(spark, sf_dir):
     """The production sort-key advisor (HLL sketches) must plan WITHOUT the
     Expand node that makes the exact variant the fleet's biggest shuffle

@@ -1082,6 +1082,48 @@ def test_streaming_upsert_vacuums_superseded_versions(spark, tmpdir):
     assert snap == {0, 1, 2, 3}  # merged state complete
 
 
+def test_streaming_upsert_never_shares_a_version_with_a_dml_claim(
+    spark, tmpdir, monkeypatch
+):
+    """streaming_upsert and the DML verbs write the same v=N table. A DML
+    verb that claims v=N+1 right after the stream listed the table must
+    keep its directory: the stream commits another version instead of
+    writing into (and later losing) the DML's claim."""
+    from btrblocks_spark.format.journal import read_pointer
+    from btrblocks_spark.streaming.ops import read_snapshot, streaming_upsert
+
+    schema = "k long, val string, seq long"
+    table = os.path.join(tmpdir, "race_table")
+    src = os.path.join(tmpdir, "race_updates")
+    spark.createDataFrame([(1, "a0", 0)], schema).write.parquet(table + "/v=0")
+    with open(os.path.join(table, "_latest"), "w") as fh:
+        fh.write("0")
+    spark.createDataFrame([(2, "b0", 0)], schema).coalesce(1).write.parquet(src + "/f0")
+
+    marker = os.path.join(table, "v=1", "dml-claim")
+    real_listdir = os.listdir
+
+    def listdir_then_dml_claims(path):
+        names = real_listdir(path)
+        if os.path.abspath(path) == os.path.abspath(table) and not os.path.exists(
+            marker
+        ):
+            os.mkdir(os.path.dirname(marker))
+            with open(marker, "w") as fh:
+                fh.write("rows of a DML commit in flight")
+        return names
+
+    monkeypatch.setattr(os, "listdir", listdir_then_dml_claims)
+    stream = spark.readStream.schema(schema).parquet(src + "/f*")
+    q = streaming_upsert(stream, table, os.path.join(tmpdir, "race_ckpt"), keys=["k"])
+    q.awaitTermination(120)
+    monkeypatch.setattr(os, "listdir", real_listdir)
+
+    assert os.path.exists(marker)
+    assert read_pointer(table) not in (None, 0, 1)
+    assert sorted(r.k for r in read_snapshot(spark, table).collect()) == [1, 2]
+
+
 def test_kmv_stream_gc_superseded_snapshot_dirs(spark, events_dir, tmpdir, monkeypatch):
     """kmv_sketch_stream leaves one v{batch} dir per microbatch; after the
     atomic repoint the superseded dirs are garbage (review finding) — with
