@@ -304,6 +304,7 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         _PLAN_SCHEMA,
         _stage_by_chunk,
         chunk_write_options,
+        write_parquet,
     )
     from btrblocks_spark.format.chunker import with_chunk_id
     from btrblocks_spark.sources.btr_datasource import (
@@ -430,11 +431,11 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         # the table's bloom filters carry over to the rewritten tail: a
         # lookup skips row groups by bloom, and a compacted file without
         # one would be read by every point lookup
-        (
+        write_parquet(
             staged.drop("_chunk")
             .write.mode("overwrite")
-            .options(**chunk_write_options(cfg, bloom=meta.get("bloom_filters")))
-            .parquet(tmp_dir)
+            .options(**chunk_write_options(cfg, bloom=meta.get("bloom_filters"))),
+            tmp_dir,
         )
 
         # re-plan the rewritten tail only (footer-cheap for the kept prefix).
@@ -492,7 +493,7 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
             # chunk_stats_rows accessor re-sorts driver-side, so only the
             # per-column clustering matters for row-group pruning)
             obs = Observation()
-            (
+            write_parquet(
                 prefix_df.unionByName(planned_df)
                 .observe(
                     obs,
@@ -502,8 +503,8 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
                 .repartition("column")
                 .sortWithinPartitions("column", "chunk")
                 .write.mode("overwrite")
-                .option("compression", "zstd")
-                .parquet(stats_tmp)
+                .option("compression", "zstd"),
+                stats_tmp,
             )
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)

@@ -284,6 +284,24 @@ _GROUPS_DIR = "_btr_column_groups"
 # so independent write_table calls can run concurrently (see its use)
 _PLAN_CONF_LOCK = threading.Lock()
 
+# parquet-mr 1.16 builds every file writer's column encoders through one
+# JVM-wide factory (ParquetProperties.DEFAULT_VALUES_WRITER_FACTORY) that
+# keeps the properties of the writer constructed LAST in the process. Two
+# parquet writes with different options opening files at the same moment
+# can swap per-column settings: with concurrent write_table calls, a
+# documents chunk file came out PLAIN_DICTIONARY for a column planned
+# without a dictionary. Every parquet write of write_table and compact
+# holds this lock (write_parquet), so the engine's own writes never open
+# files side by side; a parquet write the engine does not issue can still
+# race them.
+_PARQUET_WRITE_LOCK = threading.Lock()
+
+
+def write_parquet(writer, path: str) -> None:
+    """``writer.parquet(path)`` under ``_PARQUET_WRITE_LOCK``."""
+    with _PARQUET_WRITE_LOCK:
+        writer.parquet(path)
+
 
 def _observed_or_readback_totals(obs, spark, stats_path: str) -> tuple[int, int]:
     """raw/est byte totals from the stats write's own observe() metrics —
@@ -571,13 +589,13 @@ def write_table(
         for gi, (det, dep) in enumerate(resolved):
             gdir = f"{_GROUPS_DIR}/g{gi}"
             gpath = _fs.join(path, gdir)
-            (
+            write_parquet(
                 df.select(det, dep)
                 .dropDuplicates([det])
                 .coalesce(1)
                 .write.mode("overwrite")
-                .option("compression", "zstd")
-                .parquet(gpath)
+                .option("compression", "zstd"),
+                gpath,
             )
             gbytes = sum(_fs.list_file_sizes(gpath, ".parquet", spark))
             # entry count = exact distinct determinants, already measured
@@ -592,8 +610,9 @@ def write_table(
 
     # the mapping writes are independent of the chunk/data write (the data
     # files don't reference them; only the PLAN pass reads them back), so
-    # they overlap the chunker + main write on a helper thread (guide §2.6
-    # back-fill) and are joined before the plan pass needs the files.
+    # they overlap the chunker on a helper thread (guide §2.6 back-fill)
+    # and are joined before the plan pass needs the files. Their parquet
+    # writes and the main write take turns on _PARQUET_WRITE_LOCK.
     from concurrent.futures import ThreadPoolExecutor
 
     _map_pool = ThreadPoolExecutor(max_workers=1)
@@ -637,7 +656,7 @@ def write_table(
         # group dependents are NOT written as streams — their values live
         # in the nd(det)-entry mapping tables; this drop is where the
         # compression win is banked (the dependent's bytes leave the files)
-        (
+        write_parquet(
             staged.drop("_chunk").drop(*group_deps.keys())
             .write.mode("overwrite")
             .options(**chunk_write_options(
@@ -646,8 +665,8 @@ def write_table(
                     c: on for c, on in dict_enabled.items() if c not in group_deps
                 },
                 bloom=bloom_cols,
-            ))
-            .parquet(data_path)
+            )),
+            data_path,
         )
 
         # join the overlapped mapping writes before the plan pass reads them
@@ -748,7 +767,7 @@ def write_table(
         # only tiny stats rows. The totals ride the SAME job as observe()
         # metrics instead of a read-back aggregate — two jobs become one.
         obs = Observation()
-        (
+        write_parquet(
             plan_df
             .observe(
                 obs,
@@ -758,8 +777,8 @@ def write_table(
             .repartition("column")
             .sortWithinPartitions("column", "chunk")
             .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(stats_path)
+            .option("compression", "zstd"),
+            stats_path,
         )
     finally:
         spark_conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)

@@ -153,7 +153,13 @@ def _memoized_by_plan(docs: DataFrame, key: tuple, build) -> DataFrame:
     re-running the chain. An evicted entry is unpersisted, which is safe
     for any consumer still holding it: persist retains lineage, so it
     recomputes instead of reading dropped blocks (and so does a lost
-    executor's cache block, unlike a localCheckpoint)."""
+    executor's cache block, unlike a localCheckpoint).
+
+    The session lets AQE coalesce a cached plan's output
+    (``session.get_spark``: ``canChangeCachedPlanOutputPartitioning``), so
+    a small pair table is cached in a few partitions, not one per
+    ``spark.sql.shuffle.partitions``, and every consumer's scan of it runs
+    that few tasks."""
     from pyspark.storagelevel import StorageLevel
 
     from btrblocks_spark.tables import memo
@@ -469,35 +475,42 @@ def dedup_clusters(
     )
 
 
+def _symmetric_edges(pairs: DataFrame) -> DataFrame:
+    """Both directions of every (doc_a, doc_b) pair as (src, dst) rows,
+    from ONE scan of ``pairs``: an explode of two structs keeps the pair
+    table's partitioning. A union of two scans reads a memoized table
+    twice and doubles the partitions, each one a task in every later scan
+    of the edges."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+            )
+        ).alias("_e")
+    ).select("_e.src", "_e.dst")
+
+
 def _cc_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
     """Converged (node, label) table of ``pairs``' connected components."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    )
-    # labels pins are LAZY (round-9 2nd opt session, guide §1.2 — fewer
-    # passes): each round's sum-collect below is the checkpoint's single
-    # consuming job and materializes its blocks BEFORE the next round's
-    # plan (whose broadcast forks reference them) is even built, so the
-    # lazy-pin-under-broadcast-fork recompute hazard (pagerank, round-8:
-    # 1.4→14.4 s) cannot trigger — by the time any broadcast subtree
-    # references a labels checkpoint, its blocks already exist. One driver
-    # job per round instead of two (eager checkpoint + sum collect).
     # edges stays EAGER: round plans reference it under the neighbor_min
     # broadcast fork in the same job that would first materialize it.
-    labels = (
-        edges.select("src").distinct()
-        .select(F.col("src").alias("node"), F.col("src").alias("label"))
-        .localCheckpoint(eager=False)
+    edges = _symmetric_edges(pairs).localCheckpoint()
+    # the initial labels are not pinned: a distinct over the pinned edges,
+    # cheap to re-derive inside round 1's plan
+    labels = edges.select("src").distinct().select(
+        F.col("src").alias("node"), F.col("src").alias("label")
     )
-    edges = edges.localCheckpoint()
     # convergence witness: labels only ever decrease (min-propagation), so
     # sum(label) strictly decreases until the fixed point — one map-side
-    # aggregate per round instead of a self-join diff count
+    # aggregate per round instead of a self-join diff count.
     # decimal(38,0) sum: ids may be hash-derived values near 2^63, and a
     # BIGINT sum of even a handful of those overflows (ANSI abort). The
     # monotone-decrease argument is unchanged.
-    prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+    # No sum is taken before round 1: when any edge exists, round 1 lowers
+    # the sum (the larger end of every edge takes a smaller label), so the
+    # loop starts from the None sentinel; a None round sum means no nodes.
+    prev_sum = None
 
     def one_hop(lab):
         neighbor_min = (
@@ -513,15 +526,21 @@ def _cc_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
         # one hop per materialization round: near-dup graphs are shallow
         # (2-3 rounds to fixed point), so batching two hops per checkpoint
         # was measured SLOWER (deeper un-materialized plan per round beats
-        # the saved driver job on every real round count here). Lazy pin:
-        # the sum-collect right below materializes the blocks (single
-        # consuming job — see the labels-init comment).
+        # the saved driver job on every real round count here).
+        # Lazy pin: the sum-collect right below is the checkpoint's single
+        # consuming job and materializes its blocks BEFORE the next round's
+        # plan (whose broadcast forks reference them) is even built, so
+        # the lazy-pin-under-broadcast-fork recompute hazard (pagerank,
+        # round-8: 1.4→14.4 s) cannot trigger. One driver job per round
+        # instead of two (eager checkpoint + sum collect);
+        # tests/test_pipeline.py::test_cc_round_pin_is_computed_by_one_job
+        # guards this ordering.
         new_labels = one_hop(labels).localCheckpoint(eager=False)
         new_sum = new_labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)"))
         ).collect()[0][0]
         labels = new_labels
-        if new_sum == prev_sum:
+        if new_sum is None or new_sum == prev_sum:
             break
         prev_sum = new_sum
     else:
@@ -1300,9 +1319,7 @@ def pagerank_pairs(pairs: DataFrame, iterations: int = 3, damping_pct: int = 85)
     dst — both keyed on node id; the edge list never changes, so at scale
     it would be cached/bucketed once. Iterations are a driver loop over a
     fixed small count (no convergence-dependent plans)."""
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+    edges = _symmetric_edges(pairs)
     # pin the graph once: without this every iteration's plan re-derives
     # the (expensive) upstream pair pipeline — lineage grows with the
     # iteration count (measured 80s -> ~10s at sf0.001 for 3 rounds).

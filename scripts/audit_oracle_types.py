@@ -13,9 +13,11 @@ Usage: python scripts/audit_oracle_types.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import pyarrow as pa  # noqa: E402
 

@@ -14,7 +14,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from btrblocks_spark.queries import all_queries
 from btrblocks_spark.session import get_spark
@@ -25,7 +26,7 @@ def main() -> int:
     names = sys.argv[2:]
     assert tag in ("before", "after"), tag
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join("/root/repo", "plans", "r09")
+    out_dir = os.path.join(REPO_ROOT, "plans", "r09")
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark(app_name="capture-plan")

@@ -13,7 +13,9 @@ from btrblocks_spark.queries import all_queries  # noqa: E402
 from btrblocks_spark.session import get_spark  # noqa: E402
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-out_dir = "/root/repo/plans/r08"
+out_dir = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r08"
+)
 os.makedirs(out_dir, exist_ok=True)
 spark = get_spark(app_name=f"capture-{tag}")
 spark.sparkContext.setLogLevel("ERROR")

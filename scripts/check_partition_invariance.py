@@ -17,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from btrblocks_spark.oracle import rows_key
 from btrblocks_spark.queries import all_queries

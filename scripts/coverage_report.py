@@ -6,10 +6,12 @@ Usage: python scripts/coverage_report.py
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from btrblocks_spark.queries import all_oracles, all_queries
 

@@ -15,10 +15,12 @@ Usage: python scripts/scale_experiment.py [sf_dir]   (default sf0.1)
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F
 

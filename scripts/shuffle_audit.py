@@ -22,7 +22,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, root)
 
 from btrblocks_spark.queries import all_queries
 from btrblocks_spark.session import get_spark

@@ -2344,3 +2344,69 @@ def test_empty_table_write_totals_and_roundtrip(spark, sf_dir, tmp_path):
     assert [f.name for f in back.schema.fields] == [
         f.name for f in df.schema.fields
     ]
+
+
+def test_concurrent_writes_keep_their_dictionary_switches(spark, tmp_path, monkeypatch):
+    """Concurrent write_table calls each get the per-column dictionary
+    switches they planned. parquet-mr 1.16 builds column encoders through
+    one JVM-wide factory that keeps the properties of the file writer
+    opened last, also for every later row group of files already open, so
+    writes whose files are open side by side could swap switches: a column
+    planned without a dictionary came out PLAIN_DICTIONARY. Each table
+    here has its own column names, so a swapped switch falls back to
+    parquet's default (dictionary on), and its ``mid_<t>`` column (NDV 40
+    > the block_size // 4 threshold, yet repeating inside every row group)
+    keeps a dictionary whenever one is switched on. Row groups of 8 rows
+    give every file several encoder rebuilds to be caught in."""
+    import glob
+    import os
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.parquet as pq
+
+    from btrblocks_spark.format import writer
+
+    planned = {}
+    orig = writer.chunk_write_options
+
+    def recording(config, dictionary=None, bloom=None):
+        planned[threading.get_ident()] = dict(dictionary or {})
+        return orig(config, dictionary, bloom)
+
+    monkeypatch.setattr(writer, "chunk_write_options", recording)
+    cfg = DEFAULT_CONFIG.with_(block_size=64)
+    tables = {
+        t: spark.range(512).select(
+            F.col("id").alias(f"k_{t}"),
+            (F.floor(F.col("id") / 4) % 40).alias(f"mid_{t}"),
+            (F.col("id") % 4).alias(f"lo_{t}"),
+        )
+        for t in range(4)
+    }
+
+    def write(rep, t):
+        dest = str(tmp_path / f"r{rep}_t{t}")
+        write_table(tables[t], dest, [f"k_{t}"], cfg, f"t{t}")
+        return dest, planned[threading.get_ident()]
+
+    wrong = []
+    spark.conf.set("parquet.block.row.count.limit", "8")
+    try:
+        for rep in range(2):
+            with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+                done = list(pool.map(lambda t: write(rep, t), tables))
+            for dest, switches in done:
+                for f in glob.glob(os.path.join(dest, "data", "*.parquet")):
+                    md = pq.ParquetFile(f).metadata
+                    for rg in range(md.num_row_groups):
+                        for ci in range(md.num_columns):
+                            col = md.row_group(rg).column(ci)
+                            if col.path_in_schema not in switches:  # _idx
+                                continue
+                            has_dict = any("DICTIONARY" in e for e in col.encodings)
+                            if has_dict != switches[col.path_in_schema]:
+                                wrong.append((f, rg, col.path_in_schema, col.encodings))
+    finally:
+        spark.conf.unset("parquet.block.row.count.limit")
+    assert wrong == []

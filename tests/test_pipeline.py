@@ -207,6 +207,134 @@ def test_dedup_clusters_no_pairs(spark):
     assert got == {1: 1, 2: 2}
 
 
+def test_cc_labels_edgeless_is_empty_even_at_one_round(spark):
+    """No edges: no nodes to label. The first round's sum is NULL, which
+    ends the loop as converged instead of exhausting ``max_iter``."""
+    from btrblocks_spark.pipeline.dedup import _cc_labels
+
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert _cc_labels(pairs, max_iter=1).collect() == []
+
+
+def test_cc_labels_path_longer_than_max_iter_raises(spark):
+    """A 6-node path needs more than 2 propagation rounds: returning the
+    half-propagated labels would split one component, so it must raise."""
+    from btrblocks_spark.pipeline.dedup import _cc_labels
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _cc_labels(pairs, max_iter=2)
+
+
+def test_cc_labels_two_components_take_min_ids(spark):
+    """Edge direction is irrelevant; each component's label is its
+    smallest node id."""
+    from btrblocks_spark.pipeline.dedup import _cc_labels
+
+    pairs = spark.createDataFrame(
+        [(5, 3), (9, 3), (20, 12), (12, 31)], "doc_a long, doc_b long"
+    )
+    got = {r["node"]: r["label"] for r in _cc_labels(pairs, max_iter=12).collect()}
+    assert got == {3: 3, 5: 3, 9: 3, 12: 12, 20: 12, 31: 12}
+
+
+def _drain_dedup_memos(spark):
+    """Empty the ``cc`` and ``pairs`` memos (unpersisting the cached pair
+    tables), so the next dedup call builds cold."""
+    from btrblocks_spark.tables import memo_entries
+
+    memo_entries(spark, "cc").clear()
+    pairs_memo = memo_entries(spark, "pairs")
+    for _docs, cached in pairs_memo.values():
+        cached.unpersist()
+    pairs_memo.clear()
+
+
+def test_dedup_pair_table_is_coalesced_and_edges_keep_its_partitions(spark, sf_dir):
+    """Cost pin for the dedup graph chain: the memoized LSH pair table is
+    cached with AQE-coalesced partitions (the session lets cached plans
+    change their output partitioning), and the symmetric edges are one
+    scan of it, so they have exactly its partitions, not twice as many."""
+    from btrblocks_spark.pipeline.dedup import _symmetric_edges, minhash_lsh_pairs
+
+    docs = load_table(spark, sf_dir, "documents")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    _drain_dedup_memos(spark)
+    try:
+        pairs = minhash_lsh_pairs(docs)
+        assert pairs.count() > 0
+        n = pairs.rdd.getNumPartitions()
+        assert n < 64
+        assert _symmetric_edges(pairs).rdd.getNumPartitions() == n
+    finally:
+        _drain_dedup_memos(spark)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+# jobs of a cold dedup_clusters build plus a count of its output over the
+# sf0.001 documents (500 docs), at the test session config (local[8], 8
+# shuffle partitions): 20 (38 tasks). Before the pair table was coalesced,
+# the edges made one scan of it and the seed-sum job went: 25 (178 tasks).
+_COLD_DEDUP_CLUSTERS_MAX_JOBS = 20
+
+
+def test_cold_dedup_clusters_job_ceiling(spark, sf_dir):
+    from btrblocks_spark.pipeline.dedup import dedup_clusters
+
+    docs = load_table(spark, sf_dir, "documents")
+    _drain_dedup_memos(spark)
+    sc = spark.sparkContext
+    group = "cold_dedup_clusters_jobs"
+    sc.setJobGroup(group, "cold dedup_clusters build")
+    try:
+        assert dedup_clusters(docs).count() == 500
+    finally:
+        sc.setJobGroup(None, None)
+        _drain_dedup_memos(spark)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= _COLD_DEDUP_CLUSTERS_MAX_JOBS, jobs
+
+
+def test_cc_round_pin_is_computed_by_one_job(spark, monkeypatch):
+    """Lazy-pin invariant of ``_cc_labels``: each round's labels are a
+    lazy localCheckpoint, and the round's sum-collect is the one job that
+    computes it. So by the time the next round creates its pin (and before
+    any of that round's jobs, whose broadcast forks read the previous
+    labels, can start), every earlier lazy pin is already materialized. A
+    pin first computed inside a later round's jobs could be computed by a
+    broadcast subtree job and by the main job alike (pagerank once paid
+    1.4 s -> 14.4 s at sf0.1 for exactly that)."""
+    from btrblocks_spark.pipeline.dedup import _cc_labels
+
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)], "doc_a long, doc_b long"
+    )
+    cls = type(pairs)
+    orig = cls.localCheckpoint
+    lazy_pins = []
+
+    def materialized(df):
+        return df._jdf.queryExecution().logical().rdd().isCheckpointed()
+
+    def recording(self, eager=True, *args, **kwargs):
+        assert all(materialized(p) for p in lazy_pins), (
+            "a labels pin was not materialized by its round's sum-collect"
+        )
+        out = orig(self, eager, *args, **kwargs)
+        if not eager:
+            lazy_pins.append(out)
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    labels = _cc_labels(pairs, max_iter=12)
+    assert len(lazy_pins) >= 4  # the 5-node path needs 4 hops + 1 to confirm
+    assert all(materialized(p) for p in lazy_pins)
+    assert labels.count() == 7
+
+
 # --- merge / upsert ---------------------------------------------------------
 
 
@@ -1510,13 +1638,8 @@ def test_cc_label_memo_bounded(spark):
         "doc_id long, text string",
     )
     assert dedup_clusters(docs0).count() == 2
-    memo.clear()
-    # the LSH chain under dedup_clusters also fed the pairs memo; drain it
-    # the same leak-free way
-    pairs_memo = memo_entries(spark, "pairs")
-    for _docs, cached in pairs_memo.values():
-        cached.unpersist()
-    pairs_memo.clear()
+    # the LSH chain under dedup_clusters also fed the pairs memo; drain both
+    _drain_dedup_memos(spark)
 
 
 def test_scd2_keeps_null_is_current_rows(spark):
