@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from btrblocks_spark.format.writer import PARQUET_WRITE_LOCK
+
 
 def write_bucketed(
     df: DataFrame,
@@ -45,7 +47,8 @@ def write_bucketed(
     )
     if path is not None:
         writer = writer.option("path", path)
-    writer.saveAsTable(table_name)
+    with PARQUET_WRITE_LOCK:
+        writer.saveAsTable(table_name)
 
 
 def bucketed_join(

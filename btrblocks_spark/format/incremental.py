@@ -32,6 +32,7 @@ from btrblocks_spark.format.journal import (
     vacuum_versions,
     version_dir,
 )
+from btrblocks_spark.format.writer import write_parquet
 
 
 def _list_data_files(path: str) -> list[str]:
@@ -154,7 +155,7 @@ def incremental_agg(
         next_v = claim_version(state_dir, "v=")
         out_dir = version_dir(state_dir, "v=", next_v)
         try:
-            merged.write.mode("overwrite").parquet(out_dir)
+            write_parquet(merged.write.mode("overwrite"), out_dir)
             replace_json(state_file, {"processed": files, "version": next_v})
         except BaseException:
             shutil.rmtree(out_dir, ignore_errors=True)

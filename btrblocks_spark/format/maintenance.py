@@ -47,6 +47,7 @@ from btrblocks_spark.format.journal import (
     vacuum_versions,
     version_dir,
 )
+from btrblocks_spark.format.writer import write_parquet
 
 
 def read_version(spark: SparkSession, table_dir: str, version: int) -> DataFrame:
@@ -155,7 +156,7 @@ def restore_version(spark: SparkSession, table_dir: str, version: int) -> dict:
     base_v = read_pointer(table_dir)
     next_v = _claim_and_commit(
         table_dir, base_v,
-        lambda vdir: src.write.mode("overwrite").parquet(vdir),
+        lambda vdir: write_parquet(src.write.mode("overwrite"), vdir),
         op_info={"op": "RESTORE", "restored_from": int(version)},
     )
     return {"version": next_v, "restored_from": int(version)}
@@ -219,7 +220,7 @@ def delete_where(spark: SparkSession, table_dir: str, predicate: str) -> dict:
     deleted = current.filter(hit).count()
     next_v = _claim_and_commit(
         table_dir, base_v,
-        lambda vdir: keep.write.mode("overwrite").parquet(vdir),
+        lambda vdir: write_parquet(keep.write.mode("overwrite"), vdir),
         op_info={"op": "DELETE", "predicate": predicate, "deleted_rows": int(deleted)},
     )
     return {"version": next_v, "deleted_rows": int(deleted)}
@@ -255,7 +256,7 @@ def update_where(
     _check_constraints(updated, table_dir)
     next_v = _claim_and_commit(
         table_dir, base_v,
-        lambda vdir: updated.write.mode("overwrite").parquet(vdir),
+        lambda vdir: write_parquet(updated.write.mode("overwrite"), vdir),
         op_info={
             "op": "UPDATE",
             "predicate": predicate,
@@ -304,7 +305,6 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         _PLAN_SCHEMA,
         _stage_by_chunk,
         chunk_write_options,
-        write_parquet,
     )
     from btrblocks_spark.format.chunker import with_chunk_id
     from btrblocks_spark.sources.btr_datasource import (
@@ -891,7 +891,7 @@ def delete_where_dv(spark: SparkSession, path: str, predicate: str) -> dict:
             matches = matches.union(prior)
         next_v = claim_version(dv_dir, "dv=")
         dest = version_dir(dv_dir, "dv=", next_v)
-        matches.distinct().repartition(1).write.mode("overwrite").parquet(dest)
+        write_parquet(matches.distinct().repartition(1).write.mode("overwrite"), dest)
         n_deleted, n_indexed = (
             spark.read.parquet(dest).agg(F.count(F.lit(1)), F.count("_idx")).first()
         )
@@ -1005,7 +1005,7 @@ def insert_rows(spark: SparkSession, table_dir: str, rows: DataFrame) -> dict:
     _check_constraints(rows, table_dir)  # existing rows were already checked
     next_v = _claim_and_commit(
         table_dir, base_v,
-        lambda vdir: merged.write.mode("overwrite").parquet(vdir),
+        lambda vdir: write_parquet(merged.write.mode("overwrite"), vdir),
         op_info={"op": "INSERT", "inserted_rows": int(n_new)},
     )
     return {"version": next_v, "inserted_rows": int(n_new)}

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from btrblocks_spark.format.writer import write_parquet
+
 
 def write_partitioned(
     df: DataFrame,
@@ -53,13 +55,13 @@ def write_partitioned(
     anyway.)
     """
     salt = F.pmod(F.xxhash64(*df.columns), F.lit(tasks_per_partition))
-    (
+    write_parquet(
         df.withColumn(partition_col, expr)
         .withColumn("_write_salt", salt)
         .repartition(partition_col, "_write_salt")
         .drop("_write_salt")
         .write.option("maxRecordsPerFile", 1_000_000)
         .partitionBy(partition_col)
-        .mode("overwrite")
-        .parquet(path)
+        .mode("overwrite"),
+        path,
     )

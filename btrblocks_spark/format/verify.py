@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from btrblocks_spark.format.reader import read_table
+from btrblocks_spark.format.writer import write_parquet
 
 
 def frames_equal(a: DataFrame, b: DataFrame) -> bool:
@@ -88,7 +89,7 @@ def add_chunk_checksums(spark: SparkSession, path: str) -> dict:
     from btrblocks_spark.format.reader import read_metadata
 
     out_dir = os.path.join(path, _CHECKSUM_DIR)
-    _chunk_digests(spark, path).sort("chunk").write.mode("overwrite").parquet(out_dir)
+    write_parquet(_chunk_digests(spark, path).sort("chunk").write.mode("overwrite"), out_dir)
     n = spark.read.parquet(out_dir).agg(F.count("*")).collect()[0][0]
     meta = read_metadata(path)
     meta.pop("chunk_checksums", None)  # drop a legacy inline dict if present

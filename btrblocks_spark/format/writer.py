@@ -287,19 +287,21 @@ _PLAN_CONF_LOCK = threading.Lock()
 # parquet-mr 1.16 builds every file writer's column encoders through one
 # JVM-wide factory (ParquetProperties.DEFAULT_VALUES_WRITER_FACTORY) that
 # keeps the properties of the writer constructed LAST in the process. Two
-# parquet writes with different options opening files at the same moment
-# can swap per-column settings: with concurrent write_table calls, a
+# parquet writes with different options that have files open at the same
+# time can swap per-column settings: with concurrent write_table calls, a
 # documents chunk file came out PLAIN_DICTIONARY for a column planned
-# without a dictionary. Every parquet write of write_table and compact
-# holds this lock (write_parquet), so the engine's own writes never open
-# files side by side; a parquet write the engine does not issue can still
-# race them.
-_PARQUET_WRITE_LOCK = threading.Lock()
+# without a dictionary, and a default-option write (dictionary on for
+# every column) beside a write_table does the same. Every parquet write
+# the engine issues holds this lock for its whole job, upstream stages
+# included (write_parquet; the catalog writes take it directly), so no two
+# of them have files open side by side. A parquet write issued outside
+# the engine can still race them.
+PARQUET_WRITE_LOCK = threading.Lock()
 
 
 def write_parquet(writer, path: str) -> None:
-    """``writer.parquet(path)`` under ``_PARQUET_WRITE_LOCK``."""
-    with _PARQUET_WRITE_LOCK:
+    """``writer.parquet(path)`` under ``PARQUET_WRITE_LOCK``."""
+    with PARQUET_WRITE_LOCK:
         writer.parquet(path)
 
 
@@ -584,98 +586,75 @@ def write_table(
         shutil.rmtree(groups_root)
     group_deps = {dep: det for det, dep in resolved}
 
-    def _write_mappings() -> list[dict]:
-        out: list[dict] = []
-        for gi, (det, dep) in enumerate(resolved):
-            gdir = f"{_GROUPS_DIR}/g{gi}"
-            gpath = _fs.join(path, gdir)
-            write_parquet(
-                df.select(det, dep)
-                .dropDuplicates([det])
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("compression", "zstd"),
-                gpath,
-            )
-            gbytes = sum(_fs.list_file_sizes(gpath, ".parquet", spark))
-            # entry count = exact distinct determinants, already measured
-            # by the validation aggregate (dropDuplicates([det]) emits one
-            # row per distinct det, NULL included — same null-as-value
-            # semantics as countDistinct(struct(det))); no read-back count
-            out.append(
-                {"det": det, "dep": dep, "path": gdir,
-                 "n_entries": int(group_nd[det]), "mapping_bytes": int(gbytes)}
-            )
-        return out
-
-    # the mapping writes are independent of the chunk/data write (the data
-    # files don't reference them; only the PLAN pass reads them back), so
-    # they overlap the chunker on a helper thread (guide §2.6 back-fill)
-    # and are joined before the plan pass needs the files. Their parquet
-    # writes and the main write take turns on _PARQUET_WRITE_LOCK.
-    from concurrent.futures import ThreadPoolExecutor
-
-    _map_pool = ThreadPoolExecutor(max_workers=1)
-    _map_fut = _map_pool.submit(_write_mappings) if resolved else None
-
-    # the helper thread MUST be joined even when the chunk/data write below
-    # raises (ADVICE r8 #2): otherwise a zombie thread keeps writing
-    # _btr_column_groups/g<i> dirs after write_table has raised, and a
-    # retry to the same path can interleave with it.
-    try:
-        chunked = with_chunk_id(
-            df, order_keys, config.block_size, total_rows=total_rows,
-            bounds=bounds,
-        )
-        num_rows = chunked._btr_total_rows  # free byproduct of the offset job
-        num_chunks = max((num_rows + config.block_size - 1) // config.block_size, 1)
-
-        staged = _stage_by_chunk(chunked, int(num_chunks))
-        data_path = _fs.join(path, "data")
-        # stats-driven bloom filters on the lookup keys: the reader's point
-        # lookup (the reference's `lookup` stub, scheme/CompressionScheme.hpp:45)
-        # then skips row groups whose bloom rejects the key — the chunk-stats
-        # min/max pruning analog for equality on non-sorted keys. Expected NDV
-        # per row group is the table NDV capped at the chunk size, so bloom
-        # bytes track actual cardinality instead of parquet's 1M default.
-        # Dictionary-encoded keys are excluded on purpose: the dict page
-        # already answers membership exactly (and parquet-mr omits blooms
-        # for fully-dict chunks anyway).
-        bloom_cols = {}
-        if config.bloom_filter_keys:
-            for col in order_keys:
-                if col in group_deps:
-                    continue
-                if dict_enabled.get(col, True) or ndv.get(col, 0) < 1:
-                    continue
-                bloom_cols[col] = min(ndv[col], config.block_size)
-        # chunk-aligned layout: rows are _idx-sorted within partitions
-        # and every non-final chunk has exactly block_size rows, so
-        # maxRecordsPerFile splits files on exact chunk boundaries → one
-        # output file = one chunk (the ColumnPart sizing analog)
-        # group dependents are NOT written as streams — their values live
-        # in the nd(det)-entry mapping tables; this drop is where the
-        # compression win is banked (the dependent's bytes leave the files)
+    # the mapping tables are written first; only the plan pass below reads
+    # them back. Their writes and the data write take PARQUET_WRITE_LOCK in
+    # turn, so overlapping them on a helper thread measured no faster.
+    for gi, (det, dep) in enumerate(resolved):
+        gdir = f"{_GROUPS_DIR}/g{gi}"
+        gpath = _fs.join(path, gdir)
         write_parquet(
-            staged.drop("_chunk").drop(*group_deps.keys())
+            df.select(det, dep)
+            .dropDuplicates([det])
+            .coalesce(1)
             .write.mode("overwrite")
-            .options(**chunk_write_options(
-                config,
-                dictionary={
-                    c: on for c, on in dict_enabled.items() if c not in group_deps
-                },
-                bloom=bloom_cols,
-            )),
-            data_path,
+            .option("compression", "zstd"),
+            gpath,
+        )
+        gbytes = sum(_fs.list_file_sizes(gpath, ".parquet", spark))
+        # entry count = exact distinct determinants, already measured
+        # by the validation aggregate (dropDuplicates([det]) emits one
+        # row per distinct det, NULL included — same null-as-value
+        # semantics as countDistinct(struct(det))); no read-back count
+        groups.append(
+            {"det": det, "dep": dep, "path": gdir,
+             "n_entries": int(group_nd[det]), "mapping_bytes": int(gbytes)}
         )
 
-        # join the overlapped mapping writes before the plan pass reads them
-        groups = _map_fut.result() if _map_fut is not None else []
-    finally:
-        # joins the helper even when the chunk write raised: shutdown waits
-        # for the in-flight mapping write, so no zombie thread outlives a
-        # failed write_table (ADVICE r8 #2)
-        _map_pool.shutdown(wait=True)
+    chunked = with_chunk_id(
+        df, order_keys, config.block_size, total_rows=total_rows,
+        bounds=bounds,
+    )
+    num_rows = chunked._btr_total_rows  # free byproduct of the offset job
+    num_chunks = max((num_rows + config.block_size - 1) // config.block_size, 1)
+
+    staged = _stage_by_chunk(chunked, int(num_chunks))
+    data_path = _fs.join(path, "data")
+    # stats-driven bloom filters on the lookup keys: the reader's point
+    # lookup (the reference's `lookup` stub, scheme/CompressionScheme.hpp:45)
+    # then skips row groups whose bloom rejects the key — the chunk-stats
+    # min/max pruning analog for equality on non-sorted keys. Expected NDV
+    # per row group is the table NDV capped at the chunk size, so bloom
+    # bytes track actual cardinality instead of parquet's 1M default.
+    # Dictionary-encoded keys are excluded on purpose: the dict page
+    # already answers membership exactly (and parquet-mr omits blooms
+    # for fully-dict chunks anyway).
+    bloom_cols = {}
+    if config.bloom_filter_keys:
+        for col in order_keys:
+            if col in group_deps:
+                continue
+            if dict_enabled.get(col, True) or ndv.get(col, 0) < 1:
+                continue
+            bloom_cols[col] = min(ndv[col], config.block_size)
+    # chunk-aligned layout: rows are _idx-sorted within partitions
+    # and every non-final chunk has exactly block_size rows, so
+    # maxRecordsPerFile splits files on exact chunk boundaries → one
+    # output file = one chunk (the ColumnPart sizing analog)
+    # group dependents are NOT written as streams — their values live
+    # in the nd(det)-entry mapping tables; this drop is where the
+    # compression win is banked (the dependent's bytes leave the files)
+    write_parquet(
+        staged.drop("_chunk").drop(*group_deps.keys())
+        .write.mode("overwrite")
+        .options(**chunk_write_options(
+            config,
+            dictionary={
+                c: on for c, on in dict_enabled.items() if c not in group_deps
+            },
+            bloom=bloom_cols,
+        )),
+        data_path,
+    )
 
     # plan over the WRITTEN table: every chunk is exactly one file. Setting
     # maxPartitionBytes to just above the largest file keeps every chunk
@@ -691,8 +670,10 @@ def write_table(
     # (guide §2.6 — callers overlap independent table writes to back-fill
     # each other's stage tails) must not interleave set/restore or one
     # write's plan could split a chunk file across two read partitions and
-    # emit duplicate plan rows. The lock serializes only this plan window;
-    # the heavy chunk/exchange/parquet work above overlaps freely.
+    # emit duplicate plan rows. This lock serializes only this plan window;
+    # the data write above, with its chunker and exchange stages, is
+    # serialized across calls by PARQUET_WRITE_LOCK, and only the NDV
+    # aggregate, the chunker's offset job and driver work overlap.
     _PLAN_CONF_LOCK.acquire()
     prev_mpb = spark_conf.get("spark.sql.files.maxPartitionBytes")
     spark_conf.set("spark.sql.files.maxPartitionBytes", str(max_file + (1 << 20)))

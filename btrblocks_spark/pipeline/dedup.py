@@ -27,6 +27,7 @@ is verified bit-exactly against the DuckDB oracle.
 from __future__ import annotations
 
 import hashlib
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -139,6 +140,16 @@ def minhash_band_buckets(
     )
 
 
+# Spark 4.1 caches a plan in a session clone with final-stage shuffle
+# optimizations off unless this is true, so a persisted table keeps all
+# spark.sql.shuffle.partitions partitions however few rows it holds.
+# CacheManager reads the key only when persist() registers a plan, so the
+# memo sets it around its own persist() call alone (under the lock, as
+# the key is session-global) and no other cached plan changes.
+_COALESCE_CACHED = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+_COALESCE_CACHED_LOCK = threading.Lock()
+
+
 def _memoized_by_plan(docs: DataFrame, key: tuple, build) -> DataFrame:
     """Session-memoized (``tables.memo``, memo ``pairs``) derived table,
     keyed on the input plan (semanticHash, confirmed by sameSemantics on
@@ -155,17 +166,26 @@ def _memoized_by_plan(docs: DataFrame, key: tuple, build) -> DataFrame:
     recomputes instead of reading dropped blocks (and so does a lost
     executor's cache block, unlike a localCheckpoint).
 
-    The session lets AQE coalesce a cached plan's output
-    (``session.get_spark``: ``canChangeCachedPlanOutputPartitioning``), so
-    a small pair table is cached in a few partitions, not one per
-    ``spark.sql.shuffle.partitions``, and every consumer's scan of it runs
-    that few tasks."""
+    The entry is persisted with ``_COALESCE_CACHED`` on, so AQE coalesces
+    its final stage: a pair table of a few hundred rows is cached in a few
+    partitions, not one per ``spark.sql.shuffle.partitions``, and every
+    consumer's scan of it (each round of the connected-components loop)
+    runs that few tasks."""
     from pyspark.storagelevel import StorageLevel
 
     from btrblocks_spark.tables import memo
 
     def build_entry():
-        return docs, build().persist(StorageLevel.DISK_ONLY)
+        pairs = build()
+        conf = docs.sparkSession.conf
+        with _COALESCE_CACHED_LOCK:
+            prev = conf.get(_COALESCE_CACHED)
+            conf.set(_COALESCE_CACHED, "true")
+            try:
+                pairs.persist(StorageLevel.DISK_ONLY)
+            finally:
+                conf.set(_COALESCE_CACHED, prev)
+        return docs, pairs
 
     return memo(
         docs.sparkSession, "pairs", (docs.semanticHash(),) + key, build_entry,
@@ -530,9 +550,9 @@ def _cc_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
         # Lazy pin: the sum-collect right below is the checkpoint's single
         # consuming job and materializes its blocks BEFORE the next round's
         # plan (whose broadcast forks reference them) is even built, so
-        # the lazy-pin-under-broadcast-fork recompute hazard (pagerank,
-        # round-8: 1.4→14.4 s) cannot trigger. One driver job per round
-        # instead of two (eager checkpoint + sum collect);
+        # the lazy-pin-under-broadcast-fork recompute hazard (pagerank once
+        # paid 1.4→14.4 s at sf0.1 for it) cannot trigger. One driver job
+        # per round instead of two (eager checkpoint + sum collect);
         # tests/test_pipeline.py::test_cc_round_pin_is_computed_by_one_job
         # guards this ordering.
         new_labels = one_hop(labels).localCheckpoint(eager=False)

@@ -21,14 +21,6 @@ def get_spark(
 
     Notes on the conf choices, which matter at 100 TB:
       - AQE on: runtime coalescing of shuffle partitions + skew-join handling.
-      - Cached plans may change their output partitioning
-        (``canChangeCachedPlanOutputPartitioning``, off by default in
-        Spark 4.1): without it a persisted table keeps every one of
-        ``spark.sql.shuffle.partitions`` partitions, however few rows it
-        holds, and every later scan of it runs that many tasks. The
-        memoized LSH pair tables (``dedup._memoized_by_plan``) hold a few
-        hundred rows, so AQE coalescing them cuts the dedup graph loop's
-        tasks per round to a handful.
       - ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
         cluster this is overridden (AQE coalesces down anyway).
       - Arrow on: every pandas/mapInArrow kernel crosses the JVM↔Python
@@ -57,7 +49,6 @@ def get_spark(
         # small, CPU large — size-based coalescing collapses them to 1-2
         # tasks). On a real cluster the same asymmetry applies per-executor.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # TIMESTAMP(NANOS) parquet columns read as BIGINT epoch-nanos from

@@ -31,6 +31,7 @@ from btrblocks_spark.format.journal import (
     replace_json,
 )
 from btrblocks_spark.format.reader import read_metadata
+from btrblocks_spark.format.writer import write_parquet
 
 
 def _log_path(table_dir: str) -> str:
@@ -207,7 +208,7 @@ def copy_into(
         tmp_dir = os.path.join(table_dir, f"_copy_tmp-{uuid.uuid4().hex}")
         journal_committed = False
         try:
-            (
+            write_parquet(
                 df.select(*cols)
                 .withColumn("_src_path", F.input_file_name())
                 .join(F.broadcast(lookup), "_src_path", "left")
@@ -216,8 +217,8 @@ def copy_into(
                 .write.mode("overwrite")
                 .partitionBy("_src")
                 .option("maxRecordsPerFile", meta["block_size"])
-                .option("compression", "zstd")
-                .parquet(tmp_dir)
+                .option("compression", "zstd"),
+                tmp_dir,
             )
             # row counts from the staged footers — no second data scan
             import pyarrow.parquet as pq

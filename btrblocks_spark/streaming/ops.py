@@ -39,6 +39,7 @@ from btrblocks_spark.format.journal import (
     version_dir,
 )
 from btrblocks_spark.format.maintenance import read_version
+from btrblocks_spark.format.writer import write_parquet
 
 EVENTS_SCHEMA = StructType(
     [
@@ -244,11 +245,11 @@ def exactly_once_chunked_append(
             clean_stages()
             return
     stage = os.path.join(stage_root, f"batch={batch_id}-{uuid.uuid4().hex}")
-    (
+    write_parquet(
         batch_df.write.mode("overwrite")
         .option("maxRecordsPerFile", block_size)
-        .option("compression", "zstd")
-        .parquet(stage)
+        .option("compression", "zstd"),
+        stage,
     )
     staged = sorted(
         os.path.join(r, f)
@@ -567,7 +568,7 @@ def streaming_upsert(
             next_v = claim_version(table_dir, "v=")
             out = version_dir(table_dir, "v=", next_v)
             try:
-                merged.drop("op").write.mode("overwrite").parquet(out)
+                write_parquet(merged.drop("op").write.mode("overwrite"), out)
                 swap_pointer(table_dir, next_v)
             except BaseException:
                 # an uncommitted v=N would be served by time travel
@@ -678,7 +679,7 @@ def _write_batch_partition(df: DataFrame, base_dir: str, batch_id: int) -> None:
     """``mode("overwrite")`` into a batch-id-named subdir: a replayed
     microbatch reproduces its output in place instead of double-appending
     — exactly-once without a transaction log."""
-    df.write.mode("overwrite").parquet(os.path.join(base_dir, f"batch={batch_id}"))
+    write_parquet(df.write.mode("overwrite"), os.path.join(base_dir, f"batch={batch_id}"))
 
 
 def near_dedup_stream(
@@ -1025,7 +1026,7 @@ def kmv_sketch_stream(
             .localCheckpoint()
         )
         new_dir = os.path.join(out_dir, f"v{batch_id}")
-        merged.coalesce(1).write.mode("overwrite").parquet(new_dir)
+        write_parquet(merged.coalesce(1).write.mode("overwrite"), new_dir)
         # atomic repoint: the current pointer flips only after the new
         # snapshot is fully written (single-writer, maintenance-style)
         tmp = cur_dir + ".tmp"

@@ -160,13 +160,16 @@ def write_bucketed(
 
     Uses the session catalog's managed warehouse (Parquet under
     ``spark.sql.warehouse.dir``); overwrites any existing table."""
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table_name)
-    )
+    from btrblocks_spark.format.writer import PARQUET_WRITE_LOCK
+
+    with PARQUET_WRITE_LOCK:
+        (
+            df.write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(num_buckets, *bucket_cols)
+            .sortBy(*bucket_cols)
+            .saveAsTable(table_name)
+        )
 
 
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

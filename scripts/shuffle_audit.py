@@ -22,7 +22,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, root)
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from btrblocks_spark.queries import all_queries
 from btrblocks_spark.session import get_spark

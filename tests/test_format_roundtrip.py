@@ -2357,7 +2357,11 @@ def test_concurrent_writes_keep_their_dictionary_switches(spark, tmp_path, monke
     parquet's default (dictionary on), and its ``mid_<t>`` column (NDV 40
     > the block_size // 4 threshold, yet repeating inside every row group)
     keeps a dictionary whenever one is switched on. Row groups of 8 rows
-    give every file several encoder rebuilds to be caught in."""
+    give every file several encoder rebuilds to be caught in. DML version
+    writes (insert_rows: default options, so dictionary on for every
+    column, 32 tasks or more each) run back to back beside them in every
+    rep, so an engine parquet write outside write_table that opens its
+    files mid-write is caught too."""
     import glob
     import os
     import threading
@@ -2366,6 +2370,7 @@ def test_concurrent_writes_keep_their_dictionary_switches(spark, tmp_path, monke
     import pyarrow.parquet as pq
 
     from btrblocks_spark.format import writer
+    from btrblocks_spark.format.maintenance import insert_rows
 
     planned = {}
     orig = writer.chunk_write_options
@@ -2390,12 +2395,34 @@ def test_concurrent_writes_keep_their_dictionary_switches(spark, tmp_path, monke
         write_table(tables[t], dest, [f"k_{t}"], cfg, f"t{t}")
         return dest, planned[threading.get_ident()]
 
+    dml_dir = str(tmp_path / "dml")
+    dml_rows = spark.range(0, 1024, numPartitions=32).select(
+        F.col("id").alias("dml_a"), (F.col("id") * 7).alias("dml_b")
+    )
+    dml_rows.limit(1).write.parquet(dml_dir + "/v=0")
+    with open(dml_dir + "/_latest", "w") as fh:
+        fh.write("0")
+
+    stop = threading.Event()
+
+    def dml_until_stopped():
+        for _ in range(8):
+            if stop.is_set():
+                break
+            insert_rows(spark, dml_dir, dml_rows)
+
     wrong = []
     spark.conf.set("parquet.block.row.count.limit", "8")
     try:
         for rep in range(2):
-            with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-                done = list(pool.map(lambda t: write(rep, t), tables))
+            stop.clear()
+            with ThreadPoolExecutor(max_workers=len(tables) + 1) as pool:
+                dml = pool.submit(dml_until_stopped)
+                try:
+                    done = list(pool.map(lambda t: write(rep, t), tables))
+                finally:
+                    stop.set()
+                dml.result()
             for dest, switches in done:
                 for f in glob.glob(os.path.join(dest, "data", "*.parquet")):
                     md = pq.ParquetFile(f).metadata

@@ -254,22 +254,36 @@ def _drain_dedup_memos(spark):
 
 def test_dedup_pair_table_is_coalesced_and_edges_keep_its_partitions(spark, sf_dir):
     """Cost pin for the dedup graph chain: the memoized LSH pair table is
-    cached with AQE-coalesced partitions (the session lets cached plans
-    change their output partitioning), and the symmetric edges are one
-    scan of it, so they have exactly its partitions, not twice as many."""
-    from btrblocks_spark.pipeline.dedup import _symmetric_edges, minhash_lsh_pairs
+    cached with AQE-coalesced partitions, and the symmetric edges are one
+    scan of it, so they have exactly its partitions, not twice as many.
+    The coalescing is the memo's alone: the session key is put back, and
+    a plan the caller persists afterwards keeps every shuffle partition."""
+    from btrblocks_spark.pipeline.dedup import (
+        _COALESCE_CACHED,
+        _symmetric_edges,
+        minhash_lsh_pairs,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "64")
     _drain_dedup_memos(spark)
+    before = spark.conf.get(_COALESCE_CACHED)
+    other = None
     try:
         pairs = minhash_lsh_pairs(docs)
         assert pairs.count() > 0
         n = pairs.rdd.getNumPartitions()
         assert n < 64
         assert _symmetric_edges(pairs).rdd.getNumPartitions() == n
+        assert spark.conf.get(_COALESCE_CACHED) == before
+        other = spark.range(100).groupBy((F.col("id") % 10).alias("g")).count()
+        other.persist()
+        assert other.count() == 10
+        assert other.rdd.getNumPartitions() == 64
     finally:
+        if other is not None:
+            other.unpersist()
         _drain_dedup_memos(spark)
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
