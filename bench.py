@@ -311,7 +311,7 @@ def stage_tables(spark, sf_dir: str, staging_root: str) -> dict:
     # ASSUMPTION (ADVICE r8): PySpark pinned-thread mode (PYSPARK_PIN_THREAD,
     # default on since 3.2) — with it disabled, setJobDescription from
     # concurrent threads leaks across jobs (cosmetic only here; the staged
-    # outputs themselves are thread-safe via writer._PLAN_CONF_LOCK).
+    # outputs themselves are thread-safe via writer.PARQUET_WRITE_LOCK).
     from concurrent.futures import ThreadPoolExecutor
 
     name, meta = stage_one("lineitem")

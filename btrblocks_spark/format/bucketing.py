@@ -29,21 +29,22 @@ from btrblocks_spark.format.writer import PARQUET_WRITE_LOCK
 def write_bucketed(
     df: DataFrame,
     table_name: str,
-    bucket_col: str,
+    bucket_cols: list[str],
     num_buckets: int = 8,
     path: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as a bucketed+sorted parquet table.
+    """Write ``df`` as a catalog table bucketed and sorted by
+    ``bucket_cols``, overwriting any existing table. Data goes under
+    ``path``, or the session's managed warehouse when it is None.
 
-    ``sortBy(bucket_col)`` makes each bucket file key-sorted, so the
+    ``sortBy(*bucket_cols)`` makes each bucket file key-sorted, so the
     downstream sort-merge join needs no per-task Sort either — the plan is
     scan -> zip-merge, the minimal physical join."""
     writer = (
         df.write.format("parquet")
-        .mode(mode)
-        .bucketBy(num_buckets, bucket_col)
-        .sortBy(bucket_col)
+        .mode("overwrite")
+        .bucketBy(num_buckets, *bucket_cols)
+        .sortBy(*bucket_cols)
     )
     if path is not None:
         writer = writer.option("path", path)

@@ -113,12 +113,14 @@ def _sample_boundaries(
 def with_global_index(
     df: DataFrame,
     order_keys: list[str],
-    index_col: str = "_idx",
     num_partitions: int | None = None,
     total_rows: int | None = None,
     bounds: list[tuple] | None = None,
+    start: int = 0,
 ) -> DataFrame:
-    """Add a 0-based dense global row index ordered by ``order_keys``.
+    """Add a dense global row index ``_idx`` ordered by ``order_keys``,
+    counting up from ``start`` (0 for a whole table; compaction indexes a
+    rewritten tail after the chunks it keeps).
 
     Deterministic end-to-end (fixed boundaries + pure-function range tags +
     stable hash exchange), so the result needs NO persist for cross-job
@@ -146,13 +148,13 @@ def with_global_index(
         # the tagging below adds its own _pid and drops it from the output;
         # a pre-existing _pid would be silently overwritten and lost
         raise ValueError("input already has a '_pid' column; rename it first")
-    if index_col in df.columns:
-        # the window appends index_col to the schema; a pre-existing one
-        # would yield DUPLICATE column names and ambiguous-reference
-        # errors far downstream (e.g. re-indexing a read-back table that
-        # still carries _idx — drop it first)
+    if "_idx" in df.columns:
+        # the window appends _idx to the schema; a pre-existing one would
+        # yield DUPLICATE column names and ambiguous-reference errors far
+        # downstream (e.g. re-indexing a read-back table that still
+        # carries _idx — drop it first)
         raise ValueError(
-            f"input already has a {index_col!r} column; drop or rename it "
+            "input already has a '_idx' column; drop or rename it "
             "before re-indexing"
         )
 
@@ -169,7 +171,7 @@ def with_global_index(
         for r in tagged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
     }
     # dense cumulative offsets over every possible pid 0..len(bounds)
-    offsets, acc = [], 0
+    offsets, acc = [], start
     for pid in range(len(bounds) + 1):
         offsets.append(acc)
         acc += counts.get(pid, 0)
@@ -183,10 +185,10 @@ def with_global_index(
     ordinal = F.row_number().over(Window.partitionBy("_pid").orderBy(*order_keys))
     out = (
         tagged.repartition(num_partitions, "_pid")
-        .withColumn(index_col, (offset + ordinal - 1).cast("long"))
+        .withColumn("_idx", (offset + ordinal - 1).cast("long"))
         .drop("_pid")
     )
-    out._btr_total_rows = acc
+    out._btr_total_rows = acc - start
     return out
 
 
@@ -194,14 +196,14 @@ def with_chunk_id(
     df: DataFrame,
     order_keys: list[str],
     block_size: int,
-    chunk_col: str = "_chunk",
-    index_col: str = "_idx",
     strategy: str = "sequential",
     total_rows: int | None = None,
     bounds: list[tuple] | None = None,
+    start: int = 0,
 ) -> DataFrame:
-    """Add chunk id = global_index // block_size (``SplitStrategy``,
-    reference storage/Relation.hpp:7, storage/Relation.cpp:42-69).
+    """Add chunk id ``_chunk`` = ``_idx // block_size`` (``SplitStrategy``,
+    reference storage/Relation.hpp:7, storage/Relation.cpp:42-69); ``start``
+    is the first ``_idx`` (see ``with_global_index``).
 
     ``sequential`` chunks in key order; ``random`` decorrelates chunk
     contents by indexing on a *deterministic* 64-bit hash of the keys
@@ -212,20 +214,19 @@ def with_chunk_id(
     if strategy == "random":
         tagged = df.withColumn("_rnd", F.xxhash64(*[F.col(k) for k in order_keys]))
         indexed = with_global_index(
-            tagged, ["_rnd", *order_keys], index_col=index_col, total_rows=total_rows
+            tagged, ["_rnd", *order_keys], total_rows=total_rows, start=start
         )
         total = getattr(indexed, "_btr_total_rows", None)
         indexed = indexed.drop("_rnd")
         indexed._btr_total_rows = total
     elif strategy == "sequential":
         indexed = with_global_index(
-            df, order_keys, index_col=index_col, total_rows=total_rows,
-            bounds=bounds,
+            df, order_keys, total_rows=total_rows, bounds=bounds, start=start
         )
     else:
         raise ValueError(f"unknown split strategy: {strategy!r}")
     out = indexed.withColumn(
-        chunk_col, F.floor(F.col(index_col) / F.lit(block_size)).cast("long")
+        "_chunk", F.floor(F.col("_idx") / F.lit(block_size)).cast("long")
     )
     out._btr_total_rows = getattr(indexed, "_btr_total_rows", None)
     return out

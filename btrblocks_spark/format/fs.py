@@ -87,8 +87,9 @@ def write_json(path: str, obj: dict, spark=None) -> None:
 
 def list_file_sizes(path: str, suffix: str = ".parquet", spark=None) -> list[int]:
     """Sizes of all files under ``path`` matching ``suffix`` (recursive).
-    Used by write_table to size ``maxPartitionBytes`` to the largest chunk
-    file — an O(num_files) metadata listing, never a data read (on S3 this
+    The plan pass of write_table and compact (writer.plan_chunk_files)
+    sizes ``maxPartitionBytes`` to the largest chunk file with it — an
+    O(num_files) metadata listing, never a data read (on S3 this
     is LIST, not GET). Applies the same Spark-visibility filter as
     ``list_parquet_files`` (skip ``_``/``.`` components): a crashed rival's
     ``_temporary`` task attempt or a staged ``.inflight`` file must never

@@ -32,7 +32,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.observation import Observation
 
 from btrblocks_spark.format.journal import (
     adopt,
@@ -298,15 +297,7 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
 
     from btrblocks_spark.config import DEFAULT_CONFIG
     from btrblocks_spark.format.reader import read_metadata
-    from btrblocks_spark.format.writer import (
-        _observed_or_readback_totals,
-        _plan_partition_fn,
-        _PLAN_CONF_LOCK,
-        _PLAN_SCHEMA,
-        _stage_by_chunk,
-        chunk_write_options,
-    )
-    from btrblocks_spark.format.chunker import with_chunk_id
+    from btrblocks_spark.format.writer import plan_chunk_files, write_chunk_files
     from btrblocks_spark.sources.btr_datasource import (
         _log_path,
         _vacuum_inflight_locked,
@@ -389,7 +380,6 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         }
 
     cols = [c["name"] for c in meta["schema"]]
-    col_types = [(c["name"], c["type"]) for c in meta["schema"]]
 
     # per-call uuid stage dirs: the heavy staging below runs OUTSIDE the
     # commit lock, and two concurrent compacts staging into a shared fixed
@@ -421,99 +411,21 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
             .select(*cols)  # drops _idx whether present or not
         )
         base = keep_k * bs
-        indexed = with_chunk_id(frag_df, meta["order_keys"], bs)
-        n_frag = indexed._btr_total_rows
-        shifted = indexed.withColumn(
-            "_idx", F.col("_idx") + F.lit(base)
-        ).withColumn("_chunk", F.floor(F.col("_idx") / F.lit(bs)).cast("long"))
-        new_chunks = (n_frag + bs - 1) // bs
-        staged = _stage_by_chunk(shifted, int(new_chunks))
-        # the table's bloom filters carry over to the rewritten tail: a
-        # lookup skips row groups by bloom, and a compacted file without
-        # one would be read by every point lookup
-        write_parquet(
-            staged.drop("_chunk")
-            .write.mode("overwrite")
-            .options(**chunk_write_options(cfg, bloom=meta.get("bloom_filters"))),
-            tmp_dir,
+        # the rewritten tail is indexed on from the kept prefix, and the
+        # table's bloom filters carry over to it: a lookup skips row groups
+        # by bloom, and a compacted file without one would be read by every
+        # point lookup
+        n_frag, new_chunks = write_chunk_files(
+            frag_df, tmp_dir, meta["order_keys"], cfg, start=base,
+            bloom=meta.get("bloom_filters"),
         )
-
-        # re-plan the rewritten tail only (footer-cheap for the kept prefix).
-        # maxPartitionBytes is raised past the largest file so one read task
-        # sees each chunk whole — a split chunk would emit duplicate plan
-        # rows (same guard as write_table).
-        max_file = max(
-            (
-                os.path.getsize(os.path.join(r, f))
-                for r, _s, fs in os.walk(tmp_dir)
-                for f in fs
-                if f.endswith(".parquet")
-            ),
-            default=1,
-        )
-        # same lock as write_table's plan window (ADVICE r8 #3): the conf is
-        # session-global, and a compact overlapping a concurrent write_table
-        # (a supported pattern since the bench staging overlap) must not
-        # interleave set/restore — a clobbered window could split a chunk
-        # file across read partitions and emit duplicate plan rows.
-        _PLAN_CONF_LOCK.acquire()
-        prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", str(max_file + (1 << 20))
-        )
-        try:
-            planned_df = (
-                spark.read.parquet(tmp_dir)
-                .withColumn("_chunk", F.floor(F.col("_idx") / F.lit(bs)).cast("long"))
-                .drop("_idx")
-                .mapInPandas(_plan_partition_fn(col_types, cfg), _PLAN_SCHEMA)
-            )
-            # new sharded stats dataset = untouched prefix's rows + the
-            # freshly planned tail, written from executors (the driver never
-            # holds per-chunk rows — same contract as write_table). A v1
-            # table's inline rows are lifted out of its (already
-            # driver-resident) JSON; every compaction emits v2.
-            if "columns" in meta:  # v1 sidecar: inline rows → local frame
-                prefix_rows = [
-                    {"column": col, "col_type": info["type"],
-                     **{k: v for k, v in ch.items()}}
-                    for col, info in meta["columns"].items()
-                    for ch in info["chunks"]
-                    if ch["chunk"] < keep_k
-                ]
-                prefix_df = spark.createDataFrame(prefix_rows, _PLAN_SCHEMA)
-            else:
-                prefix_df = spark.read.parquet(
-                    os.path.join(path, "_btr_chunk_stats")
-                ).filter(F.col("chunk") < keep_k)
-            # hash-by-column + in-partition sort, totals via observe(): a
-            # global sort's range-boundary sampling would re-execute the
-            # plan kernel, and the read-back aggregate was a second job —
-            # same round-8 rewrite as write_table's plan pass (the
-            # chunk_stats_rows accessor re-sorts driver-side, so only the
-            # per-column clustering matters for row-group pruning)
-            obs = Observation()
-            write_parquet(
-                prefix_df.unionByName(planned_df)
-                .observe(
-                    obs,
-                    F.coalesce(F.sum("raw_size"), F.lit(0)).alias("raw"),
-                    F.coalesce(F.sum("est_size"), F.lit(0)).alias("est"),
-                )
-                .repartition("column")
-                .sortWithinPartitions("column", "chunk")
-                .write.mode("overwrite")
-                .option("compression", "zstd"),
-                stats_tmp,
-            )
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-            _PLAN_CONF_LOCK.release()
-
-        # 0-row edge (empty metrics row) falls back to a read-back agg —
-        # see writer._observed_or_readback_totals
-        total_raw, total_est = _observed_or_readback_totals(
-            obs, spark, stats_tmp
+        meta["num_rows"] = base + n_frag
+        meta["num_chunks"] = keep_k + new_chunks
+        # re-plan the rewritten tail only (footer-cheap for the kept
+        # prefix, whose stats rows carry over); every compaction emits a
+        # v2 stats dataset, written from executors
+        totals = plan_chunk_files(
+            spark, path, meta, tmp_dir, stats_tmp, cfg, keep_chunks=keep_k
         )
     except Exception:
         # a rival compact that committed mid-stage REMOVED our fragment
@@ -525,13 +437,7 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
     meta.pop("columns", None)
     meta["format"] = "btrblocks-spark/v2"
     meta["chunk_stats"] = "_btr_chunk_stats"
-    meta["num_rows"] = base + int(n_frag)
-    meta["num_chunks"] = keep_k + int(new_chunks)
-    meta["totals"] = {
-        "raw_bytes": total_raw,
-        "est_compressed_bytes": total_est,
-        "est_compression_ratio": round(total_raw / max(total_est, 1), 4),
-    }
+    meta["totals"] = totals
 
     # Crash-safe swap: write a journal (adds + removes + new sidecar) as the
     # single atomic commit point, then apply it. A crash BEFORE the journal
@@ -602,7 +508,7 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         "files_after": keep_k + moved,
         "rewritten_files": len(frag),
         "full_chunks_kept": keep_k,
-        "new_chunks": int(new_chunks),
+        "new_chunks": new_chunks,
         "num_rows": meta["num_rows"],
     }
 

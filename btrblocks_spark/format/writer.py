@@ -26,6 +26,11 @@ O(num_chunks · num_columns) small rows):
      file, compression/Datablock.hpp:23-35): schema, chunking, per
      column-chunk scheme + stats + size estimate.
 
+Steps 3 and 4 are ``write_chunk_files`` and ``plan_chunk_files``;
+``maintenance.compact`` rewrites a table's fragmented tail through the
+same two functions, so a change to the chunk files or their stats is made
+once for both.
+
 Full-data movements per write: two full-row exchanges (the chunker's
 ``_pid`` range exchange, then the ``_chunk`` staging exchange) + one write +
 one compressed read-back — regardless of table size.
@@ -39,7 +44,6 @@ codec-agnostic.
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 import time
@@ -54,6 +58,7 @@ from btrblocks_spark.config import DEFAULT_CONFIG, BtrBlocksConfig
 from btrblocks_spark.format import fs as _fs
 from btrblocks_spark.format.chunker import with_chunk_id
 from btrblocks_spark.format.planner import choose_scheme, kind_of
+from btrblocks_spark.format.reader import reconstruct_column_groups
 
 _PLAN_SCHEMA = (
     "chunk long, column string, col_type string, scheme string, scheme_tree string, "
@@ -280,10 +285,6 @@ def plan_chunks(
 
 _GROUPS_DIR = "_btr_column_groups"
 
-# serializes the session-global maxPartitionBytes window of the plan pass
-# so independent write_table calls can run concurrently (see its use)
-_PLAN_CONF_LOCK = threading.Lock()
-
 # parquet-mr 1.16 builds every file writer's column encoders through one
 # JVM-wide factory (ParquetProperties.DEFAULT_VALUES_WRITER_FACTORY) that
 # keeps the properties of the writer constructed LAST in the process. Two
@@ -295,7 +296,9 @@ _PLAN_CONF_LOCK = threading.Lock()
 # the engine issues holds this lock for its whole job, upstream stages
 # included (write_parquet; the catalog writes take it directly), so no two
 # of them have files open side by side. A parquet write issued outside
-# the engine can still race them.
+# the engine can still race them. The plan pass also sets, uses and
+# restores the session-global maxPartitionBytes under this lock (see
+# plan_chunk_files).
 PARQUET_WRITE_LOCK = threading.Lock()
 
 
@@ -325,6 +328,174 @@ def _observed_or_readback_totals(obs, spark, stats_path: str) -> tuple[int, int]
             .collect()[0]
         )
         return int(tot["raw"]), int(tot["est"])
+
+
+def write_chunk_files(
+    df: DataFrame,
+    data_path: str,
+    order_keys: list[str],
+    config: BtrBlocksConfig,
+    start: int = 0,
+    total_rows: int | None = None,
+    bounds: list[tuple] | None = None,
+    dictionary: dict[str, bool] | None = None,
+    bloom: dict[str, int] | None = None,
+    drop: tuple[str, ...] = (),
+) -> tuple[int, int]:
+    """Pipeline step 3, shared by ``write_table`` and ``maintenance.compact``:
+    index ``df`` over ``order_keys`` from global index ``start``, stage
+    every chunk whole into one partition, and write the rows (minus the
+    ``drop`` columns) as chunk files under ``data_path``. Rows are
+    _idx-sorted within partitions and every non-final chunk has exactly
+    block_size rows, so ``maxRecordsPerFile`` splits files on exact chunk
+    boundaries: one output file = one chunk (the ColumnPart sizing analog).
+    ``total_rows``/``bounds`` skip the chunker's count and boundary-sample
+    jobs when the caller already measured them. Returns ``(rows, chunks)``
+    written."""
+    chunked = with_chunk_id(
+        df, order_keys, config.block_size, total_rows=total_rows,
+        bounds=bounds, start=start,
+    )
+    num_rows = chunked._btr_total_rows  # free byproduct of the offset job
+    num_chunks = -(-num_rows // config.block_size)
+    write_parquet(
+        _stage_by_chunk(chunked, num_chunks).drop("_chunk", *drop)
+        .write.mode("overwrite")
+        .options(**chunk_write_options(config, dictionary=dictionary, bloom=bloom)),
+        data_path,
+    )
+    return num_rows, num_chunks
+
+
+def plan_chunk_files(
+    spark,
+    path: str,
+    meta: dict,
+    data_path: str,
+    stats_path: str,
+    config: BtrBlocksConfig,
+    keep_chunks: int = 0,
+) -> dict:
+    """Pipeline step 4, shared by ``write_table`` and ``maintenance.compact``:
+    plan every chunk file under ``data_path`` and write the per-chunk stats
+    dataset to ``stats_path``. ``meta`` is the sidecar this write commits
+    (schema, column groups, num_chunks). The first ``keep_chunks`` chunks'
+    stats rows are carried over from the table at ``path`` instead (compact
+    keeps those chunk files untouched): from the ``_btr_chunk_stats``
+    dataset, or from a v1 sidecar's inline rows. Returns the sidecar's
+    ``totals``."""
+    col_types = [(c["name"], c["type"]) for c in meta["schema"]]
+    groups = meta.get("column_groups") or []
+    # plan over the WRITTEN files: every chunk is exactly one file, so the
+    # read-back streams whole chunks with no shuffle, no staging copy, and
+    # the plan reads the compressed bytes a reader will see
+    written = (
+        spark.read.parquet(data_path)
+        .withColumn(
+            "_chunk",
+            F.floor(F.col("_idx") / F.lit(config.block_size)).cast("long"),
+        )
+        .drop("_idx")
+    )
+    # reconstruct group dependents for the stats pass (broadcast null-safe
+    # joins — narrow, so the one-file-per-partition chunk alignment the
+    # mapInPandas kernel relies on is preserved), so the sidecar carries
+    # full chunk stats for EVERY logical column and zone-map pruning on a
+    # dependent works exactly as for stored ones
+    written = reconstruct_column_groups(spark, path, written, meta)
+    # shard the per-chunk stats: plan rows stream from the planning tasks
+    # straight into a parquet dataset, sorted by (column, chunk) so
+    # one-column reads (prune_chunks) row-group-prune. The driver NEVER
+    # materializes them — at 10^12 rows / 64Ki chunks that is ~15M chunks
+    # × columns, a multi-GB collect the round-3 monolithic sidecar design
+    # paid (the reference's single `metadata` file has the same shape,
+    # compression/Datablock.cpp:27-52 — this is where we leave parity
+    # deliberately for scale).
+    plan_df = written.mapInPandas(
+        _plan_partition_fn(
+            col_types, config, {g["dep"]: g["det"] for g in groups}
+        ),
+        _PLAN_SCHEMA,
+    )
+    if groups:
+        # amortize each mapping's ACTUAL on-disk bytes across the chunks of
+        # its dependent: totals (and the compression ratio) then account
+        # the mapping honestly instead of claiming the dependent costs zero
+        amort = {
+            g["dep"]: -(-g["mapping_bytes"] // meta["num_chunks"])
+            for g in groups
+        }
+        est = F.col("est_size")
+        for dep, a in amort.items():
+            est = F.when(F.col("column") == dep, F.lit(int(a))).otherwise(est)
+        plan_df = plan_df.withColumn("est_size", est).withColumn(
+            "est_ratio",
+            F.when(
+                F.col("column").isin(list(amort)),
+                F.round(
+                    F.col("raw_size").cast("double")
+                    / F.greatest(F.col("est_size"), F.lit(1)).cast("double"),
+                    4,
+                ),
+            ).otherwise(F.col("est_ratio")),
+        )
+    if keep_chunks:
+        if "columns" in meta:  # v1 sidecar: inline rows → local frame
+            prefix_rows = [
+                {"column": col, "col_type": info["type"], **ch}
+                for col, info in meta["columns"].items()
+                for ch in info["chunks"]
+                if ch["chunk"] < keep_chunks
+            ]
+            prefix_df = spark.createDataFrame(prefix_rows, _PLAN_SCHEMA)
+        else:
+            prefix_df = spark.read.parquet(
+                _fs.join(path, "_btr_chunk_stats")
+            ).filter(F.col("chunk") < keep_chunks)
+        plan_df = prefix_df.unionByName(plan_df)
+    # (column, chunk) clustering via HASH repartition + in-partition sort,
+    # NOT a global sort: range partitioning's boundary sampling re-executes
+    # the child — i.e. the whole mapInPandas plan kernel ran a SECOND time
+    # just to pick sort boundaries (round-8, guide §1.2). Hash-by-column
+    # keeps each column's rows contiguous and chunk-sorted, which is all
+    # prune_chunks' row-group pruning needs (the accessor re-sorts
+    # driver-side anyway); the exchange moves only tiny stats rows. The
+    # totals ride the SAME job as observe() metrics instead of a read-back
+    # aggregate — two jobs become one.
+    obs = Observation()
+    stats_write = (
+        plan_df.observe(
+            obs,
+            F.coalesce(F.sum("raw_size"), F.lit(0)).alias("raw"),
+            F.coalesce(F.sum("est_size"), F.lit(0)).alias("est"),
+        )
+        .repartition("column")
+        .sortWithinPartitions("column", "chunk")
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+    )
+    # maxPartitionBytes just above the largest file keeps every chunk whole
+    # in one read partition (splitting would emit duplicate plan rows)
+    # while still fanning chunks out across tasks. The conf is
+    # SESSION-global: concurrent writes and compactions must not
+    # interleave set/restore, so the window runs under the engine's one
+    # parquet write lock, which the stats write needs anyway. Everything
+    # above only builds the plan, so the lock is held for the write alone.
+    max_file = max(_fs.list_file_sizes(data_path, ".parquet", spark), default=1)
+    conf = spark.conf
+    with PARQUET_WRITE_LOCK:
+        prev_mpb = conf.get("spark.sql.files.maxPartitionBytes")
+        conf.set("spark.sql.files.maxPartitionBytes", str(max_file + (1 << 20)))
+        try:
+            stats_write.parquet(stats_path)
+        finally:
+            conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
+    total_raw, total_est = _observed_or_readback_totals(obs, spark, stats_path)
+    return {
+        "raw_bytes": total_raw,
+        "est_compressed_bytes": total_est,
+        "est_compression_ratio": round(total_raw / max(total_est, 1), 4),
+    }
 
 
 def _resolve_column_groups(
@@ -571,7 +742,6 @@ def write_table(
     # exact BECAUSE the FD was just validated (each det value has exactly
     # one dep value), and the scan is column-pruned to the two columns
     groups: list[dict] = []
-    group_deps: dict[str, str] = {}
     resolved, group_nd = _resolve_column_groups(
         df, col_types, ndv, total_rows, config, column_groups,
         auto_column_groups, precomputed=group_val,
@@ -610,15 +780,6 @@ def write_table(
              "n_entries": int(group_nd[det]), "mapping_bytes": int(gbytes)}
         )
 
-    chunked = with_chunk_id(
-        df, order_keys, config.block_size, total_rows=total_rows,
-        bounds=bounds,
-    )
-    num_rows = chunked._btr_total_rows  # free byproduct of the offset job
-    num_chunks = max((num_rows + config.block_size - 1) // config.block_size, 1)
-
-    staged = _stage_by_chunk(chunked, int(num_chunks))
-    data_path = _fs.join(path, "data")
     # stats-driven bloom filters on the lookup keys: the reader's point
     # lookup (the reference's `lookup` stub, scheme/CompressionScheme.hpp:45)
     # then skips row groups whose bloom rejects the key — the chunk-stats
@@ -636,136 +797,19 @@ def write_table(
             if dict_enabled.get(col, True) or ndv.get(col, 0) < 1:
                 continue
             bloom_cols[col] = min(ndv[col], config.block_size)
-    # chunk-aligned layout: rows are _idx-sorted within partitions
-    # and every non-final chunk has exactly block_size rows, so
-    # maxRecordsPerFile splits files on exact chunk boundaries → one
-    # output file = one chunk (the ColumnPart sizing analog)
-    # group dependents are NOT written as streams — their values live
-    # in the nd(det)-entry mapping tables; this drop is where the
-    # compression win is banked (the dependent's bytes leave the files)
-    write_parquet(
-        staged.drop("_chunk").drop(*group_deps.keys())
-        .write.mode("overwrite")
-        .options(**chunk_write_options(
-            config,
-            dictionary={
-                c: on for c, on in dict_enabled.items() if c not in group_deps
-            },
-            bloom=bloom_cols,
-        )),
-        data_path,
+    # group dependents are NOT written as streams — their values live in
+    # the nd(det)-entry mapping tables; dropping them from the chunk files
+    # is where the compression win is banked
+    data_path = _fs.join(path, "data")
+    num_rows, num_chunks = write_chunk_files(
+        df, data_path, order_keys, config,
+        total_rows=total_rows, bounds=bounds,
+        dictionary={
+            c: on for c, on in dict_enabled.items() if c not in group_deps
+        },
+        bloom=bloom_cols, drop=tuple(group_deps),
     )
-
-    # plan over the WRITTEN table: every chunk is exactly one file. Setting
-    # maxPartitionBytes to just above the largest file keeps every chunk
-    # whole in one read partition (splitting would emit duplicate plan rows)
-    # while still fanning chunks out across tasks — no shuffle, no staging
-    # copy, and the plan reads the compressed bytes a reader will see.
-    # file sizes via the fs abstraction: os.walk locally, a Hadoop LIST on
-    # object-store URIs (S7) — metadata-only either way
-    max_file = max(_fs.list_file_sizes(data_path, ".parquet", spark), default=1)
-    stats_path = _fs.join(path, "_btr_chunk_stats")
-    spark_conf = spark.conf
-    # maxPartitionBytes is SESSION-global: concurrent write_table calls
-    # (guide §2.6 — callers overlap independent table writes to back-fill
-    # each other's stage tails) must not interleave set/restore or one
-    # write's plan could split a chunk file across two read partitions and
-    # emit duplicate plan rows. This lock serializes only this plan window;
-    # the data write above, with its chunker and exchange stages, is
-    # serialized across calls by PARQUET_WRITE_LOCK, and only the NDV
-    # aggregate, the chunker's offset job and driver work overlap.
-    _PLAN_CONF_LOCK.acquire()
-    prev_mpb = spark_conf.get("spark.sql.files.maxPartitionBytes")
-    spark_conf.set("spark.sql.files.maxPartitionBytes", str(max_file + (1 << 20)))
-    try:
-        written = (
-            spark.read.parquet(data_path)
-            .withColumn(
-                "_chunk",
-                F.floor(F.col("_idx") / F.lit(config.block_size)).cast("long"),
-            )
-            .drop("_idx")
-        )
-        # reconstruct group dependents for the stats pass (broadcast
-        # null-safe joins — narrow, so the one-file-per-partition chunk
-        # alignment the mapInPandas kernel relies on is preserved), so the
-        # sidecar carries full chunk stats for EVERY logical column and
-        # zone-map pruning on a dependent works exactly as for stored ones
-        for g in groups:
-            mp = spark.read.parquet(_fs.join(path, g["path"])).select(
-                F.col(g["det"]).alias("__cg_det"),
-                F.col(g["dep"]).alias(g["dep"]),
-            )
-            written = written.join(
-                F.broadcast(mp),
-                F.col(g["det"]).eqNullSafe(F.col("__cg_det")),
-                "left",
-            ).drop("__cg_det")
-        if groups:
-            written = written.select(*[c for c, _t in col_types], "_chunk")
-        # shard the per-chunk stats: plan rows stream from the planning
-        # tasks straight into a parquet dataset, sorted by (column, chunk)
-        # so one-column reads (prune_chunks) row-group-prune. The driver
-        # NEVER materializes them — at 10^12 rows / 64Ki chunks that is
-        # ~15M chunks × columns, a multi-GB collect the round-3 monolithic
-        # sidecar design paid (the one driver-side bottleneck the judge
-        # flagged; the reference's single `metadata` file has the same
-        # shape, compression/Datablock.cpp:27-52 — this is where we leave
-        # parity deliberately for scale).
-        plan_df = written.mapInPandas(
-            _plan_partition_fn(col_types, config, group_deps), _PLAN_SCHEMA
-        )
-        if groups:
-            # amortize each mapping's ACTUAL on-disk bytes across the
-            # chunks of its dependent: totals (and the compression ratio)
-            # then account the mapping honestly instead of claiming the
-            # dependent costs zero
-            amort = {
-                g["dep"]: -(-g["mapping_bytes"] // max(int(num_chunks), 1))
-                for g in groups
-            }
-            est = F.col("est_size")
-            for dep, a in amort.items():
-                est = F.when(F.col("column") == dep, F.lit(int(a))).otherwise(est)
-            plan_df = plan_df.withColumn("est_size", est).withColumn(
-                "est_ratio",
-                F.when(
-                    F.col("column").isin(list(amort)),
-                    F.round(
-                        F.col("raw_size").cast("double")
-                        / F.greatest(F.col("est_size"), F.lit(1)).cast("double"),
-                        4,
-                    ),
-                ).otherwise(F.col("est_ratio")),
-            )
-        # (column, chunk) clustering via HASH repartition + in-partition
-        # sort, NOT a global sort: range partitioning's boundary sampling
-        # re-executes the child — i.e. the whole mapInPandas plan kernel
-        # ran a SECOND time just to pick sort boundaries (round-8, guide
-        # §1.2). Hash-by-column keeps each column's rows contiguous and
-        # chunk-sorted, which is all prune_chunks' row-group pruning needs
-        # (the accessor re-sorts driver-side anyway); the exchange moves
-        # only tiny stats rows. The totals ride the SAME job as observe()
-        # metrics instead of a read-back aggregate — two jobs become one.
-        obs = Observation()
-        write_parquet(
-            plan_df
-            .observe(
-                obs,
-                F.coalesce(F.sum("raw_size"), F.lit(0)).alias("raw"),
-                F.coalesce(F.sum("est_size"), F.lit(0)).alias("est"),
-            )
-            .repartition("column")
-            .sortWithinPartitions("column", "chunk")
-            .write.mode("overwrite")
-            .option("compression", "zstd"),
-            stats_path,
-        )
-    finally:
-        spark_conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-        _PLAN_CONF_LOCK.release()
-
-    total_raw, total_est = _observed_or_readback_totals(obs, spark, stats_path)
+    num_chunks = max(num_chunks, 1)
     metadata = {
         "format": "btrblocks-spark/v2",
         "table": table_name or os.path.basename(path.rstrip("/")),
@@ -773,7 +817,7 @@ def write_table(
         "order_keys": order_keys,
         "block_size": config.block_size,
         "num_rows": num_rows,
-        "num_chunks": int(num_chunks),
+        "num_chunks": num_chunks,
         "bloom_filters": bloom_cols,
         # dependent columns stored as mapping tables (absent from data
         # files); readers MUST reconstruct via reconstruct_column_groups
@@ -781,12 +825,11 @@ def write_table(
         # per-chunk stats live in the sharded parquet dataset (v2); the
         # sidecar JSON stays O(schema + totals) at any table size
         "chunk_stats": "_btr_chunk_stats",
-        "totals": {
-            "raw_bytes": total_raw,
-            "est_compressed_bytes": total_est,
-            "est_compression_ratio": round(total_raw / max(total_est, 1), 4),
-        },
-        "write_seconds": round(time.time() - t0, 3),
     }
+    metadata["totals"] = plan_chunk_files(
+        spark, path, metadata, data_path, _fs.join(path, "_btr_chunk_stats"),
+        config,
+    )
+    metadata["write_seconds"] = round(time.time() - t0, 3)
     _fs.write_json(_fs.join(path, "_btr_metadata.json"), metadata, spark)
     return metadata

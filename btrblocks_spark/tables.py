@@ -145,33 +145,6 @@ def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 8,
-) -> None:
-    """Persist ``df`` as a catalog table bucketed (and sorted) by
-    ``bucket_cols`` — the co-located-join layout: two tables bucketed the
-    same way join WITHOUT any exchange (each task zips bucket i with
-    bucket i), which at 100 TB removes the dominant shuffle from every
-    recurring join on the bucket key. The analog of pre-partitioning the
-    chunked format by join key.
-
-    Uses the session catalog's managed warehouse (Parquet under
-    ``spark.sql.warehouse.dir``); overwrites any existing table."""
-    from btrblocks_spark.format.writer import PARQUET_WRITE_LOCK
-
-    with PARQUET_WRITE_LOCK:
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(num_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-            .saveAsTable(table_name)
-        )
-
-
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     """SQL front door: register every testdata table as a temp view and run
     ``query`` — the one-liner for users arriving from the reference's

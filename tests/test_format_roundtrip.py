@@ -541,6 +541,53 @@ def test_concurrent_compacts_one_wins_no_wedge(spark, sf_dir, tmp_path):
     assert got.exceptAll(orders).count() == 0
 
 
+def test_compact_matches_one_write_table(spark, sf_dir, tmp_path):
+    """compact() over a partial last chunk plus data-source appends leaves
+    the table one write_table of all the rows would have written: the same
+    chunk stats rows (every column, every chunk), the same totals and the
+    same rows. Rows are compared, not files: a write can leave a 0-row
+    part file beside its chunk files."""
+    from btrblocks_spark.format.maintenance import compact
+    from btrblocks_spark.sources.btr_datasource import BtrBlocksDataSource
+
+    cfg = DEFAULT_CONFIG.with_(block_size=256)
+    orders = load_table(spark, sf_dir, "orders")
+    k = 600
+    head = orders.filter(F.col("o_orderkey") < k)
+    tail = orders.filter(F.col("o_orderkey") >= k)
+    # full chunks to keep, then a partial last chunk; a non-empty append
+    assert head.count() > cfg.block_size
+    assert head.count() % cfg.block_size != 0
+    assert tail.count() > 0
+    path = str(tmp_path / "compacted")
+    write_table(head, path, ["o_orderkey"], cfg, "orders")
+    spark.dataSource.register(BtrBlocksDataSource)
+    tail.write.format("btrblocks").mode("append").save(path)
+    res = compact(spark, path, cfg)
+    assert res["compacted"] is True
+    assert res["full_chunks_kept"] == head.count() // cfg.block_size
+
+    whole = str(tmp_path / "whole")
+    expect_meta = write_table(orders, whole, ["o_orderkey"], cfg, "orders")
+    meta = read_metadata(path)
+    assert meta["num_rows"] == expect_meta["num_rows"]
+    assert meta["num_chunks"] == expect_meta["num_chunks"]
+    assert meta["totals"] == expect_meta["totals"]
+
+    def stats(p):
+        rows = spark.read.parquet(f"{p}/_btr_chunk_stats").collect()
+        return sorted((r.asDict() for r in rows), key=lambda r: (r["column"], r["chunk"]))
+
+    got_stats, expect_stats = stats(path), stats(whole)
+    assert len(expect_stats) == len(meta["schema"]) * meta["num_chunks"]
+    assert got_stats == expect_stats
+
+    got = spark.read.parquet(f"{path}/data")
+    expect = spark.read.parquet(f"{whole}/data")
+    assert got.count() == expect.count()
+    assert got.exceptAll(expect.select(*got.columns)).count() == 0
+
+
 def test_reader_not_wedged_by_busy_commit_lock(spark, sf_dir, tmp_path):
     """A reader that finds a pending journal while a LIVE maintenance op
     holds the commit lock must serve the pre-journal sidecar after its
@@ -2295,8 +2342,8 @@ def test_concurrent_write_table_plan_isolation(spark, sf_dir, tmp_path):
     overlap, guide §2.6) must not interleave the session-global
     maxPartitionBytes window of each other's plan pass: each table's
     sidecar must hold exactly one plan row per (column, chunk) and the
-    round trip must stay bit-exact. Covers the _PLAN_CONF_LOCK added in
-    round 8."""
+    round trip must stay bit-exact. Covers the plan pass holding
+    PARQUET_WRITE_LOCK across its maxPartitionBytes window."""
     from concurrent.futures import ThreadPoolExecutor
 
     orders = load_table(spark, sf_dir, "orders")

@@ -157,7 +157,8 @@ def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path_factory):
     with bucket i. This is the 100 TB answer to recurring joins on a key:
     pay the shuffle once at layout time, never per query."""
     from pyspark.sql import functions as F
-    from btrblocks_spark.tables import load_table, write_bucketed
+    from btrblocks_spark.format.bucketing import write_bucketed
+    from btrblocks_spark.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -282,10 +283,10 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
 
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    write_bucketed(orders, "b_orders", "o_custkey", 8, path=str(tmp_path / "bo"))
+    write_bucketed(orders, "b_orders", ["o_custkey"], 8, path=str(tmp_path / "bo"))
     write_bucketed(
         cust.withColumnRenamed("c_custkey", "o_custkey"),
-        "b_cust", "o_custkey", 8, path=str(tmp_path / "bc"),
+        "b_cust", ["o_custkey"], 8, path=str(tmp_path / "bc"),
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
