@@ -130,6 +130,39 @@ def list_file_sizes(path: str, suffix: str = ".parquet", spark=None) -> list[int
     return out
 
 
+def remove_empty_parquet(path: str, pattern: str, spark=None) -> None:
+    """Delete the 0-row parquet files named ``path/pattern`` (a glob), by
+    the row counts in their footers, with the checksum file Hadoop's local
+    filesystem writes beside each."""
+    if not is_uri(path):
+        import glob
+
+        import pyarrow.parquet as pq
+
+        for f in glob.glob(os.path.join(path, pattern)):
+            if pq.ParquetFile(f).metadata.num_rows == 0:
+                d, name = os.path.split(f)
+                for p in (f, os.path.join(d, f".{name}.crc")):
+                    if os.path.exists(p):
+                        os.remove(p)
+        return
+    if spark is None:
+        raise ValueError(f"removing files under {path!r} needs a SparkSession")
+    jvm = spark._jvm
+    fs, jpath = _jvm_fs(spark, path)
+    conf = spark._jsc.hadoopConfiguration()
+    for status in fs.globStatus(jvm.org.apache.hadoop.fs.Path(jpath, pattern)) or []:
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf)
+        )
+        try:
+            empty = reader.getRecordCount() == 0
+        finally:
+            reader.close()
+        if empty:
+            fs.delete(status.getPath(), False)
+
+
 def exists(path: str, spark=None) -> bool:
     if not is_uri(path):
         return os.path.exists(path)

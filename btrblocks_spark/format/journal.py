@@ -3,13 +3,24 @@ lakehouse layer shares.
 
 The reference format writes each chunk file once and never appends or
 compacts (storage/Chunk.cpp:233-266), so every commit protocol here is our
-own: the datasource batch and stream appends (``_appends.json``), the
-foreachBatch sink (``_stream_batches.json``), ``maintenance.compact``
-(``_compact_journal.json``) and ``copy_into`` (``_copy_journal.json``).
-Each one stages files under a name readers skip, writes its journal with
-``replace_json`` (that ``os.replace`` is the commit point), ``adopt``s the
-staged files, and leaves crash leftovers to ``collect_stale``. All of it
-runs under the table's ``commit_lock``.
+own: appends, ``maintenance.compact`` (``_compact_journal.json``) and
+``copy_into`` (``_copy_journal.json``). Each one stages files under a name
+readers skip, writes its journal with ``replace_json`` (that
+``os.replace`` is the commit point), ``adopt``s the staged files, and
+leaves crash leftovers to ``collect_stale``. All of it runs under the
+table's ``commit_lock``.
+
+Appends have one commit, ``commit_append``, over two logs of the same
+entry shape: ``_appends.json`` (the ``btrblocks`` data source's batch and
+stream writers) and ``_stream_batches.json`` (the foreachBatch sink,
+``streaming.ops.exactly_once_chunked_append``). A commit finishes every
+pending entry it finds, drops a ``(scope, batch)`` replay, writes its
+pending intent, adopts, flips the entry committed and prunes the log
+(``prune_committed_entries``); ``rollback_aborted`` undoes a torn intent
+on abort and ``recover_pending`` finishes pending entries on demand. The
+callers keep only their staging: the data source's ``.inflight`` files
+and the sink's stage dirs, its pre-stage replay skip and its rule for
+entries written before scopes existed.
 
 The versioned-snapshot protocol is the second shape. A table of
 immutable snapshots keeps each one in a ``<prefix>N`` directory and names
@@ -175,6 +186,167 @@ def adopt(renames: dict[str, str]) -> None:
                 f"journal: staged file {src} is gone and {dest} was never "
                 "created — rows lost; journal entry left pending"
             )
+
+
+_FENCE_KEEP = 16  # committed stream entries retained per scope (fence window)
+_BATCH_AUDIT_KEEP = 64  # committed batch-kind entries retained (audit trail)
+
+
+def finish_pending(log: list) -> bool:
+    """Adopt every *pending* append entry's renames and flip it committed —
+    recovery for a committer that crashed after its intent write. Caller
+    holds the table's commit lock (a pending entry observed under the lock
+    belongs to a crashed committer, never a live one) and persists the log.
+    Returns True when the log changed."""
+    changed = False
+    for e in log:
+        if e.get("state") == "pending":
+            adopt(e["renames"])
+            e["state"] = "committed"
+            changed = True
+    return changed
+
+
+def prune_committed_entries(
+    log: list, keep: int = _FENCE_KEEP, batch_keep: int = _BATCH_AUDIT_KEEP
+) -> list:
+    """Bound an append log: an unbounded stream writes one entry per
+    microbatch, and every commit rewrites the WHOLE json — at one batch per
+    10 s that is a multi-MB read-modify-write within a month, a driver-side
+    cost growing with stream lifetime, not stream rate. Structured Streaming
+    only ever replays the single in-flight batch of a checkpoint lineage,
+    so a committed stream entry older than the scope's newest ``keep``
+    batches can never be offered again; drop it. Of the committed
+    batch-kind entries (an audit trail) the newest ``batch_keep`` stay, so
+    frequent small batch appends can't grow the log unbounded either;
+    ``compact`` passes 0 when it re-syncs metadata. Kept unconditionally:
+    pending entries (crash recovery) and entries without a scope key
+    (unknown lineage)."""
+    latest: dict = {}
+    n_batch = 0
+    for e in log:
+        if e.get("state") == "committed" and "scope" in e:
+            latest[e["scope"]] = max(latest.get(e["scope"], -1), e.get("batch", -1))
+        if e.get("kind") == "batch" and e.get("state") == "committed":
+            n_batch += 1
+    drop_batch = max(0, n_batch - batch_keep)  # oldest first
+    out = []
+    for e in log:
+        if (
+            e.get("state") == "committed"
+            and "scope" in e
+            and e.get("batch", -1) <= latest[e["scope"]] - keep
+        ):
+            continue
+        if drop_batch and e.get("kind") == "batch" and e.get("state") == "committed":
+            drop_batch -= 1
+            continue
+        out.append(e)
+    return out
+
+
+def _remove_files(paths: Iterable[str]) -> None:
+    for p in paths:
+        try:
+            os.remove(p)
+        except OSError:
+            pass
+
+
+def recover_pending(path: str, log_name: str) -> int:
+    """Finish the pending entries of the append log ``log_name`` under the
+    table's commit lock; returns how many there were."""
+    log_path = os.path.join(path, log_name)
+    with commit_lock(path):
+        log = load_json(log_path)
+        n = sum(1 for e in log if e.get("state") == "pending")
+        if finish_pending(log):
+            replace_json(log_path, log)
+    return n
+
+
+def commit_append(
+    path: str,
+    log_name: str,
+    renames: dict[str, str],
+    rows: int,
+    fence: tuple | None = None,
+) -> bool:
+    """Commit one append of staged files to the table at ``path``, a
+    write-ahead protocol against its append log ``log_name``: (1) append a
+    *pending* entry recording every staged→final rename, (2) ``adopt`` the
+    renames, (3) flip the entry to committed and prune the log. The intent
+    write (an ``os.replace``) is the single atomic decision point: a crash
+    before it leaves nothing visible, a crash after it is finished by the
+    next commit on the log (or ``recover_pending``).
+
+    ``fence=(scope, batch)`` makes a streaming microbatch replay-safe: when
+    the log already holds that (scope, batch), the call is a replay — the
+    first attempt's entry is finished if it is still pending (its staged
+    files are on disk, named in the log, so nothing is lost), this rerun's
+    staged files are deleted (no duplicates), and the call returns False.
+    A batch append (``fence=None``) writes a ``kind: batch`` entry.
+
+    The whole sequence runs under the table's commit lock: the log update
+    is read-modify-write, and a concurrent committer would otherwise drop
+    our entry — a lost pending entry means its renames never finish. Every
+    pending entry observed under the lock is finished first, whoever wrote
+    it. Returns True when this call appended."""
+    log_path = os.path.join(path, log_name)
+    with commit_lock(path):
+        log = load_json(log_path)
+        recovered = finish_pending(log)
+        if fence is not None:
+            scope, batch = fence
+            if any(e.get("scope") == scope and e.get("batch") == batch for e in log):
+                if recovered:
+                    replace_json(log_path, log)
+                _remove_files(renames)
+                return False
+        entry = (
+            {"kind": "batch"} if fence is None else {"batch": batch, "scope": scope}
+        )
+        entry.update(
+            renames=dict(renames),
+            files=list(renames.values()),
+            rows=rows,
+            state="pending",
+        )
+        log.append(entry)
+        replace_json(log_path, log)  # intent durable BEFORE any file is visible
+        adopt(entry["renames"])
+        entry["state"] = "committed"
+        replace_json(log_path, prune_committed_entries(log))
+    return True
+
+
+def rollback_aborted(path: str, log_name: str, staged: list[str]) -> None:
+    """Abort-side rollback of an append whose staged files are ``staged``.
+    A commit that wrote its pending intent and then failed mid-rename
+    leaves some files visible and some still staged; a bare delete of the
+    staged sources would strand the pending entry with source AND
+    destination missing, and recovery would then raise "rows lost" on every
+    later commit, wedging the table. So the attempt is rolled back whole:
+    renames already performed are undone (destination names are
+    attempt-unique, so deleting them can't touch other commits' data), the
+    entry is dropped, and only then are the staged files cleared."""
+    log_path = os.path.join(path, log_name)
+    staged_set = set(staged)
+    if os.path.exists(log_path):
+        with commit_lock(path):
+            log = load_json(log_path)
+            kept = []
+            for e in log:
+                if e.get("state") == "pending" and staged_set & set(
+                    e.get("renames", {})
+                ):
+                    for src, dest in e["renames"].items():
+                        _remove_files((dest, src))
+                    continue
+                kept.append(e)
+            if len(kept) != len(log):
+                replace_json(log_path, kept)
+    _remove_files(staged)  # task-attempt orphans that never reached a commit
 
 
 def newest_mtime(root: str) -> float:

@@ -40,6 +40,7 @@ from btrblocks_spark.format.journal import (
     commit_lock,
     list_versions,
     load_json,
+    prune_committed_entries,
     read_pointer,
     replace_json,
     swap_pointer,
@@ -298,11 +299,7 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
     from btrblocks_spark.config import DEFAULT_CONFIG
     from btrblocks_spark.format.reader import read_metadata
     from btrblocks_spark.format.writer import plan_chunk_files, write_chunk_files
-    from btrblocks_spark.sources.btr_datasource import (
-        _log_path,
-        _vacuum_inflight_locked,
-        prune_committed_entries,
-    )
+    from btrblocks_spark.sources.btr_datasource import APPEND_LOG, vacuum_inflight
 
     import dataclasses
 
@@ -314,9 +311,9 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
     with commit_lock(path):
         _apply_compact_journal(path)
         _gc_abandoned_stages(path)
-        # orphaned task-attempt .inflight files (crashed before any commit
-        # message named them) — same idle-age contract as the stage GC
-        _vacuum_inflight_locked(path)
+    # orphaned task-attempt .inflight files (crashed before any commit
+    # message named them) — same idle-age contract as the stage GC
+    vacuum_inflight(path)
 
     # A live deletion vector records GLOBAL _idx positions; compaction
     # re-sorts and re-indexes the fragment tail, so the vector's positions
@@ -412,12 +409,13 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         )
         base = keep_k * bs
         # the rewritten tail is indexed on from the kept prefix, and the
-        # table's bloom filters carry over to it: a lookup skips row groups
-        # by bloom, and a compacted file without one would be read by every
-        # point lookup
+        # table's bloom filters and dictionary switches carry over to it: a
+        # lookup skips row groups by bloom, and a compacted file without one
+        # would be read by every point lookup (a sidecar written before the
+        # switches were recorded leaves parquet's default, dictionary on)
         n_frag, new_chunks = write_chunk_files(
             frag_df, tmp_dir, meta["order_keys"], cfg, start=base,
-            bloom=meta.get("bloom_filters"),
+            dictionary=meta.get("dictionary"), bloom=meta.get("bloom_filters"),
         )
         meta["num_rows"] = base + n_frag
         meta["num_chunks"] = keep_k + new_chunks
@@ -494,14 +492,11 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         # audit weight. Stream entries keep their per-scope replay fence
         # (a down stream may still replay its last batch); pending entries
         # keep their crash-recovery role.
-        applog = load_json(_log_path(path))
-        pruned = [
-            e
-            for e in prune_committed_entries(applog)
-            if not (e.get("kind") == "batch" and e.get("state") == "committed")
-        ]
+        applog_path = os.path.join(path, APPEND_LOG)
+        applog = load_json(applog_path)
+        pruned = prune_committed_entries(applog, batch_keep=0)
         if pruned != applog:
-            replace_json(_log_path(path), pruned)
+            replace_json(applog_path, pruned)
     return {
         "compacted": True,
         "files_before": len(files),

@@ -245,10 +245,11 @@ def chunk_write_options(
     bloom: dict[str, int] | None = None,
 ) -> dict[str, str]:
     """Parquet writer options for chunk data files: codec and level, at most
-    one chunk per file, per-column dictionary switches and bloom filters
-    (column -> expected NDV, the sidecar's ``bloom_filters``). Both
-    ``write_table`` and ``maintenance.compact`` write chunk files with
-    these, so a compacted tail keeps the table's bloom filters. A bloom
+    one chunk per file, per-column dictionary switches (the sidecar's
+    ``dictionary``) and bloom filters (column -> expected NDV, the
+    sidecar's ``bloom_filters``). Both ``write_table`` and
+    ``maintenance.compact`` write chunk files with these, so a compacted
+    tail keeps the table's encodings and bloom filters. A bloom
     column is written without a dictionary: parquet-mr omits the bloom of
     a fully dictionary-encoded column chunk."""
     opts = {
@@ -349,9 +350,12 @@ def write_chunk_files(
     _idx-sorted within partitions and every non-final chunk has exactly
     block_size rows, so ``maxRecordsPerFile`` splits files on exact chunk
     boundaries: one output file = one chunk (the ColumnPart sizing analog).
-    ``total_rows``/``bounds`` skip the chunker's count and boundary-sample
-    jobs when the caller already measured them. Returns ``(rows, chunks)``
-    written."""
+    Spark writes a file for partition 0 even when it is empty (so an empty
+    write still leaves a schema), and hashing chunk ids can leave partition
+    0 without a chunk: that 0-row file is removed unless the whole write
+    is empty. ``total_rows``/``bounds`` skip the chunker's count and
+    boundary-sample jobs when the caller already measured them. Returns
+    ``(rows, chunks)`` written."""
     chunked = with_chunk_id(
         df, order_keys, config.block_size, total_rows=total_rows,
         bounds=bounds, start=start,
@@ -364,6 +368,8 @@ def write_chunk_files(
         .options(**chunk_write_options(config, dictionary=dictionary, bloom=bloom)),
         data_path,
     )
+    if num_rows:
+        _fs.remove_empty_parquet(data_path, "part-00000-*", df.sparkSession)
     return num_rows, num_chunks
 
 
@@ -801,13 +807,11 @@ def write_table(
     # the nd(det)-entry mapping tables; dropping them from the chunk files
     # is where the compression win is banked
     data_path = _fs.join(path, "data")
+    dictionary = {c: on for c, on in dict_enabled.items() if c not in group_deps}
     num_rows, num_chunks = write_chunk_files(
         df, data_path, order_keys, config,
         total_rows=total_rows, bounds=bounds,
-        dictionary={
-            c: on for c, on in dict_enabled.items() if c not in group_deps
-        },
-        bloom=bloom_cols, drop=tuple(group_deps),
+        dictionary=dictionary, bloom=bloom_cols, drop=tuple(group_deps),
     )
     num_chunks = max(num_chunks, 1)
     metadata = {
@@ -819,6 +823,9 @@ def write_table(
         "num_rows": num_rows,
         "num_chunks": num_chunks,
         "bloom_filters": bloom_cols,
+        # the NDV-chosen parquet dictionary switch per column: compact
+        # rewrites chunk files with these and the bloom filters
+        "dictionary": dictionary,
         # dependent columns stored as mapping tables (absent from data
         # files); readers MUST reconstruct via reconstruct_column_groups
         "column_groups": groups,

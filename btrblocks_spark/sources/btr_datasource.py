@@ -51,11 +51,12 @@ from pyspark.sql.datasource import (
 )
 
 from btrblocks_spark.format.journal import (
-    adopt,
     collect_stale,
+    commit_append,
     commit_lock,
     load_json,
-    replace_json,
+    recover_pending,
+    rollback_aborted,
 )
 from btrblocks_spark.format.reader import read_metadata
 
@@ -283,7 +284,7 @@ class BtrBlocksStreamReader(DataSourceStreamReader):
         except FileNotFoundError:
             # A file captured in a checkpointed offset can legitimately
             # vanish before this task reads it: (a) a torn batch append's
-            # abort retracted an already-renamed dest (_rollback_aborted) —
+            # abort retracted an already-renamed dest (rollback_aborted) —
             # that data was never committed and the retried job re-appends
             # it under NEW names the stream will pick up; (b) compact()
             # rewrote the tail — the rows live on in the compacted files,
@@ -376,9 +377,13 @@ def _write_chunk_files(
     return files, total
 
 
-# --- write-ahead append log (batch + streaming commits) ----------------------
-# One commit body for both writers (_commit_append); the lock, atomic log
-# writes, adoption and stage GC it runs on live in format/journal.py.
+# --- append commits (batch + streaming writers) ------------------------------
+# Both writers commit through format/journal.py's commit_append against the
+# table's APPEND_LOG; this module keeps only their staging: dot-prefixed
+# ``.inflight`` files in data/, renamed to final names at commit.
+
+APPEND_LOG = "_appends.json"
+
 
 def _final_name(src: str) -> str:
     """Final visible name of a staged file: strip the ``.inflight`` suffix
@@ -392,114 +397,25 @@ def _final_name(src: str) -> str:
     return os.path.join(d, b + ".parquet")
 
 
-def _log_path(path: str) -> str:
-    return os.path.join(path, "_appends.json")
+def _commit(path: str, messages, fence: tuple | None = None) -> None:
+    inflight = [f for m in messages if m for f in m.files]
+    commit_append(
+        path, APPEND_LOG, {f: _final_name(f) for f in inflight},
+        sum(m.rows for m in messages if m), fence,
+    )
 
 
-def _finish_all_pending(log: list) -> bool:
-    """Finish every *pending* entry's renames and flip it committed —
-    recovery for a driver that crashed mid-commit. Caller holds the table's
-    commit lock (any pending entry observed under the lock belongs to a
-    crashed committer, never a live one). Returns True when the log
-    changed."""
-    changed = False
-    for e in log:
-        if e.get("state") == "pending":
-            adopt(e["renames"])
-            e["state"] = "committed"
-            changed = True
-    return changed
-
-
-def _rollback_aborted(path: str, files: list) -> None:
-    """Abort-side WAL rollback. A commit that wrote its pending intent and
-    then failed mid-rename leaves some files visible and some ``.inflight``;
-    a bare delete of the inflight sources (the old abort) would strand the
-    pending entry with src AND dest missing — recovery would then raise
-    "rows lost" on every future commit, wedging the table. Since the driver
-    is alive enough to call abort, roll the attempt back WHOLE instead:
-    undo any renames already performed (dest names are attempt-unique, so
-    deleting them can't touch other commits' data), drop the entry, and
-    only then clear this attempt's staged files."""
-    fileset = set(files)
-    if os.path.exists(_log_path(path)):
-        with commit_lock(path):
-            log = load_json(_log_path(path))
-            kept, changed = [], False
-            for e in log:
-                if e.get("state") == "pending" and fileset & set(
-                    e.get("renames", {})
-                ):
-                    for src, dest in e["renames"].items():
-                        for p in (dest, src):
-                            try:
-                                os.remove(p)
-                            except OSError:
-                                pass
-                    changed = True
-                    continue
-                kept.append(e)
-            if changed:
-                replace_json(_log_path(path), kept)
-    for f in files:  # task-attempt orphans that never reached a commit
-        try:
-            os.remove(f)
-        except OSError:
-            pass
-
-
-_FENCE_KEEP = 16  # committed stream entries retained per scope (fence window)
-_BATCH_AUDIT_KEEP = 64  # committed batch-kind entries retained (audit trail)
-
-
-def prune_committed_entries(log: list, keep: int = _FENCE_KEEP) -> list:
-    """Bound the append WAL: an unbounded stream writes one entry per
-    microbatch, and every commit rewrites the WHOLE json — at one batch per
-    10 s that is a multi-MB read-modify-write within a month, a driver-side
-    cost growing with stream lifetime, not stream rate. Structured Streaming
-    only ever replays the single in-flight batch of a checkpoint lineage,
-    so a committed stream entry older than the scope's newest ``keep``
-    batches can never be offered again; drop it. Kept unconditionally:
-    pending entries (crash recovery), batch-kind entries (audit trail —
-    ``compact`` clears those when it re-syncs metadata — and a rolling
-    ``_BATCH_AUDIT_KEEP`` newest are always retained so frequent small
-    batch appends can't grow the log unbounded between compactions either),
-    and legacy entries without a scope key (unknown lineage)."""
-    latest: dict = {}
-    n_batch = 0
-    for e in log:
-        if e.get("state") == "committed" and "scope" in e:
-            latest[e["scope"]] = max(latest.get(e["scope"], -1), e.get("batch", -1))
-        if e.get("kind") == "batch" and e.get("state") == "committed":
-            n_batch += 1
-    drop_batch = max(0, n_batch - _BATCH_AUDIT_KEEP)  # oldest first
-    out = []
-    for e in log:
-        if (
-            e.get("state") == "committed"
-            and "scope" in e
-            and e.get("batch", -1) <= latest[e["scope"]] - keep
-        ):
-            continue
-        if drop_batch and e.get("kind") == "batch" and e.get("state") == "committed":
-            drop_batch -= 1
-            continue
-        out.append(e)
-    return out
+def _abort(path: str, messages) -> None:
+    rollback_aborted(path, APPEND_LOG, [f for m in messages if m for f in m.files])
 
 
 def recover_pending_appends(path: str) -> int:
     """Public crash-recovery hook: finish any pending append entries left by
-    a committer that died between the WAL intent write and the final flip.
+    a committer that died between the intent write and the final flip.
     Runs automatically at the start of every batch/stream commit; callable
     directly (e.g. before maintenance) to bound the invisibility window.
     Returns the number of entries recovered."""
-    with commit_lock(path):
-        log = load_json(_log_path(path))
-        n = sum(1 for e in log if e.get("state") == "pending")
-        if n and _finish_all_pending(log):
-            replace_json(_log_path(path), log)
-    return n
+    return recover_pending(path, APPEND_LOG)
 
 
 def _validate_append_schema(path: str, schema) -> tuple[list[str], int]:
@@ -534,111 +450,35 @@ def _validate_append_schema(path: str, schema) -> tuple[list[str], int]:
     return declared, int(meta["block_size"])
 
 
-def _vacuum_inflight_locked(path: str, max_age_sec: float = 3600.0) -> int:
-    """Remove staged ``.inflight`` files no pending WAL entry references and
-    idle past ``max_age_sec``. A task attempt that crashes (or loses a
+def vacuum_inflight(path: str, max_age_sec: float = 3600.0) -> int:
+    """Remove staged ``.inflight`` files no pending append entry references
+    and idle past ``max_age_sec``. A task attempt that crashes (or loses a
     speculative race) before returning its commit message is referenced by
     NEITHER commit nor abort — without this sweep its invisible dot-files
     leak storage forever, proportional to failure count x partition size.
-    Caller must hold the table's commit lock (a pending entry observed
-    under the lock pins its sources; everything else old enough is
-    garbage — live tasks keep their file mtimes fresh while writing)."""
+    Runs under the table's commit lock (a pending entry observed under the
+    lock pins its sources; everything else old enough is garbage — live
+    tasks keep their file mtimes fresh while writing); also runs at every
+    ``maintenance.compact`` start."""
     data_dir = os.path.join(path, "data")
-    if not os.path.isdir(data_dir):
-        return 0
-    referenced = {
-        src
-        for e in load_json(_log_path(path))
-        if e.get("state") == "pending"
-        for src in e.get("renames", {})
-    }
-    return collect_stale(
-        (
-            [os.path.join(data_dir, f)]
-            for f in os.listdir(data_dir)
-            if f.endswith(".inflight")
-        ),
-        referenced,
-        max_age_sec,
-    )
-
-
-def vacuum_inflight(path: str, max_age_sec: float = 3600.0) -> int:
-    """Public orphan-stage GC hook (see ``_vacuum_inflight_locked``); also
-    runs automatically at every ``maintenance.compact`` start."""
     with commit_lock(path):
-        return _vacuum_inflight_locked(path, max_age_sec)
-
-
-def _commit_append(path: str, messages, fence: tuple | None = None) -> None:
-    """Driver-side commit of one batch append (``fence=None``) or one
-    streaming microbatch (``fence=(scope, batchId)``) — a write-ahead
-    protocol against ``_appends.json``: (1) append a *pending* entry
-    recording every inflight→final rename, (2) perform the renames, (3)
-    flip the entry to committed. The intent write (an ``os.replace``) is
-    the single atomic decision point. The old order (rename first, journal
-    last) left a torn append on a driver crash mid-loop — some files
-    visible, some .inflight, no log entry — contradicting the
-    all-or-nothing contract. With the WAL, a crash before the intent write
-    leaves nothing visible (abort semantics); a crash after it is finished
-    by recovery at the next commit on this table (or an explicit
-    recover_pending_appends call), and a replayed microbatch finds its
-    entry by fence: a pending entry's renames are COMPLETED from the
-    original attempt's still-on-disk inflight files (deterministic names in
-    the log — no loss), a committed entry drops the rerun (no duplicates).
-
-    The whole sequence runs under the table's commit lock: the log update
-    is read-modify-write, and a concurrent committer (another query on this
-    table, or a batch append) would otherwise drop our entry — losing a
-    pending entry means the renames never finish and its rows stay
-    invisible forever."""
-    inflight = [f for m in messages if m for f in m.files]
-    scope, batch = fence or (None, None)
-    with commit_lock(path):
-        log = load_json(_log_path(path))
-        if fence is not None:
-            prior = next(
-                (
-                    e
-                    for e in log
-                    if e.get("batch") == batch and e.get("scope") == scope
-                ),
-                None,
-            )
-            if prior is not None:
-                if prior.get("state") == "pending":
-                    # first attempt crashed mid-rename: finish ITS renames,
-                    # then mark committed — the rerun's files are duplicates
-                    adopt(prior["renames"])
-                    prior["state"] = "committed"
-                    replace_json(_log_path(path), log)
-                for f in inflight:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                return
-        # adopt any OTHER crashed committer's pending entries (a torn
-        # batch append, or another query's microbatch) while we hold the
-        # lock — bounds the invisibility window to the next commit
-        _finish_all_pending(log)
-        entry = (
-            {"kind": "batch"} if fence is None else {"batch": batch, "scope": scope}
+        if not os.path.isdir(data_dir):
+            return 0
+        referenced = {
+            src
+            for e in load_json(os.path.join(path, APPEND_LOG))
+            if e.get("state") == "pending"
+            for src in e.get("renames", {})
+        }
+        return collect_stale(
+            (
+                [os.path.join(data_dir, f)]
+                for f in os.listdir(data_dir)
+                if f.endswith(".inflight")
+            ),
+            referenced,
+            max_age_sec,
         )
-        entry.update(
-            renames={f: _final_name(f) for f in inflight},
-            files=[_final_name(f) for f in inflight],
-            rows=sum(m.rows for m in messages if m),
-            state="pending",
-        )
-        log.append(entry)
-        # intent durable BEFORE any file is visible
-        replace_json(_log_path(path), log)
-        adopt(entry["renames"])
-        entry["state"] = "committed"
-        # bound the log: committed entries beyond the scope's replay
-        # window can never be offered again (see prune_committed_entries)
-        replace_json(_log_path(path), prune_committed_entries(log))
 
 
 class BtrBlocksWriter(DataSourceArrowWriter):
@@ -649,9 +489,10 @@ class BtrBlocksWriter(DataSourceArrowWriter):
     ``maintenance.compact`` re-aligns chunks and re-syncs the sidecar).
     Tasks stage ``.inflight`` files (invisible to readers — failed/retried
     attempts leave no visible orphans); the driver-side commit renames the
-    winning attempts' files to final ``.parquet`` names under the table's
-    commit lock and appends an entry to the ``_appends.json`` log;
-    ``abort`` deletes every staged file — all-or-nothing at the job level.
+    winning attempts' files to final ``.parquet`` names through
+    ``journal.commit_append`` (a ``kind: batch`` entry in ``_appends.json``);
+    ``abort`` rolls a torn intent back and deletes every staged file —
+    all-or-nothing at the job level.
 
     Append-only by design: overwrite of a chunked table must go through
     ``format.writer.write_table`` (chunk alignment + scheme planning is
@@ -677,14 +518,10 @@ class BtrBlocksWriter(DataSourceArrowWriter):
         return AppendCommit(tuple(files), total)
 
     def commit(self, messages) -> None:
-        _commit_append(self.path, messages)
+        _commit(self.path, messages)
 
     def abort(self, messages) -> None:
-        # roll back a failed commit's pending intent whole (see
-        # _rollback_aborted) before clearing task-attempt orphans
-        _rollback_aborted(
-            self.path, [f for m in messages if m for f in m.files]
-        )
+        _abort(self.path, messages)
 
 
 class BtrBlocksStreamWriter(DataSourceStreamArrowWriter):
@@ -693,14 +530,14 @@ class BtrBlocksStreamWriter(DataSourceStreamArrowWriter):
 
     Per microbatch: each task writes its Arrow batches as chunk-shaped
     ``.inflight`` files (invisible to every reader — they all list only
-    ``*.parquet``); the driver-side ``commit(messages, batchId)`` runs a
-    write-ahead protocol against ``_appends.json``: append a *pending*
-    entry recording every inflight→final rename, perform the renames, flip
-    the entry to *committed*. The intent write is the single atomic
-    decision point, so a crash anywhere recovers exactly-once on replay:
-    a pending entry's renames are completed from the FIRST attempt's
-    still-on-disk inflight files (no loss), a committed entry deletes the
-    rerun's files (no duplicates).
+    ``*.parquet``); the driver-side ``commit(messages, batchId)`` is
+    ``journal.commit_append`` against ``_appends.json``, fenced on
+    ``(scope, batchId)``: a pending intent recording every inflight→final
+    rename, the renames, the flip to *committed*. The intent write is the
+    single atomic decision point, so a crash anywhere recovers exactly-once
+    on replay: a pending entry's renames are completed from the FIRST
+    attempt's still-on-disk inflight files (no loss), and a replay of a
+    journaled batch deletes the rerun's files (no duplicates).
 
     Exactly-once: Spark replays a microbatch only after a failure between
     the sink commit and the checkpoint commit, with the SAME batchId from
@@ -710,8 +547,9 @@ class BtrBlocksStreamWriter(DataSourceStreamArrowWriter):
     start without one — a shared guessed scope would let two queries
     shadow each other's batchIds and silently drop data). Re-running with
     a FRESH checkpoint is a new scope and appends normally. ``abort``
-    removes every in-flight file, so a failed epoch leaves no visible
-    data: all-or-nothing per microbatch.
+    rolls a torn intent back whole and removes every in-flight file, so a
+    failed epoch leaves no visible data and Spark's replay finds a clean
+    slate: all-or-nothing per microbatch.
 
     Scale: data bytes move only inside executor tasks; commit is O(files
     in this epoch) driver-side renames — on an object store route these
@@ -749,15 +587,10 @@ class BtrBlocksStreamWriter(DataSourceStreamArrowWriter):
         return AppendCommit(tuple(files), total)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
-        _commit_append(self.path, messages, fence=(self.scope, batchId))
+        _commit(self.path, messages, (self.scope, batchId))
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
-        # roll back a failed commit's pending intent whole — Spark will
-        # replay this batch, and the replay must find a clean slate, not a
-        # half-renamed entry whose sources a bare delete would strand
-        _rollback_aborted(
-            self.path, [f for m in messages if m for f in m.files]
-        )
+        _abort(self.path, messages)
 
 
 class BtrBlocksDataSource(DataSource):

@@ -1,10 +1,12 @@
 """Streaming operators: source, watermarked windows, chunk-aligned append
 sink, and a custom stateful sessionizer.
 
-The sinks' commit steps live in format/journal.py: the chunked appends use
-its write-ahead journal, and ``streaming_upsert`` its versioned-snapshot
-protocol (version claim, ``_latest`` swap, vacuum), shared with the DML
-verbs of format/maintenance.py that write the same tables."""
+The sinks' commit steps live in format/journal.py. The chunked append sink
+commits with ``journal.commit_append`` — the append commit of the
+``btrblocks`` data source — on its own log, ``_stream_batches.json``;
+``streaming_upsert`` uses the versioned-snapshot protocol (version claim,
+``_latest`` swap, vacuum), shared with the DML verbs of
+format/maintenance.py that write the same tables."""
 
 from __future__ import annotations
 
@@ -27,17 +29,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from btrblocks_spark.format.journal import (
-    adopt,
-    claim_version,
-    commit_lock,
-    load_json,
-    read_pointer,
-    replace_json,
-    swap_pointer,
-    vacuum_versions,
-    version_dir,
-)
+from btrblocks_spark.format import journal
 from btrblocks_spark.format.maintenance import read_version
 from btrblocks_spark.format.writer import write_parquet
 
@@ -106,16 +98,20 @@ def exactly_once_chunked_append(
     """Replay-safe chunk-aligned append for foreachBatch sinks. foreachBatch
     is at-least-once: a plain ``mode("append")`` duplicates the batch's rows
     when a crash lands between the write and the checkpoint commit. Here the
-    batch is journaled instead:
+    batch is journaled in the table's ``_stream_batches.json``:
 
-      1. recovery: if this (scope, batch id) is already *committed* in the
-         table's ``_stream_batches.json``, the rerun is dropped; if
-         *pending*, the FIRST attempt's staged files are adopted to
-         completion.
-      2. stage to ``_stream_stage/<scope-hash>/batch=<id>`` (mode overwrite
-         — a replay reproduces the stage byte-for-byte),
-      3. journal a pending entry mapping stage files to final
-         ``data/stream-…-b<id>-<i>.parquet`` names, rename, flip committed.
+      1. pre-stage check, under the commit lock: pending entries are
+         finished, and if this (scope, batch id) is already journaled the
+         rerun is dropped before it stages anything;
+      2. stage to ``_stream_stage/<scope-hash>/batch=<id>-<uuid>``;
+      3. ``journal.commit_append`` with the fence (scope, batch id): the
+         pending intent maps stage files to final
+         ``data/stream-…-b<id>-<commit>-<i>.parquet`` names, the renames
+         run, the entry flips committed. A rival that journaled the same
+         batch while we staged wins, and our stage is dropped.
+
+    This is the data source's append commit (format/journal.py) on a log of
+    its own; the sink keeps only its staging and the pre-stage check.
 
     ``scope`` is the replay fence's identity — pass the query's CHECKPOINT
     location (``chunked_append`` does). batchIds are only unique per
@@ -125,16 +121,11 @@ def exactly_once_chunked_append(
     drop their data (the btrblocks streaming sink refuses to run without a
     ``commitScope`` for exactly this reason, btr_datasource.py). Required;
     entries written by pre-scope versions of this helper (no ``scope`` key)
-    still fence by bare batch id, preserving their replay safety.
-
-    Same WAL shape as the btrblocks streaming sink, on the shared commit
-    journal (format/journal.py: its ``adopt`` creates ``data/`` for a
-    first batch that crashed before it existed, and raises on a lost
-    stage); the log update runs under the table's commit lock."""
+    still fence the upgrade replay in the pre-stage check (``legacy_replay``)."""
     import hashlib
     import uuid
 
-    from btrblocks_spark.sources.btr_datasource import prune_committed_entries
+    import pyarrow.parquet as pq
 
     if not scope:
         raise ValueError(
@@ -143,9 +134,10 @@ def exactly_once_chunked_append(
             "per checkpoint lineage"
         )
 
-    log_path = os.path.join(path, "_stream_batches.json")
+    log_name = "_stream_batches.json"
+    log_path = os.path.join(path, log_name)
 
-    def find_prior(log: list):
+    def legacy_replay(log: list) -> bool:
         # legacy entries (pre-scope versions of this helper) have no
         # checkpoint lineage recorded. A genuine upgrade replay is always
         # the caller scope's FIRST commit (the lineage's prior batches are
@@ -160,50 +152,13 @@ def exactly_once_chunked_append(
         # exactly on legacy_max is indistinguishable from the genuine
         # replay and is dropped — bounded to one batch per table lifetime
         # because the fence CLAIMS the legacy entries into the caller's
-        # scope (see below), after which no scope-less entry remains.
-        # Computed from the SAME log snapshot the fence check reads,
-        # under the same lock.
-        scope_seen = any(e.get("scope") == scope for e in log)
-        legacy_max = max(
-            (e.get("batch", -1) for e in log if "scope" not in e), default=None
+        # scope (below), after which no scope-less entry remains.
+        legacy = [e.get("batch", -1) for e in log if "scope" not in e]
+        return (
+            bool(legacy)
+            and batch_id == max(legacy)
+            and not any(e.get("scope") == scope for e in log)
         )
-        for e in log:
-            if e.get("batch") != batch_id:
-                continue
-            if "scope" in e and e.get("scope") == scope:
-                return e
-            if "scope" not in e and not scope_seen and batch_id == legacy_max:
-                return e
-        return None
-
-    def finish_pending_legacy(log: list) -> bool:
-        # crash RECOVERY, distinct from replay fencing: a pending entry
-        # observed under the commit lock always belongs to a crashed
-        # committer (every commit holds the lock from journal write to the
-        # committed flip). A scope-less pending entry's lineage is unknown,
-        # so no future scoped caller is guaranteed to match it — adopt its
-        # staged files to completion here, unconditionally, or the torn
-        # commit's rows stay invisible forever.
-        changed = False
-        for e in log:
-            if "scope" not in e and e.get("state") == "pending":
-                adopt(e["renames"])
-                e["state"] = "committed"
-                changed = True
-        return changed
-
-    def claim_legacy(log: list, prior: dict) -> bool:
-        # fence fired on a scope-less entry: by the rule above the caller
-        # IS the pre-upgrade lineage continuing, so stamp every legacy
-        # entry with its scope (one-time migration). Consumes the upgrade
-        # hazard — future NEW scopes can never match these entries — and
-        # lets prune_committed_entries age them out like any scoped entry.
-        if "scope" in prior:
-            return False
-        for e in log:
-            if "scope" not in e:
-                e["scope"] = scope
-        return True
 
     scope_tag = hashlib.blake2b(scope.encode(), digest_size=8).hexdigest()
     stage_root = os.path.join(path, "_stream_stage", scope_tag)
@@ -218,32 +173,26 @@ def exactly_once_chunked_append(
                 if d.startswith(f"batch={batch_id}-"):
                     shutil.rmtree(os.path.join(stage_root, d), ignore_errors=True)
 
-    def settle(log: list) -> bool:
-        # runs under the lock on each snapshot of the log (before staging,
-        # and again before committing): recover crashed committers, then
-        # report whether this (scope, batch) is already journaled. A pending
-        # prior means its committer CRASHED after its commit point (every
-        # committer holds the lock from journal write to the committed
-        # flip): adopt its staged files to completion, don't restage —
-        # returning without finishing would let the checkpoint advance past
-        # a batch whose rows stay invisible forever (nothing else heals
-        # scoped pendings). Persists the log when recovery changed it.
-        changed = finish_pending_legacy(log)
-        prior = find_prior(log)
-        if prior is not None:
-            changed = claim_legacy(log, prior) or changed
-            if prior.get("state") == "pending":
-                adopt(prior["renames"])
-                prior["state"] = "committed"
-                changed = True
+    with journal.commit_lock(path):
+        log = journal.load_json(log_path)
+        changed = journal.finish_pending(log)
+        journaled = any(
+            e.get("scope") == scope and e.get("batch") == batch_id for e in log
+        )
+        if not journaled and legacy_replay(log):
+            # the caller IS the pre-upgrade lineage continuing: stamp every
+            # legacy entry with its scope (one-time migration). Consumes the
+            # upgrade hazard — future NEW scopes can never match these
+            # entries — and lets the log prune age them out like any scoped
+            # entry.
+            for e in log:
+                e.setdefault("scope", scope)
+            changed = journaled = True
         if changed:
-            replace_json(log_path, log)
-        return prior is not None
-
-    with commit_lock(path):
-        if settle(load_json(log_path)):
-            clean_stages()
-            return
+            journal.replace_json(log_path, log)
+    if journaled:
+        clean_stages()
+        return
     stage = os.path.join(stage_root, f"batch={batch_id}-{uuid.uuid4().hex}")
     write_parquet(
         batch_df.write.mode("overwrite")
@@ -257,42 +206,25 @@ def exactly_once_chunked_append(
         for f in fs
         if f.endswith(".parquet")
     )
-    with commit_lock(path):
-        log = load_json(log_path)
-        if settle(log):  # lost a race
-            shutil.rmtree(stage, ignore_errors=True)
-            return
-        # uuid in the FINAL name: a same-path checkpoint reset (delete the
-        # checkpoint dir, restart at the same location) restarts batch ids
-        # at 0 under the SAME scope string, and once the first lineage's
-        # batch-0 entry ages past the prune window no fence fires — a
-        # deterministic name would let adopt() os.replace the first
-        # lineage's COMMITTED batch-0 file (silent loss of committed rows).
-        # Replay adoption never needs name determinism: recovery renames
-        # come from the journaled entry, not from recomputing names.
-        commit_id = uuid.uuid4().hex[:12]
-        entry = {
-            "batch": batch_id,
-            "scope": scope,
-            "renames": {
-                s: os.path.join(
-                    path,
-                    "data",
-                    f"stream-{scope_tag}-b{batch_id}-{commit_id}-{i:05d}.parquet",
-                )
-                for i, s in enumerate(staged)
-            },
-            "state": "pending",
-        }
-        log.append(entry)
-        replace_json(log_path, log)  # commit point
-        adopt(entry["renames"])
-        entry["state"] = "committed"
-        # bound the journal: a long-lived stream writes one entry per batch
-        # and every commit rewrites the whole file — committed entries past
-        # the scope's replay window are dead weight (Structured Streaming
-        # only replays the single in-flight batch of a checkpoint lineage)
-        replace_json(log_path, prune_committed_entries(log))
+    # uuid in the FINAL name: a same-path checkpoint reset (delete the
+    # checkpoint dir, restart at the same location) restarts batch ids at 0
+    # under the SAME scope string, and once the first lineage's batch-0
+    # entry ages past the prune window no fence fires — a deterministic
+    # name would let adopt() os.replace the first lineage's COMMITTED
+    # batch-0 file (silent loss of committed rows). Replay adoption never
+    # needs name determinism: recovery renames come from the journaled
+    # entry, not from recomputing names.
+    commit_id = uuid.uuid4().hex[:12]
+    renames = {
+        s: os.path.join(
+            path, "data", f"stream-{scope_tag}-b{batch_id}-{commit_id}-{i:05d}.parquet"
+        )
+        for i, s in enumerate(staged)
+    }
+    rows = sum(pq.ParquetFile(s).metadata.num_rows for s in staged)
+    # a rival that journaled this batch while we staged wins: commit_append
+    # drops our staged files, and clean_stages our stage dir
+    journal.commit_append(path, log_name, renames, rows, (scope, batch_id))
     clean_stages()
 
 
@@ -510,7 +442,7 @@ def read_snapshot(spark: SparkSession, table_dir: str) -> DataFrame | None:
     """Latest committed snapshot of a versioned table (None before the
     first commit). Readers only ever see a fully-written version directory:
     the ``_latest`` pointer is swapped atomically after the write lands."""
-    v = read_pointer(table_dir)
+    v = journal.read_pointer(table_dir)
     return None if v is None else read_version(spark, table_dir, v)
 
 
@@ -556,7 +488,7 @@ def streaming_upsert(
         # the other's merged rows — the same window catalog.commit_tables
         # locks. The DML verbs commit to this table without the lock;
         # claim_version's mkdir keeps their v=N apart from ours.
-        with commit_lock(table_dir):
+        with journal.commit_lock(table_dir):
             current = read_snapshot(spark, table_dir)
             order = [F.desc(c) for c in (order_by or [])]
             if current is None:
@@ -565,18 +497,18 @@ def streaming_upsert(
                 merged = merge_upsert(empty, batch_df, keys, order)
             else:
                 merged = merge_upsert(current, batch_df, keys, order)
-            next_v = claim_version(table_dir, "v=")
-            out = version_dir(table_dir, "v=", next_v)
+            next_v = journal.claim_version(table_dir, "v=")
+            out = journal.version_dir(table_dir, "v=", next_v)
             try:
                 write_parquet(merged.drop("op").write.mode("overwrite"), out)
-                swap_pointer(table_dir, next_v)
+                journal.swap_pointer(table_dir, next_v)
             except BaseException:
                 # an uncommitted v=N would be served by time travel
                 shutil.rmtree(out, ignore_errors=True)
                 raise
             # bounded history (still under the lock): staleness AND
             # wall-time age required, so a just-served snapshot survives
-            vacuum_versions(table_dir, "v=", keep_versions, next_v, min_retain_sec)
+            journal.vacuum_versions(table_dir, "v=", keep_versions, next_v, min_retain_sec)
 
     writer = stream.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint

@@ -464,10 +464,8 @@ def test_append_log_stays_bounded(spark, sf_dir, tmp_path):
 
     import pyarrow as pa
 
-    from btrblocks_spark.sources.btr_datasource import (
-        BtrBlocksStreamWriter,
-        prune_committed_entries,
-    )
+    from btrblocks_spark.format.journal import prune_committed_entries
+    from btrblocks_spark.sources.btr_datasource import BtrBlocksStreamWriter
 
     nation = load_table(spark, sf_dir, "nation")
     dst = str(tmp_path / "bounded")

@@ -317,11 +317,33 @@ def _bloom_offsets(spark, file_path: str, column: str) -> list[int]:
         reader.close()
 
 
+def _dictionary_pages(file_path: str) -> dict[str, set[bool]]:
+    """Per column, whether its column chunks start with a dictionary page
+    (parquet dictionary encoding on), over every row group of the file."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(file_path).metadata
+    out: dict[str, set[bool]] = {}
+    for rg in range(md.num_row_groups):
+        for c in range(md.num_columns):
+            col = md.row_group(rg).column(c)
+            out.setdefault(col.path_in_schema, set()).add(col.has_dictionary_page)
+    return out
+
+
 def test_compact_keeps_bloom_filters(spark, tmp_path):
-    """compact() rewrites the fragment tail with the table's bloom filters:
-    after an append and a compact, every data file — the untouched full
-    chunks and the new compacted-* files — carries a bloom filter on the
-    bloomed key, as the sidecar's ``bloom_filters`` says."""
+    """compact() rewrites the fragment tail with the table's bloom filters
+    and dictionary switches: after an append and a compact, every data file
+    — the untouched full chunks and the new compacted-* files — carries a
+    bloom filter on the bloomed key, as the sidecar's ``bloom_filters``
+    says, and every column is dictionary-encoded in the compacted-* files
+    exactly when it is in the part-* files write_table wrote. ``tens``
+    (NDV 5,000 in the written rows, above block_size // 4, so written
+    without a dictionary, but each value repeats ten times) keeps a
+    dictionary page whenever one is switched on; an all-distinct column
+    like ``val`` falls back to plain pages either way."""
+    import os
+
     from btrblocks_spark.format.fs import list_parquet_files
     from btrblocks_spark.format.maintenance import compact
     from btrblocks_spark.format.reader import read_metadata
@@ -331,6 +353,7 @@ def test_compact_keeps_bloom_filters(spark, tmp_path):
         "id AS uid",
         "CAST(id % 7 AS INT) AS small_key",
         "CAST(id * 37 % 100000 AS DOUBLE) AS val",
+        "id DIV 10 AS tens",
     )
     path = str(tmp_path / "bloomed")
     write_table(df, path, ["uid", "small_key"], DEFAULT_CONFIG.with_(block_size=8192))
@@ -341,6 +364,7 @@ def test_compact_keeps_bloom_filters(spark, tmp_path):
             "id AS uid",
             "CAST(id % 7 AS INT) AS small_key",
             "CAST(id * 37 % 100000 AS DOUBLE) AS val",
+            "id DIV 10 AS tens",
         )
         .write.format("btrblocks").mode("append").option("path", path).save()
     )
@@ -354,6 +378,45 @@ def test_compact_keeps_bloom_filters(spark, tmp_path):
         assert offsets and all(o > 0 for o in offsets), (f, offsets)
     got = spark.read.parquet(f"{path}/data").filter(F.col("uid") == 52345)
     assert [r.small_key for r in got.collect()] == [52345 % 7]
+
+    def encodings(prefix: str) -> list[dict]:
+        return [
+            _dictionary_pages(f) for f in files
+            if os.path.basename(f).startswith(prefix)
+        ]
+
+    written, compacted = encodings("part-"), encodings("compacted-")
+    assert written and compacted
+    for col in ("uid", "small_key", "val", "tens"):
+        want = {b for enc in written for b in enc[col]}
+        assert len(want) == 1, (col, want)
+        assert all(enc[col] == want for enc in compacted), (col, compacted)
+
+
+def test_write_table_leaves_one_file_per_chunk(spark, tmp_path):
+    """write_table writes one file per chunk and no 0-row file. The chunk
+    write hashes chunk ids onto partitions, and Spark writes a file for
+    partition 0 even when no chunk hashed there: 2,000 rows at block_size
+    64 on the test session (32 chunks onto 32 partitions) left a 0-row
+    part-00000 file, 33 files for 32 chunks, and a compact() right after
+    the write then rewrote it with the partial last chunk. Now the files
+    are the chunks, and that compact() has nothing to do."""
+    import pyarrow.parquet as pq
+
+    from btrblocks_spark.format.fs import list_parquet_files
+    from btrblocks_spark.format.maintenance import compact
+
+    df = spark.range(2000).selectExpr("id AS k", "CAST(id % 13 AS INT) AS v")
+    path = str(tmp_path / "one_file_per_chunk")
+    meta = write_table(df, path, ["k"], DEFAULT_CONFIG.with_(block_size=64))
+    rows = [
+        pq.ParquetFile(f).metadata.num_rows
+        for f in list_parquet_files(f"{path}/data")
+    ]
+    assert meta["num_chunks"] == 32
+    assert len(rows) == meta["num_chunks"]
+    assert 0 not in rows and sum(rows) == 2000
+    assert compact(spark, path)["compacted"] is False
 
 
 def test_random_split_strategy(spark, sf_dir):

@@ -86,6 +86,24 @@ def test_list_file_sizes_uri_matches_local(spark, sf_dir, uri_dir):
     assert sizes_local == sizes_uri and len(sizes_local) >= 1
 
 
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_remove_empty_parquet(spark, tmp_path, scheme):
+    """Only the 0-row files the glob names go, with their checksum files;
+    a local path takes the os route, a URI the Hadoop FileSystem."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    empty = pa.table({"a": pa.array([], pa.int64())})
+    pq.write_table(empty, tmp_path / "part-00000-x.parquet")
+    (tmp_path / ".part-00000-x.parquet.crc").write_bytes(b"crc")
+    pq.write_table(pa.table({"a": [1]}), tmp_path / "part-00000-y.parquet")
+    pq.write_table(empty, tmp_path / "part-00001-z.parquet")
+    _fs.remove_empty_parquet(scheme + str(tmp_path), "part-00000-*", spark)
+    assert sorted(os.listdir(tmp_path)) == [
+        "part-00000-y.parquet", "part-00001-z.parquet"
+    ]
+
+
 def test_configure_s3_sets_hadoop_conf(spark):
     applied = configure_s3(
         spark,

@@ -66,30 +66,6 @@ def test_no_cartesian_in_headline(spark, sf_dir):
         assert "CartesianProduct" not in plan, name
 
 
-# join_cross deliberately declares a CROSS JOIN (§2b set-op surface); the ANN
-# family cross-joins a handful of broadcast query vectors/centroids against
-# the corpus — that plans as BroadcastNestedLoopJoin, never CartesianProduct.
-_CROSS_OK = {"join_cross"}
-
-
-@pytest.mark.slow  # excluded from the default (driver-window) run; see pytest.ini
-def test_no_cartesian_in_any_registered_query(spark, sf_dir):
-    """Fleet-wide scale gate: no registered query may plan an un-broadcast
-    cartesian product — at 100 TB that is always a bug, not a strategy."""
-    bad = []
-    for name, fn in sorted(QUERIES.items()):
-        if name in _CROSS_OK:
-            continue
-        try:
-            plan = plan_of(fn(spark, sf_dir))
-        except Exception as exc:  # planning itself must not fail either
-            bad.append(f"{name}: failed to plan ({exc})")
-            continue
-        if "CartesianProduct" in plan:
-            bad.append(f"{name}: CartesianProduct in plan")
-    assert not bad, "\n".join(bad)
-
-
 def test_ann_broadcasts_queries(spark, sf_dir):
     """Query set is the small side — must broadcast against the corpus."""
     plan = plan_of(QUERIES["ann_cosine_topk"](spark, sf_dir))
@@ -304,47 +280,6 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_cust")
-
-
-@pytest.mark.slow  # excluded from the default (driver-window) run; see pytest.ini
-def test_no_global_window_in_any_registered_query(spark, sf_dir):
-    """Fleet-wide scale gate: no registered query may sort ALL rows into one
-    task for a window function (Window above Exchange SinglePartition).
-    Single-partition exchanges for global scalar aggregates are fine (the
-    partial agg upstream reduces to O(groups) rows); a global window moves
-    the whole dataset through one task — at 100 TB that is the job that
-    never finishes. Global-order semantics must go through the two-phase
-    bucketed helpers (queries/_distributed.py)."""
-    bad = []
-    for name, fn in sorted(QUERIES.items()):
-        try:
-            tree = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:
-            bad.append(f"{name}: failed to plan ({exc})")
-            continue
-        lines = tree.splitlines()
-        for i, line in enumerate(lines):
-            if "Window" not in line or "window_bucket" in line:
-                continue
-            # the two-phase helpers (queries/_distributed.py) run their
-            # phase-2 fixup window over the one-row-per-bucket meta table,
-            # ordered by the bucket id `_b` — O(buckets) rows, scale-safe
-            if "_b#" in line:
-                continue
-            below = "\n".join(lines[i + 1 : i + 6])
-            # a window directly over a distinct reduction (HashAggregate
-            # with no agg functions) sees O(NDV) rows — the dictionary-build
-            # shape (codes = dense_rank over sorted distinct values), small
-            # by the same gate that makes DICT the chosen scheme
-            if "HashAggregate" in below and "functions=[]" in below:
-                continue
-            # a Window's input appears directly below it in the tree dump;
-            # a SinglePartition exchange within the next few lines means the
-            # window sees the full, un-keyed row stream
-            if "Exchange SinglePartition" in "\n".join(lines[i + 1 : i + 4]):
-                bad.append(f"{name}: global window over SinglePartition exchange")
-                break
-    assert not bad, "\n".join(bad)
 
 
 def test_winsorize_broadcasts_thresholds(spark, sf_dir):
@@ -669,30 +604,6 @@ def _scan_counts(plan: str) -> dict[str, int]:
     return counts
 
 
-@pytest.mark.slow  # excluded from the default (driver-window) run; see pytest.ini
-def test_no_redundant_base_scans_in_any_registered_query(spark, sf_dir):
-    """Fleet-wide scale gate (round-8 VERDICT #2): no registered query's
-    initial physical plan may scan the same base table more than twice —
-    at 100 TB every redundant FileScan is a full extra pass over the
-    table. Multi-referenced small aggregates must pin the reduced
-    intermediate (localCheckpoint + eager=True) or thread scalars through
-    the next aggregate (the stats_theil_sen convention). Pre-existing
-    bounded multi-branch shapes are frozen in _MULTI_SCAN_OK."""
-    bad = []
-    for name, fn in sorted(QUERIES.items()):
-        if name in _MULTI_SCAN_OK:
-            continue
-        try:
-            plan = plan_of(fn(spark, sf_dir))
-        except Exception as exc:
-            bad.append(f"{name}: failed to plan ({exc})")
-            continue
-        over = {t: c for t, c in _scan_counts(plan).items() if c > 2}
-        if over:
-            bad.append(f"{name}: redundant base scans {over}")
-    assert not bad, "\n".join(bad)
-
-
 def test_round7_offenders_stay_single_scan(spark, sf_dir):
     """The three round-7 weak-plan queries keep their pinned shape: their
     final plans carry ZERO FileScans (the one base scan runs once at pin
@@ -703,3 +614,102 @@ def test_round7_offenders_stay_single_scan(spark, sf_dir):
     ):
         plan = plan_of(QUERIES[name](spark, sf_dir))
         assert "FileScan" not in plan, f"{name} re-derives its base scan"
+
+
+# --- fleet-wide gates: one plan pass over every registered query -----------
+# They run last in this file: building every plan runs the eager builders
+# and fills the session memos, and a memo hit changes how later plans in
+# this file print (see test_tfidf_single_documents_scan).
+
+
+@pytest.fixture(scope="session")
+def registered_plans(spark, sf_dir) -> dict:
+    """Every registered query's executed plan, or the exception planning it
+    raised, built once for the three fleet-wide gates below."""
+    plans = {}
+    for name, fn in sorted(QUERIES.items()):
+        try:
+            plans[name] = plan_of(fn(spark, sf_dir))
+        except Exception as exc:  # planning itself must not fail either
+            plans[name] = exc
+    return plans
+
+
+# join_cross deliberately declares a CROSS JOIN (§2b set-op surface); the ANN
+# family cross-joins a handful of broadcast query vectors/centroids against
+# the corpus — that plans as BroadcastNestedLoopJoin, never CartesianProduct.
+_CROSS_OK = {"join_cross"}
+
+
+def test_no_cartesian_in_any_registered_query(registered_plans):
+    """Fleet-wide scale gate: no registered query may plan an un-broadcast
+    cartesian product — at 100 TB that is always a bug, not a strategy."""
+    bad = []
+    for name, plan in registered_plans.items():
+        if name in _CROSS_OK:
+            continue
+        if isinstance(plan, Exception):
+            bad.append(f"{name}: failed to plan ({plan})")
+            continue
+        if "CartesianProduct" in plan:
+            bad.append(f"{name}: CartesianProduct in plan")
+    assert not bad, "\n".join(bad)
+
+
+def test_no_global_window_in_any_registered_query(registered_plans):
+    """Fleet-wide scale gate: no registered query may sort ALL rows into one
+    task for a window function (Window above Exchange SinglePartition).
+    Single-partition exchanges for global scalar aggregates are fine (the
+    partial agg upstream reduces to O(groups) rows); a global window moves
+    the whole dataset through one task — at 100 TB that is the job that
+    never finishes. Global-order semantics must go through the two-phase
+    bucketed helpers (queries/_distributed.py)."""
+    bad = []
+    for name, tree in registered_plans.items():
+        if isinstance(tree, Exception):
+            bad.append(f"{name}: failed to plan ({tree})")
+            continue
+        lines = tree.splitlines()
+        for i, line in enumerate(lines):
+            if "Window" not in line or "window_bucket" in line:
+                continue
+            # the two-phase helpers (queries/_distributed.py) run their
+            # phase-2 fixup window over the one-row-per-bucket meta table,
+            # ordered by the bucket id `_b` — O(buckets) rows, scale-safe
+            if "_b#" in line:
+                continue
+            below = "\n".join(lines[i + 1 : i + 6])
+            # a window directly over a distinct reduction (HashAggregate
+            # with no agg functions) sees O(NDV) rows — the dictionary-build
+            # shape (codes = dense_rank over sorted distinct values), small
+            # by the same gate that makes DICT the chosen scheme
+            if "HashAggregate" in below and "functions=[]" in below:
+                continue
+            # a Window's input appears directly below it in the tree dump;
+            # a SinglePartition exchange within the next few lines means the
+            # window sees the full, un-keyed row stream
+            if "Exchange SinglePartition" in "\n".join(lines[i + 1 : i + 4]):
+                bad.append(f"{name}: global window over SinglePartition exchange")
+                break
+    assert not bad, "\n".join(bad)
+
+
+def test_no_redundant_base_scans_in_any_registered_query(registered_plans):
+    """Fleet-wide scale gate (round-8 VERDICT #2): no registered query's
+    initial physical plan may scan the same base table more than twice —
+    at 100 TB every redundant FileScan is a full extra pass over the
+    table. Multi-referenced small aggregates must pin the reduced
+    intermediate (localCheckpoint + eager=True) or thread scalars through
+    the next aggregate (the stats_theil_sen convention). Pre-existing
+    bounded multi-branch shapes are frozen in _MULTI_SCAN_OK."""
+    bad = []
+    for name, plan in registered_plans.items():
+        if name in _MULTI_SCAN_OK:
+            continue
+        if isinstance(plan, Exception):
+            bad.append(f"{name}: failed to plan ({plan})")
+            continue
+        over = {t: c for t, c in _scan_counts(plan).items() if c > 2}
+        if over:
+            bad.append(f"{name}: redundant base scans {over}")
+    assert not bad, "\n".join(bad)

@@ -926,7 +926,7 @@ def test_chunked_append_checkpoint_reset_never_clobbers(spark, events_dir, tmpdi
     not."""
     import json
 
-    from btrblocks_spark.sources.btr_datasource import _FENCE_KEEP
+    from btrblocks_spark.format.journal import _FENCE_KEEP
     from btrblocks_spark.streaming.ops import exactly_once_chunked_append
 
     path = os.path.join(tmpdir, "reset_tbl")
@@ -994,7 +994,7 @@ def test_chunked_append_second_lock_race_adopts_pending_rival(
     re-offered, and nothing else heals scoped pendings)."""
     import json
 
-    from btrblocks_spark.streaming import ops
+    from btrblocks_spark.format import journal
     from btrblocks_spark.streaming.ops import exactly_once_chunked_append
 
     path = os.path.join(tmpdir, "race2_table")
@@ -1023,7 +1023,7 @@ def test_chunked_append_second_lock_race_adopts_pending_rival(
         "state": "pending",
     }
 
-    real_read = ops.load_json
+    real_read = journal.load_json
     calls = {"n": 0}
 
     def racy_read(p):
@@ -1033,7 +1033,7 @@ def test_chunked_append_second_lock_race_adopts_pending_rival(
             log.append(dict(rival_entry))
         return log
 
-    monkeypatch.setattr(ops, "load_json", racy_read)
+    monkeypatch.setattr(journal, "load_json", racy_read)
     exactly_once_chunked_append(batch, path, 0, block_size=4096, scope="S")
     monkeypatch.undo()
 
