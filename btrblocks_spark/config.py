@@ -77,8 +77,11 @@ class BtrBlocksConfig:
     # zstd 9: measured ~2% smaller than the default level 3 at equal write
     # wall time on the bench tables; levels ≥19 cost ~10x write for ~4%
     zstd_level: int = 9
-    # bloom filters on the order/lookup keys, sized from planner NDV stats
-    # (row-group skipping for equality predicates on non-sorted keys)
+    # bloom filters on the order/lookup keys written without a dictionary,
+    # sized from planner NDV stats (row-group skipping for equality
+    # predicates on non-sorted keys). An integer/temporal leading order key
+    # never gets one: chunks are sorted by it, so file min/max narrows a
+    # lookup to one chunk, and it is stored delta-encoded instead
     bloom_filter_keys: bool = True
     # column-group encoding (write_table(column_groups=...) / auto):
     # mapping tables are broadcast at read time, so the entry count is

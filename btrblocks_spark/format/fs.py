@@ -85,6 +85,10 @@ def write_json(path: str, obj: dict, spark=None) -> None:
     write_text(path, json.dumps(obj, indent=1, default=str), spark)
 
 
+def _visible(name: str) -> bool:
+    return not name.startswith(("_", "."))
+
+
 def list_file_sizes(path: str, suffix: str = ".parquet", spark=None) -> list[int]:
     """Sizes of all files under ``path`` matching ``suffix`` (recursive).
     The plan pass of write_table and compact (writer.plan_chunk_files)
@@ -94,10 +98,6 @@ def list_file_sizes(path: str, suffix: str = ".parquet", spark=None) -> list[int
     ``list_parquet_files`` (skip ``_``/``.`` components): a crashed rival's
     ``_temporary`` task attempt or a staged ``.inflight`` file must never
     size a read Spark will not perform."""
-
-    def _visible(name: str) -> bool:
-        return not name.startswith(("_", "."))
-
     if not is_uri(path):
         out_local: list[int] = []
         for r, dirs, fs_ in os.walk(path):
@@ -108,13 +108,18 @@ def list_file_sizes(path: str, suffix: str = ".parquet", spark=None) -> list[int
                 if f.endswith(suffix) and _visible(f)
             )
         return out_local
+    return [int(status.getLen()) for status in _uri_files(path, suffix, spark)]
+
+
+def _uri_files(path: str, suffix: str, spark):
+    """Hadoop ``FileStatus`` of every Spark-visible file under the URI
+    ``path`` whose name ends with ``suffix`` (recursive)."""
     if spark is None:
         raise ValueError(
             f"listing {path!r} needs an active SparkSession (Hadoop FileSystem client)"
         )
     fs, jpath = _jvm_fs(spark, path)
     base = str(jpath.toString()).rstrip("/")
-    out: list[int] = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
         status = it.next()
@@ -126,7 +131,45 @@ def list_file_sizes(path: str, suffix: str = ".parquet", spark=None) -> list[int
         rel = str(p.toString())[len(base):].lstrip("/")
         if any(not _visible(c) for c in rel.split("/")[:-1]):
             continue
-        out.append(int(status.getLen()))
+        yield status
+
+
+def column_footer_bytes(path: str, spark=None) -> dict[str, tuple[int, set[str]]]:
+    """Per column of the parquet files under ``path``: the summed footer
+    ``total_compressed_size`` of its column chunks and the encodings they
+    use, read from footers only (pyarrow for local paths, parquet-mr's
+    reader for URIs)."""
+    out: dict[str, tuple[int, set[str]]] = {}
+
+    def add(col: str, size: int, encodings) -> None:
+        b, enc = out.get(col, (0, set()))
+        out[col] = (b + int(size), enc | set(encodings))
+
+    if not is_uri(path):
+        import pyarrow.parquet as pq
+
+        for f in list_parquet_files(path):
+            md = pq.ParquetFile(f).metadata
+            for rg in range(md.num_row_groups):
+                for c in range(md.num_columns):
+                    col = md.row_group(rg).column(c)
+                    add(col.path_in_schema, col.total_compressed_size, col.encodings)
+        return out
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    for status in _uri_files(path, ".parquet", spark):
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf)
+        )
+        try:
+            for block in reader.getFooter().getBlocks():
+                for col in block.getColumns():
+                    add(
+                        col.getPath().toDotString(), col.getTotalSize(),
+                        [e.name() for e in col.getEncodings()],
+                    )
+        finally:
+            reader.close()
     return out
 
 

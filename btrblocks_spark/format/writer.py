@@ -14,6 +14,13 @@ O(num_chunks · num_columns) small rows):
      partitions and every non-final chunk has exactly block_size rows, so
      files split on exact chunk boundaries (one file = one chunk — the
      ColumnPart sizing analog, storage/Chunk.cpp:233-266), ZSTD pages.
+     Files are Parquet v2: integers and timestamps written without a
+     dictionary are DELTA_BINARY_PACKED (BtrBlocks' delta + bit-packing),
+     non-dictionary strings DELTA_BYTE_ARRAY. ``_idx`` and an integer or
+     temporal leading order key are written with no dictionary and no
+     bloom filter: rows are sorted by them inside every chunk, so delta
+     stores them in a few bits per row, and file min/max already finds the
+     one chunk a lookup on them needs.
   4. plan: ``mapInPandas`` over the WRITTEN files — each chunk is exactly
      one file, so the read-back streams whole chunks with no shuffle,
      holds one chunk in memory, computes per-column stats (T1/T2) and runs
@@ -244,17 +251,21 @@ def chunk_write_options(
     dictionary: dict[str, bool] | None = None,
     bloom: dict[str, int] | None = None,
 ) -> dict[str, str]:
-    """Parquet writer options for chunk data files: codec and level, at most
-    one chunk per file, per-column dictionary switches (the sidecar's
-    ``dictionary``) and bloom filters (column -> expected NDV, the
-    sidecar's ``bloom_filters``). Both ``write_table`` and
+    """Parquet writer options for chunk data files: Parquet v2 pages, codec
+    and level, at most one chunk per file, per-column dictionary switches
+    (the sidecar's ``dictionary``) and bloom filters (column -> expected
+    NDV, the sidecar's ``bloom_filters``). Both ``write_table`` and
     ``maintenance.compact`` write chunk files with these, so a compacted
     tail keeps the table's encodings and bloom filters. A bloom
     column is written without a dictionary: parquet-mr omits the bloom of
-    a fully dictionary-encoded column chunk."""
+    a fully dictionary-encoded column chunk. v2 gives dictionary-off
+    integers DELTA_BINARY_PACKED pages; parquet-mr picks v1 or v2 encoders
+    through one JVM-wide factory, so these options are only used under
+    ``PARQUET_WRITE_LOCK`` (``write_chunk_files`` holds it)."""
     opts = {
         "compression": config.compression_codec,
         "parquet.compression.codec.zstd.level": str(config.zstd_level),
+        "parquet.writer.version": "PARQUET_2_0",
         "maxRecordsPerFile": str(config.block_size),
     }
     for col, enabled in (dictionary or {}).items():
@@ -794,20 +805,29 @@ def write_table(
     # bytes track actual cardinality instead of parquet's 1M default.
     # Dictionary-encoded keys are excluded on purpose: the dict page
     # already answers membership exactly (and parquet-mr omits blooms
-    # for fully-dict chunks anyway).
+    # for fully-dict chunks anyway). An integer/temporal leading key gets
+    # neither: every chunk is sorted by it, so v2 DELTA_BINARY_PACKED
+    # stores it in a few bits per row, and file min/max already narrows a
+    # lookup to one chunk (an absent key inside that chunk's range reads
+    # the chunk instead of being rejected by a bloom).
+    k0_sorted = kind_of(_k0_type) == "int" and _k0 not in group_deps
+    if k0_sorted:
+        dict_enabled[_k0] = False
     bloom_cols = {}
     if config.bloom_filter_keys:
         for col in order_keys:
-            if col in group_deps:
+            if col in group_deps or (k0_sorted and col == _k0):
                 continue
             if dict_enabled.get(col, True) or ndv.get(col, 0) < 1:
                 continue
             bloom_cols[col] = min(ndv[col], config.block_size)
     # group dependents are NOT written as streams — their values live in
     # the nd(det)-entry mapping tables; dropping them from the chunk files
-    # is where the compression win is banked
+    # is where the compression win is banked. _idx is dense and sorted:
+    # never a dictionary
     data_path = _fs.join(path, "data")
     dictionary = {c: on for c, on in dict_enabled.items() if c not in group_deps}
+    dictionary["_idx"] = False
     num_rows, num_chunks = write_chunk_files(
         df, data_path, order_keys, config,
         total_rows=total_rows, bounds=bounds,

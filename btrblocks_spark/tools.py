@@ -98,6 +98,7 @@ def cmd_btrtocsv(args, spark=None) -> int:
 
 
 def cmd_btrmeta(args, spark=None) -> int:
+    from btrblocks_spark.format import fs as _fs
     from btrblocks_spark.format.reader import read_metadata, scheme_summary
 
     spark = _get_spark(spark)
@@ -108,12 +109,27 @@ def cmd_btrmeta(args, spark=None) -> int:
         f"{meta['num_chunks']} chunks x {meta['block_size']}, "
         f"est ratio {t['est_compression_ratio']}x"
     )
-    for row in scheme_summary(spark, args.table).collect():
+    rows = scheme_summary(spark, args.table).collect()
+    for row in rows:
         print(
             f"  {row['column']:<20} chunk {row['chunk']:<3} "
             f"{row['scheme_tree']:<28} ratio {row['est_ratio']:<7} "
             f"rows {row['n_rows']} nulls {row['null_count']} "
             f"uniq {row['unique_count']}"
+        )
+    # the planner's estimate next to what the chunk files hold (footer
+    # column-chunk bytes), and the Parquet encodings actually written
+    est: dict[str, int] = {}
+    for row in rows:
+        est[row["column"]] = est.get(row["column"], 0) + int(row["est_size"])
+    disk = _fs.column_footer_bytes(_fs.join(args.table, "data"), spark)
+    print(f"  {'column':<20} {'est_bytes':>12} {'disk_bytes':>12}  encodings")
+    names = [c["name"] for c in meta["schema"]]
+    for col in names + sorted(set(disk) - set(names)):
+        nbytes, encodings = disk.get(col, (0, set()))
+        print(
+            f"  {col:<20} {est.get(col, 0):>12} {nbytes:>12}  "
+            f"{','.join(sorted(encodings)) or '-'}"
         )
     return 0
 
@@ -182,7 +198,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     c.add_argument("--csv", required=True)
     c.set_defaults(fn=cmd_btrtocsv)
 
-    c = sub.add_parser("btrmeta", help="dump per-column-chunk scheme metadata")
+    c = sub.add_parser(
+        "btrmeta",
+        help="dump per-column-chunk scheme metadata and per-column "
+        "estimated vs on-disk bytes",
+    )
     c.add_argument("table")
     c.set_defaults(fn=cmd_btrmeta)
 

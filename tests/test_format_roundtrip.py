@@ -254,30 +254,38 @@ def test_bloom_filters_on_keys(spark, sf_dir):
     """High-cardinality order keys get stats-sized parquet bloom filters
     (bloom bytes physically present vs bloom-off); dict-scheme keys are
     excluded (dictionary pages already answer membership exactly); point
-    lookups through the bloomed files stay exact."""
+    lookups through the bloomed files stay exact. The integer leading key
+    gets no bloom and no dictionary: every chunk is sorted by it, so it is
+    stored DELTA_BINARY_PACKED and file min/max finds its chunk."""
     import json
     import os
+
+    from btrblocks_spark.format.fs import list_parquet_files
 
     df = (
         spark.range(50000)
         .selectExpr(
+            "id DIV 5000 AS bucket",
             "id AS uid",
             "CAST(id % 7 AS INT) AS small_key",
             "CAST(id * 37 % 100000 AS DOUBLE) AS val",
         )
     )
     base = tempfile.mkdtemp(prefix="btr_bloom_")
+    keys = ["bucket", "uid", "small_key"]
     try:
         cfg = DEFAULT_CONFIG.with_(block_size=8192)
-        m_on = write_table(df, f"{base}/on", ["uid", "small_key"], cfg)
+        m_on = write_table(df, f"{base}/on", keys, cfg)
         write_table(
-            df, f"{base}/off", ["uid", "small_key"],
-            cfg.with_(bloom_filter_keys=False),
+            df, f"{base}/off", keys, cfg.with_(bloom_filter_keys=False),
         )
         # uid is unique per row -> non-dict scheme -> bloomed; small_key has
-        # 7 distinct values -> dict scheme -> no bloom (dict page suffices)
+        # 7 distinct values -> dict scheme -> no bloom (dict page suffices);
+        # bucket leads the sort -> neither bloom nor dictionary
         assert set(m_on["bloom_filters"]) == {"uid"}
         assert m_on["bloom_filters"]["uid"] > 1000
+        assert m_on["dictionary"]["bucket"] is False
+        assert m_on["dictionary"]["small_key"] is True
 
         def data_bytes(d):
             dd = os.path.join(d, "data")
@@ -291,10 +299,54 @@ def test_bloom_filters_on_keys(spark, sf_dir):
         sidecar = json.load(open(f"{base}/on/_btr_metadata.json"))
         assert sidecar["bloom_filters"] == m_on["bloom_filters"]
 
+        for f in list_parquet_files(f"{base}/on/data"):
+            assert all(o < 0 for o in _bloom_offsets(spark, f, "bucket")), f
+            assert _dictionary_pages(f)["bucket"] == {False}, f
+            assert _encodings(f)["bucket"] == {"DELTA_BINARY_PACKED"}, f
+
         got = spark.read.parquet(f"{base}/on/data").filter(F.col("uid") == 12345)
         assert [r.small_key for r in got.collect()] == [12345 % 7]
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def _scan_input_rows(df) -> int:
+    """Rows the parquet scans of ``df`` read (their ``numOutputRows``
+    metric) when ``df`` is collected: whole row groups, before the
+    residual filter."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    return sum(
+        int(leaves.apply(i).metrics().apply("numOutputRows").value())
+        for i in range(leaves.size())
+        if "Scan" in leaves.apply(i).nodeName()
+    )
+
+
+def test_point_lookup_on_sorted_leading_key(spark, tmp_path):
+    """A Spark point lookup on the integer leading key, which is written
+    without a bloom filter: a present key reads at most one chunk's rows
+    (file min/max skips every other chunk), and an absent key inside the
+    key range reads at most the one chunk whose range holds it (a bloom
+    filter would have skipped that chunk too; delta-encoding the key
+    instead of blooming it is the trade)."""
+    bs = 8192
+    df = spark.range(50000).selectExpr("id * 2 AS k", "id % 13 AS v")
+    path = str(tmp_path / "sorted_lookup")
+    meta = write_table(df, path, ["k"], DEFAULT_CONFIG.with_(block_size=bs))
+    assert meta["bloom_filters"] == {} and meta["dictionary"]["k"] is False
+    data = spark.read.parquet(f"{path}/data")
+
+    present = data.filter(F.col("k") == 2 * 12345)
+    assert [r.v for r in present.collect()] == [12345 % 13]
+    assert 0 < _scan_input_rows(present) <= bs
+
+    absent = data.filter(F.col("k") == 2 * 12345 + 1)
+    assert absent.collect() == []
+    assert _scan_input_rows(absent) <= bs
 
 
 def _bloom_offsets(spark, file_path: str, column: str) -> list[int]:
@@ -331,6 +383,27 @@ def _dictionary_pages(file_path: str) -> dict[str, set[bool]]:
     return out
 
 
+def _encodings(file_path: str) -> dict[str, set[str]]:
+    """Per column, the Parquet encodings of its column chunks over every
+    row group of the file."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(file_path).metadata
+    out: dict[str, set[str]] = {}
+    for rg in range(md.num_row_groups):
+        for c in range(md.num_columns):
+            col = md.row_group(rg).column(c)
+            out.setdefault(col.path_in_schema, set()).update(col.encodings)
+    return out
+
+
+def _is_v1(file_path: str) -> bool:
+    """parquet-mr v1 data pages record BIT_PACKED levels for every column
+    chunk; v2 pages carry their levels in the page header, so no column
+    chunk lists BIT_PACKED."""
+    return all("BIT_PACKED" in enc for enc in _encodings(file_path).values())
+
+
 def test_compact_keeps_bloom_filters(spark, tmp_path):
     """compact() rewrites the fragment tail with the table's bloom filters
     and dictionary switches: after an append and a compact, every data file
@@ -341,7 +414,9 @@ def test_compact_keeps_bloom_filters(spark, tmp_path):
     (NDV 5,000 in the written rows, above block_size // 4, so written
     without a dictionary, but each value repeats ten times) keeps a
     dictionary page whenever one is switched on; an all-distinct column
-    like ``val`` falls back to plain pages either way."""
+    like ``val`` falls back to plain pages either way. The integer leading
+    key ``bucket`` has no bloom and no dictionary page in any file, and is
+    DELTA_BINARY_PACKED."""
     import os
 
     from btrblocks_spark.format.fs import list_parquet_files
@@ -349,33 +424,38 @@ def test_compact_keeps_bloom_filters(spark, tmp_path):
     from btrblocks_spark.format.reader import read_metadata
     from btrblocks_spark.sources.btr_datasource import BtrBlocksDataSource
 
-    df = spark.range(50000).selectExpr(
+    cols = (
+        "id DIV 5000 AS bucket",
         "id AS uid",
         "CAST(id % 7 AS INT) AS small_key",
         "CAST(id * 37 % 100000 AS DOUBLE) AS val",
         "id DIV 10 AS tens",
     )
+    df = spark.range(50000).selectExpr(*cols)
     path = str(tmp_path / "bloomed")
-    write_table(df, path, ["uid", "small_key"], DEFAULT_CONFIG.with_(block_size=8192))
+    write_table(
+        df, path, ["bucket", "uid", "small_key"],
+        DEFAULT_CONFIG.with_(block_size=8192),
+    )
     spark.dataSource.register(BtrBlocksDataSource)
     (
         spark.range(50000, 53000)
-        .selectExpr(
-            "id AS uid",
-            "CAST(id % 7 AS INT) AS small_key",
-            "CAST(id * 37 % 100000 AS DOUBLE) AS val",
-            "id DIV 10 AS tens",
-        )
+        .selectExpr(*cols)
         .write.format("btrblocks").mode("append").option("path", path).save()
     )
     assert compact(spark, path)["compacted"]
 
-    assert set(read_metadata(path)["bloom_filters"]) == {"uid"}
+    meta = read_metadata(path)
+    assert set(meta["bloom_filters"]) == {"uid"}
+    assert meta["dictionary"]["bucket"] is False
     files = list_parquet_files(f"{path}/data")
     assert any("compacted-" in f for f in files)
     for f in files:
         offsets = _bloom_offsets(spark, f, "uid")
         assert offsets and all(o > 0 for o in offsets), (f, offsets)
+        assert all(o < 0 for o in _bloom_offsets(spark, f, "bucket")), f
+        assert _dictionary_pages(f)["bucket"] == {False}, f
+        assert _encodings(f)["bucket"] == {"DELTA_BINARY_PACKED"}, f
     got = spark.read.parquet(f"{path}/data").filter(F.col("uid") == 52345)
     assert [r.small_key for r in got.collect()] == [52345 % 7]
 
@@ -391,6 +471,89 @@ def test_compact_keeps_bloom_filters(spark, tmp_path):
         want = {b for enc in written for b in enc[col]}
         assert len(want) == 1, (col, want)
         assert all(enc[col] == want for enc in compacted), (col, compacted)
+
+
+def test_table_written_by_v1_writer_still_works(spark, tmp_path, monkeypatch):
+    """A table whose chunk files and sidecar come from the v1 writer (every
+    file v1; the leading key planned like any order key: a dictionary by
+    NDV, a bloom filter when written without one; no ``_idx`` switch) takes
+    an append through the ``btrblocks`` source and a compact. Reads,
+    range scans, source lookups and deletion vectors return exact rows;
+    the kept part-* files stay v1, and the compacted-* files are v2 with
+    the old sidecar's dictionary switches and bloom filters."""
+    import json
+
+    from btrblocks_spark.format import writer
+    from btrblocks_spark.format.fs import list_parquet_files
+    from btrblocks_spark.format.maintenance import (
+        compact,
+        delete_where_dv,
+        read_table_mor,
+    )
+    from btrblocks_spark.sources.btr_datasource import BtrBlocksDataSource
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", "id * 3 AS v", "concat('s', CAST(id % 7 AS STRING)) AS s"
+        )
+
+    bs = 256
+    path = str(tmp_path / "v1_table")
+    orig = writer.chunk_write_options
+
+    def v1_options(config, dictionary=None, bloom=None):
+        opts = orig(config, dictionary, bloom)
+        opts.pop("parquet.writer.version")
+        return opts
+
+    with monkeypatch.context() as m:
+        m.setattr(writer, "chunk_write_options", v1_options)
+        write_table(rows(0, 3000), path, ["k"], DEFAULT_CONFIG.with_(block_size=bs))
+    sidecar_path = f"{path}/_btr_metadata.json"
+    with open(sidecar_path) as fh:
+        sidecar = json.load(fh)
+    sidecar["dictionary"].pop("_idx")
+    sidecar["dictionary"]["k"] = 3000 <= bs // 4
+    sidecar["bloom_filters"]["k"] = min(3000, bs)
+    with open(sidecar_path, "w") as fh:
+        json.dump(sidecar, fh)
+    assert all(_is_v1(f) for f in list_parquet_files(f"{path}/data"))
+
+    spark.dataSource.register(BtrBlocksDataSource)
+    rows(3000, 3300).write.format("btrblocks").mode("append").option(
+        "path", path
+    ).save()
+    assert compact(spark, path)["compacted"]
+
+    everything = rows(0, 3300)
+    got, _meta = read_table(spark, path)
+    assert sorted(got.collect()) == sorted(everything.collect())
+    got, chunks = read_table_skipping(spark, path, "k", 1000, 1100)
+    assert chunks and sorted(got.collect()) == sorted(
+        everything.filter("k BETWEEN 1000 AND 1100").collect()
+    )
+    source = spark.read.format("btrblocks").option("path", path).load()
+    assert [tuple(r) for r in source.filter(F.col("k") == 3123).collect()] == [
+        (3123, 9369, "s1")
+    ]
+
+    files = list_parquet_files(f"{path}/data")
+    kept = [f for f in files if "/part-" in f]
+    compacted = [f for f in files if "/compacted-" in f]
+    assert len(kept) == 3000 // bs and compacted
+    assert all(_is_v1(f) for f in kept)
+    for f in compacted:
+        assert not _is_v1(f), f
+        pages = _dictionary_pages(f)
+        for col, on in sidecar["dictionary"].items():
+            assert pages[col] == {on}, (f, col, pages[col])
+        offsets = _bloom_offsets(spark, f, "k")
+        assert offsets and all(o > 0 for o in offsets), (f, offsets)
+
+    assert delete_where_dv(spark, path, "k < 10 OR k = 3200")["deleted_rows"] == 11
+    assert sorted(read_table_mor(spark, path).collect()) == sorted(
+        everything.filter("k >= 10 AND k != 3200").collect()
+    )
 
 
 def test_write_table_leaves_one_file_per_chunk(spark, tmp_path):
@@ -2471,7 +2634,9 @@ def test_concurrent_writes_keep_their_dictionary_switches(spark, tmp_path, monke
     writes (insert_rows: default options, so dictionary on for every
     column, 32 tasks or more each) run back to back beside them in every
     rep, so an engine parquet write outside write_table that opens its
-    files mid-write is caught too."""
+    files mid-write is caught too. Chunk files are Parquet v2 and the DML
+    files v1, through the same factory: every chunk file's ``_idx`` must be
+    DELTA_BINARY_PACKED only, and no DML file may carry a v2 encoding."""
     import glob
     import os
     import threading
@@ -2539,11 +2704,28 @@ def test_concurrent_writes_keep_their_dictionary_switches(spark, tmp_path, monke
                     for rg in range(md.num_row_groups):
                         for ci in range(md.num_columns):
                             col = md.row_group(rg).column(ci)
-                            if col.path_in_schema not in switches:  # _idx
+                            if col.path_in_schema == "_idx" and col.encodings != (
+                                "DELTA_BINARY_PACKED",
+                            ):
+                                wrong.append((f, rg, "_idx", col.encodings))
+                            if col.path_in_schema not in switches:
                                 continue
                             has_dict = any("DICTIONARY" in e for e in col.encodings)
                             if has_dict != switches[col.path_in_schema]:
                                 wrong.append((f, rg, col.path_in_schema, col.encodings))
+            # the DML version writes stay v1: a chunk write's v2 encoders
+            # (DELTA_* pages; RLE_DICTIONARY where v1 writes PLAIN_DICTIONARY)
+            # never reach them
+            for f in glob.glob(os.path.join(dml_dir, "v=*", "*.parquet")):
+                md = pq.ParquetFile(f).metadata
+                for rg in range(md.num_row_groups):
+                    for ci in range(md.num_columns):
+                        col = md.row_group(rg).column(ci)
+                        if any(
+                            e.startswith("DELTA_") or e == "RLE_DICTIONARY"
+                            for e in col.encodings
+                        ):
+                            wrong.append((f, rg, col.path_in_schema, col.encodings))
     finally:
         spark.conf.unset("parquet.block.row.count.limit")
     assert wrong == []

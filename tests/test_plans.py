@@ -301,14 +301,27 @@ def test_tfidf_single_documents_scan(spark, sf_dir):
     runtime: posting lists are ONE aggregation keyed on the token, pairs
     are generated map-side from the collected postings (no self-join of
     two scan subtrees), and the threshold-free pair table is
-    session-memoized. The INITIAL plan prints the shared postings subtree
-    up to three times (dot-product side + the two post-aggregation norm
-    join sides — round-9 2nd session: norms attach AFTER the pair
+    session-memoized. A cold build's plan prints the shared postings
+    subtree up to three times (dot-product side + the two post-aggregation
+    norm join sides — round-9 2nd session: norms attach AFTER the pair
     aggregation so the k² pair stream carries only ids+products; the
-    postings exchange is reused across the printed copies, and a memo hit
-    renders the whole chain as one InMemoryRelation), never more."""
-    plan = plan_of(QUERIES["dedup_tfidf_cosine"](spark, sf_dir))
-    assert plan.count("documents.parquet") <= 3
+    postings exchange is reused across the printed copies), never more,
+    and a memo hit renders the whole chain as one InMemoryRelation.
+
+    The test starts from empty memos and an empty cache: once the memoized
+    table has been computed, its cached plan prints as the final adaptive
+    plan, which shows the postings subtree four times."""
+    from btrblocks_spark.tables import memo_stats
+
+    for attr in [a for a in vars(spark) if a.startswith("_btrblocks_")]:
+        delattr(spark, attr)
+    spark.catalog.clearCache()
+    cold = plan_of(QUERIES["dedup_tfidf_cosine"](spark, sf_dir))
+    assert memo_stats(spark, "pairs") == (0, 1)
+    assert cold.count("documents.parquet") <= 3
+    hit = plan_of(QUERIES["dedup_tfidf_cosine"](spark, sf_dir))
+    assert memo_stats(spark, "pairs") == (1, 1)
+    assert hit.count("InMemoryRelation") == 1
 
 
 def test_pq_codebook_broadcast_no_shuffle_encode(spark, sf_dir):

@@ -295,6 +295,67 @@ def test_cli_tools_end_to_end(spark, tmpdir):
     assert "MB/s" in out.getvalue()
 
 
+def test_cli_btrmeta_reports_estimated_and_disk_bytes(spark, tmp_path):
+    """btrmeta prints, per column, the planner's estimated bytes (summed
+    chunk-stats ``est_size``), the on-disk bytes (summed footer column-chunk
+    ``total_compressed_size``) and the encodings on disk, for local paths
+    and URIs alike; ``_idx`` is on disk only."""
+    import io
+    from contextlib import redirect_stdout
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from btrblocks_spark.config import DEFAULT_CONFIG
+    from btrblocks_spark.format.fs import list_parquet_files
+    from btrblocks_spark.format.reader import scheme_summary
+    from btrblocks_spark.format.writer import write_table
+    from btrblocks_spark.tools import main
+
+    path = str(tmp_path / "meta_tbl")
+    df = spark.range(3000).selectExpr(
+        "id AS k", "CAST(id % 5 AS INT) AS small", "concat('w', CAST(id AS STRING)) AS s"
+    )
+    write_table(df, path, ["k"], DEFAULT_CONFIG.with_(block_size=512))
+
+    def btrmeta(table_path):
+        out = io.StringIO()
+        with redirect_stdout(out):
+            assert main(["btrmeta", table_path], spark=spark) == 0
+        lines = out.getvalue().splitlines()
+        header = next(i for i, line in enumerate(lines) if "est_bytes" in line)
+        table = {}
+        for line in lines[header + 1:]:
+            col, est, disk, encodings = line.split()
+            table[col] = (int(est), int(disk), set(encodings.split(",")))
+        return table
+
+    table = btrmeta(path)
+    # a URI reads the footers through the Hadoop client: same report
+    assert btrmeta("file://" + path) == table
+
+    est = {
+        r["column"]: r["est"]
+        for r in scheme_summary(spark, path)
+        .groupBy("column").agg(F.sum("est_size").alias("est")).collect()
+    }
+    disk: dict[str, int] = {}
+    for f in list_parquet_files(f"{path}/data"):
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(rg).column(c)
+                disk[col.path_in_schema] = (
+                    disk.get(col.path_in_schema, 0) + col.total_compressed_size
+                )
+    assert set(table) == {"k", "small", "s", "_idx"}
+    for col, (e, d, _enc) in table.items():
+        assert (e, d) == (est.get(col, 0), disk[col]), col
+    assert table["k"][2] == {"DELTA_BINARY_PACKED"}
+    assert table["_idx"][2] == {"DELTA_BINARY_PACKED"}
+    assert "RLE_DICTIONARY" in table["small"][2]
+
+
 def test_cli_sql_over_operator_views(spark, sf_dir):
     """The sql subcommand runs ad-hoc SQL over tables and registered
     operator views through tools.main with an injected session."""
