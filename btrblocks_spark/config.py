@@ -72,7 +72,11 @@ class BtrBlocksConfig:
     fsst_min_total_length: int = 16 * 1024
     dict_fsst_min_unique_pool: int = 16 * 1024
     # Spark-side physical knobs
-    part_target_bytes: int = 16 * 1024 * 1024  # ColumnPart threshold analog
+    # ColumnPart target (storage/Chunk.cpp:233-266): the btrblocks data
+    # source packs consecutive chunk files into read partitions of up to
+    # this many bytes, and it caps a chunk file's page byte limit (each
+    # chunk column is one Parquet page below it)
+    part_target_bytes: int = 16 * 1024 * 1024
     compression_codec: str = "zstd"
     # zstd 9: measured ~2% smaller than the default level 3 at equal write
     # wall time on the bench tables; levels ≥19 cost ~10x write for ~4%

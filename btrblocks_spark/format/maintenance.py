@@ -413,7 +413,7 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         # lookup skips row groups by bloom, and a compacted file without one
         # would be read by every point lookup (a sidecar written before the
         # switches were recorded leaves parquet's default, dictionary on)
-        n_frag, new_chunks = write_chunk_files(
+        n_frag, new_chunks, written_schema = write_chunk_files(
             frag_df, tmp_dir, meta["order_keys"], cfg, start=base,
             dictionary=meta.get("dictionary"), bloom=meta.get("bloom_filters"),
         )
@@ -423,7 +423,8 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         # prefix, whose stats rows carry over); every compaction emits a
         # v2 stats dataset, written from executors
         totals = plan_chunk_files(
-            spark, path, meta, tmp_dir, stats_tmp, cfg, keep_chunks=keep_k
+            spark, path, meta, tmp_dir, stats_tmp, cfg, written_schema,
+            keep_chunks=keep_k,
         )
     except Exception:
         # a rival compact that committed mid-stage REMOVED our fragment

@@ -7,14 +7,25 @@ O(num_chunks · num_columns) small rows):
   1. chunk the table: global index over ``order_keys`` → chunk_id
      (storage/Relation.cpp:42-69 analog).
   2. physical knobs: ONE map-side ``approx_count_distinct`` pass over the
-     source decides per-column parquet dictionary on/off and bloom filters
-     on the lookup keys (cheap JVM scan, no shuffle).
+     source sizes the bloom filters on the lookup keys (cheap JVM scan, no
+     shuffle), and ONE small job collects the input's first ``block_size``
+     rows to the driver. Sorted by the order keys, that sample is
+     trial-encoded with pyarrow per stored column, at the writer's codec
+     and level, as one v2 data page: once with a dictionary and once in
+     the encoding parquet-mr falls back to without one; the smaller form
+     sets the column's dictionary switch (the BtrBlocks choice: compress a
+     sample with each candidate, keep the smallest). ``_idx``, an integer
+     or temporal leading key, and types pyarrow cannot write in Spark's
+     physical form (decimal, boolean, nested) keep fixed rules. For a
+     table larger than one chunk the sample is the input's first rows in
+     key order, not a real chunk.
   3. write data as Parquet straight off the chunk staging shuffle with
      ``maxRecordsPerFile = block_size`` — rows are _idx-sorted within
      partitions and every non-final chunk has exactly block_size rows, so
      files split on exact chunk boundaries (one file = one chunk — the
      ColumnPart sizing analog, storage/Chunk.cpp:233-266), ZSTD pages.
-     Files are Parquet v2: integers and timestamps written without a
+     Files are Parquet v2 and every chunk column is ONE data page (the
+     BtrBlocks block): integers and timestamps written without a
      dictionary are DELTA_BINARY_PACKED (BtrBlocks' delta + bit-packing),
      non-dictionary strings DELTA_BYTE_ARRAY. ``_idx`` and an integer or
      temporal leading order key are written with no dictionary and no
@@ -54,12 +65,15 @@ from __future__ import annotations
 import os
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
+from pyspark.sql.types import StructType
 
 from btrblocks_spark.config import DEFAULT_CONFIG, BtrBlocksConfig
 from btrblocks_spark.format import fs as _fs
@@ -246,26 +260,44 @@ def _stage_by_chunk(chunked: DataFrame, num_chunks: int) -> DataFrame:
     return chunked.repartition(num_parts, "_chunk").sortWithinPartitions("_idx")
 
 
+def _page_bytes(config: BtrBlocksConfig) -> int:
+    """Page byte limit of chunk files: a chunk column is one page unless its
+    encoded values average over 256 B a row or pass ``part_target_bytes``.
+    parquet-mr allocates a compression buffer of this size for every file
+    it writes (measured: 16 MiB cost 1.7 ms per file), so small chunks keep
+    its 1 MiB default."""
+    return min(max(config.block_size * 256, 1 << 20), config.part_target_bytes)
+
+
 def chunk_write_options(
     config: BtrBlocksConfig,
     dictionary: dict[str, bool] | None = None,
     bloom: dict[str, int] | None = None,
 ) -> dict[str, str]:
     """Parquet writer options for chunk data files: Parquet v2 pages, codec
-    and level, at most one chunk per file, per-column dictionary switches
-    (the sidecar's ``dictionary``) and bloom filters (column -> expected
-    NDV, the sidecar's ``bloom_filters``). Both ``write_table`` and
-    ``maintenance.compact`` write chunk files with these, so a compacted
-    tail keeps the table's encodings and bloom filters. A bloom
+    and level, at most one chunk per file, one data page per chunk column,
+    per-column dictionary switches (the sidecar's ``dictionary``, chosen
+    by ``write_table``'s trial encoding) and bloom filters (column ->
+    expected NDV, the sidecar's ``bloom_filters``). Both ``write_table``
+    and ``maintenance.compact`` write chunk files with these, so a
+    compacted tail keeps the table's encodings and bloom filters. A bloom
     column is written without a dictionary: parquet-mr omits the bloom of
     a fully dictionary-encoded column chunk. v2 gives dictionary-off
     integers DELTA_BINARY_PACKED pages; parquet-mr picks v1 or v2 encoders
     through one JVM-wide factory, so these options are only used under
-    ``PARQUET_WRITE_LOCK`` (``write_chunk_files`` holds it)."""
+    ``PARQUET_WRITE_LOCK`` (``write_chunk_files`` holds it).
+
+    One page per chunk column: the page row limit is ``block_size`` (not
+    parquet-mr's 20,000, which cut a 65,536-row chunk column into four
+    separately compressed pages) and the page byte limit is
+    ``_page_bytes``. A lookup inside a chunk decodes the whole chunk
+    column."""
     opts = {
         "compression": config.compression_codec,
         "parquet.compression.codec.zstd.level": str(config.zstd_level),
         "parquet.writer.version": "PARQUET_2_0",
+        "parquet.page.row.count.limit": str(config.block_size),
+        "parquet.page.size": str(_page_bytes(config)),
         "maxRecordsPerFile": str(config.block_size),
     }
     for col, enabled in (dictionary or {}).items():
@@ -366,22 +398,23 @@ def write_chunk_files(
     0 without a chunk: that 0-row file is removed unless the whole write
     is empty. ``total_rows``/``bounds`` skip the chunker's count and
     boundary-sample jobs when the caller already measured them. Returns
-    ``(rows, chunks)`` written."""
+    ``(rows, chunks, schema)`` written; ``plan_chunk_files`` reads the
+    files back with that schema instead of inferring it."""
     chunked = with_chunk_id(
         df, order_keys, config.block_size, total_rows=total_rows,
         bounds=bounds, start=start,
     )
     num_rows = chunked._btr_total_rows  # free byproduct of the offset job
     num_chunks = -(-num_rows // config.block_size)
+    staged = _stage_by_chunk(chunked, num_chunks).drop("_chunk", *drop)
     write_parquet(
-        _stage_by_chunk(chunked, num_chunks).drop("_chunk", *drop)
-        .write.mode("overwrite")
+        staged.write.mode("overwrite")
         .options(**chunk_write_options(config, dictionary=dictionary, bloom=bloom)),
         data_path,
     )
     if num_rows:
         _fs.remove_empty_parquet(data_path, "part-00000-*", df.sparkSession)
-    return num_rows, num_chunks
+    return num_rows, num_chunks, staged.schema
 
 
 def plan_chunk_files(
@@ -391,12 +424,15 @@ def plan_chunk_files(
     data_path: str,
     stats_path: str,
     config: BtrBlocksConfig,
+    schema: StructType,
     keep_chunks: int = 0,
 ) -> dict:
     """Pipeline step 4, shared by ``write_table`` and ``maintenance.compact``:
     plan every chunk file under ``data_path`` and write the per-chunk stats
     dataset to ``stats_path``. ``meta`` is the sidecar this write commits
-    (schema, column groups, num_chunks). The first ``keep_chunks`` chunks'
+    (schema, column groups, num_chunks); ``schema`` is the files' schema
+    as ``write_chunk_files`` wrote them (reading with it skips a
+    schema-inference job). The first ``keep_chunks`` chunks'
     stats rows are carried over from the table at ``path`` instead (compact
     keeps those chunk files untouched): from the ``_btr_chunk_stats``
     dataset, or from a v1 sidecar's inline rows. Returns the sidecar's
@@ -407,7 +443,7 @@ def plan_chunk_files(
     # read-back streams whole chunks with no shuffle, no staging copy, and
     # the plan reads the compressed bytes a reader will see
     written = (
-        spark.read.parquet(data_path)
+        spark.read.schema(schema).parquet(data_path)
         .withColumn(
             "_chunk",
             F.floor(F.col("_idx") / F.lit(config.block_size)).cast("long"),
@@ -640,6 +676,93 @@ def _resolve_column_groups(
     return chosen, nd_by_det
 
 
+# Spark type -> the encoding parquet-mr's v2 writer falls back to without
+# a dictionary, for the types pyarrow writes in Spark's physical form.
+# Decimal (Spark: INT32/INT64, pyarrow: FIXED_LEN_BYTE_ARRAY), boolean and
+# nested types are not trialled.
+_FALLBACK_ENCODING = {
+    **dict.fromkeys(
+        ("tinyint", "smallint", "int", "bigint", "date", "timestamp_ntz"),
+        "DELTA_BINARY_PACKED",
+    ),
+    "float": "PLAIN",
+    "double": "PLAIN",
+    "string": "DELTA_BYTE_ARRAY",
+    "binary": "DELTA_BYTE_ARRAY",
+}
+
+
+def _trial_dictionary(
+    df: DataFrame,
+    order_keys: list[str],
+    col_types: dict[str, str],
+    config: BtrBlocksConfig,
+) -> dict[str, bool]:
+    """Dictionary switch per column of ``col_types`` by trial encoding.
+    One job collects the input's first ``block_size`` rows; sorted by
+    ``order_keys``, each column is written by pyarrow twice, at the
+    writer's codec and level as data page v2 with one page: with a
+    dictionary, and in parquet-mr's fallback encoding. A column gets a
+    dictionary iff that form's column chunk is smaller. A TIMESTAMP is
+    INT96 (PLAIN without a dictionary) under Spark's default
+    ``outputTimestampType``, INT64 under TIMESTAMP_MICROS, and not
+    trialled under TIMESTAMP_MILLIS. Columns of other types, and every
+    column of an empty input, are left out of the result."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts_form = df.sparkSession.conf.get("spark.sql.parquet.outputTimestampType")
+    ts_encoding = {"INT96": "PLAIN", "TIMESTAMP_MICROS": "DELTA_BINARY_PACKED"}
+    encodings = {
+        c: ts_encoding.get(ts_form) if t == "timestamp" else _FALLBACK_ENCODING.get(t)
+        for c, t in col_types.items()
+    }
+    encodings = {c: e for c, e in encodings.items() if e}
+    if not encodings:
+        return {}
+    sample = (
+        df.select(*dict.fromkeys([*order_keys, *encodings]))
+        .limit(config.block_size)
+        .toArrow()
+    )
+    if not sample.num_rows:
+        return {}
+    if order_keys:
+        sample = sample.sort_by(
+            [(k, "ascending") for k in order_keys], null_placement="at_start"
+        )
+    codec = config.compression_codec.lower()
+    codec = {"uncompressed": "none", "lz4_raw": "lz4"}.get(codec, codec)
+    level = config.zstd_level if codec == "zstd" else None
+
+    def smaller_with_dictionary(col: str) -> bool:
+        arr = sample.column(col)
+        if encodings[col] != "PLAIN" and pa.types.is_timestamp(arr.type):
+            arr = arr.cast(pa.int64())  # INT64 micros: the same bytes
+        table = pa.table({col: arr})
+
+        def size(**kw) -> int:
+            buf = pa.BufferOutputStream()
+            pq.write_table(
+                table, buf, compression=codec, compression_level=level,
+                data_page_version="2.0", data_page_size=_page_bytes(config),
+                use_deprecated_int96_timestamps=True, **kw,
+            )
+            md = pq.read_metadata(pa.BufferReader(buf.getvalue()))
+            return sum(
+                md.row_group(r).column(0).total_compressed_size
+                for r in range(md.num_row_groups)
+            )
+
+        return size(use_dictionary=True) < size(
+            use_dictionary=False, column_encoding={col: encodings[col]}
+        )
+
+    # pyarrow encodes with the GIL released: one column per thread
+    with ThreadPoolExecutor(min(len(encodings), os.cpu_count() or 1)) as pool:
+        return dict(zip(encodings, pool.map(smaller_with_dictionary, encodings)))
+
+
 def write_table(
     df: DataFrame,
     path: str,
@@ -670,10 +793,10 @@ def write_table(
         df = df.drop("_idx")
     col_types = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
 
-    # one map-side JVM pass sizes the physical knobs: parquet dictionary
-    # pays off when the column's value pool is small relative to a chunk;
-    # approx_count_distinct is exactly the scale-safe estimator for that
-    # (T1's unique_count at table granularity, HLL instead of exact)
+    # one map-side JVM pass measures the table's NDVs (T1's unique_count at
+    # table granularity, HLL instead of exact): they size the bloom filters
+    # and column groups, and set the dictionary switch of the columns the
+    # trial encoding below does not cover
     ndv = {}
     ndv_cols = [c for c, _t in col_types]
     # EXPLICIT column groups ride their exact validation aggregates in the
@@ -727,6 +850,17 @@ def write_table(
         pct_expr = [
             F.percentile_approx(_k0, qs, 10000).alias("_btr_bounds")
         ]
+    # the trial encoding runs beside the NDV job, on every column but an
+    # integer/temporal leading key (never a dictionary): its sample job
+    # needs only the input, and the pyarrow work only the driver. The
+    # thread keeps the caller's Spark local properties and job tags
+    k0_int = kind_of(_k0_type) == "int"
+    trial_thread = ThreadPoolExecutor(1)
+    trial = trial_thread.submit(
+        inheritable_thread_target(spark)(_trial_dictionary), df, order_keys,
+        {c: t for c, t in col_types if not (k0_int and c == _k0)}, config,
+    )
+    trial_thread.shutdown(wait=False)  # the submitted call still runs
     ndv_row = df.agg(
         F.count(F.lit(1)).alias("_btr_total"),
         *[F.approx_count_distinct(c).alias(c) for c in ndv_cols],
@@ -750,6 +884,8 @@ def write_table(
         if group_val_aggs
         else None
     )
+    # the cardinality rule, kept for the columns the trial leaves out:
+    # a dictionary iff the value pool is small relative to a chunk
     dict_enabled = {
         c: ndv.get(c, 0) <= max(config.block_size // 4, 1) for c in ndv_cols
     }
@@ -810,9 +946,12 @@ def write_table(
     # stores it in a few bits per row, and file min/max already narrows a
     # lookup to one chunk (an absent key inside that chunk's range reads
     # the chunk instead of being rejected by a bloom).
-    k0_sorted = kind_of(_k0_type) == "int" and _k0 not in group_deps
+    k0_sorted = k0_int and _k0 not in group_deps
     if k0_sorted:
         dict_enabled[_k0] = False
+    # every other column: a dictionary iff it compresses the key-ordered
+    # first block_size input rows smaller (no Python stage over the data)
+    dict_enabled.update(trial.result())
     bloom_cols = {}
     if config.bloom_filter_keys:
         for col in order_keys:
@@ -828,7 +967,7 @@ def write_table(
     data_path = _fs.join(path, "data")
     dictionary = {c: on for c, on in dict_enabled.items() if c not in group_deps}
     dictionary["_idx"] = False
-    num_rows, num_chunks = write_chunk_files(
+    num_rows, num_chunks, written_schema = write_chunk_files(
         df, data_path, order_keys, config,
         total_rows=total_rows, bounds=bounds,
         dictionary=dictionary, bloom=bloom_cols, drop=tuple(group_deps),
@@ -843,8 +982,8 @@ def write_table(
         "num_rows": num_rows,
         "num_chunks": num_chunks,
         "bloom_filters": bloom_cols,
-        # the NDV-chosen parquet dictionary switch per column: compact
-        # rewrites chunk files with these and the bloom filters
+        # the parquet dictionary switch per column (trial-encoded, or by
+        # rule): compact rewrites chunk files with these and the blooms
         "dictionary": dictionary,
         # dependent columns stored as mapping tables (absent from data
         # files); readers MUST reconstruct via reconstruct_column_groups
@@ -855,8 +994,9 @@ def write_table(
     }
     metadata["totals"] = plan_chunk_files(
         spark, path, metadata, data_path, _fs.join(path, "_btr_chunk_stats"),
-        config,
+        config, written_schema,
     )
-    metadata["write_seconds"] = round(time.time() - t0, 3)
+    # the wall time is returned, not stored: one input must leave the same
+    # sidecar bytes, which count in the table's on-disk size
     _fs.write_json(_fs.join(path, "_btr_metadata.json"), metadata, spark)
-    return metadata
+    return {**metadata, "write_seconds": round(time.time() - t0, 3)}

@@ -12,9 +12,12 @@ Design (mirrors the reference's read path, compression/BtrReader.cpp):
   - schema comes from the metadata sidecar (the btr ``metadata`` file
     analog) — not file inference, the declared schema of the written
     relation; the internal ``_idx`` column never surfaces.
-  - one InputPartition per chunk FILE (the writer emits one file per
-    block_size chunk) → scan parallelism = chunk count, exactly the
-    reference's parallel-decompress shape (decompression-speed.cpp:40-64).
+  - one InputPartition per ColumnPart: consecutive chunk files (the
+    writer emits one file per block_size chunk) packed up to
+    ``part_target_bytes`` (16 MiB, the reference's ColumnPart target,
+    storage/Chunk.cpp:233-266). Every partition is a Python task, and a
+    task's fixed cost dwarfs decoding one small chunk file, so scan
+    parallelism is bytes / 16 MiB, not the chunk count.
   - ``pushFilters`` prunes whole chunk files from the parquet FOOTER
     min/max statistics of the filtered column — metadata-only reads, no
     data IO for excluded chunks (the chunk-stats skipping the sidecar
@@ -24,11 +27,11 @@ Design (mirrors the reference's read path, compression/BtrReader.cpp):
   - ``read`` yields Arrow record batches (pyarrow), so rows stream
     through the Python worker in columnar form.
 
-Scale: at 100 TB the partition list is one entry per chunk file; listing
-and footer pruning are O(files) driver-side metadata work, and every data
-byte moves only inside executor tasks. For the JVM-native fast path a
-plain ``spark.read.parquet(dir/"data")`` remains available (reader.
-read_table); this source adds the format-aware contract on top.
+Scale: at 100 TB the partition list is one entry per 16 MiB of chunk
+files; listing and footer pruning are O(files) driver-side metadata work,
+and every data byte moves only inside executor tasks. For the JVM-native
+fast path a plain ``spark.read.parquet(dir/"data")`` remains available
+(reader.read_table); this source adds the format-aware contract on top.
 """
 
 from __future__ import annotations
@@ -50,6 +53,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from btrblocks_spark.config import DEFAULT_CONFIG
 from btrblocks_spark.format.journal import (
     collect_stale,
     commit_append,
@@ -63,6 +67,8 @@ from btrblocks_spark.format.reader import read_metadata
 
 @dataclass
 class ChunkFilePartition(InputPartition):
+    """One chunk file: a stream microbatch's unit of new data."""
+
     file_path: str
     columns: tuple
     # column-group reconstruction payload: ((det, dep, mapping_dir), ...)
@@ -70,8 +76,32 @@ class ChunkFilePartition(InputPartition):
     groups: tuple = ()
 
 
-def _read_batches_reconstructed(file_path: str, columns: tuple, groups: tuple):
-    """Stream a chunk file's Arrow batches, reconstructing column-group
+@dataclass
+class ColumnPartPartition(InputPartition):
+    """Consecutive chunk files of one batch scan, up to ``part_target_bytes``
+    together (a single larger file stands alone)."""
+
+    files: tuple
+    columns: tuple
+    groups: tuple = ()
+
+
+def _pack_column_parts(files: list[str], target: int) -> list[tuple]:
+    """Group ``files`` in order into runs of at most ``target`` bytes."""
+    parts: list[list[str]] = []
+    size = 0
+    for f in files:
+        n = os.path.getsize(f)
+        if not parts or size + n > target:
+            parts.append([])
+            size = 0
+        parts[-1].append(f)
+        size += n
+    return [tuple(p) for p in parts]
+
+
+def _read_batches_reconstructed(files: tuple, columns: tuple, groups: tuple):
+    """Stream the chunk files' Arrow batches, reconstructing column-group
     dependents (write_table stores them as mapping tables, not streams):
     per dependent, ``pc.index_in`` the determinant against the mapping's
     det column (null matches null — Arrow's set lookup is null-safe) and
@@ -90,8 +120,11 @@ def _read_batches_reconstructed(file_path: str, columns: tuple, groups: tuple):
     maps = {
         dep: pq.read_table(mdir) for dep, (_det, mdir) in deps.items()
     }
-    pf = pq.ParquetFile(file_path)
-    for batch in pf.iter_batches(columns=read_cols):
+    batches = (
+        b for f in files
+        for b in pq.ParquetFile(f).iter_batches(columns=read_cols)
+    )
+    for batch in batches:
         arrays = []
         for c in columns:
             if c in deps:
@@ -222,13 +255,16 @@ class BtrBlocksReader(DataSourceReader):
         )
         if self._filters:
             files = [p for p in files if _file_may_match(p, self._filters)]
-        return [ChunkFilePartition(p, self.columns, self.groups) for p in files]
+        return [
+            ColumnPartPartition(part, self.columns, self.groups)
+            for part in _pack_column_parts(files, DEFAULT_CONFIG.part_target_bytes)
+        ]
 
-    def read(self, partition: ChunkFilePartition):
+    def read(self, partition: ColumnPartPartition):
         if partition is None:  # Spark passes None when partitions() was empty
             return
         yield from _read_batches_reconstructed(
-            partition.file_path, partition.columns, partition.groups
+            partition.files, partition.columns, partition.groups
         )
 
 
@@ -240,7 +276,7 @@ class BtrBlocksStreamReader(DataSourceStreamReader):
     append-only files (SURVEY.md §7), so a streaming offset is simply "the
     set of chunk files seen so far". Each microbatch plans one
     InputPartition per NEW chunk file — scan parallelism = newly appended
-    chunks, the same per-chunk task shape as the batch reader.
+    chunks (the batch reader packs chunk files into ColumnParts instead).
 
     Offsets embed the sorted processed-file list, making
     ``partitions(start, end)`` a pure set difference — deterministic replay
@@ -295,7 +331,7 @@ class BtrBlocksStreamReader(DataSourceStreamReader):
             return
         del pf  # existence probed; the shared helper re-opens the file
         yield from _read_batches_reconstructed(
-            partition.file_path, partition.columns, partition.groups
+            (partition.file_path,), partition.columns, partition.groups
         )
 
     def commit(self, end: dict) -> None:

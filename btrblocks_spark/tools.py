@@ -118,17 +118,23 @@ def cmd_btrmeta(args, spark=None) -> int:
             f"uniq {row['unique_count']}"
         )
     # the planner's estimate next to what the chunk files hold (footer
-    # column-chunk bytes), and the Parquet encodings actually written
+    # column-chunk bytes), the sidecar's dictionary switch and the Parquet
+    # encodings actually written, so a footer that disagrees shows
     est: dict[str, int] = {}
     for row in rows:
         est[row["column"]] = est.get(row["column"], 0) + int(row["est_size"])
     disk = _fs.column_footer_bytes(_fs.join(args.table, "data"), spark)
-    print(f"  {'column':<20} {'est_bytes':>12} {'disk_bytes':>12}  encodings")
+    switches = meta.get("dictionary") or {}
+    print(
+        f"  {'column':<20} {'est_bytes':>12} {'disk_bytes':>12} "
+        f"{'dict':>4}  encodings"
+    )
     names = [c["name"] for c in meta["schema"]]
     for col in names + sorted(set(disk) - set(names)):
         nbytes, encodings = disk.get(col, (0, set()))
+        switch = {True: "on", False: "off"}.get(switches.get(col), "-")
         print(
-            f"  {col:<20} {est.get(col, 0):>12} {nbytes:>12}  "
+            f"  {col:<20} {est.get(col, 0):>12} {nbytes:>12} {switch:>4}  "
             f"{','.join(sorted(encodings)) or '-'}"
         )
     return 0

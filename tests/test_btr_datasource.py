@@ -4,6 +4,7 @@ and footer-stats chunk-file pruning."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -49,24 +50,33 @@ def test_filters_apply_correctly(spark, written_orders):
         assert back.filter(cond).count() == src.filter(cond).count(), cond
 
 
+def _files(reader) -> list[str]:
+    """The chunk files a batch reader scans, over all its partitions."""
+    return [f for part in reader.partitions() for f in part.files]
+
+
 def test_partitions_are_chunk_files(spark, written_orders):
     path, src = written_orders
     r = BtrBlocksReader({"path": path}, [f.name for f in src.schema.fields])
     parts = r.partitions()
-    # block_size=256: one partition per chunk file
-    assert len(parts) >= src.count() // 256
+    # block_size=256: one chunk file per chunk, every file scanned once,
+    # packed in order into one ColumnPart (all of them fit in 16 MiB)
+    files = _files(r)
+    assert len(files) >= src.count() // 256
+    assert files == sorted(set(files))
+    assert len(parts) == 1
 
 
 def test_footer_stats_prune_chunk_files(spark, written_orders):
     path, src = written_orders
     r = BtrBlocksReader({"path": path}, [f.name for f in src.schema.fields])
-    n_all = len(r.partitions())
+    n_all = len(_files(r))
 
     # data is written sorted by o_orderkey → a point filter on it must
     # exclude almost every chunk file via footer min/max
     unhandled = list(r.pushFilters([EqualTo(("o_orderkey",), 37)]))
     assert len(unhandled) == 1  # every filter handed back for re-apply
-    n_point = len(r.partitions())
+    n_point = len(_files(r))
     assert n_point <= 2 < n_all
 
     r2 = BtrBlocksReader({"path": path}, [f.name for f in src.schema.fields])
@@ -76,6 +86,53 @@ def test_footer_stats_prune_chunk_files(spark, written_orders):
     r3 = BtrBlocksReader({"path": path}, [f.name for f in src.schema.fields])
     list(r3.pushFilters([LessThan(("o_orderkey",), -1)]))
     assert len(r3.partitions()) == 0
+
+
+def test_partitions_pack_chunk_files_up_to_part_target(spark, tmp_path):
+    """A multi-file table with an uncompacted append scans through one
+    partition (its files are far below ``part_target_bytes``) and returns
+    exact rows; a pruned lookup still returns exact rows. Packing is in
+    file order and starts a new part when the next file would pass the
+    target."""
+    from btrblocks_spark.sources.btr_datasource import _pack_column_parts
+
+    path = str(tmp_path / "packed")
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", "concat('v', CAST(id % 11 AS STRING)) AS v"
+        )
+
+    write_table(rows(0, 2000), path, ["k"], DEFAULT_CONFIG.with_(block_size=256))
+    spark.dataSource.register(BtrBlocksDataSource)
+    rows(2000, 2300).write.format("btrblocks").mode("append").option(
+        "path", path
+    ).save()
+    r = BtrBlocksReader({"path": path}, ["k", "v"])
+    parts = r.partitions()
+    data = sorted(
+        os.path.join(path, "data", f) for f in os.listdir(os.path.join(path, "data"))
+        if f.endswith(".parquet")
+    )
+    assert len(data) > 2000 // 256 + 1  # the chunk files and the append's
+    assert len(parts) == 1 and list(parts[0].files) == data
+    scan = _load(spark, path)
+    assert scan.rdd.getNumPartitions() == 1
+    assert sorted(scan.collect()) == sorted(rows(0, 2300).collect())
+    assert [tuple(x) for x in scan.filter(F.col("k") == 2123).collect()] == [
+        (2123, "v0")
+    ]
+    assert [tuple(x) for x in scan.filter(F.col("k") == 77).collect()] == [
+        (77, "v0")
+    ]
+
+    files = parts[0].files
+    size = {f: os.path.getsize(f) for f in files}
+    target = size[files[0]] + size[files[1]]
+    packed = _pack_column_parts(list(files), target)
+    assert [f for p in packed for f in p] == list(files)
+    assert all(sum(size[f] for f in p) <= target or len(p) == 1 for p in packed)
+    assert packed[0] == files[:2]
 
 
 def test_pruned_read_still_correct(spark, written_orders):

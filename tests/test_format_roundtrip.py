@@ -23,6 +23,7 @@ from btrblocks_spark.format.reader import (
 from btrblocks_spark.format.verify import frames_equal, round_trip_verify
 from btrblocks_spark.format.writer import write_table
 from btrblocks_spark.tables import load_table
+from conftest import SF_DIR_MED
 
 
 @pytest.fixture(scope="module")
@@ -267,7 +268,7 @@ def test_bloom_filters_on_keys(spark, sf_dir):
         .selectExpr(
             "id DIV 5000 AS bucket",
             "id AS uid",
-            "CAST(id % 7 AS INT) AS small_key",
+            "CAST(abs(hash(id)) % 7 AS INT) AS small_key",
             "CAST(id * 37 % 100000 AS DOUBLE) AS val",
         )
     )
@@ -279,9 +280,11 @@ def test_bloom_filters_on_keys(spark, sf_dir):
         write_table(
             df, f"{base}/off", keys, cfg.with_(bloom_filter_keys=False),
         )
-        # uid is unique per row -> non-dict scheme -> bloomed; small_key has
-        # 7 distinct values -> dict scheme -> no bloom (dict page suffices);
-        # bucket leads the sort -> neither bloom nor dictionary
+        # uid is unique per row -> smaller delta-encoded -> bloomed;
+        # small_key has 7 distinct values in random order -> smaller with a
+        # dictionary -> no bloom (dict page suffices); (a periodic id % 7
+        # would be smaller delta-encoded, and bloomed); bucket leads the
+        # sort -> neither bloom nor dictionary
         assert set(m_on["bloom_filters"]) == {"uid"}
         assert m_on["bloom_filters"]["uid"] > 1000
         assert m_on["dictionary"]["bucket"] is False
@@ -305,7 +308,8 @@ def test_bloom_filters_on_keys(spark, sf_dir):
             assert _encodings(f)["bucket"] == {"DELTA_BINARY_PACKED"}, f
 
         got = spark.read.parquet(f"{base}/on/data").filter(F.col("uid") == 12345)
-        assert [r.small_key for r in got.collect()] == [12345 % 7]
+        want = df.filter(F.col("uid") == 12345).first().small_key
+        assert [r.small_key for r in got.collect()] == [want]
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -411,9 +415,8 @@ def test_compact_keeps_bloom_filters(spark, tmp_path):
     bloom filter on the bloomed key, as the sidecar's ``bloom_filters``
     says, and every column is dictionary-encoded in the compacted-* files
     exactly when it is in the part-* files write_table wrote. ``tens``
-    (NDV 5,000 in the written rows, above block_size // 4, so written
-    without a dictionary, but each value repeats ten times) keeps a
-    dictionary page whenever one is switched on; an all-distinct column
+    (each value repeats ten times) keeps a dictionary page whenever one is
+    switched on, whatever the trial encoding chose; an all-distinct column
     like ``val`` falls back to plain pages either way. The integer leading
     key ``bucket`` has no bloom and no dictionary page in any file, and is
     DELTA_BINARY_PACKED."""
@@ -427,7 +430,7 @@ def test_compact_keeps_bloom_filters(spark, tmp_path):
     cols = (
         "id DIV 5000 AS bucket",
         "id AS uid",
-        "CAST(id % 7 AS INT) AS small_key",
+        "CAST(abs(hash(id)) % 7 AS INT) AS small_key",
         "CAST(id * 37 % 100000 AS DOUBLE) AS val",
         "id DIV 10 AS tens",
     )
@@ -457,7 +460,8 @@ def test_compact_keeps_bloom_filters(spark, tmp_path):
         assert _dictionary_pages(f)["bucket"] == {False}, f
         assert _encodings(f)["bucket"] == {"DELTA_BINARY_PACKED"}, f
     got = spark.read.parquet(f"{path}/data").filter(F.col("uid") == 52345)
-    assert [r.small_key for r in got.collect()] == [52345 % 7]
+    want = spark.range(52345, 52346).selectExpr(*cols).first().small_key
+    assert [r.small_key for r in got.collect()] == [want]
 
     def encodings(prefix: str) -> list[dict]:
         return [
@@ -553,6 +557,191 @@ def test_table_written_by_v1_writer_still_works(spark, tmp_path, monkeypatch):
     assert delete_where_dv(spark, path, "k < 10 OR k = 3200")["deleted_rows"] == 11
     assert sorted(read_table_mor(spark, path).collect()) == sorted(
         everything.filter("k >= 10 AND k != 3200").collect()
+    )
+
+
+def _num_rows(file_path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(file_path).metadata.num_rows
+
+
+def _page_counts(spark, file_path: str) -> dict[str, list[int]]:
+    """Data pages per column chunk of every row group, from parquet-mr's
+    offset index (footer metadata only, no page is read)."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    in_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jvm.org.apache.hadoop.fs.Path(file_path), conf
+    )
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(in_file)
+    out: dict[str, list[int]] = {}
+    try:
+        for block in reader.getFooter().getBlocks():
+            for col in block.getColumns():
+                out.setdefault(col.getPath().toDotString(), []).append(
+                    int(reader.readOffsetIndex(col).getPageCount())
+                )
+    finally:
+        reader.close()
+    return out
+
+
+def test_trial_encoding_chooses_dictionary_per_column(spark, tmp_path):
+    """The sf0.01 lineitem at block 8192, keys l_orderkey, l_linenumber:
+    the trial encoding gives ``l_shipdate`` (NDV above block_size // 4,
+    so the old cardinality rule wrote it DELTA_BINARY_PACKED, 43 % larger)
+    a dictionary, and ``l_partkey`` (NDV below the rule's threshold) none.
+    Every chunk file's dictionary pages match the sidecar's switches."""
+    import json
+
+    from btrblocks_spark.format.fs import list_parquet_files
+
+    df = load_table(spark, SF_DIR_MED, "lineitem")
+    path = str(tmp_path / "lineitem")
+    meta = write_table(
+        df, path, ["l_orderkey", "l_linenumber"],
+        DEFAULT_CONFIG.with_(block_size=8192),
+    )
+    switches = meta["dictionary"]
+    assert switches["l_shipdate"] is True
+    assert switches["l_partkey"] is False
+    assert switches["l_orderkey"] is False and switches["_idx"] is False
+    with open(f"{path}/_btr_metadata.json") as fh:
+        assert json.load(fh)["dictionary"] == switches
+    files = list_parquet_files(f"{path}/data")
+    assert len(files) == meta["num_chunks"]
+    for f in files:
+        pages = _dictionary_pages(f)
+        assert set(pages) == set(switches), f
+        for col, on in switches.items():
+            assert pages[col] == {on}, (f, col, pages[col])
+
+
+def test_chunk_column_is_one_page(spark, tmp_path):
+    """Every column of a 32,768-row chunk file is one data page (parquet-mr
+    would cut it at 20,000 rows), in the files write_table writes and in
+    the ones compact rewrites."""
+    from btrblocks_spark.format.fs import list_parquet_files
+    from btrblocks_spark.format.maintenance import compact
+    from btrblocks_spark.sources.btr_datasource import BtrBlocksDataSource
+
+    bs = 32768
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", "id * 7919 % 1000 AS v",
+            "concat('row-', CAST(id AS STRING)) AS s", "CAST(id AS DOUBLE) / 3 AS d",
+        )
+
+    path = str(tmp_path / "one_page")
+    write_table(rows(0, 50000), path, ["k"], DEFAULT_CONFIG.with_(block_size=bs))
+    spark.dataSource.register(BtrBlocksDataSource)
+    rows(50000, 52000).write.format("btrblocks").mode("append").option(
+        "path", path
+    ).save()
+    assert compact(spark, path)["compacted"]
+    files = list_parquet_files(f"{path}/data")
+    assert any("compacted-" in f for f in files)
+    for f in files:
+        counts = _page_counts(spark, f)
+        assert set(counts) == {"k", "v", "s", "d", "_idx"}, f
+        assert all(c == [1] for c in counts.values()), (f, counts)
+    assert any(_num_rows(f) == bs for f in files)
+    got, _meta = read_table(spark, path)
+    assert sorted(got.collect()) == sorted(rows(0, 52000).collect())
+
+
+def test_sidecar_is_identical_across_writes(spark, tmp_path):
+    """Two writes of the same frame leave a byte-identical sidecar: the
+    write's wall time is returned to the caller, not stored."""
+    import json
+
+    df = spark.range(5000).selectExpr(
+        "id AS k", "id % 17 AS v", "concat('s', CAST(id % 3 AS STRING)) AS s"
+    )
+    path = str(tmp_path / "same")
+    sidecars = []
+    for _ in range(2):
+        meta = write_table(df, path, ["k"], DEFAULT_CONFIG.with_(block_size=1024))
+        assert meta["write_seconds"] > 0
+        with open(f"{path}/_btr_metadata.json", "rb") as fh:
+            sidecars.append(fh.read())
+    assert sidecars[0] == sidecars[1]
+    assert "write_seconds" not in json.loads(sidecars[0])
+
+
+def test_write_table_job_count(spark, tmp_path):
+    """One write_table of a one-chunk table runs ten Spark jobs (adaptive
+    execution runs each shuffle stage as a job of its own): the NDV
+    aggregate (2), the trial encoding's sample (1), the chunker's offset
+    aggregate (2), the chunk write (3: two exchanges and the write) and
+    the plan pass's stats write (2). The plan pass reads the chunk files
+    with the schema just written, so it runs no schema-inference job."""
+    sc = spark.sparkContext
+    df = spark.range(3000).selectExpr(
+        "id AS k", "id % 7 AS v", "concat('s', CAST(id % 13 AS STRING)) AS s"
+    )
+    group = "btr-test-write-table-jobs"
+    sc.setJobGroup(group, "one write_table")
+    try:
+        write_table(df, str(tmp_path / "jobs"), ["k"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10
+
+
+def test_table_with_cardinality_rule_switches_reads_and_compacts(spark, tmp_path):
+    """A table whose sidecar carries the switches of the cardinality rule
+    the writer used before trial encoding (a dictionary iff table NDV <=
+    block_size // 4) reads, and compact rewrites its tail with those
+    switches, not with new trial choices. ``periodic`` (5 values in key
+    order) is smaller delta-encoded and ``pool`` (300 wide values) smaller
+    with a dictionary, the reverse of what the rule says."""
+    import json
+
+    from btrblocks_spark.format.fs import list_parquet_files
+    from btrblocks_spark.format.maintenance import compact
+    from btrblocks_spark.sources.btr_datasource import BtrBlocksDataSource
+
+    bs = 1024
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", "id % 5 AS periodic", "CAST(hash(id % 300) AS BIGINT) AS pool"
+        )
+
+    path = str(tmp_path / "rule_switches")
+    meta = write_table(rows(0, 3000), path, ["k"], DEFAULT_CONFIG.with_(block_size=bs))
+    assert meta["dictionary"] == {
+        "k": False, "periodic": False, "pool": True, "_idx": False
+    }
+    rule = {"k": False, "periodic": 5 <= bs // 4, "pool": 300 <= bs // 4, "_idx": False}
+    sidecar_path = f"{path}/_btr_metadata.json"
+    with open(sidecar_path) as fh:
+        sidecar = json.load(fh)
+    sidecar["dictionary"] = rule
+    with open(sidecar_path, "w") as fh:
+        json.dump(sidecar, fh)
+
+    spark.dataSource.register(BtrBlocksDataSource)
+    rows(3000, 3300).write.format("btrblocks").mode("append").option(
+        "path", path
+    ).save()
+    assert compact(spark, path)["compacted"]
+    files = list_parquet_files(f"{path}/data")
+    compacted = [f for f in files if "/compacted-" in f]
+    assert compacted
+    for f in compacted:
+        pages = _dictionary_pages(f)
+        for col, on in rule.items():
+            assert pages[col] == {on}, (f, col, pages[col])
+    everything = rows(0, 3300)
+    got, _meta = read_table(spark, path)
+    assert sorted(got.collect()) == sorted(everything.collect())
+    source = spark.read.format("btrblocks").option("path", path).load()
+    assert sorted(source.filter(F.col("k") >= 2990).collect()) == sorted(
+        everything.filter("k >= 2990").collect()
     )
 
 

@@ -298,8 +298,9 @@ def test_cli_tools_end_to_end(spark, tmpdir):
 def test_cli_btrmeta_reports_estimated_and_disk_bytes(spark, tmp_path):
     """btrmeta prints, per column, the planner's estimated bytes (summed
     chunk-stats ``est_size``), the on-disk bytes (summed footer column-chunk
-    ``total_compressed_size``) and the encodings on disk, for local paths
-    and URIs alike; ``_idx`` is on disk only."""
+    ``total_compressed_size``), the sidecar's dictionary switch and the
+    encodings on disk, for local paths and URIs alike; ``_idx`` is on disk
+    only, and every switch agrees with the footers' dictionary pages."""
     import io
     from contextlib import redirect_stdout
 
@@ -314,9 +315,12 @@ def test_cli_btrmeta_reports_estimated_and_disk_bytes(spark, tmp_path):
 
     path = str(tmp_path / "meta_tbl")
     df = spark.range(3000).selectExpr(
-        "id AS k", "CAST(id % 5 AS INT) AS small", "concat('w', CAST(id AS STRING)) AS s"
+        # small: five values in random order, where a dictionary is the
+        # smaller form (a periodic id % 5 is smaller delta-encoded)
+        "id AS k", "CAST(abs(hash(id)) % 5 AS INT) AS small",
+        "concat('w', CAST(id AS STRING)) AS s",
     )
-    write_table(df, path, ["k"], DEFAULT_CONFIG.with_(block_size=512))
+    meta = write_table(df, path, ["k"], DEFAULT_CONFIG.with_(block_size=512))
 
     def btrmeta(table_path):
         out = io.StringIO()
@@ -326,8 +330,10 @@ def test_cli_btrmeta_reports_estimated_and_disk_bytes(spark, tmp_path):
         header = next(i for i, line in enumerate(lines) if "est_bytes" in line)
         table = {}
         for line in lines[header + 1:]:
-            col, est, disk, encodings = line.split()
-            table[col] = (int(est), int(disk), set(encodings.split(",")))
+            col, est, disk, switch, encodings = line.split()
+            table[col] = (
+                int(est), int(disk), set(encodings.split(",")), switch
+            )
         return table
 
     table = btrmeta(path)
@@ -349,11 +355,14 @@ def test_cli_btrmeta_reports_estimated_and_disk_bytes(spark, tmp_path):
                     disk.get(col.path_in_schema, 0) + col.total_compressed_size
                 )
     assert set(table) == {"k", "small", "s", "_idx"}
-    for col, (e, d, _enc) in table.items():
+    for col, (e, d, enc, switch) in table.items():
         assert (e, d) == (est.get(col, 0), disk[col]), col
+        assert switch == {True: "on", False: "off"}[meta["dictionary"][col]], col
+        assert ("RLE_DICTIONARY" in enc) == meta["dictionary"][col], col
     assert table["k"][2] == {"DELTA_BINARY_PACKED"}
     assert table["_idx"][2] == {"DELTA_BINARY_PACKED"}
     assert "RLE_DICTIONARY" in table["small"][2]
+    assert table["small"][3] == "on" and table["k"][3] == "off"
 
 
 def test_cli_sql_over_operator_views(spark, sf_dir):
