@@ -16,16 +16,15 @@ FSST-class) additionally exist as real encode/decode transforms in
 ``codecs.py`` with bit-exact round-trip tests.
 """
 
-from btrblocks_spark.format.chunker import with_chunk_id, with_global_index
-from btrblocks_spark.format.planner import choose_scheme
-from btrblocks_spark.format.reader import read_table, scheme_summary
-from btrblocks_spark.format.writer import write_table
+from btrblocks_spark import lazy_exports
 
-__all__ = [
-    "with_global_index",
-    "with_chunk_id",
-    "choose_scheme",
-    "write_table",
-    "read_table",
-    "scheme_summary",
-]
+_EXPORTS = {
+    "with_global_index": "chunker",
+    "with_chunk_id": "chunker",
+    "choose_scheme": "planner",
+    "write_table": "writer",
+    "read_table": "reader",
+    "scheme_summary": "reader",
+}
+__all__ = list(_EXPORTS)
+__getattr__, __dir__ = lazy_exports(__name__, _EXPORTS)

@@ -22,6 +22,15 @@ with per-partition parallelism and DETERMINISTIC range boundaries:
      the exchange's partitioning plus one in-partition sort, so the plan is
      one Exchange, one Sort, one Window, all in the JVM.
 
+Range count: ``with_chunk_id`` indexes a table of ``n`` rows in
+``min(max(defaultParallelism, 8), ceil(n / block_size))`` ranges, so no
+range is smaller than a chunk on average and a table that fits one chunk
+is ONE range. One range needs neither step 1 nor step 3: it has no
+boundaries, its offsets are ``[start]`` and its count is the total, so it
+runs no job before the exchange (given the row count), and its exchange
+moves every row onto a single partition that leaves the window in
+``_idx`` order.
+
 Every step is parallel, driver state is O(num_partitions), and the full
 rows move exactly once (the single ``_pid`` exchange). Because steps 1-4
 are deterministic end-to-end, NO staging persist is needed: downstream
@@ -166,10 +175,14 @@ def with_global_index(
     key_prefix = order_keys[: len(bounds[0])] if bounds else order_keys
     tagged = df.withColumn("_pid", _pid_column(df, key_prefix, bounds))
 
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in tagged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
+    if bounds:
+        counts = {
+            r["_pid"]: r["cnt"]
+            for r in tagged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
+        }
+    else:
+        # one range holds every row: its count is the total, no job
+        counts = {0: total}
     # dense cumulative offsets over every possible pid 0..len(bounds)
     offsets, acc = [], start
     for pid in range(len(bounds) + 1):
@@ -184,12 +197,21 @@ def with_global_index(
     )
     ordinal = F.row_number().over(Window.partitionBy("_pid").orderBy(*order_keys))
     out = (
-        tagged.repartition(num_partitions, "_pid")
+        tagged.repartition(num_partitions if bounds else 1, "_pid")
         .withColumn("_idx", (offset + ordinal - 1).cast("long"))
         .drop("_pid")
     )
     out._btr_total_rows = acc - start
+    out._btr_ranges = len(bounds) + 1
     return out
+
+
+def _thin_bounds(bounds: list[tuple], num_ranges: int) -> list[tuple]:
+    """Keep ``num_ranges - 1`` of ``bounds``, evenly spaced: the cuts
+    nearest the quantiles ``i / num_ranges`` of the list's own ranges."""
+    if num_ranges - 1 >= len(bounds):
+        return bounds
+    return [bounds[i * (len(bounds) + 1) // num_ranges - 1] for i in range(1, num_ranges)]
 
 
 def with_chunk_id(
@@ -210,23 +232,34 @@ def with_chunk_id(
     (the reference shuffles ranges with an RNG — here the permutation is
     a pure function of the keys, so chunk membership is reproducible
     across jobs and engines, which the write pipeline's share-the-staging
-    design requires)."""
-    if strategy == "random":
-        tagged = df.withColumn("_rnd", F.xxhash64(*[F.col(k) for k in order_keys]))
-        indexed = with_global_index(
-            tagged, ["_rnd", *order_keys], total_rows=total_rows, start=start
-        )
-        total = getattr(indexed, "_btr_total_rows", None)
-        indexed = indexed.drop("_rnd")
-        indexed._btr_total_rows = total
-    elif strategy == "sequential":
-        indexed = with_global_index(
-            df, order_keys, total_rows=total_rows, bounds=bounds, start=start
-        )
-    else:
+    design requires).
+
+    The table is indexed in ``min(max(defaultParallelism, 8), num_chunks)``
+    ranges (one when it fits one chunk), keeping that many of ``bounds``
+    evenly spaced. ``_btr_ranges`` on the result is the range count: a
+    one-range result is a single partition holding every row in ``_idx``
+    order."""
+    if strategy not in ("random", "sequential"):
         raise ValueError(f"unknown split strategy: {strategy!r}")
+    if total_rows is None:
+        total_rows = df.count()
+    parallelism = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    num_ranges = max(1, min(parallelism, -(-int(total_rows) // block_size)))
+    keys = order_keys
+    if strategy == "random":
+        df = df.withColumn("_rnd", F.xxhash64(*[F.col(k) for k in order_keys]))
+        keys, bounds = ["_rnd", *order_keys], None
+    elif bounds is not None:
+        bounds = _thin_bounds([b for b in bounds if b is not None], num_ranges)
+    indexed = with_global_index(
+        df, keys, num_partitions=num_ranges, total_rows=total_rows,
+        bounds=bounds, start=start,
+    )
     out = indexed.withColumn(
         "_chunk", F.floor(F.col("_idx") / F.lit(block_size)).cast("long")
     )
-    out._btr_total_rows = getattr(indexed, "_btr_total_rows", None)
+    if strategy == "random":
+        out = out.drop("_rnd")
+    out._btr_total_rows = indexed._btr_total_rows
+    out._btr_ranges = indexed._btr_ranges
     return out

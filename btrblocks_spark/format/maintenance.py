@@ -340,9 +340,10 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
 
     full: dict[int, str] = {}  # chunk id -> file holding exactly that chunk
     frag: list[str] = []
+    rows_in: dict[str, int] = {}  # file -> footer row count
     for f in files:
         pf = pq.ParquetFile(f)
-        n = pf.metadata.num_rows
+        n = rows_in[f] = pf.metadata.num_rows
         names = pf.schema_arrow.names
         chunk_id = None
         if n == bs and "_idx" in names:
@@ -402,19 +403,29 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
         }
 
     try:
-        frag_df = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*frag)
-            .select(*cols)  # drops _idx whether present or not
-        )
+        # read with the sidecar's declared schema (no inference job): chunk
+        # files and source appends store the same columns, appends without
+        # _idx and with INT64 timestamps, which the scan reads alike. A
+        # schema evolved by add_column, add_generated_column or
+        # rename_column no longer names only stored columns, and keeps the
+        # merged-footer read
+        if any({"default", "generated_as", "stored_as"} & c.keys() for c in meta["schema"]):
+            reader = spark.read.option("mergeSchema", "true")
+        else:
+            reader = spark.read.schema(", ".join(
+                f"`{c['name'].replace('`', '``')}` {c['type']}" for c in meta["schema"]
+            ))
+        frag_df = reader.parquet(*frag).select(*cols)  # drops _idx if present
         base = keep_k * bs
         # the rewritten tail is indexed on from the kept prefix, and the
         # table's bloom filters and dictionary switches carry over to it: a
         # lookup skips row groups by bloom, and a compacted file without one
         # would be read by every point lookup (a sidecar written before the
-        # switches were recorded leaves parquet's default, dictionary on)
+        # switches were recorded leaves parquet's default, dictionary on).
+        # The footers already counted the tail's rows for the chunker
         n_frag, new_chunks, written_schema = write_chunk_files(
             frag_df, tmp_dir, meta["order_keys"], cfg, start=base,
+            total_rows=sum(rows_in[f] for f in frag),
             dictionary=meta.get("dictionary"), bloom=meta.get("bloom_filters"),
         )
         meta["num_rows"] = base + n_frag

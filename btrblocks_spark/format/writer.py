@@ -5,7 +5,8 @@ Pipeline (all distributed; driver holds only the chunk×column plan, which is
 O(num_chunks · num_columns) small rows):
 
   1. chunk the table: global index over ``order_keys`` → chunk_id
-     (storage/Relation.cpp:42-69 analog).
+     (storage/Relation.cpp:42-69 analog), in at most one index range per
+     chunk; a table that fits one chunk is one range.
   2. physical knobs: ONE map-side ``approx_count_distinct`` pass over the
      source sizes the bloom filters on the lookup keys (cheap JVM scan, no
      shuffle), and ONE small job collects the input's first ``block_size``
@@ -24,6 +25,8 @@ O(num_chunks · num_columns) small rows):
      partitions and every non-final chunk has exactly block_size rows, so
      files split on exact chunk boundaries (one file = one chunk — the
      ColumnPart sizing analog, storage/Chunk.cpp:233-266), ZSTD pages.
+     A one-range table skips the staging shuffle: the chunker's single
+     partition already holds every row in ``_idx`` order.
      Files are Parquet v2 and every chunk column is ONE data page (the
      BtrBlocks block): integers and timestamps written without a
      dictionary are DELTA_BINARY_PACKED (BtrBlocks' delta + bit-packing),
@@ -49,9 +52,11 @@ Steps 3 and 4 are ``write_chunk_files`` and ``plan_chunk_files``;
 same two functions, so a change to the chunk files or their stats is made
 once for both.
 
-Full-data movements per write: two full-row exchanges (the chunker's
-``_pid`` range exchange, then the ``_chunk`` staging exchange) + one write +
-one compressed read-back — regardless of table size.
+Full-data movements per write: the chunker's ``_pid`` range exchange, the
+``_chunk`` staging exchange (tables of more than one chunk only), one write
+and one compressed read-back. A one-chunk write also runs no offsets job
+and plans its one chunk file with no stats exchange: six Spark jobs in
+all, against ten for a table of a few chunks.
 
 Codec choice: zstd by default (the ratio anchor — est ratio ~3.7 on the
 bench table). Measured on lineitem sf0.1, lz4 scans ~1.4x faster at ~21%
@@ -397,16 +402,23 @@ def write_chunk_files(
     write still leaves a schema), and hashing chunk ids can leave partition
     0 without a chunk: that 0-row file is removed unless the whole write
     is empty. ``total_rows``/``bounds`` skip the chunker's count and
-    boundary-sample jobs when the caller already measured them. Returns
+    boundary-sample jobs when the caller already measured them. A
+    one-chunk write is indexed in one range, whose single partition
+    already holds every row in ``_idx`` order from the chunk-aligned
+    ``start``, so it is written with no staging exchange. Returns
     ``(rows, chunks, schema)`` written; ``plan_chunk_files`` reads the
     files back with that schema instead of inferring it."""
     chunked = with_chunk_id(
         df, order_keys, config.block_size, total_rows=total_rows,
         bounds=bounds, start=start,
     )
-    num_rows = chunked._btr_total_rows  # free byproduct of the offset job
+    num_rows = chunked._btr_total_rows
     num_chunks = -(-num_rows // config.block_size)
-    staged = _stage_by_chunk(chunked, num_chunks).drop("_chunk", *drop)
+    if chunked._btr_ranges == 1:
+        assert start % config.block_size == 0, (start, config.block_size)
+        staged = chunked.drop("_chunk", *drop)
+    else:
+        staged = _stage_by_chunk(chunked, num_chunks).drop("_chunk", *drop)
     write_parquet(
         staged.write.mode("overwrite")
         .options(**chunk_write_options(config, dictionary=dictionary, bloom=bloom)),
@@ -502,7 +514,7 @@ def plan_chunk_files(
             ]
             prefix_df = spark.createDataFrame(prefix_rows, _PLAN_SCHEMA)
         else:
-            prefix_df = spark.read.parquet(
+            prefix_df = spark.read.schema(_PLAN_SCHEMA).parquet(
                 _fs.join(path, "_btr_chunk_stats")
             ).filter(F.col("chunk") < keep_chunks)
         plan_df = prefix_df.unionByName(plan_df)
@@ -512,18 +524,22 @@ def plan_chunk_files(
     # just to pick sort boundaries (round-8, guide §1.2). Hash-by-column
     # keeps each column's rows contiguous and chunk-sorted, which is all
     # prune_chunks' row-group pruning needs (the accessor re-sorts
-    # driver-side anyway); the exchange moves only tiny stats rows. The
-    # totals ride the SAME job as observe() metrics instead of a read-back
-    # aggregate — two jobs become one.
+    # driver-side anyway); the exchange moves only tiny stats rows. One
+    # chunk file and no kept prefix is one read partition, so its stats
+    # are sorted in place with no exchange. The totals ride the SAME job
+    # as observe() metrics instead of a read-back aggregate — two jobs
+    # become one.
+    file_sizes = _fs.list_file_sizes(data_path, ".parquet", spark)
     obs = Observation()
+    plan_df = plan_df.observe(
+        obs,
+        F.coalesce(F.sum("raw_size"), F.lit(0)).alias("raw"),
+        F.coalesce(F.sum("est_size"), F.lit(0)).alias("est"),
+    )
+    if keep_chunks or len(file_sizes) > 1:
+        plan_df = plan_df.repartition("column")
     stats_write = (
-        plan_df.observe(
-            obs,
-            F.coalesce(F.sum("raw_size"), F.lit(0)).alias("raw"),
-            F.coalesce(F.sum("est_size"), F.lit(0)).alias("est"),
-        )
-        .repartition("column")
-        .sortWithinPartitions("column", "chunk")
+        plan_df.sortWithinPartitions("column", "chunk")
         .write.mode("overwrite")
         .option("compression", "zstd")
     )
@@ -534,7 +550,7 @@ def plan_chunk_files(
     # interleave set/restore, so the window runs under the engine's one
     # parquet write lock, which the stats write needs anyway. Everything
     # above only builds the plan, so the lock is held for the write alone.
-    max_file = max(_fs.list_file_sizes(data_path, ".parquet", spark), default=1)
+    max_file = max(file_sizes, default=1)
     conf = spark.conf
     with PARQUET_WRITE_LOCK:
         prev_mpb = conf.get("spark.sql.files.maxPartitionBytes")

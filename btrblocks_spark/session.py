@@ -10,6 +10,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_HEAP_MIB = 16 * 1024
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap default: half of physical memory, at most 16g (the
+    driver of ``local[N]`` is the whole engine, and a heap larger than
+    the host lets the JVM grow until the OS kills it). ``phys_bytes``
+    defaults to ``SC_PHYS_PAGES * SC_PAGE_SIZE``; where that is not
+    available the default is the 16g cap."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        except (AttributeError, OSError, ValueError):
+            phys_bytes = 0
+    if phys_bytes <= 0:
+        return f"{_MAX_DRIVER_HEAP_MIB}m"
+    return f"{max(1, min(_MAX_DRIVER_HEAP_MIB, phys_bytes // 2 // (1 << 20)))}m"
+
 
 def get_spark(
     app_name: str = "btrblocks-spark",
@@ -26,6 +44,8 @@ def get_spark(
       - Arrow on: every pandas/mapInArrow kernel crosses the JVM↔Python
         boundary in columnar batches, not rows.
       - UTC session timezone: deterministic timestamp semantics vs the oracle.
+      - driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
+        ``default_driver_memory()`` (half of RAM, at most 16g).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or max(cpus, 32)
@@ -57,7 +77,10 @@ def get_spark(
         # read's schema never depends on whether events was loaded first
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Python DataSource filter pushdown (sources/btr_datasource.py

@@ -3,28 +3,17 @@ null/trim semantics, CSV export, schema handling (YAML-style declared
 schemas → StructType), and the `btrblocks` Python DataSource
 (spark.read.format("btrblocks") over written chunked tables)."""
 
-from btrblocks_spark.sources.btr_datasource import (
-    BtrBlocksDataSource,
-    load_btr_table,
-)
-from btrblocks_spark.sources.csv_source import (
-    export_csv,
-    read_csv,
-    schema_from_decl,
-)
-from btrblocks_spark.sources.jsonl_source import (
-    export_jsonl,
-    read_jsonl,
-    read_jsonl_quarantine,
-)
+from btrblocks_spark import lazy_exports
 
-__all__ = [
-    "read_csv",
-    "export_csv",
-    "schema_from_decl",
-    "BtrBlocksDataSource",
-    "load_btr_table",
-    "read_jsonl",
-    "export_jsonl",
-    "read_jsonl_quarantine",
-]
+_EXPORTS = {
+    "read_csv": "csv_source",
+    "export_csv": "csv_source",
+    "schema_from_decl": "csv_source",
+    "BtrBlocksDataSource": "btr_datasource",
+    "load_btr_table": "btr_datasource",
+    "read_jsonl": "jsonl_source",
+    "export_jsonl": "jsonl_source",
+    "read_jsonl_quarantine": "jsonl_source",
+}
+__all__ = list(_EXPORTS)
+__getattr__, __dir__ = lazy_exports(__name__, _EXPORTS)

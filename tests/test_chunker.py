@@ -54,3 +54,26 @@ def test_chunk_id_plan_is_jvm_only_with_one_exchange(spark):
     window = next(i for i, ln in enumerate(lines) if "Window [" in ln)
     exchanges = [i for i, ln in enumerate(lines) if "Exchange " in ln]
     assert len(exchanges) == 1 and exchanges[0] > window, plan
+
+
+def test_one_chunk_is_one_range_without_a_count_job(spark):
+    """A table that fits one chunk is indexed in one range: the plan has
+    one Exchange (onto a single partition) and, with the row count given,
+    no job runs before the index is read; the index still equals
+    ``row_number() OVER (ORDER BY keys) - 1``."""
+    df = _frame(spark, 300)
+    sc = spark.sparkContext
+    group = "btr-test-one-range"
+    sc.setJobGroup(group, "with_chunk_id of one chunk")
+    try:
+        chunked = with_chunk_id(df, ["a", "b"], 512, total_rows=300)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert (chunked._btr_ranges, chunked._btr_total_rows) == (1, 300)
+    plan = chunked._jdf.queryExecution().executedPlan().toString()
+    assert len([ln for ln in plan.splitlines() if "Exchange " in ln]) == 1, plan
+    assert chunked.rdd.getNumPartitions() == 1
+    want = df.withColumn("_idx", F.row_number().over(Window.orderBy("a", "b")) - 1)
+    assert sorted(chunked.drop("_chunk").collect()) == sorted(want.collect())
+    assert {r["_chunk"] for r in chunked.select("_chunk").collect()} == {0}

@@ -671,24 +671,143 @@ def test_sidecar_is_identical_across_writes(spark, tmp_path):
     assert "write_seconds" not in json.loads(sidecars[0])
 
 
-def test_write_table_job_count(spark, tmp_path):
-    """One write_table of a one-chunk table runs ten Spark jobs (adaptive
-    execution runs each shuffle stage as a job of its own): the NDV
-    aggregate (2), the trial encoding's sample (1), the chunker's offset
-    aggregate (2), the chunk write (3: two exchanges and the write) and
-    the plan pass's stats write (2). The plan pass reads the chunk files
-    with the schema just written, so it runs no schema-inference job."""
+def _jobs_of(spark, name: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group of its own."""
+    import uuid
+
     sc = spark.sparkContext
+    group = f"btr-test-{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_table_job_count(spark, tmp_path):
+    """Spark jobs of one write_table of 3,000 rows (adaptive execution runs
+    each shuffle stage as a job of its own). Every write runs the NDV
+    aggregate (2) and the trial encoding's sample (1). A one-chunk write is
+    indexed in one range, which needs no offsets job and no staging
+    exchange: the chunk write is the range exchange and the write (2), and
+    the plan pass sorts the one file's stats in place (1). A three-chunk
+    write adds the chunker's offset aggregate (2), the staging exchange (1)
+    and the stats exchange (1). The plan pass reads the chunk files with
+    the schema just written, so it runs no schema-inference job."""
     df = spark.range(3000).selectExpr(
         "id AS k", "id % 7 AS v", "concat('s', CAST(id % 13 AS STRING)) AS s"
     )
-    group = "btr-test-write-table-jobs"
-    sc.setJobGroup(group, "one write_table")
-    try:
-        write_table(df, str(tmp_path / "jobs"), ["k"])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10
+    for block_size, chunks, jobs in [(65536, 1, 6), (1024, 3, 10)]:
+        cfg = DEFAULT_CONFIG.with_(block_size=block_size)
+        path = str(tmp_path / f"jobs{block_size}")
+        got = _jobs_of(spark, "write-table", lambda: write_table(df, path, ["k"], cfg))
+        assert (got, read_metadata(path)["num_chunks"]) == (jobs, chunks)
+
+
+def test_compact_one_chunk_tail_job_count(spark, tmp_path):
+    """A compaction whose whole table is one chunk (a one-chunk write and
+    two source appends) runs three Spark jobs: the range exchange and the
+    chunk write (2) and the stats write (1). The fragments are read with
+    the sidecar's schema and counted from their footers, so no
+    schema-inference, count or offsets job runs, and with no kept prefix
+    the one chunk file's stats are sorted in place."""
+    from btrblocks_spark.format.maintenance import compact
+    from btrblocks_spark.sources.btr_datasource import BtrBlocksDataSource
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", "id % 7 AS v", "timestamp_seconds(id) AS ts"
+        )
+
+    path = str(tmp_path / "tail")
+    write_table(rows(0, 3000), path, ["k"])
+    spark.dataSource.register(BtrBlocksDataSource)
+    for lo in (3000, 3300):
+        rows(lo, lo + 300).write.format("btrblocks").mode("append").option(
+            "path", path
+        ).save()
+    result = {}
+    assert _jobs_of(spark, "compact", lambda: result.update(compact(spark, path))) == 3
+    assert (result["compacted"], result["new_chunks"], result["num_rows"]) == (True, 1, 3600)
+    got, _meta = read_table(spark, path)
+    assert sorted(got.collect()) == sorted(rows(0, 3600).collect())
+
+
+def _indexed(df, keys: list[str], start: int = 0):
+    """``df`` with ``_idx = start + row_number() OVER (ORDER BY keys) - 1``."""
+    from pyspark.sql import Window
+
+    return df.withColumn(
+        "_idx", F.row_number().over(Window.orderBy(*keys)) - 1 + F.lit(start)
+    )
+
+
+def _check_chunk_files(spark, path: str, want, bs: int) -> None:
+    """The table at ``path`` holds exactly the rows of ``want`` (its
+    ``_idx`` included) as chunk files: one file per chunk (a single 0-row
+    file for an empty table), file ``c`` holding ``_idx``
+    ``[c*bs, min((c+1)*bs, n))``, and one stats row per chunk and column
+    with the chunk's row count."""
+    import pyarrow.parquet as pq
+
+    from btrblocks_spark.format.fs import list_parquet_files
+    from btrblocks_spark.format.reader import chunk_stats_rows
+
+    n = want.count()
+    chunks = -(-n // bs)
+    ranges = []
+    for f in list_parquet_files(f"{path}/data"):
+        idx = pq.read_table(f, columns=["_idx"]).column("_idx").to_pylist()
+        ranges.append((min(idx), max(idx), len(idx)) if idx else (None, None, 0))
+    want_ranges = [(c * bs, min((c + 1) * bs, n) - 1, min(bs, n - c * bs)) for c in range(chunks)]
+    assert sorted(ranges, key=str) == sorted(want_ranges or [(None, None, 0)], key=str)
+    got, _meta = read_table(spark, path, with_index=True)
+    assert sorted(got.collect()) == sorted(want.select(*got.columns).collect())
+    stats = chunk_stats_rows(path, spark=spark)
+    columns = [c for c in want.columns if c != "_idx"]
+    assert sorted((r["column"], r["chunk"], r["n_rows"]) for r in stats) == sorted(
+        (c, k, min(bs, n - k * bs)) for c in columns for k in range(chunks)
+    )
+
+
+@pytest.mark.parametrize("n", [0, 1, 63, 64, 65])
+def test_chunk_files_at_block_boundaries(spark, tmp_path, n):
+    """Row counts around one block (block_size 64): up to 64 rows are one
+    chunk, indexed in one range; 65 rows are two chunks in two ranges.
+    Each leaves exact chunk files whose ``_idx`` is
+    ``row_number() OVER (ORDER BY keys) - 1``."""
+    bs = 64
+    df = spark.range(n).selectExpr("(id * 37) % 1000 AS a", "id % 3 AS b", "id AS v")
+    path = str(tmp_path / "t")
+    write_table(df, path, ["a", "b"], DEFAULT_CONFIG.with_(block_size=bs))
+    _check_chunk_files(spark, path, _indexed(df, ["a", "b"]), bs)
+
+
+def test_chunk_files_after_compacting_a_tail(spark, tmp_path):
+    """A compaction that keeps two full chunks and rewrites a one-chunk
+    tail (the partial third chunk plus a source append) leaves exact chunk
+    files and stats rows: the kept rows keep their ``_idx`` and the tail is
+    indexed in key order from the end of the kept prefix."""
+    from btrblocks_spark.format.maintenance import compact
+    from btrblocks_spark.sources.btr_datasource import BtrBlocksDataSource
+
+    bs = 64
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr("(id * 37) % 1000 AS a", "id AS v")
+
+    path = str(tmp_path / "t")
+    write_table(rows(0, 150), path, ["a"], DEFAULT_CONFIG.with_(block_size=bs))
+    spark.dataSource.register(BtrBlocksDataSource)
+    rows(150, 170).write.format("btrblocks").mode("append").option("path", path).save()
+    result = compact(spark, path)
+    assert (result["full_chunks_kept"], result["new_chunks"]) == (2, 1)
+    written = _indexed(rows(0, 150), ["a"])
+    kept = written.filter(F.col("_idx") < 2 * bs)
+    tail = written.filter(F.col("_idx") >= 2 * bs).drop("_idx").unionByName(rows(150, 170))
+    want = kept.unionByName(_indexed(tail, ["a"], start=2 * bs))
+    _check_chunk_files(spark, path, want, bs)
 
 
 def test_table_with_cardinality_rule_switches_reads_and_compacts(spark, tmp_path):
