@@ -904,10 +904,6 @@ def decode(kind: str, e: Encoded):
     raise ValueError(f"unknown kind {kind}")
 
 
-def schemes_for_kind(kind: str) -> tuple[str, ...]:
-    return {"int": INT_SCHEMES, "double": DOUBLE_SCHEMES, "string": STRING_SCHEMES}[kind]
-
-
 # ---------------------------------------------------------------------------
 # Cascade scheme-tree description (BtrReader::getSchemeDescription,
 # compression/BtrReader.cpp:76-121: the reference prints the RECURSIVE

@@ -277,25 +277,6 @@ def decompress(table: SymbolTable, codes: bytes) -> bytes:
     return bytes(out)
 
 
-def serialize(table: SymbolTable) -> bytes:
-    """Wire format: u8 symbol count, then (u8 length + payload) per symbol —
-    the btr-file table layout shape (one table per column chunk)."""
-    out = bytearray([len(table.symbols)])
-    for s in table.symbols:
-        out.append(len(s))
-        out += s
-    return bytes(out)
-
-
-def deserialize(blob: bytes) -> SymbolTable:
-    count, i, symbols = blob[0], 1, []
-    for _ in range(count):
-        ln = blob[i]
-        symbols.append(blob[i + 1 : i + 1 + ln])
-        i += 1 + ln
-    return SymbolTable(symbols)
-
-
 def estimate_compressed_size(data: bytes, encode_cap: int = 1 << 17) -> int:
     """Deterministic size estimate for a byte pool: train on the prefix,
     encode up to ``encode_cap`` bytes, scale the ratio to the full pool.

@@ -693,19 +693,12 @@ def embedding_sketch(vecs: DataFrame, num_planes: int = 8, dim: int = 64,
     return out.withColumn("bucket", bucket)
 
 
-def cosine_expr(va: str, vb: str) -> F.Column:
-    """Cosine similarity between two double-array columns with a fixed
-    left-fold summation order (bit-reproducible across engines)."""
-    dot = f"aggregate(zip_with({va}, {vb}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-    na = f"sqrt(aggregate(zip_with({va}, {va}, (x, y) -> x * y), 0D, (acc, x) -> acc + x))"
-    nb = f"sqrt(aggregate(zip_with({vb}, {vb}, (x, y) -> x * y), 0D, (acc, x) -> acc + x))"
-    return F.expr(f"({dot}) / (({na}) * ({nb}))")
-
-
 def cosine_try_expr(va: str, vb: str) -> F.Column:
-    """cosine_expr with try_divide: a zero-norm vector yields NULL instead
-    of raising DIVIDE_BY_ZERO under ANSI mode — for operators that must
-    keep full row coverage over dirty embeddings (padded/failed rows)."""
+    """Cosine similarity between two double-array columns with a fixed
+    left-fold summation order (bit-reproducible across engines), divided
+    with try_divide: a zero-norm vector yields NULL instead of raising
+    DIVIDE_BY_ZERO under ANSI mode — for operators that must keep full row
+    coverage over dirty embeddings (padded/failed rows)."""
     dot = f"aggregate(zip_with({va}, {vb}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
     na = f"sqrt(aggregate(zip_with({va}, {va}, (x, y) -> x * y), 0D, (acc, x) -> acc + x))"
     nb = f"sqrt(aggregate(zip_with({vb}, {vb}, (x, y) -> x * y), 0D, (acc, x) -> acc + x))"
@@ -1015,7 +1008,7 @@ def semantic_contamination(
     leaks). The |train|x|bench| score rows never shuffle: argmax + tie-break
     is ONE struct-min aggregate, map-side partial on vec_id, so only
     per-vector partials move (no second pass, no score-row join). Cosine
-    uses the fixed left-fold (cosine_expr), bit-reproducible across
+    uses the fixed left-fold (cosine_try_expr), bit-reproducible across
     engines. A zero-norm training vector (cosine NULL against everything,
     0/0) still gets its row: NULL cosine/nearest id, flagged=0."""
     bench_sel = bench_vecs.select(

@@ -808,11 +808,10 @@ ORDER BY priority
 )
 def agg_pandas_udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom aggregate via a GROUPED_AGG pandas UDF — the one UDF flavor
-    the rest of the engine didn't exercise (scalar pandas_udf: fsst
-    transforms; applyInPandas: per-chunk FSST train; mapInPandas:
-    multimodal/inference; applyInPandasWithState: sessionize; UDTF:
-    sentence split). Computes the per-priority geometric mean of
-    order value.
+    the rest of the engine didn't exercise (scalar pandas_udf: the BPE
+    pair merge in pipeline/text.py; mapInPandas: multimodal/inference;
+    applyInPandasWithState: sessionize; UDTF: sentence split). Computes
+    the per-priority geometric mean of order value.
 
     Parity without FP order-dependence: the UDAF sums round(ln(x)·1e6) as
     int64 (order-independent inside the Arrow batch and across batches),

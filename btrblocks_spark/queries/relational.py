@@ -25,21 +25,12 @@ and lookup operator stubs are `scheme/CompressionScheme.hpp:45-47`).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from btrblocks_spark.queries import register
 from btrblocks_spark.tables import load_table
-
-
-def _dec(c, prec: int = 18, scale: int = 4):
-    return F.col(c).cast(f"decimal({prec},{scale})")
-
-
-def _dsum(c, prec: int = 18, scale: int = 4):
-    """Exact decimal sum of a double column, returned as DOUBLE."""
-    return F.sum(_dec(c, prec, scale)).cast("double")
 
 
 def _xsum(c, scale: int = 10000):

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
 from collections.abc import Iterator
 from typing import Any
 
@@ -891,115 +890,3 @@ def js_divergence_vs_ref(batch_df: DataFrame, ref_counts: DataFrame) -> DataFram
             6,
         ).alias("js_vs_ref"),
     )
-
-
-# wall-time floor before a superseded kmv snapshot dir may be removed —
-# protects a reader mid-scan of the previous `current`; module-level so
-# tests can shrink it
-KMV_SNAPSHOT_RETAIN_SEC = 60.0
-
-
-def kmv_sketch_stream(
-    stream: DataFrame,
-    key_col: str,
-    out_dir: str,
-    checkpoint: str,
-    k: int = 256,
-    trigger_available_now: bool = True,
-):
-    """Running distinct-count sketch over an unbounded stream: per
-    microbatch, take the batch's k smallest distinct portable-32-bit
-    hashes of ``key_col``, UNION with the stored sketch, and keep the
-    min-k of the union — the KMV merge, which is associative and
-    idempotent, so the maintained sketch equals the batch sketch over
-    everything ever ingested (the mergeability property, test-proven).
-    State is O(k) forever; the batch estimator (stats_kmv_distinct's
-    (k−1)/u_k) reads the tiny stored set.
-
-    Replay safety: the merge is idempotent (min-k ∪ same-batch = min-k),
-    and the snapshot swap is atomic (write new dir, then repoint,
-    maintenance-style single-writer). The merged sketch is MATERIALIZED
-    (localCheckpoint, O(k) rows) before the write, so a replayed batch
-    whose ``v{batch_id}`` dir is the one ``current`` points at never
-    lazily scans the directory the write clobbers — and unlike a
-    skip-this-batch-id fence, a replayed batch whose COMPOSITION changed
-    (checkpoint lost, more files now packed into the same batch number)
-    still contributes its new keys."""
-    from btrblocks_spark.pipeline.text import hash32
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cur_dir = os.path.join(out_dir, "current")
-        batch_mins = (
-            # NULL keys carry no distinct-count information, and a NULL
-            # hash would sort FIRST (ASC puts nulls first), permanently
-            # occupying a min-k slot and biasing the estimator
-            batch_df.filter(F.col(key_col).isNotNull())
-            .select(hash32(F.col(key_col).cast("string")).alias("h"))
-            .distinct()
-            .orderBy("h")
-            .limit(k)
-        )
-        # "first batch" is ONLY a missing snapshot pointer — a transient
-        # read/listing failure on an existing snapshot must raise (and let
-        # the microbatch retry), not silently reset the accumulated
-        # distinct state to this batch's keys
-        prior = (
-            spark.read.schema("h long").parquet(cur_dir)
-            if os.path.exists(cur_dir)
-            else None
-        )
-        merged = (
-            (batch_mins if prior is None else prior.union(batch_mins).distinct())
-            .orderBy("h")
-            .limit(k)
-            # pin the O(k) result BEFORE writing: on replay, v{batch_id} can
-            # be the very dir `current` (and therefore `prior`) points at
-            .localCheckpoint()
-        )
-        new_dir = os.path.join(out_dir, f"v{batch_id}")
-        write_parquet(merged.coalesce(1).write.mode("overwrite"), new_dir)
-        # atomic repoint: the current pointer flips only after the new
-        # snapshot is fully written (single-writer, maintenance-style)
-        tmp = cur_dir + ".tmp"
-        if os.path.islink(tmp) or os.path.exists(tmp):
-            os.unlink(tmp)
-        os.symlink(new_dir, tmp)
-        os.replace(tmp, cur_dir)
-        # superseded snapshots are garbage after the repoint: the sketch is
-        # O(k) by design, but one v{id} dir per microbatch forever would
-        # accumulate hundreds of thousands of tiny dirs on a long stream.
-        # The just-written dir (and the repoint target) is always kept; a
-        # short wall-time floor protects a reader mid-scan of the old
-        # current (the merged sketch was localCheckpointed, so OUR lineage
-        # never re-reads it).
-        now = time.time()
-        for d in os.listdir(out_dir):
-            if not (d.startswith("v") and d[1:].isdigit()) or d == f"v{batch_id}":
-                continue
-            full = os.path.join(out_dir, d)
-            if os.path.realpath(full) == os.path.realpath(cur_dir):
-                continue
-            try:
-                if now - os.path.getmtime(full) > KMV_SNAPSHOT_RETAIN_SEC:
-                    shutil.rmtree(full, ignore_errors=True)
-            except OSError:
-                pass
-
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def kmv_estimate(spark: SparkSession, out_dir: str, k: int = 256):
-    """Distinct estimate from the maintained sketch: exact sample size when
-    not full, else (k−1) · 2³² / u_k (stats_kmv_distinct's estimator)."""
-    s = spark.read.schema("h long").parquet(os.path.join(out_dir, "current"))
-    agg = s.agg(F.max("h").alias("hk"), F.count("*").cast("long").alias("n"))
-    est = F.when(F.col("n") < k, F.col("n").cast("double")).otherwise(
-        (F.col("n") - 1).cast("double") * F.lit(4294967296.0) / F.col("hk").cast("double")
-    )
-    return agg.select("n", "hk", F.round(est, 2).alias("est_distinct"))

@@ -201,15 +201,18 @@ def test_all_null_column():
     assert len(out) == 100
 
 
-def test_xor_round_trip_edge_cases():
-    """XOR-of-previous codec: bit-exact round-trip incl. -0.0, NaN payloads,
-    infinities, and denormals (everything is pure bit manipulation)."""
-    vals = np.array([-0.0, 0.0, np.inf, -np.inf, np.nan, 1.1, 1.1, 1.1000001,
-                     5e-324, -5e-324, 1e308, 42.0, 42.0, 0.0])
+@pytest.mark.parametrize("scheme", ["xor", "dict", "rle", "frequency", "uncompressed"])
+def test_double_round_trip_edge_cases(scheme):
+    """Bit-exact round-trip of every set position incl. -0.0, NaN payloads,
+    infinities and denormals, with a NULL position beside them: NaN stays a
+    value distinct from NULL, and -0.0 keeps its sign."""
+    vals = np.array([-0.0, 0.0, np.inf, -np.inf, np.nan, 1.1, np.nan, 1.1,
+                     1.1000001, 5e-324, -5e-324, 1e308, 42.0, 42.0, 0.0])
     mask = np.ones(len(vals), dtype=bool)
-    enc = codecs.encode_double("xor", vals, mask)
+    mask[6] = False  # NULL inside a run of 1.1
+    enc = codecs.encode_double(scheme, vals, mask)
     out = codecs.decode_double(enc)
-    np.testing.assert_array_equal(out.view(np.int64), vals.view(np.int64))
+    np.testing.assert_array_equal(out[mask].view(np.int64), vals[mask].view(np.int64))
 
 
 def test_xor_compresses_slowly_varying_series():

@@ -2188,6 +2188,21 @@ def test_zorder_quantize_wide_and_fractional_ranges(spark):
     assert d_rate > 30  # ~42 rows in grp 0 → every row its own bucket
 
 
+def test_zorder_null_dims_never_null_key(spark):
+    """A NULL in either dimension quantizes to bucket 0 — the zkey itself is
+    never NULL (the chunker requires non-null order keys)."""
+    from btrblocks_spark.format.zorder import with_zorder, zorder_key
+
+    rows = [(1, 10, 20), (2, None, 5), (3, 7, None), (4, None, None)]
+    df = spark.createDataFrame(rows, "id long, a long, b long")
+    for zdf in (
+        df.select("id", zorder_key("a", "b").alias("zkey")),
+        with_zorder(df, "a", "b", quantize_bits=4).select("id", "zkey"),
+    ):
+        vals = {r["id"]: r["zkey"] for r in zdf.collect()}
+        assert all(v is not None for v in vals.values())
+
+
 def test_load_table_memo_is_per_session(spark, sf_dir):
     """spark.newSession() shares an applicationId but has its OWN temp-view
     catalog: the table memo must not hand session B a DataFrame bound to

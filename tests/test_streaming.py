@@ -571,102 +571,6 @@ def test_drift_stream_matches_batch_and_resumes(spark, sf_dir, tmpdir):
     assert row["oov_rate"] == 1.0 and row["js_vs_ref"] > 0.5
 
 
-def test_kmv_sketch_stream_equals_batch_sketch(spark, sf_dir, events_dir, tmpdir):
-    """The streamed min-k merge must converge to EXACTLY the batch min-k
-    set over everything ingested (KMV merge associativity), and the
-    estimator must match stats_kmv_distinct's formula on that set."""
-    from btrblocks_spark.pipeline.text import hash32
-    from btrblocks_spark.streaming.ops import kmv_estimate, kmv_sketch_stream
-
-    out = os.path.join(tmpdir, "kmv_out")
-    ckpt = os.path.join(tmpdir, "kmv_ckpt")
-    q = kmv_sketch_stream(
-        stream_source(spark, events_dir), "user_id", out, ckpt, k=64
-    )
-    q.awaitTermination(120)
-
-    stored = sorted(
-        r["h"] for r in spark.read.schema("h long").parquet(
-            os.path.join(out, "current")
-        ).collect()
-    )
-    want = sorted(
-        r["h"]
-        for r in spark.read.parquet(events_dir)
-        .select(hash32(F.col("user_id").cast("string")).alias("h"))
-        .distinct()
-        .orderBy("h")
-        .limit(64)
-        .collect()
-    )
-    assert stored == want and len(stored) > 0
-
-    est = kmv_estimate(spark, out, k=64).collect()[0]
-    n_exact = spark.read.parquet(events_dir).select("user_id").distinct().count()
-    if est["n"] < 64:
-        assert est["est_distinct"] == float(n_exact)
-    else:
-        assert abs(est["est_distinct"] - n_exact) / n_exact < 0.5
-
-    # resume with no new files: sketch unchanged (idempotent merge)
-    q2 = kmv_sketch_stream(
-        stream_source(spark, events_dir), "user_id", out, ckpt, k=64
-    )
-    q2.awaitTermination(120)
-    stored2 = sorted(
-        r["h"] for r in spark.read.schema("h long").parquet(
-            os.path.join(out, "current")
-        ).collect()
-    )
-    assert stored2 == want
-
-    # checkpoint-loss replay of the LAST batch: 'current' already resolves
-    # to that batch's own v{id} snapshot — the materialize-before-write
-    # must not clobber the directory the merge plan reads (state collapse)
-    shutil.rmtree(ckpt)
-    q3 = kmv_sketch_stream(
-        stream_source(spark, events_dir), "user_id", out, ckpt, k=64
-    )
-    q3.awaitTermination(120)
-    stored3 = sorted(
-        r["h"] for r in spark.read.schema("h long").parquet(
-            os.path.join(out, "current")
-        ).collect()
-    )
-    assert stored3 == want
-
-    # changed-composition replay: a NEW file lands AND the checkpoint is
-    # lost, so the replayed batch 0 packs more data under the same batch
-    # id — its new keys must still enter the sketch (a skip-on-batch-id
-    # fence would silently drop them forever)
-    extra = (
-        spark.read.parquet(events_dir)
-        .filter(F.col("event_id") < 50)
-        .withColumn("user_id", F.col("user_id") + 10_000_000)
-    )
-    extra.coalesce(1).write.mode("append").parquet(events_dir)
-    shutil.rmtree(ckpt)
-    q4 = kmv_sketch_stream(
-        stream_source(spark, events_dir), "user_id", out, ckpt, k=64
-    )
-    q4.awaitTermination(120)
-    stored4 = sorted(
-        r["h"] for r in spark.read.schema("h long").parquet(
-            os.path.join(out, "current")
-        ).collect()
-    )
-    want4 = sorted(
-        r["h"]
-        for r in spark.read.parquet(events_dir)
-        .select(hash32(F.col("user_id").cast("string")).alias("h"))
-        .distinct()
-        .orderBy("h")
-        .limit(64)
-        .collect()
-    )
-    assert stored4 == want4
-
-
 def test_block_dedup_stream_matches_batch_rewrite(spark, sf_dir, tmpdir):
     """Streaming block-level dedup over doc_id-ordered file arrivals must
     reproduce the batch block_level_dedup rewrite exactly, and a full
@@ -1122,33 +1026,6 @@ def test_streaming_upsert_never_shares_a_version_with_a_dml_claim(
     assert os.path.exists(marker)
     assert read_pointer(table) not in (None, 0, 1)
     assert sorted(r.k for r in read_snapshot(spark, table).collect()) == [1, 2]
-
-
-def test_kmv_stream_gc_superseded_snapshot_dirs(spark, events_dir, tmpdir, monkeypatch):
-    """kmv_sketch_stream leaves one v{batch} dir per microbatch; after the
-    atomic repoint the superseded dirs are garbage (review finding) — with
-    the retention floor shrunk they must be removed, and the estimate stays
-    served from `current`."""
-    import os
-
-    from btrblocks_spark.streaming import ops
-
-    monkeypatch.setattr(ops, "KMV_SNAPSHOT_RETAIN_SEC", 0.0)
-    out = os.path.join(tmpdir, "kmv_gc_out")
-    ckpt = os.path.join(tmpdir, "kmv_gc_ckpt")
-    os.makedirs(out)
-    stream = stream_source(spark, events_dir, max_files_per_trigger=1)
-    q = ops.kmv_sketch_stream(stream.select("user_id"), "user_id", out, ckpt)
-    q.awaitTermination(120)
-    monkeypatch.undo()
-
-    vdirs = [d for d in os.listdir(out) if d.startswith("v") and d[1:].isdigit()]
-    cur = os.path.realpath(os.path.join(out, "current"))
-    # every surviving v-dir is the live one (the repoint target)
-    assert all(os.path.realpath(os.path.join(out, d)) == cur for d in vdirs)
-    assert len(vdirs) == 1
-    est = ops.kmv_estimate(spark, out).collect()[0]
-    assert est["n"] > 0
 
 
 def test_stream_reader_tolerates_vanished_offset_file(spark, tmpdir):
